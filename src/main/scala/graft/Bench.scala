@@ -1,10 +1,9 @@
 package graft
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus(32)
     // dev-only: bench a name-filtered subset (substring match, comma-sep)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // NOTE: do NOT set a fixed spark.sql.streaming.checkpointLocation here.
@@ -14,15 +13,7 @@ object Bench {
     // per JVM, so a re-run resumes the PREVIOUS run's committed checkpoint
     // and silently processes zero rows (observed: 5 queries "ran" in
     // 1.16 s total). Per-query temp checkpoints stay.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     // absorb one-time session costs (task dispatch JIT, parquet reader +
     // codegen framework init) so per-query numbers measure the queries,
     // not the first query's luck of position
@@ -50,12 +41,11 @@ object Bench {
     // fixed name order: run-to-run and round-to-round comparability
     // (Map iteration order is hash-dependent)
     // a failed query must be DISTINCT in the output, not a silently-timed
-    // row (ADVICE r9: the old catch-all would have recorded the fake-fast
-    // silent-checkpoint-resume number the awaitDrained guard exists to
-    // prevent) — its elapsed time still counts toward the total, but the
+    // row (a catch-all would record the fake-fast silent-checkpoint-resume
+    // number the awaitDrained guard exists to prevent) — its elapsed time still counts toward the total, but the
     // name lands in an "errors" list any consumer can see
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // PER-BATCH STREAMING TRACE (VERDICT r10): the driver's r10 run
+    // PER-BATCH STREAMING TRACE: one bench run
     // recorded stream_windowed_rollup at 35.8 s against a 4.2 s history
     // with the code unchanged, and nothing in the bench output could say
     // WHICH micro-batch stalled. A listener records every streaming
@@ -67,7 +57,7 @@ object Bench {
     val currentQuery = new java.util.concurrent.atomic.AtomicReference("")
     val traces = new java.util.concurrent.ConcurrentHashMap[
       String, scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]]()
-    // runId → bench query name, captured at query START (ADVICE r11):
+    // runId → bench query name, captured at query START:
     // listener-bus events are async, so a query's final micro-batches can
     // arrive after currentQuery moved on — keying progress rows by the
     // runId mapping pins every batch to the query that actually ran it
@@ -91,8 +81,8 @@ object Bench {
           }
         }
       })
-    // BATCH SELF-DIAGNOSIS (VERDICT r11 task 1): the streaming trace
-    // closed r10's weak but said nothing about batch queries. A
+    // BATCH SELF-DIAGNOSIS: the streaming trace says nothing about
+    // batch queries. A
     // SparkListener aggregates per-query task metrics — executor run
     // time, JVM GC, peak execution memory, shuffle bytes — keyed by the
     // query running when the task ENDED; the bus is drained between
@@ -152,7 +142,7 @@ object Bench {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
         case e: Throwable =>
-          // whitelist printable ASCII (ADVICE r10: \b, \f, \u0000 etc.
+          // whitelist printable ASCII (\b, \f, \u0000 etc.
           // would still break the JSON line), then drop the two printable
           // chars that are JSON-structural in a quoted string
           failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -167,10 +157,7 @@ object Bench {
       driverGc(name) = driverGcMs() - gc0
       name -> (System.nanoTime() - t0) / 1e9
     }
-    // millisecond precision: noise floor is ±30% run-to-run, and the full
-    // JSON line must stay under the driver's stdout tail window (~2.9 KB —
-    // rounds 2 and 3 both truncated a full-precision line mid-JSON and
-    // recorded "parsed": null)
+    // millisecond precision: the noise floor is ±30% run-to-run
     def sec3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + sec3(v) }
@@ -184,16 +171,14 @@ object Bench {
     val errs = if (failed.isEmpty) "" else failed
       .map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
       .mkString(""""errors":{""", ",", "},")
-    // per-query EXECUTOR time next to the wall time (VERDICT r13 task
-    // 7): wall ≫ exec at identical task counts is the established
+    // per-query EXECUTOR time next to the wall time: wall ≫ exec at identical task counts is the established
     // host-contention signature, so shipping exec_ms in the bench JSON
     // itself lets a reader adjudicate a noisy wall reading without
     // opening the trace file
     val execMs = results.map { case (k, _) =>
       s"\"" + k + "\":" + Option(qstats.get(k)).map(_.execMs.get).getOrElse(0L)
     }.mkString("{", ",", "}")
-    // SELF-ADJUDICATED ANOMALIES (VERDICT r15 task 6): every round, the
-    // judge re-derived ">2x reading, same task count, same shuffle bytes
+    // SELF-ADJUDICATED ANOMALIES: a reader used to re-derive ">2x reading, same task count, same shuffle bytes
     // => host contention" by diffing four trace files. The bench now
     // ships that verdict itself: each query >2x slower than the
     // committed reference trace (dev/traces/bench.reference.json — the
@@ -256,17 +241,15 @@ object Bench {
       .mkString(""""verdicts":{""", ",", "},")
     val json =
       s"""{"metric":"total","value":${sec3(total)},"unit":"sec",$partial$errs$verdictsJson"queries":$qs,"per_query_exec_ms":$execMs,"sf":"$sfDir"}"""
-    // the bare println proved losable to sbt log interleaving/truncation in
-    // round 1 ("parsed": null) — emit the line under a unique grep-able
-    // marker AND persist it to a file so the round's number can't be lost.
+    // a bare println is losable to sbt log interleaving — emit the line
+    // under a unique grep-able marker AND persist it to a file.
     val marker =
       if (only.isDefined) "GRAFT_BENCH_JSON_PARTIAL" else "GRAFT_BENCH_JSON"
     println(s"$marker $json")
     // full per-batch streaming trace to a file; compact stdout marker for
     // queries whose wall time crossed the anomaly threshold (12 s: the
     // heaviest healthy streaming query reads ~7 s at sf0.1) — printed
-    // HERE, before the final compact line, so the driver's ~2.9 KB stdout
-    // tail still ends with the canonical summary
+    // before the final summary line, so stdout still ends with it
     val timeByName = results.toMap
     // one trace row per query: wall time, driver GC, aggregated task
     // metrics (exec/GC/peak-mem/shuffle), plus the per-micro-batch vector
@@ -313,27 +296,10 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isDefined) "bench.partial.json" else "bench.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-    // stop FIRST, then print as the process's near-last stdout line:
-    // Spark/sbt shutdown logging can no longer interleave. The harness
-    // retains only a 2000-char stdout TAIL (measured from BENCH_r03) — the
-    // full 100+-query JSON can never fit, so the final line is a COMPACT
-    // json (total + the 20 slowest queries); the complete per-query map
-    // stays in the marker line above and in the bench.json file.
+    // stop FIRST, then print as the process's last stdout line, so
+    // Spark shutdown logging cannot interleave with it
     spark.stop()
-    // slowest-30 (VERDICT r9 task 4): wide enough that the driver's
-    // truncated stdout tail keeps every historically-heavy row visible;
-    // still fits the ~2.9 KB tail window with the error list
-    val top = results.sortBy(-_._2).take(30)
-      .map { case (k, v) => s"\"" + k + "\":" + sec3(v) }
-      .mkString("{", ",", "}")
-    // "slowest", NOT "queries": the truncated 30-entry map must not be
-    // mistakable for the complete per-query map in the marker line / file.
-    // verdicts ride in THIS line too (VERDICT r16 task 6): the driver's
-    // tail had cut the marker line's verdicts block, so the
-    // self-adjudication only survived in bench.json — putting it in the
-    // final compact line (it is empty on a clean run, and a couple hundred
-    // bytes per anomaly otherwise) keeps it inside the captured tail
     println(
-      s"""{"metric":"total","value":${sec3(total)},"unit":"sec",$partial$errs$verdictsJson"n_queries":${results.size},"slowest":$top,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${sec3(total)},"unit":"sec",$partial$errs$verdictsJson"n_queries":${results.size},"queries":$qs,"sf":"$sfDir"}""")
   }
 }

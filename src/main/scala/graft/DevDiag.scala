@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only diagnosis harness (same spirit as [[DevTime]]): runs named
   * queries once and prints (a) the full per-micro-batch durationMs map for
   * any streaming query (queryPlanning vs addBatch vs walCommit vs
@@ -13,16 +11,7 @@ import org.apache.spark.sql.SparkSession
 object DevDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
     // map oversized-task stages back to the operator that planned them:
     // TaskSetManager's WARN names only the stage id; this prints the
     // stage's name + callsite so the closure bloat is attributable

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only scale probe for the DISTRIBUTED maintenance rewrites
-  * (round-16 items: task-side writes, distributed cluster/compaction):
+  * (task-side writes, distributed cluster/compaction):
   * loads orders×8 into a `graft.storage = parquet` lake table (the
   * 12M-row ingest itself exercises the task-side write plane that the
   * old driver-resident shape could not survive), then times
@@ -16,15 +14,7 @@ object MaintBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(16)
     spark.conf.set("spark.sql.catalog.graftlake",
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.maint_bench"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,11 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // dev-only: optional extra args = substring filters on query names
     val only = if (args.length > 2) Some(args.drop(2).toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark has no native
-      // type for; read as Long and convert in graft.sources.Tables.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
     // a crashed query must be a VISIBLE red row, not a silently missing
-    // one: round 7's 7 streaming analysis errors vanished into stderr and
-    // the correctness file just had 7 fewer entries. Collect every
+    // one (an error in stderr only leaves the correctness file one entry
+    // short). Collect every
     // failure and write an errors.json sidecar — empty {} on a clean run.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.toSeq.sortBy(_._1)

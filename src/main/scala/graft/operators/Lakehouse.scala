@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Query
+import graft.{Query, Session}
 import graft.functions.Exact._
 import graft.sources.Tables
 
@@ -254,20 +254,10 @@ object Lakehouse {
 
   // ---- row-level SQL over the DSv2 catalog table ---------------------------
 
-  /** TBLPROPERTIES clause for lake tables: base properties plus the
-    * storage mode override (`-Dgraft.lake.storage=parquet` routes every
-    * registry fixture through REAL parquet file groups — the spec uses
-    * it to prove both storage modes produce the identical relation). */
-  private[graft] def tblProps(extra: (String, String)*): String = {
-    // the global A/B override wins over a fixture's explicit storage
-    // choice (and must not duplicate the key — Spark rejects duplicate
-    // TBLPROPERTIES entries)
-    val over = sys.props.get("graft.lake.storage").map("graft.storage" -> _)
-    val all = extra.filterNot(kv => over.exists(_._1 == kv._1)) ++ over
-    if (all.isEmpty) ""
-    else all.map { case (k, v) => s"'$k' = '$v'" }
+  /** TBLPROPERTIES clause for a lake table. */
+  private def tblProps(props: (String, String)*): String =
+    props.map { case (k, v) => s"'$k' = '$v'" }
       .mkString(" TBLPROPERTIES (", ", ", ")")
-  }
 
   /** Storage prop for the fixtures the r21 A/B measured FASTER on real
     * parquet file groups than on memory-backed rows: a memory-backed
@@ -565,9 +555,9 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $tOrd")
     spark.sql(s"DROP TABLE IF EXISTS $tCust")
     spark.sql(s"CREATE TABLE $tOrd (bucket BIGINT, o_custkey BIGINT, " +
-      "total DOUBLE) PARTITIONED BY (bucket)" + tblProps())
+      "total DOUBLE) PARTITIONED BY (bucket)")
     spark.sql(s"CREATE TABLE $tCust (bucket BIGINT, c_custkey BIGINT, " +
-      "c_mktsegment STRING) PARTITIONED BY (bucket)" + tblProps())
+      "c_mktsegment STRING) PARTITIONED BY (bucket)")
     Tables(spark, sfDir, "orders")
       .groupBy(col("o_custkey"))
       .agg(dsum(col("o_totalprice")).as("total"))
@@ -578,7 +568,7 @@ object Lakehouse {
       .select(pmod(col("c_custkey"), lit(16L)).as("bucket"),
         col("c_custkey"), col("c_mktsegment"))
       .writeTo(tCust).append()
-    val pinned = Map(
+    val pinned = Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       // join keys are (bucket, custkey), a SUPERSET of the partition key
@@ -588,9 +578,7 @@ object Lakehouse {
       "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = pinned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Session.withConfs(spark, pinned: _*) {
       val o = spark.table(tOrd)
       val c = spark.table(tCust)
       val out = o.join(c,
@@ -600,9 +588,6 @@ object Lakehouse {
         .orderBy("bucket")
       out.queryExecution.executedPlan // memoize the plan under the pin
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -622,8 +607,7 @@ object Lakehouse {
     val t = "graftlake.byname_orders"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps())
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     Tables(spark, sfDir, "orders")
       .filter(col("o_orderkey") % 7 === 0)
       // reversed column order relative to the table definition
@@ -979,7 +963,7 @@ object Lakehouse {
     val t = "graftlake.orders_cluster"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_totalprice DOUBLE)" + tblProps())
+      "(o_orderkey BIGINT, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
     // interleaved appends: every file spans the whole key range
@@ -1017,7 +1001,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (ts TIMESTAMP_NTZ, user_id BIGINT, " +
       "event_type STRING, value DOUBLE) " +
-      "PARTITIONED BY (days(ts), bucket(8, user_id))" + tblProps())
+      "PARTITIONED BY (days(ts), bucket(8, user_id))")
     Tables(spark, sfDir, "events")
       .select("ts", "user_id", "event_type", "value")
       .writeTo(t).append()
@@ -1287,7 +1271,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT, " +
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "PARTITIONED BY (o_orderstatus)" + tblProps())
+      "PARTITIONED BY (o_orderstatus)")
     val base = Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"))

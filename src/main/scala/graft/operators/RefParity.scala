@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Query
+import graft.{Query, Session}
 import graft.Query.SnapshotDate
 import graft.sources.Tables
 
@@ -634,15 +634,11 @@ object RefParity {
             .otherwise(col("o_totalprice")))
         .write.mode("overwrite").partitionBy("o_orderstatus")
         .parquet(d.getAbsolutePath)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try base.filter(col("o_orderstatus") === "F")
-        .write.mode("overwrite").partitionBy("o_orderstatus")
-        .parquet(d.getAbsolutePath)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+      Session.withConfs(spark,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        base.filter(col("o_orderstatus") === "F")
+          .write.mode("overwrite").partitionBy("o_orderstatus")
+          .parquet(d.getAbsolutePath)
       }
     }
     spark.read.parquet(dir.getAbsolutePath)

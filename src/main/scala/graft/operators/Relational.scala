@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Query
+import graft.{Query, Session}
 import graft.functions.Exact._
 import graft.sources.Tables
 
@@ -470,15 +470,13 @@ object Relational {
     * actually shuffles (the 100 TB shape this operator exists for).
     */
   def bloomPruneJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val pinned = Map(
+    val pinned = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "512MB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = pinned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Session.withConfs(spark, pinned: _*) {
       val urgent = Tables(spark, sfDir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey", "o_orderstatus")
@@ -491,9 +489,6 @@ object Relational {
         .orderBy("o_orderstatus")
       out.queryExecution.executedPlan // memoize the plan under the pin
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -2439,12 +2434,10 @@ object Relational {
     // whole session (disabling the runaway guard for every later recursive
     // query) — instead the tiny aggregated result (~log₂(maxKey) rows) is
     // eagerly materialized inside the raised window via localCheckpoint,
-    // and the previous guard value is restored in finally. (The level
+    // and the previous guard value is restored on exit. (The level
     // guard, 100, stays — it catches a genuinely broken recursion here.)
-    val limitKey = "spark.sql.cteRecursionRowLimit"
-    val prevLimit = spark.conf.getOption(limitKey)
-    spark.conf.set(limitKey, "2000000000")
-    try {
+    Session.withConfs(spark,
+        "spark.sql.cteRecursionRowLimit" -> "2000000000") {
       Tables(spark, sfDir, "customer")
         .select("c_custkey").createOrReplaceTempView("graft_rec_cust")
       spark.sql(
@@ -2456,9 +2449,6 @@ object Relational {
           |  CAST(sum(start_key) AS BIGINT) AS sum_start
           |FROM walk GROUP BY depth ORDER BY depth""".stripMargin)
         .localCheckpoint(eager = true)
-    } finally prevLimit match {
-      case Some(v) => spark.conf.set(limitKey, v)
-      case None    => spark.conf.unset(limitKey)
     }
   }
 

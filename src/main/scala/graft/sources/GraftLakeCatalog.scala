@@ -5649,10 +5649,9 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
     // columnar (vectorized) decode whenever the WHOLE active set
     // qualifies — Spark requires scan-uniform columnar-ness, and
     // runtime filtering only shrinks `active`, so a decision taken
-    // over the current set stays valid for every planned partition
-    // `-Dgraft.lake.columnar=off` pins the row path: the A/B knob the
-    // decode benchmark uses (and a mitigation lever if a decode bug
-    // ever needs ruling out in production). Keyed (SPJ) scans go
+    // over the current set stays valid for every planned partition;
+    // any scan `GraftLakeColumnar.eligible` rejects reads through the
+    // row path. Keyed (SPJ) scans go
     // columnar too when their planning is the per-key FILE-LIST shape
     // (every active file partition-pure) — the chained per-file batch
     // readers preserve the key grouping.
@@ -5661,7 +5660,6 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
     // into the same selection view the DV filter uses
     new GraftLakeReaderFactory(fullSchema, requiredSchema, nameDefaults,
       (!keyedPlanning || metaKeyed) &&
-        !sys.props.get("graft.lake.columnar").contains("off") &&
         GraftLakeColumnar.eligible(active,
           requiredSchema, namesOf, nameDefaults))
 }

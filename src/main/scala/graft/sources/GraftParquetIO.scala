@@ -3,22 +3,19 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types => PTypes}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Real columnar IO for `graft.storage = parquet` lake tables: each
-  * committed file group lands as an actual parquet file (written with
-  * parquet-mr's example API — the same writer/reader stack Spark's own
-  * parquet source sits on), so write-amplification claims are measured
+  * committed file group lands as an actual parquet file (written by
+  * Spark's own parquet write support, read back row-at-a-time through
+  * parquet-mr's `Group` API), so write-amplification claims are measured
   * in BYTES on disk rather than driver-object identity, and the reader
   * factories exercise genuine columnar decode in tasks.
   *
@@ -38,7 +35,7 @@ object GraftParquetIO {
   private def primSupported(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | FloatType | BooleanType |
          StringType | DateType | TimestampType | TimestampNTZType => true
-    // money columns: unscaled-INT64 decimal (the parquet DECIMAL
+    // money columns: unscaled-integer decimal (the parquet DECIMAL
     // annotation for precision <= 18 — the common lakehouse encoding)
     case d: DecimalType => d.precision <= 18
     case _ => false
@@ -54,137 +51,16 @@ object GraftParquetIO {
     case _ => primSupported(dt)
   }
 
-  private def primType(dt: DataType, required: Boolean)
-      : PTypes.PrimitiveBuilder[org.apache.parquet.schema.PrimitiveType] = {
-    def b(t: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName) =
-      if (required) PTypes.required(t) else PTypes.optional(t)
-    dt match {
-      case LongType => b(INT64)
-      case IntegerType => b(INT32)
-      case DoubleType => b(DOUBLE)
-      case FloatType => b(FLOAT)
-      case BooleanType => b(BOOLEAN)
-      case StringType => b(BINARY).as(LogicalTypeAnnotation.stringType())
-      case DateType => b(INT32).as(LogicalTypeAnnotation.dateType())
-      case TimestampType | TimestampNTZType => b(INT64)
-        .as(LogicalTypeAnnotation.timestampType(false,
-          LogicalTypeAnnotation.TimeUnit.MICROS))
-      case d: DecimalType if d.precision <= 18 => b(INT64)
-        .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-      case other => throw new UnsupportedOperationException(
-        s"graft.storage=parquet cannot store ${other.sql}")
-    }
-  }
-
-  /** The parquet type of one (possibly nested) field — recursive over
-    * ARRAY/STRUCT/MAP, each in its standard encoding. */
-  private def ptype(n: String, dt: DataType,
-      required: Boolean = false): org.apache.parquet.schema.Type =
-    dt match {
-      case ArrayType(et, _) =>
-        PTypes.optionalGroup()
-          .as(LogicalTypeAnnotation.listType())
-          .addField(PTypes.repeatedGroup()
-            .addField(ptype("element", et))
-            .named("list"))
-          .named(n)
-      case StructType(fields) =>
-        val g = PTypes.optionalGroup()
-        fields.foreach(f => g.addField(ptype(f.name, f.dataType)))
-        g.named(n)
-      case MapType(kt, vt, _) =>
-        PTypes.optionalGroup()
-          .as(LogicalTypeAnnotation.mapType())
-          .addField(PTypes.repeatedGroup()
-            .addField(ptype("key", kt, required = true))
-            .addField(ptype("value", vt))
-            .named("key_value"))
-          .named(n)
-      case prim => primType(prim, required).named(n)
-    }
-
-  private def messageType(
-      names: Seq[String], types: Seq[DataType]): MessageType = {
-    val b = PTypes.buildMessage()
-    names.zip(types).foreach { case (n, dt) => b.addField(ptype(n, dt)) }
-    b.named("graft_lake_file")
-  }
-
-  /** Append the NON-NULL catalyst value `v` of type `dt` at field `i`
-    * of `g`, recursing into nested groups. Callers handle null (absent
-    * field) — parquet encodes null as no value at the position. */
-  private def addTo(g: Group, i: Int, dt: DataType, v: Any): Unit =
-    dt match {
-      case LongType | TimestampType | TimestampNTZType =>
-        g.add(i, v.asInstanceOf[Long])
-      case IntegerType | DateType => g.add(i, v.asInstanceOf[Int])
-      case DoubleType => g.add(i, v.asInstanceOf[Double])
-      case FloatType => g.add(i, v.asInstanceOf[Float])
-      case BooleanType => g.add(i, v.asInstanceOf[Boolean])
-      case StringType => g.add(i, Binary.fromConstantByteArray(
-        v.asInstanceOf[UTF8String].getBytes))
-      case _: DecimalType =>
-        g.add(i, v.asInstanceOf[Decimal].toUnscaledLong)
-      case ArrayType(et, _) =>
-        // one `list` entry group per element; a null element is an
-        // entry with no `element` value (empty array = LIST group with
-        // zero entries — distinct from a null column)
-        val arr = v.asInstanceOf[ArrayData]
-        val lg = g.addGroup(i)
-        var j = 0
-        while (j < arr.numElements()) {
-          val entry = lg.addGroup(0)
-          if (!arr.isNullAt(j)) addTo(entry, 0, et, arr.get(j, et))
-          j += 1
-        }
-      case StructType(fields) =>
-        val sr = v.asInstanceOf[InternalRow]
-        val sg = g.addGroup(i)
-        var j = 0
-        while (j < fields.length) {
-          if (!sr.isNullAt(j))
-            addTo(sg, j, fields(j).dataType, sr.get(j, fields(j).dataType))
-          j += 1
-        }
-      case MapType(kt, vt, _) =>
-        val m = v.asInstanceOf[MapData]
-        val mg = g.addGroup(i)
-        val ks = m.keyArray()
-        val vs = m.valueArray()
-        var j = 0
-        while (j < m.numElements()) {
-          val kv = mg.addGroup(0)
-          addTo(kv, 0, kt, ks.get(j, kt)) // keys are required, never null
-          if (!vs.isNullAt(j)) addTo(kv, 1, vt, vs.get(j, vt))
-          j += 1
-        }
-      case other => throw new UnsupportedOperationException(
-        s"graft.storage=parquet cannot store ${other.sql}")
-    }
-
   /** Write one file group; returns its size in bytes (the currency of
-    * the write-amplification assertions).
-    *
-    * DEFAULT: the NATIVE row writer (VERDICT r16 task 7) — Spark's own
+    * the write-amplification assertions). Spark's own
     * [[org.apache.spark.sql.execution.datasources.parquet
     * .ParquetWriteSupport]] streams InternalRows straight into parquet
-    * column writers through a RecordConsumer, no per-row `Group` object
-    * tree (the write-side twin of the vectorized decode). Encodings are
-    * the standard modern shapes (3-level LIST/MAP, INT64-micros
-    * timestamps) and both readers — the positional Group reader below
-    * and the vectorized batch reader — serve files from either writer;
-    * the only physical divergence is DECIMAL(≤9), which the native
-    * writer stores as INT32 ([[readValue]] dispatches on the file's own
-    * primitive type, so mixed-writer tables read exactly).
-    * `-Dgraft.lake.write.columnar=off` pins the legacy Group writer —
-    * the A/B knob DecodeBench's write phase measures. */
-  def write(path: String, names: Seq[String], types: Seq[DataType],
-      rows: Vector[InternalRow]): Long =
-    if (sys.props.get("graft.lake.write.columnar").contains("off"))
-      writeGroups(path, names, types, rows)
-    else writeNative(path, names, types, rows)
-
-  private def writeNative(path: String, names: Seq[String],
+    * column writers through a RecordConsumer, with no per-row object
+    * tree. Encodings are the standard modern shapes (3-level LIST/MAP,
+    * INT64-micros timestamps, DECIMAL(<=9) as INT32 and DECIMAL(10-18) as
+    * INT64), which both the Group reader below and the vectorized batch
+    * reader serve. */
+  def write(path: String, names: Seq[String],
       types: Seq[DataType], rows: Vector[InternalRow]): Long = {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
     import org.apache.spark.sql.internal.SQLConf
@@ -220,28 +96,8 @@ object GraftParquetIO {
         .ParquetWriteSupport()
   }
 
-  /** The legacy parquet-mr `Group` writer (row-at-a-time object trees):
-    * kept as the A/B baseline and a production fallback knob. */
-  private def writeGroups(path: String, names: Seq[String],
-      types: Seq[DataType], rows: Vector[InternalRow]): Long = {
-    val schema = messageType(names, types)
-    val factory = new SimpleGroupFactory(schema)
-    val writer = ExampleParquetWriter.builder(new Path(path))
-      .withConf(new Configuration()).withType(schema).build()
-    try rows.foreach { r =>
-      val g = factory.newGroup()
-      var i = 0
-      while (i < types.length) {
-        if (!r.isNullAt(i)) addTo(g, i, types(i), r.get(i, types(i)))
-        i += 1
-      }
-      writer.write(g)
-    } finally writer.close()
-    new java.io.File(path).length()
-  }
-
   /** The catalyst value of the PRESENT field `i` of `g` typed `dt`,
-    * recursing into nested groups (dual of [[addTo]]). */
+    * recursing into nested groups. */
   private def readValue(g: Group, i: Int, dt: DataType): Any = dt match {
     case LongType | TimestampType | TimestampNTZType => g.getLong(i, 0)
     case IntegerType | DateType => g.getInteger(i, 0)
@@ -250,10 +106,8 @@ object GraftParquetIO {
     case BooleanType => g.getBoolean(i, 0)
     case StringType => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
     case d: DecimalType =>
-      // dispatch on the FILE's primitive: the legacy Group writer
-      // stores every ≤18-precision decimal as INT64; the native writer
-      // (Spark's converter) stores ≤9 as INT32 — both are this table's
-      // own files and must read exactly
+      // dispatch on the FILE's primitive: the writer stores
+      // precision ≤9 as INT32 and 10-18 as INT64
       g.getType.getType(i).asPrimitiveType().getPrimitiveTypeName match {
         case INT32 =>
           Decimal(g.getInteger(i, 0).toLong, d.precision, d.scale)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampNTZType}
 
-import graft.Query
+import graft.{Query, Session}
 import graft.functions.Exact._
 import graft.sources.Tables
 
@@ -75,33 +75,22 @@ object StreamingOps {
     * here was. Batch queries in the same session are unaffected: the
     * conf is restored before the post-stream batch read.
     *
-    * Round-8 re-tune (after the TIMESTAMP_NTZ source fix restored all 20
-    * streaming queries): ABAB sweep 2 vs 4 over the 5 heaviest streaming
-    * queries at sf0.1 read 47.3/42.0 s vs 43.4/43.7 s — means within
-    * 2.5%, i.e. noise. The pinned 2 stays (smaller per-batch store-commit
-    * fan-out at equal measured cost).
+    * `queryCap` is that per-query sizing: the stream-stream joins commit
+    * FOUR state stores per partition per side each batch, and their
+    * in-flight state is the smallest in the registry, so they take 1
+    * (interleaved A/B, min-of-2 at sf0.1: full_outer 9.17→7.03, join
+    * 3.82→2.54, semi 6.72→5.82, left_outer 6.59→6.05; the
+    * aggregation-shaped queries measured WORSE at 1 and keep 2). The cap
+    * never RAISES the count: a session already below the state-volume
+    * target must not be lifted to it (that would ADD fan-out).
     */
   private def withStreamingPartitions[A](spark: SparkSession,
       queryCap: Int = 2)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    // dev-only override so the per-round A/B can sweep the cap without a
-    // recompile; production sizes this per query at first deploy (above).
-    // `queryCap` is that per-query sizing: the stream-stream joins commit
-    // FOUR state stores per partition per side each batch, and their
-    // in-flight state is the smallest in the registry, so they take 1
-    // (r21 interleaved A/B, min-of-2 at sf0.1: full_outer 9.17→7.03,
-    // join 3.82→2.54, semi 6.72→5.82, left_outer 6.59→6.05; the
-    // aggregation-shaped queries measured WORSE at 1 and keep 2).
-    val cap = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .filter(_ > 0) // 0/negative would poison every streaming shuffle
-      .getOrElse(queryCap)
-    // never RAISE the count: a session already below the state-volume
-    // target must not be lifted to the cap (that would ADD fan-out)
-    val target = math.min(cap, scala.util.Try(prev.toInt).getOrElse(cap))
-    spark.conf.set(key, target.toString)
-    try body finally spark.conf.set(key, prev)
+    val target = math.min(queryCap,
+      scala.util.Try(prev.toInt).getOrElse(queryCap))
+    Session.withConfs(spark, key -> target.toString)(body)
   }
 
   /** Pin the state backend for the stream-stream joins while `body` runs:
@@ -109,7 +98,7 @@ object StreamingOps {
     * layout — ONE store per partition holding all four join-state column
     * families as RocksDB virtual column families, vs format 2's FOUR
     * separate stores per partition). A stream-stream join's per-batch cost
-    * at small in-flight state is store-commit fan-out (r21 DevDiag:
+    * at small in-flight state is store-commit fan-out (DevDiag:
     * commitTimeMs ~160-210 ms/batch across the 4 HDFS-backed stores), so
     * collapsing 4 commits into 1 attacks the measured wall directly, and
     * changelog checkpointing writes the batch's delta instead of
@@ -117,27 +106,16 @@ object StreamingOps {
     * checkpoint, never changed on an existing one — every drain here uses
     * a fresh per-query temp checkpoint, exactly the "sized/chosen once at
     * first deploy" contract the partition cap documents above.
-    * Dev A/B knob: -Dgraft.stream.join.state=hdfs2 restores the previous
-    * backend without a recompile (SPARK_GRAFT_JAVA_OPTS passthrough).
     */
-  private def withJoinStateBackend[A](spark: SparkSession)(body: => A): A = {
-    if (sys.props.get("graft.stream.join.state").contains("hdfs2")) body
-    else {
-      val confs = Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"),
-        "spark.sql.streaming.join.stateFormatVersion" -> "3",
-        ("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled") -> "true")
-      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-  }
+  private def withJoinStateBackend[A](spark: SparkSession)(body: => A): A =
+    Session.withConfs(spark,
+      "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
+      "spark.sql.streaming.join.stateFormatVersion" -> "3",
+      ("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled") -> "true")(body)
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Await an AvailableNow drain AND prove it ingested at least one row.
     * Every drain in the registry reads a non-empty source, so zero input
@@ -779,12 +757,9 @@ object StreamingOps {
       .transformWithState(new TwsSessionizer,
         TimeMode.EventTime(), OutputMode.Append())
     val name = s"graft_stream_sess_tws_${sinkId.incrementAndGet()}"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
     // transformWithState requires the RocksDB state store
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Session.withConfs(spark,
+        "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
       withStreamingPartitions(spark, queryCap = 1) {
         val q = sessions.toDF().writeStream
           .outputMode("append")
@@ -793,11 +768,6 @@ object StreamingOps {
           .trigger(Trigger.AvailableNow())
           .start()
         awaitDrained(q)
-      }
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
       }
     }
     spark.table(name)

@@ -296,15 +296,13 @@ class ColumnarScanSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("legacy and native writers interleave in one table; both readers agree") {
-    // VERDICT r16 task 7: the default write path is Spark's
-    // ParquetWriteSupport (no per-row Group trees); the legacy Group
-    // writer stays behind -Dgraft.lake.write.columnar=off. A table may
-    // hold files from BOTH (the knob can flip mid-life), including the
-    // one physical divergence (DECIMAL(<=9) as INT32 vs INT64) — both
-    // the row reader and the vectorized reader must serve the mix.
+  test("nested and DECIMAL(7,2) files: columnar scan and Group row reader exact") {
+    // the writer stores DECIMAL(<=9) as INT32 and DECIMAL(10-18) as
+    // INT64; the vectorized scan and the Group row reader (the path of
+    // every scan `GraftLakeColumnar.eligible` rejects) must both serve
+    // either, nested columns included
     useCatalog()
-    val t = "graftlake.spec_mixed_writers"
+    val t = "graftlake.spec_writer_readers"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, small DECIMAL(7,2), " +
       "big DECIMAL(16,3), ts TIMESTAMP, xs ARRAY<BIGINT>, " +
@@ -319,11 +317,7 @@ class ColumnarScanSpec extends SparkTestBase {
         "named_struct('a', id, 'b', concat('s', id)) AS m",
         "map('h', id % 7) AS tags")
         .coalesce(1).writeTo(t).append()
-    wave(0, 100) // native writer (default)
-    sys.props("graft.lake.write.columnar") = "off"
-    try wave(100, 200) // legacy Group writer
-    finally sys.props -= "graft.lake.write.columnar"
-    wave(200, 300) // native again
+    Seq((0L, 100L), (100L, 200L), (200L, 300L)).foreach((wave _).tupled)
     def answers(): (Long, java.math.BigDecimal, java.math.BigDecimal,
         Long, Long) = {
       val r = spark.table(t).agg(sum("k"), sum("small"), sum("big"),
@@ -339,17 +333,48 @@ class ColumnarScanSpec extends SparkTestBase {
         BigDecimal(i).setScale(3) * 3).sum.setScale(3).bigDecimal
         .toPlainString),
       (0L until 300L).map(_ * 2).sum, (0L until 300L).sum)
-    // columnar plan serves the mix
     assert(plan(spark.table(t)).contains("ColumnarToRow"),
-      s"mixed-writer files must stay columnar:\n${plan(spark.table(t))}")
+      s"parquet files must scan columnar:\n${plan(spark.table(t))}")
     assert(answers() == expected, s"columnar read: ${answers()}")
-    // row path serves the identical answers
-    sys.props("graft.lake.columnar") = "off"
+    // row reader: write -> read one file over the same columns
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.types._
+    import graft.sources.GraftParquetIO
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("small", DecimalType(7, 2)),
+      StructField("big", DecimalType(16, 3)),
+      StructField("xs", ArrayType(LongType)),
+      StructField("m", StructType(Seq(StructField("a", LongType),
+        StructField("b", StringType)))),
+      StructField("tags", MapType(StringType, LongType))))
+    val want = (0L until 300L).map(i => Row(i,
+      (BigDecimal(i).setScale(2) / 4).setScale(2).bigDecimal,
+      (BigDecimal(i).setScale(3) * 3).setScale(3).bigDecimal,
+      Seq(i, i * 2), Row(i, s"s$i"), Map("h" -> i % 7)))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    val file = java.io.File.createTempFile("graft_rowreader", ".parquet")
+    file.delete()
     try {
-      assert(!plan(spark.table(t)).contains("ColumnarToRow"))
-      assert(answers() == expected, s"row read: ${answers()}")
-    } finally sys.props -= "graft.lake.columnar"
-    // row-level op over mixed files (CoW rewrite reads via the scan)
+      GraftParquetIO.write(file.getPath, schema.fieldNames.toSeq,
+        schema.fields.map(_.dataType).toSeq,
+        want.map(r => toCatalyst(r).asInstanceOf[InternalRow]).toVector)
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file.getPath),
+          new org.apache.hadoop.conf.Configuration()))
+      val pschema = try footer.getFileMetaData.getSchema
+        finally footer.close()
+      assert(Seq("small", "big").map(c =>
+        pschema.getType(pschema.getFieldIndex(c)).asPrimitiveType
+          .getPrimitiveTypeName.name) == Seq("INT32", "INT64"),
+        s"both decimal encodings must be exercised: $pschema")
+      val got = GraftParquetIO.read(file.getPath,
+        schema.fields.map(_.dataType).toSeq).map(toScala)
+      assert(got == want, s"row read: ${got.take(3)}")
+    } finally file.delete()
+    // row-level op over the files (CoW rewrite reads via the scan)
     spark.sql(s"UPDATE $t SET s = 'hit' WHERE k IN (50, 150, 250)")
     assert(spark.table(t).where("s = 'hit'").count() == 3)
     assert(spark.table(t).count() == 300)

@@ -921,18 +921,77 @@ class LakehouseSpec extends SparkTestBase {
   }
 
   test("parquet storage mode: row-level registry queries are mode-identical") {
-    // VERDICT r11 task 3: with graft.storage=parquet the same fixtures
-    // run over REAL parquet file groups; memory mode is oracle-green, so
-    // row-for-row equality proves parquet mode is too
-    def collected(n: String) = run(n).collect().toSeq
-    val names =
-      Seq("ref_merge_into_sql", "ref_merge_on_read", "ref_change_feed")
-    val mem = names.map(n => n -> collected(n)).toMap
-    sys.props("graft.lake.storage") = "parquet"
-    try names.foreach { n =>
-      assert(collected(n) == mem(n),
-        s"$n must produce the identical relation in parquet storage")
-    } finally sys.props -= "graft.lake.storage"
+    // the registry's row-level statements (ref_update_delete_sql,
+    // ref_merge_into_sql, ref_merge_on_read, ref_change_feed) run over a
+    // memory-backed and a parquet-backed table; memory mode is
+    // oracle-green, so row-for-row equality proves parquet mode is too
+    spark.conf.set("spark.sql.catalog.graftlake",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    val orders = graft.sources.Tables(spark, Sf, "orders")
+      .select("o_orderkey", "o_orderstatus", "o_totalprice")
+    orders.filter(col("o_orderkey") % 2 === 0)
+      .withColumn("o_orderstatus", lit("U"))
+      .createOrReplaceTempView("spec_tier_batch")
+    def merge(t: String): Unit = spark.sql(
+      s"""MERGE INTO $t t USING spec_tier_batch b
+         |ON t.o_orderkey = b.o_orderkey
+         |WHEN MATCHED THEN UPDATE SET
+         |  o_orderstatus = b.o_orderstatus, o_totalprice = b.o_totalprice
+         |WHEN NOT MATCHED THEN INSERT
+         |  (o_orderkey, o_orderstatus, o_totalprice)
+         |  VALUES (b.o_orderkey, b.o_orderstatus, b.o_totalprice)
+         |""".stripMargin)
+    def relations(storage: String): Seq[Seq[org.apache.spark.sql.Row]] = {
+      def create(op: String, mode: String) = {
+        val name = s"spec_tier_${op}_$storage"
+        spark.sql(s"DROP TABLE IF EXISTS graftlake.$name")
+        spark.sql(s"CREATE TABLE graftlake.$name (o_orderkey BIGINT, " +
+          "o_orderstatus STRING, o_totalprice DOUBLE) TBLPROPERTIES " +
+          s"('graft.mode' = '$mode', 'graft.storage' = '$storage')")
+        orders.filter(col("o_orderkey") % 3 =!= 0)
+          .writeTo(s"graftlake.$name").append()
+        name -> graft.sources.GraftLakeCatalog.tableFor("graftlake", name).get
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
+      val (upd, updT) = create("upddel", "copy-on-write")
+      spark.sql(s"UPDATE graftlake.$upd SET o_orderstatus = 'X' " +
+        "WHERE o_orderkey % 10 = 1")
+      spark.sql(s"DELETE FROM graftlake.$upd " +
+        "WHERE o_orderstatus = 'F' AND o_orderkey % 10 = 2")
+      val (cow, cowT) = create("cow", "copy-on-write")
+      merge(s"graftlake.$cow")
+      val (mor, morT) = create("mor", "merge-on-read")
+      val v0 = morT.currentVersion
+      merge(s"graftlake.$mor")
+      val feed = spark.read
+        .option("graft.changes.from", v0.toString)
+        .option("graft.changes.to", morT.currentVersion.toString)
+        .table(s"graftlake.$mor")
+        .select(col("_change_type"), col("_commit_version") - v0,
+          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+      // the tier under test really is the one each table was created with
+      Seq(updT, cowT, morT).foreach(tb => assert(
+        tb.filePaths.nonEmpty == (storage == "parquet") &&
+          tb.filePaths.values.forall(p => new java.io.File(p).isFile),
+        s"$storage: file groups must live in the $storage tier"))
+      val tables = Seq(upd, cow, mor).map(n => s"graftlake.$n")
+      val out = tables.map(n => rows(spark.table(n))) :+ rows(feed)
+      tables.foreach(n => spark.sql(s"DROP TABLE $n"))
+      out
+    }
+    val mem = relations("memory")
+    val pq = relations("parquet")
+    Seq("UPDATE + DELETE", "CoW MERGE", "MoR MERGE", "change feed")
+      .zip(mem.zip(pq)).foreach { case (what, (m, p)) =>
+        assert(m.nonEmpty, s"$what: empty relation proves nothing")
+        val same = m == p
+        assert(same, s"$what must produce the identical relation in " +
+          s"parquet storage: memory-only ${m.diff(p).take(3)}, " +
+          s"parquet-only ${p.diff(m).take(3)}")
+      }
+    assert(pq.last.map(_.getString(0)).toSet == Set("insert", "delete"),
+      "the change feed carries both pre-images and new rows")
   }
 
   test("parquet storage: write amplification is measured bytes (CoW one file, MoR ~zero)") {
@@ -1113,10 +1172,9 @@ class LakehouseSpec extends SparkTestBase {
     // group filtering is disabled to isolate the static path.
     spark.conf.set("spark.sql.catalog.graftlake",
       classOf[graft.sources.GraftLakeCatalog].getName)
-    val conf = "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled"
-    val prev = spark.conf.getOption(conf)
-    spark.conf.set(conf, "false")
-    try {
+    Session.withConfs(spark,
+        "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled" ->
+          "false") {
       val t = "graftlake.spec_stats_rls"
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
@@ -1136,9 +1194,6 @@ class LakehouseSpec extends SparkTestBase {
       assert(spark.table(t).where("s = 'X'").collect()
         .map(_.getLong(0)).toSeq == Seq(150L))
       spark.sql(s"DROP TABLE IF EXISTS $t")
-    } finally prev match {
-      case Some(v) => spark.conf.set(conf, v)
-      case None => spark.conf.unset(conf)
     }
   }
 

@@ -110,14 +110,11 @@ class PlanSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val tA = "graftlake.spj_tf_a"
     val tB = "graftlake.spj_tf_b"
-    val pinned = Map(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = pinned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    try Session.withConfs(spark,
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       Seq(tA, tB).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       // parquet storage: SPJ must plan from MANIFEST key stamps (the
       // evolution legs below assert the stamp gating — memory tables
@@ -162,13 +159,7 @@ class PlanSpec extends SparkTestBase {
       assert(!pRe.contains("Exchange hashpartitioning"),
         s"the restamping rewrite re-earns zero-exchange SPJ:\n$pRe")
       assert(restamped.count() == 200)
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      Seq(tA, tB).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+    } finally Seq(tA, tB).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("SQL table function decorrelates to one equi-join, filters inferred") {

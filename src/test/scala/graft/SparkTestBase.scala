@@ -12,14 +12,7 @@ trait SparkTestBase extends AnyFunSuite {
     * them use the driver's correctness scale factor. */
   val SfOracle: String = "/root/testdata/sf0.01"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def run(name: String, sf: String = Sf): org.apache.spark.sql.DataFrame =
     SparkEntry.queries(name)(spark, sf)

@@ -120,11 +120,9 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
       }
     }
 
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Session.withConfs(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val streamed = spark.readStream.schema(ev.schema.toDDL)
         .parquet(feed.feed.getAbsolutePath)
         .as[(Long, Long)]
@@ -139,11 +137,6 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
         .option("checkpointLocation", feed.ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
     val got = spark.table("graft_tws_init_sink").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
