@@ -47,24 +47,19 @@ object DevDiag {
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       // driver stack sampler: every 20 ms, one frame-of-interest per
-      // non-idle thread, aggregated; prints the top stacks after the run
+      // non-idle thread (the stream execution thread in any state: its
+      // waits on jobs and forks are cost too), aggregated; prints the
+      // top stacks after the run
       val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
       @volatile var sampling = true
       val sampler = new Thread(() => {
         while (sampling) {
           val all = Thread.getAllStackTraces()
           all.forEach { (t, st) =>
-            if (t.getState == Thread.State.RUNNABLE && st.nonEmpty
+            val stream = t.getName.startsWith("stream execution thread")
+            if ((stream || t.getState == Thread.State.RUNNABLE)
                 && !t.getName.contains("sampler")) {
-              val interesting = st.iterator.map(_.toString).find(f =>
-                f.startsWith("org.apache.spark.sql.catalyst") ||
-                f.startsWith("org.apache.spark.sql.execution") ||
-                f.startsWith("graft.") ||
-                f.startsWith("org.apache.parquet") ||
-                f.startsWith("org.apache.spark.sql.classic") ||
-                f.startsWith("java.io") || f.startsWith("java.nio") ||
-                f.startsWith("org.apache.hadoop"))
-              interesting.foreach { f =>
+              frameOf(st).foreach { f =>
                 counts.merge(s"[${t.getName.take(24)}] $f", 1, (a, b) =>
                   Integer.valueOf(a.intValue + b.intValue))
               }
@@ -88,5 +83,30 @@ object DevDiag {
       top.foreach { case (f, n) => println(f"  $n%5d $f") }
     }
     spark.stop()
+  }
+
+  private val Attributed = Seq("org.apache.spark.sql.catalyst",
+    "org.apache.spark.sql.execution", "org.apache.spark.sql.classic",
+    "graft.", "org.apache.parquet", "org.apache.hadoop", "java.io",
+    "java.nio")
+
+  private val Library = Seq("java.", "sun.", "org.apache.hadoop.io.")
+
+  private def name(f: StackTraceElement): String =
+    s"${f.getClassName}.${f.getMethodName}"
+
+  /** The topmost frame of interest, and the first non-library frame from
+    * there down when it differs (`WritableUtils` and `java.io` frames say
+    * little without their caller). Keyed on the class name: a frame's
+    * `toString` carries a class-loader prefix (`app//org.apache...`). */
+  private def frameOf(st: Array[StackTraceElement]): Option[String] = {
+    val i = st.indexWhere(f => Attributed.exists(f.getClassName.startsWith))
+    if (i < 0) None
+    else {
+      val caller = st.iterator.drop(i)
+        .find(f => !Library.exists(f.getClassName.startsWith))
+      Some(caller.filter(_ ne st(i))
+        .fold(name(st(i)))(c => s"${name(st(i))} <- ${name(c)}"))
+    }
   }
 }

@@ -1215,7 +1215,7 @@ object Lakehouse {
     val chk = new File(tmp, s"graft_scdf_chk_$tag")
     val sink = new File(tmp, s"graft_scdf_sink_$tag")
     Seq(chk, sink).foreach(graft.streaming.StreamingOps.deleteRecursively)
-    def drain(): Unit = {
+    def drain(): Unit = Session.withLeanDrain(spark, chk.getAbsolutePath) {
       val q = spark.readStream
         .option("graft.stream.startingVersion", "0")
         .table(s"$t.changes")
@@ -1333,7 +1333,7 @@ object Lakehouse {
       .select(col("event_id"), col("event_type"), col("user_id"),
         col("value"))
     val schema = base.schema
-    def drain(): Unit = {
+    def drain(): Unit = Session.withLeanDrain(spark, chk.getAbsolutePath) {
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(land.getAbsolutePath)
@@ -1359,7 +1359,7 @@ object Lakehouse {
       .orderBy("event_type"), t)
   }
 
-  /** STREAMING UPSERT via EQUALITY DELETES (VERDICT r16 task 4) — the
+  /** STREAMING UPSERT via EQUALITY DELETES — the
     * Flink→Iceberg CDC-writer shape: each micro-batch epoch commits its
     * rows as new data files PLUS an equality-delete keys file that
     * logically deletes every prior row with a matching key, with ZERO
@@ -1394,20 +1394,22 @@ object Lakehouse {
     base.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .repartition(3).write.mode("append").parquet(land.getAbsolutePath)
-    val q = spark.readStream
-      .schema(spark.table(t).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(land.getAbsolutePath)
-      .writeStream
-      .option("checkpointLocation", chk.getAbsolutePath)
-      .option("graft.upsert.key", "o_orderkey")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable(t)
-    graft.streaming.StreamingOps.awaitDrained(q)
+    Session.withLeanDrain(spark, chk.getAbsolutePath) {
+      val q = spark.readStream
+        .schema(spark.table(t).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(land.getAbsolutePath)
+        .writeStream
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .option("graft.upsert.key", "o_orderkey")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(t)
+      graft.streaming.StreamingOps.awaitDrained(q)
+    }
     releasing(spark, spark.table(t).orderBy("o_orderkey"), t)
   }
 
-  /** Change feed ACROSS an equality-delete commit (VERDICT r17 task 2)
+  /** Change feed ACROSS an equality-delete commit
     * — the CDC-writer's primary consumer reading the CDC-writer's own
     * commit shape. A streaming upsert lands one equality-delete epoch
     * (data files + keys parquet, zero read-probe at write); the feed
@@ -1441,15 +1443,17 @@ object Lakehouse {
     base.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
-    val q = spark.readStream
-      .schema(spark.table(t).schema)
-      .parquet(land.getAbsolutePath)
-      .writeStream
-      .option("checkpointLocation", chk.getAbsolutePath)
-      .option("graft.upsert.key", "o_orderkey")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable(t)
-    graft.streaming.StreamingOps.awaitDrained(q)
+    Session.withLeanDrain(spark, chk.getAbsolutePath) {
+      val q = spark.readStream
+        .schema(spark.table(t).schema)
+        .parquet(land.getAbsolutePath)
+        .writeStream
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .option("graft.upsert.key", "o_orderkey")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(t)
+      graft.streaming.StreamingOps.awaitDrained(q)
+    }
     require(table.eqDeletes.nonEmpty,
       "the feed must be read UNDER the unresolved equality delete")
     releasing(spark, spark.read

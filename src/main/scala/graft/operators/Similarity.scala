@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Query
+import graft.{Query, Session}
 import graft.functions.DotProduct
 import graft.sources.Tables
 
@@ -657,21 +657,23 @@ object Similarity {
       when(DotProduct(col("e"), typedLit(multiPlanes(k))) > 0, lit(1L << k))
         .otherwise(lit(0L))).reduce(_ + _)
     val schema = spark.read.parquet(chunks.getAbsolutePath).schema
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(chunks.getAbsolutePath)
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("bucket", signature)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.mode("append").partitionBy("bucket")
-          .parquet(idx.getAbsolutePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.streaming.StreamingOps.awaitDrained(q)
+    Session.withLeanDrain(spark) {
+      val q = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(chunks.getAbsolutePath)
+        .select(col("vec_id"), asDouble(col("embedding")).as("e"))
+        .withColumn("bucket", signature)
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("append").partitionBy("bucket")
+            .parquet(idx.getAbsolutePath)
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      graft.streaming.StreamingOps.awaitDrained(q)
+    }
     // probe prep: vector 0's embedding + its multiprobe keys (driver-side
     // scalars, like the IVF probe's centroid ids)
     val p0 = Tables(spark, sfDir, "embeddings")

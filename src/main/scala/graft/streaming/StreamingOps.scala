@@ -53,31 +53,26 @@ object StreamingOps {
 
   private val sinkId = new AtomicLong(0)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` lowered for the
-    * streaming query it starts. Stateful streaming partitioning is sticky
-    * (pinned by the first checkpoint) and each micro-batch COMMITS every
-    * state store partition — so the partition count must track state
-    * volume, not CPU count: at harness scale 2 partitions hold the state
-    * comfortably and cut per-batch store-commit fan-out 16×. Two
-    * interleaved A/Bs at sf0.1 over the 5 heaviest streaming queries:
-    * 8→4 partitions 41.3/40.8 → 34.7/34.9 s (the stream-stream outer
-    * join, which commits 4 stores per partition per side, gained ~27%),
-    * then 4→2 a further consistent ~6% (41.3/39.8 → 39.1/36.9 s) — each
-    * halving trims the per-batch commit fan-out with state volumes this
-    * small. The hard-coded 2 is a HARNESS-SCALE constant — right for
-    * sf0.1's state volumes, re-tuned by interleaved A/B per benchmark
-    * round, and NOT a formula: at larger sf (or in production) the same
-    * measurement would land higher, because the constraint is that each
-    * store partition's state fits and compacts comfortably, and more
-    * state wants more partitions. A production deployment sizes this
-    * once per query at first deploy (it cannot be changed without a new
-    * checkpoint) — keyed to peak in-flight state, exactly as the A/B
-    * here was. Batch queries in the same session are unaffected: the
-    * conf is restored before the post-stream batch read.
+  /** Run `body`, one drain, with `spark.sql.shuffle.partitions` lowered
+    * for the streaming query it starts, inside [[Session.withLeanDrain]]
+    * (every drain here checkpoints under the local temp dir). Stateful
+    * streaming partitioning is sticky (pinned by the first checkpoint)
+    * and each micro-batch COMMITS every state store partition, so the
+    * partition count must track state volume, not CPU count: at harness
+    * scale 2 partitions hold the state comfortably and cut per-batch
+    * store-commit fan-out. Two interleaved A/Bs at sf0.1 over the 5
+    * heaviest streaming queries: 8→4 partitions 41.3/40.8 → 34.7/34.9 s,
+    * then 4→2 a further ~6% (41.3/39.8 → 39.1/36.9 s). The 2 is a
+    * HARNESS-SCALE constant, not a formula: at larger sf (or in
+    * production) the same measurement lands higher, because each store
+    * partition's state must fit and compact comfortably. A deployment
+    * sizes it once per query at first deploy (it cannot change without a
+    * new checkpoint), keyed to peak in-flight state. Batch queries in the
+    * same session are unaffected: the conf is restored before the
+    * post-stream batch read.
     *
-    * `queryCap` is that per-query sizing: the stream-stream joins commit
-    * FOUR state stores per partition per side each batch, and their
-    * in-flight state is the smallest in the registry, so they take 1
+    * `queryCap` is that per-query sizing: the stream-stream joins have
+    * the smallest in-flight state in the registry, so they take 1
     * (interleaved A/B, min-of-2 at sf0.1: full_outer 9.17→7.03, join
     * 3.82→2.54, semi 6.72→5.82, left_outer 6.59→6.05; the
     * aggregation-shaped queries measured WORSE at 1 and keep 2). The cap
@@ -90,22 +85,29 @@ object StreamingOps {
     val prev = spark.conf.get(key)
     val target = math.min(queryCap,
       scala.util.Try(prev.toInt).getOrElse(queryCap))
-    Session.withConfs(spark, key -> target.toString)(body)
+    Session.withLeanDrain(spark) {
+      Session.withConfs(spark, key -> target.toString)(body)
+    }
   }
 
   /** Pin the state backend for the stream-stream joins while `body` runs:
-    * RocksDB provider + join state format v3 (Spark 4's single-store
-    * layout — ONE store per partition holding all four join-state column
-    * families as RocksDB virtual column families, vs format 2's FOUR
-    * separate stores per partition). A stream-stream join's per-batch cost
-    * at small in-flight state is store-commit fan-out (DevDiag:
-    * commitTimeMs ~160-210 ms/batch across the 4 HDFS-backed stores), so
-    * collapsing 4 commits into 1 attacks the measured wall directly, and
-    * changelog checkpointing writes the batch's delta instead of
-    * snapshotting the whole store. The format is pinned by the first
-    * checkpoint, never changed on an existing one — every drain here uses
-    * a fresh per-query temp checkpoint, exactly the "sized/chosen once at
-    * first deploy" contract the partition cap documents above.
+    * RocksDB provider + join state format v3 (ONE store per partition
+    * holding all four join-state column families, vs format 2's FOUR
+    * separate stores per partition) with changelog checkpointing (a
+    * batch writes its delta instead of a store snapshot).
+    *
+    * What it was meant to save was misread. The ~160-210 ms/batch of
+    * `commitTimeMs` across format 2's four HDFS-backed stores was mostly
+    * process forks, not store work: each commit writes one checkpoint
+    * file, and Spark's default FileContext checkpoint manager forks
+    * `readlink` and `chmod` through Hadoop `Shell` for each, about 40 ms
+    * per file. [[Session.withLeanDrain]] removes the `readlink` forks
+    * for every drain, whichever backend. With it, on `lake_stream`
+    * (4 cores, 2 traced pairs), HDFS + format 2 against this pin:
+    * `state_commit_ms` 224 vs 282, `add_batch_ms` 10.1 vs 17.2 s; over
+    * 6 pairs `wall_s` 23.3 vs 31.0 s, but `live_heap_mb` 94.0 vs 84.6.
+    * The pin stays for the heap alone. The format is pinned by the
+    * first checkpoint; every drain here uses a fresh temp checkpoint.
     */
   private def withJoinStateBackend[A](spark: SparkSession)(body: => A): A =
     Session.withConfs(spark,
@@ -606,9 +608,11 @@ object StreamingOps {
     * backfill closes its last sessions (advance the clock, don't poke the
     * state). TWO because the watermark a batch runs under comes from the
     * PREVIOUS batch's data: sentinel-1's batch still runs at
-    * (last-file max − delay), and AvailableNow terminates without a
-    * further no-data batch — timeouts due after that watermark would stay
-    * in state forever. Sentinel-2's batch runs under sentinel-1's
+    * (last-file max − delay). Spark 4.1's AvailableNow does run one
+    * further no-data batch after the last file (DevDiag shows it, with
+    * rows=0), so sentinel-1 alone may now flush every tail; sentinel-2
+    * is kept until that is measured on its own, since dropping it
+    * changes the fixture. Sentinel-2's batch runs under sentinel-1's
     * watermark (max + 1 h), past every possible (end + gap). The sentinel
     * rows carry user_id = -1 and flow through the whole pipeline — their
     * session rows are dropped from the OUTPUT, because filtering them

@@ -313,13 +313,11 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
       s"replay must replace its own partition and leave others: $byBatch")
   }
 
-  test("dropDuplicatesWithinWatermark dedups across a checkpoint restart") {
-    // the BOUNDED-state dedup the unbounded stream_dedup_exact documents as
-    // its production form: key state lives only within the watermark delay.
-    // A duplicate redelivered in a LATER run (recovered checkpoint, still
-    // within the watermark) must be dropped by the restored key state.
-    import org.apache.spark.sql.functions._
-    val h = new RestartFeed("graft_dedup_wm")
+  /** A restart feed of (id, ts) rows drained through
+    * dropDuplicatesWithinWatermark: `drain()` returns the ids one run
+    * emitted. */
+  private final class DedupFeed(name: String) {
+    val h = new RestartFeed(name)
 
     def addFile(tag: String, rows: Seq[(Long, String)]): Unit =
       h.addFile(tag, spark.createDataFrame(rows).toDF("id", "raw")
@@ -336,15 +334,74 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
       import scala.jdk.CollectionConverters._
       emitted.asScala.toSet
     }
+  }
 
-    addFile("a", Seq(1L -> "2026-01-01 12:55:00", 2L -> "2026-01-01 13:00:00"))
-    assert(drain() == Set(1L, 2L))
+  test("dropDuplicatesWithinWatermark dedups across a checkpoint restart") {
+    // the BOUNDED-state dedup the unbounded stream_dedup_exact documents as
+    // its production form: key state lives only within the watermark delay.
+    // A duplicate redelivered in a LATER run (recovered checkpoint, still
+    // within the watermark) must be dropped by the restored key state.
+    val f = new DedupFeed("graft_dedup_wm")
+    f.addFile("a", Seq(1L -> "2026-01-01 12:55:00", 2L -> "2026-01-01 13:00:00"))
+    assert(f.drain() == Set(1L, 2L))
     // id=2 redelivered at 13:02 — within the delay, key state recovered
     // from the checkpoint must swallow it; id=3 is fresh and passes
-    addFile("b", Seq(2L -> "2026-01-01 13:02:00", 3L -> "2026-01-01 14:00:00"))
-    val second = drain()
+    f.addFile("b", Seq(2L -> "2026-01-01 13:02:00", 3L -> "2026-01-01 14:00:00"))
+    val second = f.drain()
     assert(second == Set(3L),
       s"the redelivered id=2 must be deduped by restored state, got $second")
+  }
+
+  test("withLeanDrain pins the FileSystem checkpoint manager for its body only") {
+    val key = Session.CheckpointManagerKey
+    assert(spark.conf.getOption(key).isEmpty)
+    val inside = Session.withLeanDrain(spark)(spark.conf.get(key))
+    assert(inside ==
+      "org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager")
+    assert(spark.conf.getOption(key).isEmpty,
+      "the manager pin must not outlive the drain")
+  }
+
+  test("a registry drain leaves the Hadoop conf without property sources") {
+    import org.apache.hadoop.conf.Configuration
+    run("stream_tumbling_counts").count()
+    // the copy every stream-stream join broadcasts
+    val conf = spark.sessionState.newHadoopConf()
+    val key = "io.file.buffer.size"
+    assert(conf.get(key) != null)
+    val sources = Option(conf.getPropertySources(key)).map(_.toSeq)
+    assert(sources.isEmpty, s"$key still carries sources $sources")
+    val tracked = new Configuration(false)
+    conf.iterator().forEachRemaining(e => tracked.set(e.getKey, e.getValue))
+    assert(tracked.getPropertySources(key) != null)
+    def written(c: Configuration): Int = {
+      val out = new java.io.ByteArrayOutputStream()
+      c.write(new java.io.DataOutputStream(out))
+      out.size
+    }
+    assert(written(conf) < written(tracked),
+      s"write: ${written(conf)} B untracked vs ${written(tracked)} B tracked")
+  }
+
+  test("a checkpoint written under withLeanDrain resumes under either manager") {
+    // the same bounded dedup restart, its runs alternating between the
+    // pinned FileSystem manager and Spark's default: the offset, commit,
+    // source-log and state files each writes must resume in the other
+    val f = new DedupFeed("graft_dedup_lean")
+    def leanDrain(): Set[Long] = Session.withLeanDrain(spark, f.h.ckpt) {
+      assert(spark.conf.get(Session.CheckpointManagerKey) ==
+        Session.FsCheckpointManager)
+      f.drain()
+    }
+    f.addFile("a", Seq(1L -> "2026-01-01 12:55:00", 2L -> "2026-01-01 13:00:00"))
+    assert(leanDrain() == Set(1L, 2L))
+    f.addFile("b", Seq(2L -> "2026-01-01 13:02:00", 3L -> "2026-01-01 14:00:00"))
+    assert(f.drain() == Set(3L),
+      "the default manager must resume the pinned manager's checkpoint")
+    f.addFile("c", Seq(3L -> "2026-01-01 14:03:00", 4L -> "2026-01-01 15:00:00"))
+    assert(leanDrain() == Set(4L),
+      "the pinned manager must resume the default manager's checkpoint")
   }
 
   test("chained stateful rollup recovers BOTH state generations across restarts") {
