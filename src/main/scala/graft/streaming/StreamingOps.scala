@@ -4,6 +4,7 @@ import java.time.Instant
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.RunStateStores
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampNTZType}
@@ -90,48 +91,33 @@ object StreamingOps {
     }
   }
 
-  /** Pin the state backend for the stream-stream joins while `body` runs:
-    * RocksDB provider + join state format v3 (ONE store per partition
-    * holding all four join-state column families, vs format 2's FOUR
-    * separate stores per partition) with changelog checkpointing (a
-    * batch writes its delta instead of a store snapshot).
+  /** Await an AvailableNow drain, release its state stores, and prove it
+    * ingested at least one row.
     *
-    * What it was meant to save was misread. The ~160-210 ms/batch of
-    * `commitTimeMs` across format 2's four HDFS-backed stores was mostly
-    * process forks, not store work: each commit writes one checkpoint
-    * file, and Spark's default FileContext checkpoint manager forks
-    * `readlink` and `chmod` through Hadoop `Shell` for each, about 40 ms
-    * per file. [[Session.withLeanDrain]] removes the `readlink` forks
-    * for every drain, whichever backend. With it, on `lake_stream`
-    * (4 cores, 2 traced pairs), HDFS + format 2 against this pin:
-    * `state_commit_ms` 224 vs 282, `add_batch_ms` 10.1 vs 17.2 s; over
-    * 6 pairs `wall_s` 23.3 vs 31.0 s, but `live_heap_mb` 94.0 vs 84.6.
-    * The pin stays for the heap alone. The format is pinned by the
-    * first checkpoint; every drain here uses a fresh temp checkpoint.
-    */
-  private def withJoinStateBackend[A](spark: SparkSession)(body: => A): A =
-    Session.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
-      "spark.sql.streaming.join.stateFormatVersion" -> "3",
-      ("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled") -> "true")(body)
-
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Await an AvailableNow drain AND prove it ingested at least one row.
-    * Every drain in the registry reads a non-empty source, so zero input
-    * rows has exactly one cause worth failing loudly for: a FIXED
-    * checkpoint location silently resuming a prior run's committed offsets
-    * (observed once in benching — 5 queries "ran" in 1.16 s total; see the
-    * checkpoint note in Bench.scala). Per-query temp checkpoints avoid it
-    * by convention; this converts the convention into an invariant at
-    * every drain site, batch-count independent (`numInputRows` summed over
-    * the run's progress events — no observe() plumbing needed).
+    * Release: when the run ends, failed or not, every state-store provider
+    * it loaded is unloaded and closed ([[RunStateStores.unload]]), instead
+    * of up to a maintenance interval (60 s) later. The HDFS-backed
+    * provider (stateful aggregations, dedup, the stream-stream joins)
+    * keeps its recent versions on the JVM heap, so without this a
+    * finished drain's state stays live: 10.9 MB for the four joins of
+    * `lake_stream`. The RocksDB provider (`transformWithState`) frees its
+    * native memory the same way. Only this run's providers go; another
+    * query live in the JVM keeps its stores.
+    *
+    * Rows: every drain in the registry reads a non-empty source, so zero
+    * input rows has exactly one cause worth failing loudly for: a FIXED
+    * checkpoint location silently resuming a prior run's committed
+    * offsets, which makes a fake-fast bench number (see the checkpoint
+    * note in Bench.scala). Per-query temp checkpoints avoid it by
+    * convention; this makes the convention an invariant at every drain
+    * site, batch-count independent (`numInputRows` summed over the run's
+    * progress events).
     */
   private[graft] def awaitDrained(
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
+    // an interrupted wait leaves the run going: its stores are in use
+    try q.awaitTermination()
+    finally if (!q.isActive) RunStateStores.unload(q.runId)
     val progress = q.recentProgress
     val rows = progress.map(_.numInputRows).sum
     if (rows == 0) {
@@ -140,8 +126,8 @@ object StreamingOps {
       // drain that ran >= cap micro-batches may have evicted its
       // data-bearing batches, making "sum == 0" inconclusive rather than
       // proof of a silent resume. Registry drains run 4-6 batches, far
-      // under the cap — but the invariant must state its own validity
-      // domain instead of silently depending on it (ADVICE r9).
+      // under the cap, but the invariant states its own validity domain
+      // instead of silently depending on it.
       val cap = q.sparkSession.conf
         .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
       require(progress.length < cap,
@@ -496,7 +482,7 @@ object StreamingOps {
     val src = eventStream(spark, sfDir)
     val joined = signupPurchaseJoin(src, "inner", keepSentinels = false)
     val name = s"graft_stream_ssjoin_${sinkId.incrementAndGet()}"
-    withJoinStateBackend(spark) { withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingPartitions(spark, queryCap = 1) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -504,7 +490,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrained(q)
-    } }
+    }
     spark.table(name)
       .select(col("signup_id"), col("purchase_id"),
         col("s_user").as("user_id"),
@@ -763,7 +749,9 @@ object StreamingOps {
     val name = s"graft_stream_sess_tws_${sinkId.incrementAndGet()}"
     // transformWithState requires the RocksDB state store
     Session.withConfs(spark,
-        "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider) {
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider")) {
       withStreamingPartitions(spark, queryCap = 1) {
         val q = sessions.toDF().writeStream
           .outputMode("append")
@@ -1085,7 +1073,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "leftOuter", keepSentinels = true)
     val name = s"graft_stream_louter_${sinkId.incrementAndGet()}"
-    withJoinStateBackend(spark) { withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingPartitions(spark, queryCap = 1) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1093,7 +1081,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrained(q)
-    } }
+    }
     spark.table(name)
       .filter(col("s_user") >= 0)
       .select(col("signup_id"), col("purchase_id"),
@@ -1123,7 +1111,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "left_semi", keepSentinels = true)
     val name = s"graft_stream_semi_${sinkId.incrementAndGet()}"
-    withJoinStateBackend(spark) { withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingPartitions(spark, queryCap = 1) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1131,7 +1119,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrained(q)
-    } }
+    }
     spark.table(name)
       .filter(col("s_user") >= 0)
       .select(col("signup_id"), col("s_user").as("user_id"),
@@ -1177,7 +1165,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "fullOuter", keepSentinels = true)
     val name = s"graft_stream_fouter_${sinkId.incrementAndGet()}"
-    withJoinStateBackend(spark) { withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingPartitions(spark, queryCap = 1) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1185,7 +1173,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrained(q)
-    } }
+    }
     spark.table(name)
       .filter(coalesce(col("s_user"), col("p_user")) >= 0)
       .select(col("signup_id"), col("purchase_id"),

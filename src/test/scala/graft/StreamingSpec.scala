@@ -535,4 +535,72 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
       s"guard must name the zero-row condition, got: ${e.getMessage}")
     StreamingOps.deleteRecursively(tmp)
   }
+
+  test("a stream-stream join drain runs on the HDFS store and unloads it") {
+    import java.util.UUID
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.execution.streaming.state.RunStateStores
+    import org.apache.spark.sql.streaming.{StreamingQueryListener,
+      StreamingQueryProgress}
+    import StreamingQueryListener._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val runs = new ConcurrentLinkedQueue[UUID]()
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name.startsWith("graft_stream_ssjoin_")) runs.add(e.runId)
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      assert(run("stream_stream_join").count() > 0)
+      assert(runs.size == 1, s"one join run expected, saw $runs")
+      val runId = runs.peek()
+      eventually(timeout(30.seconds)) {
+        assert(progress.stream().anyMatch(_.runId == runId))
+      }
+      val ops = progress.toArray(Array.empty[StreamingQueryProgress])
+        .filter(_.runId == runId).flatMap(_.stateOperators)
+      assert(ops.nonEmpty, "the join reports no state operator")
+      val metrics = ops.map(_.customMetrics.keySet).toSet
+      assert(metrics.forall(_.contains("loadedMapCacheHitCount")),
+        s"join state must run on the HDFS-backed provider, saw $metrics")
+      val left = RunStateStores.loaded(runId)
+      assert(left.isEmpty, s"the finished drain left $left loaded")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("a failed stateful drain rethrows and still unloads its stores") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.state.RunStateStores
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    import graft.streaming.StreamingOps
+    val h = new RestartFeed("graft_failed_drain")
+    import spark.implicits._
+    h.addFile("a", Seq((1L, "x"), (2L, "y")).toDF("id", "k"))
+    h.addFile("b", Seq((3L, "x")).toDF("id", "k"))
+    val q = spark.readStream.schema("id BIGINT, k STRING")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(h.feed.getAbsolutePath)
+      .groupBy("k").count()
+      .writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        batch.collect() // runs the aggregation: its stores load and commit
+        if (id == 1) throw new IllegalStateException("graft batch 1 fails")
+      }
+      .option("checkpointLocation", h.ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    val e = intercept[StreamingQueryException](StreamingOps.awaitDrained(q))
+    assert(causeMessages(e).contains("graft batch 1 fails"))
+    assert(q.recentProgress.exists(_.stateOperators.exists(_.numRowsTotal > 0)),
+      "batch 0 must have committed state before batch 1 failed")
+    val left = RunStateStores.loaded(q.runId)
+    assert(left.isEmpty, s"the failed drain left $left loaded")
+    StreamingOps.deleteRecursively(h.root)
+  }
 }
