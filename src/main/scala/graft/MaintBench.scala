@@ -2,7 +2,7 @@ package graft
 
 /** Dev-only scale probe for the DISTRIBUTED maintenance rewrites
   * (task-side writes, distributed cluster/compaction):
-  * loads orders×8 into a `graft.storage = parquet` lake table (the
+  * loads orders×8 into a lake table (the
   * 12M-row ingest itself exercises the task-side write plane that the
   * old driver-resident shape could not survive), then times
   * `CALL system.cluster` (range-shuffle sort rewrite),
@@ -21,8 +21,7 @@ object MaintBench {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT, " +
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     val base = spark.read.parquet(s"$sfDir/orders.parquet")
       .selectExpr("o_orderkey", "o_custkey", "o_orderstatus",
         "o_totalprice")
@@ -56,7 +55,7 @@ object MaintBench {
     println(s"""{"rows_after":$after}""")
     spark.sql(s"DROP TABLE IF EXISTS $t")
 
-    // ---- equality-delete maintenance at scale (VERDICT r18 task 6) ----
+    // ---- equality-delete maintenance at scale ----
     // The probed eq-debt paths (change feed delete legs, scan-less
     // COUNT, eq-aware bin-pack) gate on small spec fixtures; this leg
     // proves their cost SHAPE at 12M rows: the key-column probe pass is
@@ -66,8 +65,7 @@ object MaintBench {
     spark.sql(s"DROP TABLE IF EXISTS $te")
     spark.sql(s"CREATE TABLE $te (o_orderkey BIGINT, o_custkey BIGINT, " +
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     timed(s"eqd_ingest_x$copies") {
       (1 to copies).map(_ => base).reduce(_ union _)
         .repartition(16).writeTo(te).append()
@@ -159,8 +157,7 @@ object MaintBench {
     val tc2 = "gmw2.maint_race"
     spark.sql(s"CREATE TABLE $tc1 (o_orderkey BIGINT, o_custkey BIGINT, " +
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     timed(s"cw_ingest_x$copies") {
       (1 to copies).map(_ => base).reduce(_ union _)
         .repartition(16).writeTo(tc1).append()
@@ -214,7 +211,7 @@ object MaintBench {
       s"cross-writer leg state drifted: $cwAfter vs $cwExpected")
     spark.sql(s"DROP TABLE IF EXISTS $tc1")
 
-    // ---- N-writer sustained contention (VERDICT r19 task 4) ----
+    // ---- N-writer sustained contention ----
     // FOUR concurrent drivers — two appenders, one CDC MERGE loop, one
     // compactor — race one 12M-row table. This is the regime the
     // 2-writer leg above never reaches: sustained mixed contention
@@ -234,8 +231,7 @@ object MaintBench {
     }
     spark.sql("CREATE TABLE gnw1.maint_nw (o_orderkey BIGINT, " +
       "o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     timed(s"nw_ingest_x$copies") {
       (1 to copies).map(_ => base).reduce(_ union _)
         .repartition(16).writeTo("gnw1.maint_nw").append()

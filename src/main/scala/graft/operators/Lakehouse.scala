@@ -16,7 +16,7 @@ import graft.sources.Tables
 /** Lakehouse table semantics over RAW parquet + a manifest — the two
   * capabilities a table format adds that plain directory scans cannot
   * give, re-derived from first principles so the engine works where no
-  * Delta/Iceberg jar exists (this sandbox; see VERDICT "missing" #1):
+  * Delta/Iceberg jar exists:
   *
   *  - TIME TRAVEL ([[timeTravel]]): a version = a MANIFEST (the list of
   *    data files), never a data copy. A change batch COPY-ON-WRITES only
@@ -259,24 +259,11 @@ object Lakehouse {
     props.map { case (k, v) => s"'$k' = '$v'" }
       .mkString(" TBLPROPERTIES (", ", ", ")")
 
-  /** Storage prop for the fixtures the r21 A/B measured FASTER on real
-    * parquet file groups than on memory-backed rows: a memory-backed
-    * scan ships every row INSIDE each task closure (5-11 MB serialized
-    * task, driver-serialized per task — guide §5 "the driver should do
-    * almost no data work"), while parquet-backed partitions ship paths
-    * and decode columnar bytes executor-side. Interleaved A/B at sf0.1
-    * (dev/r21/ab_lake_{mem,pq}{1,2}.json, min-of-2): the 14 flipped
-    * queries total 30.6 → 20.1 s. Fixtures that LOST (partition fan-out
-    * writes many tiny files: join_spj_storage, ref_partition_transform,
-    * ref_cluster_files) and the metadata-table fixtures stay
-    * memory-backed. */
-  private val pqStore = "graft.storage" -> "parquet"
-
   /** Materialize `out` off the lake table (localCheckpoint pins the
     * computed rows in the block manager), then DROP the query's tables:
     * a registry query must not leave its table + full commit history on
-    * the driver heap for the rest of a 240-query bench run (VERDICT r11
-    * task 2). Parquet-backed storage is deleted by the DROP too. */
+    * the driver heap for the rest of a 240-query bench run. The table's
+    * parquet storage is deleted by the DROP too. */
   private[graft] def releasing(spark: SparkSession, out: DataFrame,
       tables: String*): DataFrame = {
     val pinned = out.localCheckpoint(true)
@@ -284,7 +271,7 @@ object Lakehouse {
     pinned
   }
 
-  /** Create (or recreate) the in-memory row-level table and load it with
+  /** Create (or recreate) the row-level lake table and load it with
     * the `previous` upsert-fixture slice of orders. Returns the qualified
     * name. One catalog instance per session ⇒ per-session isolation. */
   private def freshLakeTable(
@@ -294,8 +281,7 @@ object Lakehouse {
     val t = s"graftlake.orders_$suffix"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps(pqStore))
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -303,7 +289,7 @@ object Lakehouse {
     t
   }
 
-  /** Real `MERGE INTO` SQL (VERDICT round-5 missing #1): the statement is
+  /** Real `MERGE INTO` SQL: the statement is
     * planned by Spark's RewriteMergeIntoTable into a group-based
     * ReplaceData over [[graft.sources.GraftLakeTable]] — matched rows
     * updated, unmatched source rows inserted, untouched rows carried —
@@ -339,7 +325,7 @@ object Lakehouse {
   }
 
   /** The MERGE-ON-READ twin of [[mergeIntoSql]] (the read-side complement
-    * of file-group copy-on-write, VERDICT r9's blessed extension): the
+    * of file-group copy-on-write): the
     * same MERGE statement against a table created with
     * `graft.mode = merge-on-read`, planned through Spark's DELTA-based
     * row-level rewrite (`SupportsDelta` → WriteDelta) instead of
@@ -357,7 +343,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      tblProps("graft.mode" -> "merge-on-read"))
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -379,7 +365,7 @@ object Lakehouse {
     releasing(spark, spark.table(t).orderBy("o_orderkey"), t)
   }
 
-  /** SYNC-STYLE MERGE (VERDICT r15 task 3): the full Spark 4 MERGE
+  /** SYNC-STYLE MERGE: the full Spark 4 MERGE
     * grammar including `WHEN NOT MATCHED BY SOURCE` — the clauses that
     * make a table MIRROR a batch: matched rows update, new source rows
     * insert, and target rows ABSENT from the batch are conditionally
@@ -426,7 +412,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      tblProps("graft.mode" -> "merge-on-read"))
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -629,7 +615,7 @@ object Lakehouse {
       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
   /** Row-level UPDATE + DELETE on a `PARTITIONED BY` table — the
-    * combination ADVICE r10 flagged as a capability regression (the
+    * combination that once regressed (the
     * key-grouped scan rejects `_file`). The scan now falls back to
     * FILE-GRAINED partitions for the operation (and the group-filter
     * subquery), so the statements stay group-granular while regular
@@ -644,7 +630,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_bucket BIGINT, o_orderkey BIGINT, o_orderstatus STRING, " +
-      "o_totalprice DOUBLE) PARTITIONED BY (o_bucket)" + tblProps(pqStore))
+      "o_totalprice DOUBLE) PARTITIONED BY (o_bucket)")
     Tables(spark, sfDir, "orders")
       .select(pmod(col("o_orderkey"), lit(8L)).as("o_bucket"),
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -676,9 +662,9 @@ object Lakehouse {
       |GROUP BY o_bucket, o_orderstatus
       |ORDER BY o_bucket, o_orderstatus""".stripMargin
 
-  /** CHANGE FEED (Delta CDF / Iceberg changelog, VERDICT r10's natural
-    * next surface): after the merge-on-read MERGE, read the row-level
-    * changes the commit produced via the `graft.changes.*` read options —
+  /** CHANGE FEED (Delta CDF / Iceberg changelog): after the
+    * merge-on-read MERGE, read the row-level changes the commit produced
+    * via the `graft.changes.*` read options —
     * every matched row surfaces as a DELETE carrying its pre-image and
     * every written row as an INSERT, straight from the commit history's
     * file/DV diff. The scan reads only files the commit range TOUCHED
@@ -692,7 +678,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      tblProps("graft.mode" -> "merge-on-read"))
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -742,7 +728,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      tblProps("graft.mode" -> "merge-on-read"))
     val prev = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -814,8 +800,7 @@ object Lakehouse {
     val t = "graftlake.orders_evolve"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps(pqStore))
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -859,8 +844,8 @@ object Lakehouse {
       |ORDER BY channel, o_orderstatus""".stripMargin
 
   /** Schema evolution part 2 — RENAME COLUMN and DROP COLUMN via STABLE
-    * PER-FILE FIELD IDS (the Iceberg field-id contract; VERDICT r11 task
-    * 4): files stamp column IDS, not names, so a rename is pure metadata
+    * PER-FILE FIELD IDS (the Iceberg field-id contract): files stamp
+    * column IDS, not names, so a rename is pure metadata
     * (files written before it keep serving the id under its new name —
     * a name-keyed manifest would wrongly null-fill them) and a drop
     * retires an id without touching a single file. The fixture exercises
@@ -876,8 +861,7 @@ object Lakehouse {
     val t = "graftlake.orders_rename"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps(pqStore))
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -904,7 +888,7 @@ object Lakehouse {
   }
 
   /** Schema evolution part 3 — ADD COLUMN ... DEFAULT and widening
-    * ALTER COLUMN TYPE (VERDICT r12 task 5), both pure-metadata on the
+    * ALTER COLUMN TYPE, both pure-metadata on the
     * field-id manifests: a defaulted add stores (id → default) in table
     * metadata and PRE-EVOLUTION files serve the EXISTS-default instead
     * of NULL (the Delta/Iceberg default-value contract — readers
@@ -920,7 +904,7 @@ object Lakehouse {
     val t = "graftlake.orders_defwiden"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_qty INT, o_totalprice DOUBLE)" + tblProps(pqStore))
+      "(o_orderkey BIGINT, o_qty INT, o_totalprice DOUBLE)")
     def base = Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"),
         (col("o_orderkey") % 1000).cast("int").as("o_qty"),
@@ -981,7 +965,7 @@ object Lakehouse {
   }
 
   /** HIDDEN (transform) partitioning — `PARTITIONED BY (days(ts),
-    * bucket(8, user_id))` (VERDICT r13 task 1): the partition key is
+    * bucket(8, user_id))`: the partition key is
     * DERIVED by the table, never a user-maintained column — the Iceberg
     * partition-transform contract that makes the reference's
     * date-prefixed S3 layout (app.py:26) automatic. The scan reports
@@ -1036,8 +1020,7 @@ object Lakehouse {
     spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, " +
       "meta STRUCT<status: STRING, bucket: BIGINT>, " +
       "amounts ARRAY<DOUBLE>, " +
-      "tags MAP<STRING, BIGINT>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "tags MAP<STRING, BIGINT>)")
     Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"),
         struct(col("o_orderstatus").as("status"),
@@ -1065,7 +1048,7 @@ object Lakehouse {
       | CAST(sum(o_orderkey % 5) AS BIGINT) AS sum_k1
       |FROM orders GROUP BY status ORDER BY status""".stripMargin
 
-  /** WRITE-AUDIT-PUBLISH over snapshot refs (VERDICT r13 task 5) — the
+  /** WRITE-AUDIT-PUBLISH over snapshot refs — the
     * Iceberg branch/tag surface: `create_tag` names the audited-good
     * production version (retention keeps it), `create_branch` forks an
     * audit branch at the main head, `.option("graft.branch", ...)`
@@ -1085,7 +1068,7 @@ object Lakehouse {
     val t = "graftlake.orders_wap"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, " +
-      "o_orderstatus STRING, o_totalprice DOUBLE)" + tblProps(pqStore))
+      "o_orderstatus STRING, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     // the audited-good production state, tagged
@@ -1208,7 +1191,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      tblProps("graft.mode" -> "merge-on-read"))
     val tmp = sys.props("java.io.tmpdir")
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
       "_pid" + ProcessHandle.current().pid()
@@ -1322,7 +1305,7 @@ object Lakehouse {
     val t = "graftlake.events_ssink"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (event_id BIGINT, event_type STRING, " +
-      "user_id BIGINT, value DOUBLE)" + tblProps(pqStore))
+      "user_id BIGINT, value DOUBLE)")
     val tmp = sys.props("java.io.tmpdir")
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
       "_pid" + ProcessHandle.current().pid()
@@ -1375,11 +1358,9 @@ object Lakehouse {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.orders_eqd"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    // parquet storage explicitly: the keys files are real parquet the
-    // scan tasks read (memory storage has no upsert surface)
+    // the keys files are real parquet the scan tasks read
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     base.filter(col("o_orderkey") % 3 =!= 0).writeTo(t).append() // prev
@@ -1426,8 +1407,7 @@ object Lakehouse {
     val t = "graftlake.orders_eqdcf"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     base.filter(col("o_orderkey") % 3 =!= 0).writeTo(t).append()
@@ -1483,8 +1463,7 @@ object Lakehouse {
     val t = "graftlake.orders_mdel"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     val maxKey = base.agg(max("o_orderkey")).head.getLong(0)
@@ -1526,8 +1505,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, " +
-      "CONSTRAINT price_pos CHECK (o_totalprice > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT price_pos CHECK (o_totalprice > 0))")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     base.writeTo(t).append()
@@ -1548,7 +1526,7 @@ object Lakehouse {
       }
     require(refused, "the poisoned batch must fail the CHECK loudly")
     // RENAME COLUMN rewrites the persisted CHECK predicate alongside
-    // the rename (VERDICT r19: a dangling predicate would inject an
+    // the rename (a dangling predicate would inject an
     // unresolvable assertion into EVERY later write and brick the
     // table): the constraint keeps binding under the new name — a
     // violating insert is refused, a clean one lands.
@@ -1587,8 +1565,7 @@ object Lakehouse {
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
       "PARTITIONED BY (o_orderstatus) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .writeTo(t).append()
@@ -1630,13 +1607,11 @@ object Lakehouse {
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .createOrReplaceTempView("ctas_src_orders")
-    spark.sql(s"CREATE TABLE $t TBLPROPERTIES " +
-      "('graft.storage' = 'parquet') AS " +
+    spark.sql(s"CREATE TABLE $t AS " +
       "SELECT o_orderkey, o_orderstatus, o_totalprice " +
       "FROM ctas_src_orders WHERE o_orderkey % 2 = 0")
     // the reload: new schema, new contents, one atomic flip
-    spark.sql(s"REPLACE TABLE $t TBLPROPERTIES " +
-      "('graft.storage' = 'parquet') AS " +
+    spark.sql(s"REPLACE TABLE $t AS " +
       "SELECT o_orderkey, o_orderstatus " +
       "FROM ctas_src_orders WHERE o_orderkey % 3 = 0")
     releasing(spark, spark.table(t).orderBy("o_orderkey"), t)
@@ -1679,8 +1654,7 @@ object Lakehouse {
     val tB = "gcw2.cw_orders"
     spark.sql(s"CREATE TABLE $tA " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     // v1 (writer A): keys ≡ 0 (mod 3)

@@ -19,8 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A minimal TableCatalog whose tables support ROW-LEVEL SQL — the
-  * surface the reference's blind warehouse append lacks and VERDICT
-  * round-5 flagged as the one untested modern-K1 gap: real
+  * surface the reference's blind warehouse append lacks: real
   * `MERGE INTO` / `UPDATE` / `DELETE FROM` statements planned by Spark's
   * row-level-operation rewrite (RewriteMergeIntoTable → ReplaceData) and
   * executed against a [[SupportsRowLevelOperations]] table.
@@ -41,8 +40,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    commit, files the filtered scan never read are CARRIED by
   *    reference (same object identity), not rewritten. A single-key
   *    MERGE against a 10k-file table rewrites one file, exactly like a
-  *    production lakehouse; only the storage is an in-process buffer
-  *    (single-JVM harness stand-in, like [[graft.streaming.InMemoryLog]]).
+  *    production lakehouse. Every file is a real parquet file on local
+  *    storage; the driver holds only manifests.
   *
   * If the group filter cannot fire (rule disabled, or a statement whose
   * predicate matches every group), the scan keeps its full file set and
@@ -64,10 +63,11 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
 
   private var catalogName: String = _
   // `spark.sql.catalog.<name>.warehouse = /path`: the DURABLE root.
-  // Parquet-storage tables created under it land at
-  // `<warehouse>/<namespace…>/<table>` and are REOPENABLE from their
-  // on-disk `_graft_log` after a JVM restart — the registry below is
-  // then a cache, not the source of truth (VERDICT r15 task 2).
+  // Tables created under it land at `<warehouse>/<namespace…>/<table>`
+  // and are REOPENABLE from their on-disk `_graft_log` after a JVM
+  // restart — the registry below is then a cache, not the source of
+  // truth. Without a warehouse (and no `graft.location`) a table lives
+  // in a per-table temp dir that only the registry can find.
   private var warehouse: Option[java.io.File] = None
   private def tables = GraftLakeCatalog.registries
     .computeIfAbsent(catalogName,
@@ -83,7 +83,7 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
     warehouse.map(w => (ident.namespace() :+ ident.name())
       .foldLeft(w)((d, p) => new java.io.File(d, p)))
 
-  // ---- identifier → external-location pointers (ADVICE r16) ---------------
+  // ---- identifier → external-location pointers ---------------
   // A table created with an explicit `graft.location` OUTSIDE the
   // warehouse is durable at that location, but discovery (reopen,
   // listTables) probes only the warehouse-derived root — without a
@@ -134,8 +134,7 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
     durableRoot(ident).map { root =>
       val r = GraftLakeLog.restore(root)
       val t = new GraftLakeTable(r.tableName, r.schemaNow, r.partSpec,
-        r.mergeOnRead, storage = "parquet", location = Some(root),
-        reopenFrom = Some(r))
+        r.mergeOnRead, location = Some(root), reopenFrom = Some(r))
       Option(tables.putIfAbsent(ident, t)).getOrElse(t)
     }
 
@@ -224,7 +223,7 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
         // validate AT RESOLUTION, not at scan build: an invalid version
         // must fail here the way an invalid timestamp does — a lazily
         // resolved DataFrame over a bogus version is a latent error the
-        // user only hits at action time (ADVICE r13)
+        // user only hits at action time
         val v = version.toInt
         require(v >= g.earliestVersion && v <= g.currentVersion,
           s"VERSION AS OF $v out of range " +
@@ -304,29 +303,40 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
       }
     }
 
+  /** The write mode a CREATE asks for (true = merge-on-read), with the
+    * table properties validated. Every table stores parquet file
+    * groups, so `graft.storage` may only restate that: any other value
+    * (the retired `memory` tier included) fails the CREATE loudly. */
+  private def mergeOnReadOf(properties: util.Map[String, String]): Boolean = {
+    val mode = properties.getOrDefault("graft.mode", "copy-on-write")
+    require(mode == "copy-on-write" || mode == "merge-on-read",
+      s"unknown graft.mode '$mode'")
+    Option(properties.get("graft.storage")).foreach(s =>
+      require(s == "parquet", s"unsupported graft.storage '$s': every " +
+        "lake table stores parquet file groups"))
+    mode == "merge-on-read"
+  }
+
+  /** Explicit `graft.location` wins; else the catalog's warehouse
+    * derives `<warehouse>/<ns…>/<name>`; None = a per-table temp dir. */
+  private def durableRootOf(ident: Identifier,
+      properties: util.Map[String, String]): Option[java.io.File] =
+    Option(properties.get("graft.location"))
+      .map(new java.io.File(_)).orElse(tableRoot(ident))
+
   override def createTable(
       ident: Identifier, schema: StructType, partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val partSpec = parsePartSpec(schema, partitions)
-    val mode = properties.getOrDefault("graft.mode", "copy-on-write")
-    require(mode == "copy-on-write" || mode == "merge-on-read",
-      s"unknown graft.mode '$mode'")
-    val storage = properties.getOrDefault("graft.storage", "memory")
-    require(storage == "memory" || storage == "parquet",
-      s"unknown graft.storage '$storage'")
-    // durable root: explicit `graft.location` wins; else the catalog's
-    // warehouse derives `<warehouse>/<ns…>/<name>`. Either way a root
-    // already holding a table log is an EXISTS error — silently
-    // shadowing someone's durable data is the one unforgivable create.
-    val loc: Option[java.io.File] =
-      if (storage != "parquet") None
-      else Option(properties.get("graft.location"))
-        .map(new java.io.File(_)).orElse(tableRoot(ident))
+    val mergeOnRead = mergeOnReadOf(properties)
+    // a root already holding a table log is an EXISTS error — silently
+    // shadowing someone's durable data is the one unforgivable create
+    val loc = durableRootOf(ident, properties)
     // a CREATE must never shadow an existing durable table — neither
     // at its own root (explicit graft.location), nor at the
     // identifier's warehouse-derived root, nor at a location POINTER's
     // external target (the registry may simply not have reopened it
-    // yet in this JVM): check all three, for every storage mode
+    // yet in this JVM): check all three
     if ((loc.toSeq ++ tableRoot(ident).toSeq ++
         pointerFile(ident).flatMap(readPointer).toSeq)
         .exists(GraftLakeLog.exists))
@@ -336,12 +346,11 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
     // it cannot shadow or mislead discovery for the new table
     pointerFile(ident).filter(_.isFile).foreach(_.delete())
     val t = new GraftLakeTable(ident.toString, schema, partSpec,
-      mergeOnRead = mode == "merge-on-read", storage = storage,
-      location = loc)
+      mergeOnRead, location = loc)
     if (tables.putIfAbsent(ident, t) != null)
       throw new TableAlreadyExistsException(ident.toString)
     // a durable root OUTSIDE the warehouse gets its identifier→location
-    // pointer persisted (ADVICE r16) so reopen/listTables can find it
+    // pointer persisted so reopen/listTables can find it
     // after a restart; written AFTER the table's own log exists — a
     // crash in between leaves a pointer to a live table, and a crash
     // before leaves a discoverable-by-nothing root exactly as today
@@ -377,13 +386,11 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
         .toString.take(8)}")
   }
 
-  /** Retire the CURRENT durable state of `ident` (RTAS publish /
-    * replace-with-memory): atomically rename the root's log away (the
-    * visibility flip when no pointer supersedes it), then best-effort
-    * delete the dead log, the root's orphaned data files, and — when
-    * `alsoPointerTarget` — the pointer's external target storage. */
-  private def retireDurable(ident: Identifier,
-      alsoPointerTarget: Boolean): Unit = {
+  /** Retire the CURRENT durable state of `ident` (RTAS publish):
+    * atomically rename the root's log away (the visibility flip when no
+    * pointer supersedes it), then best-effort delete the dead log and
+    * the root's orphaned data files. */
+  private def retireDurable(ident: Identifier): Unit =
     tableRoot(ident).foreach { root =>
       val log = new java.io.File(root, GraftLakeLog.LogDir)
       if (log.isDirectory) {
@@ -396,25 +403,13 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
         }
       }
     }
-    if (alsoPointerTarget)
-      pointerFile(ident).foreach { p =>
-        readPointer(p).filter(GraftLakeLog.exists)
-          .foreach(GraftParquetIO.deleteRecursively)
-        p.delete()
-      }
-  }
 
   private def stageInternal(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String],
       mustExist: Option[Boolean])
       : org.apache.spark.sql.connector.catalog.StagedTable = {
     val partSpec = parsePartSpec(schema, partitions)
-    val mode = properties.getOrDefault("graft.mode", "copy-on-write")
-    require(mode == "copy-on-write" || mode == "merge-on-read",
-      s"unknown graft.mode '$mode'")
-    val storage = properties.getOrDefault("graft.storage", "memory")
-    require(storage == "memory" || storage == "parquet",
-      s"unknown graft.storage '$storage'")
+    val mergeOnRead = mergeOnReadOf(properties)
     def existsNow: Boolean = tables.containsKey(ident) ||
       (tableRoot(ident).toSeq ++
         pointerFile(ident).flatMap(readPointer).toSeq)
@@ -426,25 +421,20 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
       case _ => ()
     }
     val replacing = mustExist != Some(false)
-    // registry-only staging: memory tables, and parquet tables with no
-    // durable root (no warehouse, no graft.location — their storage is
-    // a per-table temp dir nothing can rediscover, so the registry put
-    // IS the publish; exactly createTable's contract for them)
-    val durableRootOpt = Option(properties.get("graft.location"))
-      .map(new java.io.File(_)).orElse(tableRoot(ident))
-    if (storage != "parquet" || durableRootOpt.isEmpty) {
+    // registry-only staging: no warehouse and no graft.location — the
+    // storage is a per-table temp dir nothing can rediscover, so the
+    // registry put IS the publish (createTable's contract for them)
+    val durableRootOpt = durableRootOf(ident, properties)
+    if (durableRootOpt.isEmpty) {
       val t = new GraftLakeTable(ident.toString, schema, partSpec,
-        mergeOnRead = mode == "merge-on-read", storage = storage)
+        mergeOnRead)
       new GraftStagedTable(t,
         commit = () => {
-          if (replacing) {
-            // a replaced durable table must not resurrect on reopen
-            retireDurable(ident, alsoPointerTarget = true)
-            tables.put(ident, t)
-          } else if (tables.putIfAbsent(ident, t) != null)
+          if (replacing) tables.put(ident, t)
+          else if (tables.putIfAbsent(ident, t) != null)
             throw new TableAlreadyExistsException(ident.toString)
         },
-        abort = () => if (storage == "parquet") t.deleteStorage())
+        abort = () => t.deleteStorage())
     } else {
       val finalRoot = durableRootOpt.get
       // REPLACE of an existing durable table publishes by POINTER SWING
@@ -462,13 +452,11 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
             "publish primitive) — DROP and re-CREATE instead")
       val staged = stagedSibling(finalRoot)
       val t = new GraftLakeTable(ident.toString, schema, partSpec,
-        mergeOnRead = mode == "merge-on-read", storage = "parquet",
-        location = Some(staged))
+        mergeOnRead, location = Some(staged))
       def reopenAt(root: java.io.File): GraftLakeTable = {
         val r = GraftLakeLog.restore(root)
         new GraftLakeTable(r.tableName, r.schemaNow, r.partSpec,
-          r.mergeOnRead, storage = "parquet", location = Some(root),
-          reopenFrom = Some(r))
+          r.mergeOnRead, location = Some(root), reopenFrom = Some(r))
       }
       new GraftStagedTable(t,
         commit = () => {
@@ -488,7 +476,7 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
               // disk errors — propagates as itself with the staged
               // directory left intact for inspection, instead of being
               // misreported as a name conflict with the fully-computed
-              // result destroyed (ADVICE r19)
+              // result destroyed
               case _: java.nio.file.FileAlreadyExistsException |
                   _: java.nio.file.DirectoryNotEmptyException =>
                 GraftParquetIO.deleteRecursively(staged)
@@ -508,7 +496,7 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
             val oldTarget = pointerFile(ident).flatMap(readPointer)
               .filter(GraftLakeLog.exists)
             writePointer(ident, staged)
-            retireDurable(ident, alsoPointerTarget = false)
+            retireDurable(ident)
             oldTarget.filter(_.getCanonicalFile !=
                 staged.getCanonicalFile)
               .foreach(GraftParquetIO.deleteRecursively)
@@ -606,7 +594,7 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
     * statement is ATOMIC: all changes validate against a local copy of
     * the schema and install in one assignment — a failing change in
     * `ADD COLUMNS (a, b NOT NULL)` leaves the table untouched, so the
-    * corrected retry cannot trip over a half-applied `a` (ADVICE r11). */
+    * corrected retry cannot trip over a half-applied `a`. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val t = lookup(ident)
       .getOrElse(throw new NoSuchTableException(ident))
@@ -749,12 +737,14 @@ object GraftLakeCatalog {
   * planning time, so a file written before an ADD COLUMN serves NULL for
   * the new id, a RENAME needs no rewrite (the id keeps resolving, under
   * its new name), and a DROP simply stops projecting the retired id —
-  * name-keyed manifests would wrongly null-fill a renamed column. */
-final case class GraftLakeFile(id: String, rows: Vector[InternalRow],
-    cols: Seq[Int], path: Option[String] = None,
+  * name-keyed manifests would wrongly null-fill a renamed column.
+  * `path` is the file's parquet data on disk; the driver keeps only
+  * this manifest — never rows — and `numRows` is recorded at write
+  * time. */
+final case class GraftLakeFile(id: String, cols: Seq[Int], path: String,
     types: Seq[DataType] = Nil, bytes: Long = 0L,
     stats: Map[Int, (Any, Any)] = Map.empty,
-    nRows: Long = -1L,
+    numRows: Long = 0L,
     nulls: Map[Int, Long] = Map.empty,
     sums: Map[Int, Long] = Map.empty,
     dsums: Map[Int, java.math.BigDecimal] = Map.empty,
@@ -784,7 +774,7 @@ final case class GraftLakeFile(id: String, rows: Vector[InternalRow],
     // the parquet file's internal column LABELS (write-time names),
     // positionally aligned with `cols`: the columnar reader projects by
     // label, and a post-write RENAME changes only the id→name mapping —
-    // the file keeps its labels (parquet storage only; Nil in memory)
+    // the file keeps its labels
     pnames: Seq[String] = Nil,
     // which PARTITION SPEC `pkey` was evaluated under (0 = the CREATE
     // spec): partition-spec evolution never rewrites files, so the
@@ -793,17 +783,7 @@ final case class GraftLakeFile(id: String, rows: Vector[InternalRow],
     pspecId: Int = 0,
     // per-column HLL registers (field id → 512 bytes): merged at plan
     // time into the distinctCount CBO reads — see GraftLakeStats.ndv*
-    ndv: Map[Int, Array[Byte]] = Map.empty) {
-  /** Committed row count (manifest metadata — parquet-backed files keep
-    * no rows in memory, so the count must be recorded at write time). */
-  def numRows: Long = if (nRows >= 0) nRows else rows.length.toLong
-  /** The file's rows: in-memory for the default storage, decoded from
-    * the REAL parquet file for `graft.storage = parquet`. */
-  def loadRows: Vector[InternalRow] = path match {
-    case None => rows
-    case Some(p) => GraftParquetIO.read(p, types)
-  }
-}
+    ndv: Map[Int, Array[Byte]] = Map.empty)
 
 /** Per-file MIN/MAX column statistics and the predicate evaluator that
   * prunes files against them — the Iceberg manifest-stats contract at
@@ -838,7 +818,7 @@ private[graft] object GraftLakeStats {
   /** -0.0 COMPARES as 0.0: java compareTo orders -0.0 < 0.0 but SQL `=`
     * treats them equal, so an un-normalized comparison could prune a
     * file whose every value is -0.0 against `x = 0.0` — and a pruned
-    * file is unrecoverable by the residual filter (ADVICE r12 medium).
+    * file is unrecoverable by the residual filter.
     * Normalization happens ONLY inside [[cmp]], never at collection:
     * stored extremes stay the values actually present, so a stats-only
     * MIN over a file of -0.0 renders -0.0 exactly like the scanned
@@ -1004,7 +984,7 @@ private[graft] object GraftLakeStats {
       }
     }.toMap
 
-  // ---- per-file BLOOM stats (VERDICT r15 task 4) ---------------------------
+  // ---- per-file BLOOM stats ---------------------------
   // Min/max can't prune a point lookup on a high-cardinality key whose
   // values INTERLEAVE across files (the dedup/similarity id-probe
   // shape: every file's range covers the whole key space). A small
@@ -1047,7 +1027,7 @@ private[graft] object GraftLakeStats {
     case l: java.lang.Long => mix(l.longValue())
     case i: java.lang.Integer => mix(i.longValue()) // == the widened Long
     case u: UTF8String =>
-      // VERSION-PINNED byte hash (ADVICE r16): bloom bits live in
+      // VERSION-PINNED byte hash: bloom bits live in
       // DURABLE manifests, and a bloom MISS is proof of absence — so
       // the hash must never drift. FNV-1a over the raw UTF-8 bytes is
       // defined entirely in this repo (a Spark upgrade changing
@@ -1108,7 +1088,7 @@ private[graft] object GraftLakeStats {
       case _ => true
     }
 
-  // ---- per-column NDV sketches (HLL, VERDICT r16 task 5) -------------------
+  // ---- per-column NDV sketches (HLL) -------------------
   // CostBasedJoinReorder needs per-column distinct counts; Hive tables
   // get them from ANALYZE, lake tables should get them FOR FREE from
   // write-time manifests (Iceberg's theta-sketch puffin files play this
@@ -1759,35 +1739,6 @@ private[sources] object GraftLakeReaders {
         else java.lang.Double.valueOf(r.getFloat(i).toDouble)
     case _ => r => r.get(i, phys)
   }
-
-  /** Row normalizer from a file's write-time layout to the CURRENT
-    * schema: absent columns fill with their exists-default (or NULL),
-    * retyped columns widen per value. None when the file already
-    * matches the schema exactly (caller skips the copy). THE single
-    * spelling of schema-generation normalization — the keyed scan path
-    * and the cluster rewrite both route here, so a defaults/widening
-    * fix lands in every path at once. */
-  def normalizer(schema: StructType, fileNames: Seq[String],
-      fileTypes: Seq[DataType], nameDefaults: Map[String, Any])
-      : Option[InternalRow => InternalRow] = {
-    val names = schema.fieldNames.toSeq
-    val curTypes = schema.fields.map(_.dataType).toSeq
-    if (fileNames == names &&
-        (fileTypes.isEmpty || fileTypes == curTypes)) None
-    else {
-      val slots: Array[InternalRow => Any] = schema.fields.map { fd =>
-        val i = fileNames.indexOf(fd.name)
-        if (i < 0) {
-          val d = nameDefaults.getOrElse(fd.name, null)
-          (_: InternalRow) => d
-        } else {
-          val phys = if (fileTypes.nonEmpty) fileTypes(i) else fd.dataType
-          extractor(i, phys, fd.dataType)
-        }
-      }
-      Some(r => new GenericInternalRow(slots.map(_(r)): Array[Any]))
-    }
-  }
 }
 
 private[sources] object GraftLakeFieldIds {
@@ -1803,24 +1754,9 @@ private[sources] object GraftLakeFieldIds {
   * for a copy-on-write table). */
 final case class GraftLakeSnapshot(files: Vector[GraftLakeFile],
     dvs: Map[String, Set[Long]],
-    eqs: Vector[GraftEqDelete] = Vector.empty) {
-  def liveRows(f: GraftLakeFile): Vector[InternalRow] = {
-    val afterDv = dvs.get(f.id) match {
-      case None => f.loadRows
-      case Some(dead) => f.loadRows.zipWithIndex
-        .collect { case (r, i) if !dead.contains(i.toLong) => r }
-    }
-    eqs.flatMap(_.probeFor(f)).foldLeft(afterDv) {
-      case (rows, (i, path, vt)) =>
-        val probe = GraftEqDelete.loadProbe(path, vt)
-        val t = f.types(i)
-        rows.filterNot(r => !r.isNullAt(i) &&
-          probe.contains(GraftEqDelete.canon(r.get(i, t))))
-    }
-  }
-}
+    eqs: Vector[GraftEqDelete] = Vector.empty)
 
-/** One EQUALITY DELETE (VERDICT r16 task 4 — the Flink→Iceberg
+/** One EQUALITY DELETE (the Flink→Iceberg
   * streaming-upsert shape): all rows whose `colId` value appears in the
   * keys file at `path` are logically deleted from every data file whose
   * file NUMBER is ≤ `belowSeq` (the sequence-number applicability rule:
@@ -1833,7 +1769,7 @@ final case class GraftEqDelete(colId: Int, path: String, belowSeq: Int,
     valueType: DataType) {
   def appliesTo(f: GraftLakeFile): Boolean =
     GraftEqDelete.seqOf(f.id) <= belowSeq
-  /** THE applicability rule every consumer shares (review r18): the
+  /** THE applicability rule every consumer shares: the
     * probe spec of this epoch against `f` — (key column position in
     * the FILE layout, keys path, value type) — or None when the epoch
     * cannot touch the file: wrong sequence range, or the file PREDATES
@@ -1858,9 +1794,9 @@ object GraftEqDelete {
     * one per epoch task, never mutated, vacuumed only once unreferenced
     * — so a path identifies its content forever; but with F applicable
     * files per epoch the SAME small object would otherwise be fetched F
-    * times per stage, once per scan/rewrite/feed task (judge r18
-    * finding 2). Soft values: the JVM reclaims sets under memory
-    * pressure, and a vacuumed path simply ages out unprobed. */
+    * times per stage, once per scan/rewrite/feed task. Soft values: the
+    * JVM reclaims sets under memory pressure, and a vacuumed path simply
+    * ages out unprobed. */
   private val probeCache = new java.util.concurrent.ConcurrentHashMap[
     (String, DataType), java.lang.ref.SoftReference[Set[Any]]]()
   /** ACTUAL keys-parquet loads (cache misses) in this JVM — the spec's
@@ -1868,8 +1804,8 @@ object GraftEqDelete {
   val probeReads = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** THE probe-set loader — the one reading of a keys file every
-    * consumer shares (scan-task skip, compaction rewrite, driver-side
-    * liveRows), so canonicalization/null semantics cannot diverge.
+    * consumer shares (scan-task skip, compaction rewrite, change
+    * feed), so canonicalization/null semantics cannot diverge.
     * `compute` holds the bin lock while loading, so concurrent tasks on
     * one executor block for the one load instead of racing N reads. */
   def loadProbe(path: String, valueType: DataType): Set[Any] = {
@@ -1914,17 +1850,17 @@ object GraftEqDelete {
   }
 }
 
-/** In-memory batch table: plain scans, appends, truncation, and the
-  * row-level operation hook. Rows live on the driver in immutable FILES;
-  * readers ship a file snapshot into tasks, writers buffer per task and
-  * the commit applies atomically on the driver (the DSv2 commit protocol
-  * in miniature — each task commit message becomes one new file, the way
-  * a real task writes one parquet file). */
+/** Lake table of immutable parquet FILE GROUPS: plain scans, appends,
+  * truncation, and the row-level operation hook. Tasks write their own
+  * parquet files and ship manifests; the commit adopts them atomically
+  * on the driver (the DSv2 commit protocol — each task commit message
+  * names the files it wrote). The driver holds manifests, deletion
+  * vectors and history, never rows: scan partitions carry paths, and
+  * tasks decode. */
 class GraftLakeTable(tableName: String, tableSchema: StructType,
     partSpec: Seq[GraftPartTransform] = Nil, mergeOnRead: Boolean = false,
-    storage: String = "memory",
-    // parquet storage: an EXPLICIT durable root (warehouse-derived or
-    // `graft.location`); None keeps the per-table temp dir
+    // an EXPLICIT durable root (warehouse-derived or `graft.location`);
+    // None keeps the per-table temp dir
     location: Option[java.io.File] = None,
     // reopen-from-disk: the restored state a fresh JVM's catalog read
     // back out of `<root>/_graft_log` — installed verbatim at the end
@@ -1981,44 +1917,39 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   // values in manifests — they survive their source column's drop.
   private def partCols: Seq[String] = partSpecNow.map(_.srcCol)
 
-  // `graft.storage = parquet`: file groups land as REAL parquet files
-  // under a per-table temp dir; driver state keeps only paths + DVs —
-  // write amplification becomes measurable bytes and the driver heap
-  // stops holding row data (VERDICT r11 task 3)
-  if (storage == "parquet") tableSchema.fields.foreach(f =>
+  // file groups land as REAL parquet files under the table dir; driver
+  // state keeps only paths, manifests and DVs — write amplification is
+  // measurable bytes and the driver heap holds no row data
+  tableSchema.fields.foreach(f =>
     require(GraftParquetIO.supported(f.dataType),
-      s"graft.storage=parquet cannot store column ${f.name}: " +
-        f.dataType.sql))
-  private val lakeDir: Option[java.io.File] =
-    if (storage == "parquet") Some(location.map { d =>
-      d.mkdirs(); d
-    }.getOrElse(java.nio.file.Files
-      .createTempDirectory("graft_lake_").toFile))
-    else None
-  // the durable metadata log (VERDICT r15 task 2): every parquet-backed
-  // table journals commits + file manifests under `<root>/_graft_log`,
-  // so its full state (history, schema evolution, DVs, refs) survives
-  // the JVM — see [[GraftLakeLog]] for the layout
-  private val log: Option[GraftLakeLog] =
-    lakeDir.map(new GraftLakeLog(_))
-  private[sources] def deleteStorage(): Unit =
-    lakeDir.foreach(GraftParquetIO.deleteRecursively)
-  /** Task-side write recipe for parquet storage (None = memory): the
-    * table dir plus the CURRENT schema identity, captured when the
-    * write is built — adoption re-validates the ids at commit, so a
-    * concurrent ALTER still aborts loudly (see [[adoptFile]]). */
-  private def fileWriteInfo: Option[GraftLakeFileWriteInfo] =
-    lakeDir.map(d => synchronized(GraftLakeFileWriteInfo(
-      d.getAbsolutePath, schemaNow.fieldNames.toSeq,
-      schemaNow.fields.map(_.dataType).toSeq, colIds, specNow,
-      specIdNow)))
-  /** Current per-file sizes in bytes (0 for in-memory storage) — the
-    * write-amplification spec's probe. */
+      s"lake tables cannot store column ${f.name}: ${f.dataType.sql}"))
+  private val lakeDir: java.io.File = location.map { d =>
+    d.mkdirs(); d
+  }.getOrElse(GraftLakeTable.tempRoot())
+  // the durable metadata log: every table journals commits + file
+  // manifests under `<root>/_graft_log`, so its full state (history,
+  // schema evolution, DVs, refs) survives the JVM — see [[GraftLakeLog]]
+  // for the layout
+  private val log = new GraftLakeLog(lakeDir)
+  private[sources] def deleteStorage(): Unit = {
+    GraftParquetIO.deleteRecursively(lakeDir)
+    GraftLakeTable.tempRoots.remove(lakeDir)
+  }
+  /** Task-side write recipe: the table dir plus the CURRENT schema
+    * identity, captured when the write is built — adoption re-validates
+    * the ids at commit, so a concurrent ALTER still aborts loudly (see
+    * [[adoptFile]]). */
+  private def fileWriteInfo: GraftLakeFileWriteInfo = synchronized(
+    GraftLakeFileWriteInfo(lakeDir.getAbsolutePath,
+      schemaNow.fieldNames.toSeq, schemaNow.fields.map(_.dataType).toSeq,
+      colIds, specNow, specIdNow))
+  /** Current per-file sizes in bytes — the write-amplification spec's
+    * probe. */
   private[graft] def fileBytes: Map[String, Long] =
     synchronized(files.map(f => f.id -> f.bytes).toMap)
-  /** Current on-disk paths (parquet storage only). */
+  /** Current on-disk paths. */
   private[graft] def filePaths: Map[String, String] =
-    synchronized(files.flatMap(f => f.path.map(f.id -> _)).toMap)
+    synchronized(files.map(f => f.id -> f.path).toMap)
   /** (partition-pure?, spec id) per live file — the spec-evolution
     * spec's probe for stamp state. */
   private[graft] def fileStamps: Seq[(Boolean, Int)] =
@@ -2074,7 +2005,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   /** True once this table has EVER tracked a constraint (in this JVM or
     * in the restored log): from then on every commit record carries the
     * full vector (empty = "all dropped"), so a rebase refresh reads the
-    * winner's constraints atomically with its version CAS (ADVICE r20).
+    * winner's constraints atomically with its version CAS.
     * Kept false for never-constrained tables so their commit records —
     * and the v0 record a create-WITH-constraints writes BEFORE
     * installConstraints runs — never carry a spuriously-empty vector
@@ -2086,7 +2017,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       (c.name, canonicalCheckSql(c.predicateSql), c.enforced, c.rely,
         c.validationStatus.name))
   private def persistConstraints(): Unit =
-    log.foreach(_.writeConstraints(canonicalChecks))
+    log.writeConstraints(canonicalChecks)
 
   /** CHECK predicates PERSIST with column references as FIELD-ID
     * placeholders (`__gcol_<id>__`) — the same device that makes file
@@ -2094,7 +2025,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * rename changes only the in-memory (analyzer-facing) predicate
     * text, never these bytes, so no crash window between the schema
     * commit and a constraint rewrite can leave a predicate naming a
-    * dead column (review r20). It also gives the rebase admission
+    * dead column. It also gives the rebase admission
     * guard a rename-stable identity to compare (see
     * [[requireNoNewChecks]]). A NESTED reference (`s.leaf`) keys on its
     * ROOT column — only top-level columns carry ids, and a rename can
@@ -2123,7 +2054,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * `lambdafunction((x > 0), x)` — a spelling the analyzer does NOT
     * re-bind as a lambda (the parameter resolves as a COLUMN, silently
     * changing the predicate's meaning, or bricking writes when no such
-    * column exists — review r20b). Lambda-bearing predicates therefore
+    * column exists). Lambda-bearing predicates therefore
     * NEVER round-trip through regeneration: they persist verbatim, and
     * a rename touching one is refused like DROP COLUMN. */
   private def checkSqlHasLambda(sql: String): Boolean =
@@ -2236,10 +2167,9 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           require(add.isNullable,
             s"added column ${add.fieldNames()(0)} must be nullable: " +
               "files written before the evolution null-fill it")
-          if (storage == "parquet")
-            require(GraftParquetIO.supported(add.dataType()),
-              s"graft.storage=parquet cannot store added column " +
-                s"${add.fieldNames()(0)}: ${add.dataType().sql}")
+          require(GraftParquetIO.supported(add.dataType()),
+            s"lake tables cannot store added column " +
+              s"${add.fieldNames()(0)}: ${add.dataType().sql}")
           checkFresh(add.fieldNames()(0))
           // DEFAULT <literal>: the internal value becomes the id's
           // EXISTS-DEFAULT (what pre-evolution files read back — the
@@ -2253,7 +2183,6 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
               // quoting (UTF8String 'legacy' → 'legacy', not bare legacy):
               // the stamped text is re-parsed by the analyzer for INSERT
               // default fill, so an unquoted string would mis-parse
-              // (ADVICE r13)
               val sql = Option(d.getSql).getOrElse(
                 org.apache.spark.sql.catalyst.expressions.Literal(
                   d.getValue.value, d.getValue.dataType).sql)
@@ -2278,7 +2207,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           // happen to contain the name; a missing rewrite would leave
           // the predicate naming a dead column — the analyzer then
           // injects an unresolvable assertion into every later write
-          // and a metadata-only rename bricks the table (VERDICT r19).
+          // and a metadata-only rename bricks the table.
           val oldName = fields(i).name
           cks = cks.map { c =>
             // lambda-bearing predicates persist verbatim (regeneration
@@ -2290,7 +2219,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             if (checkSqlHasLambda(c.predicateSql)) {
               // CASE_INSENSITIVE: analyzer resolution is case-insensitive
               // by default, so a verbatim lambda predicate mentioning `k`
-              // must refuse a rename of column K too (ADVICE r20) — the
+              // must refuse a rename of column K too — the
               // non-lambda path below matches equalsIgnoreCase for the
               // same reason
               val pat = java.util.regex.Pattern.compile(
@@ -2403,8 +2332,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       // travel a version boundary to pin the OLD schema at: VERSION AS
       // OF any pre-ALTER version now resolves that version's schema
       // (see [[schemaInfoAt]]), instead of serving current columns over
-      // old data (ADVICE r13). Ordering: the VERSION CAS FIRST,
-      // constraints.json only after the claim is won (review r20b).
+      // old data. Ordering: the VERSION CAS FIRST,
+      // constraints.json only after the claim is won.
       // The CAS is the only cross-driver staleness detector — a stale
       // driver's ALTER would otherwise overwrite the file from its
       // stale in-memory vector BEFORE losing the claim, durably
@@ -2427,7 +2356,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       catch {
         case e: Throwable =>
           checks = priorChecks
-          if (isCasLoss(e) && log.isDefined) refreshFromLog()
+          if (isCasLoss(e)) refreshFromLog()
           throw e
       }
       if (cks != priorChecks) persistConstraints()
@@ -2452,7 +2381,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   // columns through the schema that version was committed under, so a
   // post-DROP pin still serves the dropped column and a post-ADD pin
   // does NOT back-fill the new one (the Delta/Iceberg snapshot-schema
-  // contract, ADVICE r13). Entries share references — O(1) per commit.
+  // contract). Entries share references — O(1) per commit.
   private var commitSchemas
       : Vector[(StructType, Vector[Int], Map[Int, Any])] =
     Vector((tableSchema, tableSchema.indices.toVector, Map.empty))
@@ -2460,7 +2389,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       txn: Option[(String, Long)] = None): Unit = {
     // prune equality deletes no current file is subject to (all their
     // MATCHABLE files were rewritten/compacted away — a file predating
-    // the key column never counts, review r18) — the keys file then
+    // the key column never counts) — the keys file then
     // ages out of retention and vacuums normally
     eqs = eqs.filter(e => files.exists(f => e.probeFor(f).isDefined))
     val snap = GraftLakeSnapshot(files, dvs, eqs)
@@ -2471,14 +2400,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     // durable manifest list FIRST: the version-file claim is the
     // cross-writer arbiter (O_EXCL — see GraftLakeLog.writeAtomic). ANY
     // failure of the durable write — conflict (IllegalStateException)
-    // or I/O (disk-full, permissions; ADVICE r16) — reverts the
+    // or I/O (disk-full, permissions) — reverts the
     // in-memory mutation to the last DURABLE state before propagating,
     // so memory never claims a commit disk refused and a phantom change
     // cannot ride the next successful commit. (writeAtomic itself
     // deletes this writer's own unfilled claim on a failed fill, so the
     // version number is immediately reusable.)
     if (checks.nonEmpty) everHadConstraints = true
-    try log.foreach(_.writeCommit(baseVersion + history.length, snap,
+    try log.writeCommit(baseVersion + history.length, snap,
       dataChange, time, schemaNow, colIds, colDefaults, fileSeq,
       nextColId, txn,
       // stamp the current spec once evolution happened — restore reads
@@ -2488,8 +2417,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       // tracked one — atomic with the version CAS, so a concurrent
       // driver's rebase refresh can never resurrect a pre-ALTER
       // constraints.json and durably erase the winner's constraint
-      // (ADVICE r20)
-      if (everHadConstraints) Some(canonicalChecks) else None))
+      if (everHadConstraints) Some(canonicalChecks) else None)
     catch {
       case scala.util.control.NonFatal(e) =>
         files = history.last._1.files
@@ -2504,8 +2432,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     commitSchemas = commitSchemas :+ ((schemaNow, colIds, colDefaults))
     // evict live-count memo entries for files that just left the table
     // (compacted away, truncated, vacuumed) — without this the memo
-    // grows with every file id ever probed on a long-lived CDC table
-    // (advice r18). A time-travel COUNT at an older version simply
+    // grows with every file id ever probed on a long-lived CDC table.
+    // A time-travel COUNT at an older version simply
     // re-probes; correctness is signature-checked either way.
     if (!eqLiveMemo.isEmpty) {
       val live = files.iterator.map(_.id).toSet
@@ -2513,7 +2441,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     }
     // post-commit maintenance: bundle loose file manifests into groups
     // so a reopen parses O(groups), not O(files) — never fails a commit
-    log.foreach(_.groupManifests())
+    log.groupManifests()
   }
 
   // ---- optimistic-commit auto-rebase (cross-writer commit retry) ----------
@@ -2536,16 +2464,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   @volatile private[graft] var rebases: Long = 0L
 
   /** True iff the failure is a CROSS-WRITER CAS loss — an arbiter claim
-    * conflict (version record, file number, reclaimed fill) or a
-    * data-file name collision. Semantic conflicts (lost update, DV
-    * skew, concurrent ALTER) carry no claim cause and must stay loud. */
+    * conflict (version record, file number, reclaimed fill). Semantic
+    * conflicts (lost update, DV skew, concurrent ALTER) carry no claim
+    * cause and must stay loud. */
   private def isCasLoss(e: Throwable): Boolean = {
     var c: Throwable = e
     var seen = List.empty[Throwable]
     while (c != null && !seen.exists(_ eq c)) {
-      if (c.isInstanceOf[GraftClaimConflict] ||
-          c.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException])
-        return true
+      if (c.isInstanceOf[GraftClaimConflict]) return true
       seen ::= c
       c = c.getCause
     }
@@ -2558,8 +2484,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * object. `fileSeq` only ever moves FORWARD: numbers this writer
     * claimed (or collided on) must never be re-minted, and a crashed
     * writer's orphan object is skipped the same way. */
-  private def refreshFromLog(): Unit = lakeDir.foreach { dir =>
-    val r = GraftLakeLog.restore(dir)
+  private def refreshFromLog(): Unit = {
+    val r = GraftLakeLog.restore(lakeDir)
     files = r.files
     dvs = r.dvs
     eqs = r.history.last._1.eqs
@@ -2593,7 +2519,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     while (true) {
       try return body
       catch {
-        case e: Exception if isCasLoss(e) && log.isDefined &&
+        case e: Exception if isCasLoss(e) &&
             tries < GraftLakeTable.MaxCommitRebases =>
           tries += 1
           refreshFromLog()
@@ -2618,7 +2544,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * CHECK enforcement is injected by the ANALYZER, so a write planned
     * before a concurrent ADD CONSTRAINT landed carries rows that were
     * never validated against it — rebasing past the ALTER would commit
-    * them anyway and durably violate the constraint (ADVICE r19).
+    * them anyway and durably violate the constraint.
     * `planned` is the (name, field-id-canonical predicate) set
     * captured when the write was built (see [[plannedCheckSet]]); a
     * refreshed state carrying a constraint IDENTITY outside it fails
@@ -2627,7 +2553,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * alone — means a concurrent DROP + re-ADD under the same name (the
     * natural way to tighten a check) is still a loud conflict, while a
     * concurrent RENAME COLUMN (id-stable, semantics unchanged) rebases
-    * fine (review r20). Concurrent DROPs are always compatible. */
+    * fine. Concurrent DROPs are always compatible. */
   private def requireNoNewChecks(planned: Set[(String, String)]): Unit = {
     val fresh = checks
       .map(c => (c.name, canonicalCheckSql(c.predicateSql)))
@@ -2650,7 +2576,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * sequence — but this operation re-inserts rows derived from that
     * snapshot under FRESH file numbers above it, so the winner's
     * deletes can never apply to them and the upserted key would end up
-    * with two live rows (ADVICE r19). The maintenance paths already
+    * with two live rows. The maintenance paths already
     * refuse this (maintenanceRebaseOk's eqs check); this is the same
     * admission rule for UPDATE/MERGE/DELETE commits. */
   private def requireNoNewEqEpochs(eqs0: Vector[GraftEqDelete]): Unit = {
@@ -2670,16 +2596,13 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * never re-run; on final failure the REMAINING pendings' temps are
     * unlinked (the already-minted files stay — unreferenced claimed
     * objects, vacuum's concern, exactly like a failed manual retry). */
-  private def mintWithRebase(pendings: Vector[GraftLakePending],
-      sortedBy: Seq[Int] = Nil): Vector[GraftLakeFile] = {
+  private def mintWithRebase(
+      pendings: Vector[GraftLakeFileMeta]): Vector[GraftLakeFile] = {
     val out = Vector.newBuilder[GraftLakeFile]
     var i = 0
     while (i < pendings.length) {
-      out ++= retryCas(cleanup = pendings.drop(i).foreach {
-        case GraftLakePendingFile(m) =>
-          new java.io.File(m.tmpPath).delete()
-        case _ => ()
-      })(mkFiles(Vector(pendings(i)), sortedBy))
+      out += retryCas(cleanup = pendings.drop(i).foreach(m =>
+        new java.io.File(m.tmpPath).delete()))(adoptFile(pendings(i)))
       i += 1
     }
     out.result()
@@ -2767,7 +2690,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * exactly Iceberg's expire_snapshots contract: time travel and change
     * feeds below the floor fail loudly afterwards. Returns the floor.
     *
-    * RETENTION HAZARD (ADVICE r12): an in-flight ROW-LEVEL OPERATION
+    * RETENTION HAZARD: an in-flight ROW-LEVEL OPERATION
     * pins its snapshot at creation, so its files are excluded from the
     * vacuum below even when every retained version has dropped them. A
     * plain in-flight READ of an expired version has no such pin (DSv2
@@ -2800,46 +2723,42 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     commitTimes = commitTimes.drop(drop)
     commitSchemas = commitSchemas.drop(drop)
     baseVersion += drop
-    // parquet storage: VACUUM — a data file referenced ONLY by expired
-    // versions (e.g. the pre-compaction original) is dead storage; delete
-    // everything no retained snapshot still lists (the current state is
-    // the last retained snapshot, so live files are always kept). The
+    // VACUUM — a data file referenced ONLY by expired versions (e.g.
+    // the pre-compaction original) is dead storage; delete everything no
+    // retained snapshot still lists (the current state is the last
+    // retained snapshot, so live files are always kept). The
     // reference-counted orphan rule is the whole safety story of
     // expire_snapshots: a file shared with a retained version survives —
     // and so does a file pinned by an active row-level operation.
-    lakeDir.foreach { dir =>
-      val live = liveDataPaths()
-      val tmpCutoff =
-        System.currentTimeMillis() - GraftLakeTable.PinStaleMillis
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile) // never the _graft_log dir
-        .filterNot(f => live.contains(f.getAbsolutePath))
-        // in-flight task-written temp files belong to a CONCURRENT
-        // write that hasn't committed yet — only reap abandoned ones
-        .filterNot(f => f.getName.startsWith("tmp_") &&
-          f.lastModified() >= tmpCutoff)
-        // a YOUNG zero-byte f<N>.parquet is a concurrent writer's
-        // data-file CLAIM mid-commit — vacuuming it would let a third
-        // writer re-claim the number and be clobbered by the first
-        // writer's fill; stale ones are abandoned and reaped
-        .filterNot(f => f.length() == 0L &&
-          !GraftLakeLog.staleClaim(f))
-        .foreach(_.delete())
-      // durable log follows the vacuum: expired manifest lists go, and
-      // a vacuumed data file's manifest goes with it. Streaming-epoch
-      // stamps riding the dropped commits are consolidated FIRST so a
-      // long-stopped query can't replay its last epoch after an expire.
-      log.foreach { lg =>
-        if (streamEpochs.nonEmpty) lg.writeTxns(streamEpochs)
-        lg.dropCommitsBelow(baseVersion)
-        lg.dropManifestsExcept(live.map(p => new java.io.File(p).getName))
-      }
-    }
+    val live = liveDataPaths()
+    val tmpCutoff =
+      System.currentTimeMillis() - GraftLakeTable.PinStaleMillis
+    Option(lakeDir.listFiles()).getOrElse(Array.empty)
+      .filter(_.isFile) // never the _graft_log dir
+      .filterNot(f => live.contains(f.getAbsolutePath))
+      // in-flight task-written temp files belong to a CONCURRENT
+      // write that hasn't committed yet — only reap abandoned ones
+      .filterNot(f => f.getName.startsWith("tmp_") &&
+        f.lastModified() >= tmpCutoff)
+      // a YOUNG zero-byte f<N>.parquet is a concurrent writer's
+      // data-file CLAIM mid-commit — vacuuming it would let a third
+      // writer re-claim the number and be clobbered by the first
+      // writer's fill; stale ones are abandoned and reaped
+      .filterNot(f => f.length() == 0L &&
+        !GraftLakeLog.staleClaim(f))
+      .foreach(_.delete())
+    // durable log follows the vacuum: expired manifest lists go, and
+    // a vacuumed data file's manifest goes with it. Streaming-epoch
+    // stamps riding the dropped commits are consolidated FIRST so a
+    // long-stopped query can't replay its last epoch after an expire.
+    if (streamEpochs.nonEmpty) log.writeTxns(streamEpochs)
+    log.dropCommitsBelow(baseVersion)
+    log.dropManifestsExcept(live.map(p => new java.io.File(p).getName))
     baseVersion
   }
 
-  /** `CALL system.remove_orphan_files` — the expire_snapshots COMPANION
-    * (VERDICT r19): reclaim storage NO retained version references and
+  /** `CALL system.remove_orphan_files` — the expire_snapshots COMPANION:
+    * reclaim storage NO retained version references and
     * no expire will ever touch, WITHOUT moving the history floor. The
     * targets are exactly the debris optimistic concurrency mints:
     *  - a crashed/aborted writer's FILLED-but-never-committed
@@ -2864,7 +2783,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * data/keys object any retained snapshot, active row-level pin, or
     * staged branch commit references. A single formula: a reference
     * class added for one reclaim path can never be forgotten by the
-    * other (review r20b — the two copies had already begun to drift in
+    * other (the two copies had already begun to drift in
     * comment text).
     *  - retained snapshots' data files (history is the retained
     *    window; the current state is its last entry) plus the
@@ -2877,35 +2796,34 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     *    tasks still probe them). */
   private def liveDataPaths(): Set[String] =
     (history.flatMap(_._1.files) ++ files)
-      .flatMap(_.path).toSet ++ livePinnedPaths() ++ branchStagedPaths ++
+      .map(_.path).toSet ++ livePinnedPaths() ++ branchStagedPaths ++
       (history.flatMap(_._1.eqs) ++ eqs).map(_.path).toSet
 
   private[sources] def removeOrphanFiles(
       olderThanMillis: Long): (Int, Int) = synchronized {
     var orphans = 0
     var stagedDirs = 0
-    lakeDir.foreach { dir =>
-      val live = liveDataPaths()
+    val dir = lakeDir
+    val live = liveDataPaths()
+    Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(_.isFile) // never the _graft_log dir
+      .filterNot(f => live.contains(f.getAbsolutePath))
+      .filter(_.lastModified() < olderThanMillis)
+      .filterNot(f => f.length() == 0L && !GraftLakeLog.staleClaim(f))
+      .foreach(f => if (f.delete()) orphans += 1)
+    // a crashed CTAS/RTAS writer's fully-staged sibling directory:
+    // invisible to every read path (listTables skips the prefix) but
+    // holds a complete copy of the table's data
+    Option(dir.getParentFile.listFiles()).getOrElse(Array.empty)
+      .filter(d => d.isDirectory &&
+        d.getName.startsWith(s".graft_staged_${dir.getName}_") &&
+        d.lastModified() < olderThanMillis)
+      .foreach { d => GraftParquetIO.deleteRecursively(d)
+        stagedDirs += 1 }
+    val kept = live.map(p => new java.io.File(p).getName) ++
       Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile) // never the _graft_log dir
-        .filterNot(f => live.contains(f.getAbsolutePath))
-        .filter(_.lastModified() < olderThanMillis)
-        .filterNot(f => f.length() == 0L && !GraftLakeLog.staleClaim(f))
-        .foreach(f => if (f.delete()) orphans += 1)
-      // a crashed CTAS/RTAS writer's fully-staged sibling directory:
-      // invisible to every read path (listTables skips the prefix) but
-      // holds a complete copy of the table's data
-      Option(dir.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(d => d.isDirectory &&
-          d.getName.startsWith(s".graft_staged_${dir.getName}_") &&
-          d.lastModified() < olderThanMillis)
-        .foreach { d => GraftParquetIO.deleteRecursively(d)
-          stagedDirs += 1 }
-      val kept = live.map(p => new java.io.File(p).getName) ++
-        Option(dir.listFiles()).getOrElse(Array.empty)
-          .filter(_.isFile).map(_.getName)
-      log.foreach(_.dropManifestsExcept(kept))
-    }
+        .filter(_.isFile).map(_.getName)
+    log.dropManifestsExcept(kept)
     (orphans, stagedDirs)
   }
 
@@ -2915,7 +2833,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   // Each pin carries its REGISTRATION TIME: a query that dies after
   // planning without ever reaching commit/abort would otherwise leak its
   // pin for the table's lifetime, permanently shielding dead files from
-  // vacuum (ADVICE r13) — pins older than [[GraftLakeTable.PinStaleMillis]]
+  // vacuum — pins older than [[GraftLakeTable.PinStaleMillis]]
   // are treated as abandoned and dropped at the next vacuum.
   private val pinnedPaths =
     new ConcurrentHashMap[AnyRef, (Long, Set[String])]()
@@ -2931,7 +2849,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     live.result()
   }
   private[graft] def pinPaths(s: GraftLakeSnapshot): () => Unit = {
-    val ps = s.files.flatMap(_.path).toSet
+    val ps = s.files.map(_.path).toSet
     if (ps.isEmpty) () => ()
     else {
       val token = new AnyRef
@@ -2947,7 +2865,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     pinnedPaths.replaceAll((_, v) => (v._1 - byMillis, v._2))
 
   // ---- snapshot refs: tags & branches (write-audit-publish) ----------------
-  // Iceberg's ref surface (VERDICT r13 task 5), minimally expressed over
+  // Iceberg's ref surface, minimally expressed over
   // the linear commit history:
   //  - a TAG is an immutable named pointer to a RETAINED version.
   //    `VERSION AS OF 'name'` reads it; retention KEEPS tagged versions
@@ -2972,8 +2890,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private var tagRefs: Map[String, Int] = Map.empty
   // durable refs: small, rewritten whole on every ref change
   private def persistRefs(): Unit =
-    log.foreach(_.writeRefs(tagRefs,
-      branchRefs.map { case (n, b) => n -> ((b.base, b.staged)) }))
+    log.writeRefs(tagRefs,
+      branchRefs.map { case (n, b) => n -> ((b.base, b.staged)) })
 
   private def checkRefName(name: String): Unit = {
     require(name.nonEmpty && !name.matches("\\d+"),
@@ -3037,16 +2955,16 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     }
 
   /** Stage an append on the branch: based on the branch HEAD, invisible
-    * to main until fast_forward. Files are materialized eagerly (parquet
-    * storage writes real bytes) but referenced only by the branch. */
+    * to main until fast_forward. Files are adopted eagerly but
+    * referenced only by the branch. */
   private def appendToBranch(
-      name: String, pendings: Vector[GraftLakePending]): Unit =
+      name: String, pendings: Vector[GraftLakeFileMeta]): Unit =
     synchronized {
       val b = branchRefs.getOrElse(name, throw new IllegalArgumentException(
         s"no branch '$name' on $tableName — CALL system.create_branch " +
           "first"))
       val head = b.staged.lastOption.map(_._1).getOrElse(snapshotAt(b.base))
-      val snap = GraftLakeSnapshot(head.files ++ mkFiles(pendings),
+      val snap = GraftLakeSnapshot(head.files ++ pendings.map(adoptFile(_)),
         head.dvs, head.eqs)
       branchRefs += name -> b.copy(staged = b.staged :+ (snap, true))
       persistRefs()
@@ -3106,7 +3024,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * reads. */
   private def branchStagedPaths: Set[String] =
     branchRefs.values.flatMap(_.staged.flatMap(_._1.files))
-      .flatMap(_.path).toSet
+      .map(_.path).toSet
 
   /** Rewrite the whole table RANGE-CLUSTERED by `colNames`: all live
     * rows, normalized to the current schema, sorted by the cluster key
@@ -3114,42 +3032,31 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * tight and near-disjoint — the maintenance that makes stats
     * skipping EFFECTIVE (interleaved writes give every file the full
     * value range, so min/max pruning keeps everything; Iceberg ships
-    * this as rewrite_data_files with a sort strategy). One maintenance
-    * commit: the relation is unchanged, the change feed stays silent.
-    * Parquet-storage tables run the DISTRIBUTED rewrite
-    * ([[clusterDistributed]]): a real range-shuffled sort whose tasks
-    * write the output files themselves; the driver-side sort below
-    * serves memory-storage tables only. Returns (files before, files
-    * after). */
-  private[sources] def clusterBy(colNames: Seq[String],
-      targetFiles: Int, strategy: String = "sort",
-      qualName: Option[String] = None): (Int, Int) = {
+    * this as rewrite_data_files with a sort strategy). `zorder` sorts by
+    * a Morton key instead: per-column 16-bit RANK codes interleaved bit
+    * by bit, so box predicates on ANY of 2-4 columns prune (OPTIMIZE
+    * ZORDER BY). One maintenance commit: the relation is unchanged, the
+    * change feed stays silent. Returns (files before, files after).
+    *
+    * The rewrite is DISTRIBUTED: the table (`qual`, its catalog-
+    * qualified name) is re-read through its own DSv2 scan
+    * (executor-side columnar decode; current-schema normalization and
+    * DV filtering come with the scan), globally sorted by the cluster
+    * key through a range shuffle, EXACT-chunked into
+    * ceil(live/target)-row files by global row index (`zipWithIndex` +
+    * a chunk partitioner), and written by the task-side file writer —
+    * the driver never holds a row. This is Iceberg's rewrite_data_files
+    * shape: an optimistic Spark action whose commit re-validates the
+    * pinned version; a concurrent commit aborts it loudly and the temps
+    * are unlinked. Z-order rank codes are computed distributed too:
+    * dense-rank over each column's DISTINCT values joined back (at true
+    * cluster scale the rank map becomes range-sampled boundaries — same
+    * code space, sampled edges). */
+  private[sources] def clusterBy(colNames: Seq[String], targetFiles: Int,
+      strategy: String, qual: String): (Int, Int) = {
     require(targetFiles >= 1, s"target_files must be >= 1, got $targetFiles")
-    val distributable = synchronized(lakeDir.isDefined) &&
-      qualName.isDefined &&
-      org.apache.spark.sql.SparkSession.getActiveSession.isDefined
-    if (distributable)
-      clusterDistributed(qualName.get, colNames, targetFiles, strategy)
-    else clusterDriver(colNames, targetFiles, strategy)
-  }
-
-  /** The DISTRIBUTED cluster rewrite (parquet storage): the table is
-    * re-read through its own DSv2 scan (executor-side columnar decode;
-    * current-schema normalization and DV filtering come with the scan),
-    * globally sorted by the cluster key through a range shuffle,
-    * EXACT-chunked into ceil(live/target)-row files by global row index
-    * (`zipWithIndex` + a chunk partitioner — the distributed equivalent
-    * of the driver leg's `grouped(chunk)`), and written by the
-    * task-side file writer — the driver never holds a row. This is
-    * Iceberg's rewrite_data_files shape: an optimistic Spark action
-    * whose commit re-validates the pinned version; a concurrent commit
-    * aborts it loudly and the temps are unlinked. Z-order rank codes
-    * are computed distributed too: dense-rank over each column's
-    * DISTINCT values joined back (at true cluster scale the
-    * single-partition window over distincts becomes range-sampled
-    * boundaries — same code space, sampled edges). */
-  private def clusterDistributed(qual: String, colNames: Seq[String],
-      targetFiles: Int, strategy: String): (Int, Int) = {
+    require(strategy == "sort" || strategy == "zorder",
+      s"unknown cluster strategy '$strategy' (sort, zorder)")
     import org.apache.spark.sql.{functions => F}
     val spark = org.apache.spark.sql.SparkSession.active
     val (v0, before, totalLive, fw, sortIds, base0, ids0, spec0) =
@@ -3160,7 +3067,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         (currentVersion, files.length,
           files.map(f =>
             f.numRows - dvs.getOrElse(f.id, Set.empty).size).sum,
-          fileWriteInfo.get,
+          fileWriteInfo,
           if (strategy == "sort")
             colNames.map(c => colIds(names.indexOf(c)))
           else Nil,
@@ -3195,8 +3102,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
               org.apache.spark.sql.Row(r.get(0), i) }
           val ranked = spark.createDataFrame(rankedRdd, StructType(Seq(
             StructField(s"_zv$ci", vdt), StructField("_zr", LongType))))
-            // 16-bit RANK code, identical to the driver leg's
-            // r * 65535 / (n-1) integer division (floor of positives)
+            // 16-bit RANK code: r * 65535 / (n-1), integer division
+            // (floor of positives)
             .withColumn(s"_zc$ci",
               if (nd <= 1L) F.lit(0L)
               else F.floor(F.col("_zr") * F.lit(65535L) /
@@ -3265,264 +3172,121 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     }
   }
 
-  private def clusterDriver(colNames: Seq[String],
-      targetFiles: Int, strategy: String): (Int, Int) =
-    synchronized {
-    val names = schemaNow.fieldNames.toSeq
-    val curTypes = schemaNow.fields.map(_.dataType).toSeq
-    colNames.foreach(n => require(names.contains(n),
-      s"unknown cluster column $n; table has ${names.mkString(", ")}"))
-    val i2n = colIds.zip(names).toMap
-    val snap = GraftLakeSnapshot(files, dvs, eqs)
-    def normalized(f: GraftLakeFile): Vector[InternalRow] = {
-      val rows = snap.liveRows(f)
-      GraftLakeReaders.normalizer(schemaNow,
-          GraftLakeFieldIds.resolve(f.cols, i2n), f.types,
-          nameDefaults) match {
-        case None => rows
-        case Some(nz) => rows.map(nz)
-      }
-    }
-    val before = files.length
-    val all = files.flatMap(normalized)
-    val keyIdx = colNames.map(names.indexOf).toArray
-    val sorted = strategy match {
-      case "sort" =>
-        val keyTypes = keyIdx.toSeq.map(curTypes(_))
-        val ord = org.apache.spark.sql.catalyst.expressions.RowOrdering
-          .createNaturalAscendingOrdering(keyTypes)
-        all.map(r => (new GenericInternalRow(
-            keyIdx.map(i => r.get(i, curTypes(i))): Array[Any])
-            : InternalRow, r))
-          .sortBy(_._1)(ord).map(_._2)
-      // Z-ORDER (Morton) layout: per-column RANK codes (16 bits each,
-      // scaled over the column's distinct values — rank-based, so skew
-      // cannot collapse the code space the way raw-value truncation
-      // would) interleaved bit-by-bit into one key. Points close in
-      // EVERY cluster dimension stay close in file order, so min/max
-      // stats prune box predicates on ANY of the columns — the
-      // multi-column skipping a linear sort only gives its leading
-      // column (OPTIMIZE ZORDER BY). At cluster scale the rank map is a
-      // range-sample of boundaries (repartitionByRange's sampler); here
-      // it is exact over the driver-resident rows.
-      case "zorder" =>
-        require(colNames.length >= 2 && colNames.length <= 4,
-          s"zorder interleaves 2-4 columns, got ${colNames.length}")
-        val codes: Array[scala.collection.Map[Any, Long]] =
-          keyIdx.map { i =>
-            val dt = curTypes(i)
-            val ord = org.apache.spark.sql.catalyst.expressions.RowOrdering
-              .createNaturalAscendingOrdering(Seq(dt))
-            val distinct = all.map(r =>
-              GraftLakeStats.zeroNorm(r.get(i, dt))).distinct
-            val ranked = distinct
-              .map(v => (new GenericInternalRow(Array[Any](v))
-                : InternalRow, v))
-              .sortBy(_._1)(ord).map(_._2)
-            val n = ranked.length
-            ranked.zipWithIndex.map { case (v, r) =>
-              v -> (if (n <= 1) 0L else r.toLong * 65535L / (n - 1)) }.toMap
-          }
-        val k = keyIdx.length
-        def zkey(r: InternalRow): Long = {
-          var key = 0L
-          var c = 0
-          while (c < k) {
-            val code = codes(c)(
-              GraftLakeStats.zeroNorm(r.get(keyIdx(c), curTypes(keyIdx(c)))))
-            var b = 0
-            while (b < 16) {
-              key |= ((code >> b) & 1L) << (b * k + c)
-              b += 1
-            }
-            c += 1
-          }
-          key
-        }
-        all.map(r => (zkey(r), r)).sortBy(_._1).map(_._2)
-      case other => throw new IllegalArgumentException(
-        s"unknown cluster strategy '$other' (sort, zorder)")
-    }
-    val n = math.min(targetFiles.toLong, math.max(1L, sorted.length.toLong))
-    val chunk = math.max(1L, math.ceil(sorted.length.toDouble / n).toLong)
-    // stamp the cluster key's field ids as the files' SORT ORDER: each
-    // output file is an ascending run, which the scan reports through
-    // SupportsReportOrdering so downstream sorts on the key are elided.
-    // A z-ordered file is a contiguous MORTON run, not an ascending run
-    // on any source column — it must not claim an order.
-    val sortIds =
-      if (strategy == "sort") colNames.map(c => colIds(names.indexOf(c)))
-      else Nil
-    files = mkRowFiles(sorted.grouped(chunk.toInt).toVector, sortIds)
-    dvs = Map.empty
-    recordCommit(dataChange = false) // maintenance: relation unchanged
-    (before, files.length)
-  }
-
   /** Compact every file that carries a deletion vector — or is subject
     * to an unresolved EQUALITY DELETE (the streaming-upsert read debt;
     * resolving it here is what restores columnar scans and the change
     * feed). Returns how many files were rewritten (each as its own
-    * maintenance commit). Parquet storage rewrites the files
-    * DISTRIBUTED — one task per affected file decodes its live rows
-    * (DV positions dropped, equality-delete keys probed task-side) and
-    * writes the replacement; the driver only adopts metadata (per-file
-    * commits, contract unchanged). */
-  private[sources] def compactAll(): Int = {
-    val distributable =
-      synchronized(lakeDir.isDefined && (dvs.nonEmpty || eqs.nonEmpty)) &&
-        org.apache.spark.sql.SparkSession.getActiveSession.isDefined
-    if (!distributable) synchronized {
-      val ids = files.filter(f => dvs.contains(f.id) ||
-        eqs.exists(_.probeFor(f).isDefined)).map(_.id).sorted
-      ids.foreach(compactFile)
-      ids.size
-    } else {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val (v0, targets, dir, i2n, eqs0, ids0, spec0) = synchronized {
-        val ts = files
-          .filter(f => dvs.contains(f.id) ||
-            eqs.exists(_.probeFor(f).isDefined))
-          .sortBy(_.id)
-          .map(f => (f, dvs.getOrElse(f.id, Set.empty[Long]),
-            // equality probes this file is subject to, resolved to the
-            // file's own column POSITION (tasks read the keys parquet
-            // themselves — the driver ships only paths)
-            eqs.flatMap(_.probeFor(f))))
-        (currentVersion, ts, lakeDir.get.getAbsolutePath, idToName,
-          eqs, colIds, specIdNow)
-      }
-      val specs = targets.zipWithIndex.map { case ((f, dv, eqProbes), i) =>
-        GraftLakeTaskFiles.RewriteSpec(i, f.cols, f.types,
-          f.cols.map(cid => i2n.getOrElse(cid, s"_dropped_$cid")),
-          f.pkey, Vector(GraftLakeTaskFiles.RewriteSlice(
-            f.path.get, f.types, dv.toArray.sorted, 0,
-            (f.numRows - dv.size).toInt, eqProbes)), pspecId = f.pspecId)
-      }
-      val metaByIdx =
-        if (specs.isEmpty) Map.empty[Int, GraftLakeFileMeta]
-        else spark.sparkContext
-          .parallelize(specs, math.max(1, specs.length))
-          .flatMap(GraftLakeTaskFiles.rewriteTask(dir))
-          .collect().toMap
-      commitHook()
-      synchronized {
-        // per-file rebase admission: each replacement lands iff ITS
-        // source file is still live with the exact DV the rewrite
-        // dropped and no new eq-delete epoch arrived — a concurrent
-        // append (the normal streaming-ingest race) rides through; a
-        // concurrent touch of a target aborts the remaining rewrites
-        // loudly with the unadopted temps unlinked
-        targets.zipWithIndex.foreach { case ((f, dv0, _), i) =>
-          def admit(): Unit =
-            if (currentVersion != v0 &&
-                !maintenanceRebaseOk(Seq(f), Map(f.id -> dv0), eqs0,
-                  ids0, spec0))
-              throw new IllegalStateException(
-                s"write conflict on $tableName: a concurrent commit " +
-                  s"touched ${f.id} while CALL system.compact was " +
-                  "rewriting — retry against the current state")
-          try admit()
-          catch {
-            case e: Throwable =>
-              (i until targets.length).foreach(j => metaByIdx.get(j)
-                .foreach(m => new java.io.File(m.tmpPath).delete()))
-              throw e
-          }
-          val adopted = metaByIdx.get(i)
-            .map(adoptFileRebased(_, requireCurrent = false)).toVector
-          commitWithRebase { () =>
-            admit()
-            files = files.filterNot(_.id == f.id) ++ adopted
-            dvs -= f.id
-            recordCommit(dataChange = false) // maintenance: per-file commit
-          }
+    * maintenance commit). The rewrite is DISTRIBUTED — one task per
+    * affected file decodes its live rows (DV positions dropped,
+    * equality-delete keys probed task-side) and writes the replacement;
+    * the driver only adopts metadata (per-file commits). Each
+    * replacement keeps its source file's OWN manifest (cols/types): the
+    * live rows are still in that write-time layout, and stamping them
+    * with the CURRENT schema's ids would break after any ALTER. */
+  private[sources] def compactAll(): Int = compactWhere(_ => true)
+
+  /** Test hook: [[compactAll]] restricted to one file. */
+  private[graft] def compactFile(fileId: String): Unit =
+    compactWhere(_.id == fileId)
+
+  private def compactWhere(pick: GraftLakeFile => Boolean): Int = {
+    val (v0, targets, dir, i2n, eqs0, ids0, spec0) = synchronized {
+      val ts = files
+        .filter(f => pick(f) && (dvs.contains(f.id) ||
+          eqs.exists(_.probeFor(f).isDefined)))
+        .sortBy(_.id)
+        .map(f => (f, dvs.getOrElse(f.id, Set.empty[Long]),
+          // equality probes this file is subject to, resolved to the
+          // file's own column POSITION (tasks read the keys parquet
+          // themselves — the driver ships only paths)
+          eqs.flatMap(_.probeFor(f))))
+      (currentVersion, ts, lakeDir.getAbsolutePath, idToName,
+        eqs, colIds, specIdNow)
+    }
+    if (targets.isEmpty) return 0
+    val specs = targets.zipWithIndex.map { case ((f, dv, eqProbes), i) =>
+      rewriteSpecOf(i, f, dv, eqProbes, i2n) }
+    val metaByIdx = org.apache.spark.sql.SparkSession.active.sparkContext
+      .parallelize(specs, specs.length)
+      .flatMap(GraftLakeTaskFiles.rewriteTask(dir))
+      .collect().toMap
+    commitHook()
+    synchronized {
+      // per-file rebase admission: each replacement lands iff ITS
+      // source file is still live with the exact DV the rewrite
+      // dropped and no new eq-delete epoch arrived — a concurrent
+      // append (the normal streaming-ingest race) rides through; a
+      // concurrent touch of a target aborts the remaining rewrites
+      // loudly with the unadopted temps unlinked
+      targets.zipWithIndex.foreach { case ((f, dv0, _), i) =>
+        def admit(): Unit =
+          if (currentVersion != v0 &&
+              !maintenanceRebaseOk(Seq(f), Map(f.id -> dv0), eqs0,
+                ids0, spec0))
+            throw new IllegalStateException(
+              s"write conflict on $tableName: a concurrent commit " +
+                s"touched ${f.id} while CALL system.compact was " +
+                "rewriting — retry against the current state")
+        try admit()
+        catch {
+          case e: Throwable =>
+            (i until targets.length).foreach(j => metaByIdx.get(j)
+              .foreach(m => new java.io.File(m.tmpPath).delete()))
+            throw e
         }
-        targets.size
+        val adopted = metaByIdx.get(i)
+          .map(adoptFileRebased(_, requireCurrent = false)).toVector
+        commitWithRebase { () =>
+          admit()
+          files = files.filterNot(_.id == f.id) ++ adopted
+          dvs -= f.id
+          recordCommit(dataChange = false) // maintenance: per-file commit
+        }
       }
+      targets.size
     }
   }
+
+  /** One file's whole-file rewrite: its live rows (DV positions and
+    * `eqProbes` matches dropped) under its OWN write-time manifest — the
+    * rows keep the file's generation layout, so the replacement carries
+    * the same field ids and physical types. */
+  private def rewriteSpecOf(idx: Int, f: GraftLakeFile, dv: Set[Long],
+      eqProbes: Seq[(Int, String, DataType)], i2n: Map[Int, String])
+      : GraftLakeTaskFiles.RewriteSpec =
+    GraftLakeTaskFiles.RewriteSpec(idx, f.cols, f.types,
+      f.cols.map(cid => i2n.getOrElse(cid, s"_dropped_$cid")), f.pkey,
+      Vector(GraftLakeTaskFiles.RewriteSlice(f.path, f.types,
+        dv.toArray.sorted, 0, (f.numRows - dv.size).toInt, eqProbes)),
+      pspecId = f.pspecId)
 
   /** BIN-PACKING small-file compaction (Iceberg `rewrite_data_files`
-    * binpack strategy, VERDICT r13 task 2): coalesce fragmented files
-    * toward `targetRows` rows per output file in ONE maintenance commit
-    * (`dataChange = false` — the relation is unchanged, the change feed
-    * stays silent, `.files` shows the shrunken inventory, stats/nulls/
-    * sums are freshly collected per output file). Candidates are files
-    * below the target or carrying a deletion vector (packing clears the
-    * DV — the same read-debt amortization [[compactFile]] does, but
-    * batched). Files are packed ONLY within their schema GENERATION and
-    * PARTITION key (identical cols+types+pkey manifests — the
-    * mkFiles-vs-rewriteFile lesson: rows keep their write-time layout,
-    * and stamping them under another generation's manifest would serve
-    * values under wrong field ids; mixing partition keys would break
-    * partition-pure files for keyed scans). Returns (files before,
-    * files after); a no-op packs nothing and commits nothing
-    * (idempotent). Parquet storage runs the rewrite DISTRIBUTED: the
-    * driver derives each bin's exact (file, live-row range) slices from
-    * manifest math alone (prefix sums of live counts — a bin boundary
-    * can land mid-file), one task per bin decodes and writes its output
-    * file, and the commit adopts metadata after re-validating the
-    * pinned version — no global sort, no shuffle, cost ∝ bytes in
-    * undersized files. The driver leg below serves memory storage. */
+    * binpack strategy): coalesce fragmented files toward `targetRows`
+    * rows per output file in ONE maintenance commit (`dataChange =
+    * false` — the relation is unchanged, the change feed stays silent,
+    * `.files` shows the shrunken inventory, stats/nulls/sums are freshly
+    * collected per output file). Candidates are files below the target
+    * or carrying a deletion vector (packing clears the DV — the same
+    * read-debt amortization [[compactAll]] does, but batched). Files are
+    * packed ONLY within their schema GENERATION and PARTITION key
+    * (identical cols+types+pkey manifests: rows keep their write-time
+    * layout, and stamping them under another generation's manifest
+    * would serve values under wrong field ids; mixing partition keys
+    * would break partition-pure files for keyed scans). Returns (files
+    * before, files after); a no-op packs nothing and commits nothing
+    * (idempotent). The rewrite is DISTRIBUTED: the driver derives each
+    * bin's exact (file, live-row range) slices from manifest math alone
+    * (prefix sums of live counts — a bin boundary can land mid-file),
+    * one task per bin decodes and writes its output file, and the
+    * commit adopts metadata after re-validating the pinned version — no
+    * global sort, no shuffle, cost ∝ bytes in undersized files. */
   private[sources] def compactFiles(targetRows: Long): (Int, Int) = {
     require(targetRows >= 1, s"target_rows must be >= 1, got $targetRows")
-    val distributable = synchronized(lakeDir.isDefined) &&
-      org.apache.spark.sql.SparkSession.getActiveSession.isDefined
-    if (distributable) compactFilesDistributed(targetRows)
-    else synchronized {
-      val snap = GraftLakeSnapshot(files, dvs, eqs)
-      def liveCount(f: GraftLakeFile): Long =
-        f.numRows - snap.dvs.getOrElse(f.id, Set.empty).size
-      val before = files.length
-      // pack within each (cols, types, pkey) group, keeping file order
-      val packedIds = Set.newBuilder[String]
-      val packedOut = Vector.newBuilder[GraftLakeFile]
-      def eqDebt(f: GraftLakeFile): Boolean =
-        snap.eqs.exists(_.probeFor(f).isDefined)
-      files.groupBy(f => (f.cols, f.types, f.pkey, f.pspecId)).foreach {
-        case (_, gen) =>
-          val candidates = gen.filter(f =>
-            liveCount(f) < targetRows ||
-              snap.dvs.getOrElse(f.id, Set.empty).nonEmpty || eqDebt(f))
-          // one debt-free candidate has nothing to merge with — leave
-          // it (compacting a lone small file is pure write
-          // amplification); DV or equality-delete debt makes a lone
-          // rewrite worthwhile (liveRows resolves both)
-          val worthIt = candidates.length > 1 ||
-            candidates.exists(f =>
-              snap.dvs.getOrElse(f.id, Set.empty).nonEmpty || eqDebt(f))
-          if (candidates.nonEmpty && worthIt) {
-            val donor = candidates.head
-            val rows = candidates.flatMap(snap.liveRows)
-            packedIds ++= candidates.map(_.id)
-            rows.grouped(targetRows.toInt).foreach { chunk =>
-              packedOut ++= rewriteFile(donor, chunk.toVector)
-            }
-          }
-      }
-      val gone = packedIds.result()
-      if (gone.isEmpty) (before, before)
-      else {
-        files = files.filterNot(f => gone.contains(f.id)) ++
-          packedOut.result()
-        dvs = dvs.filterNot { case (id, _) => gone.contains(id) }
-        recordCommit(dataChange = false) // maintenance: relation unchanged
-        (before, files.length)
-      }
-    }
-  }
-
-  /** The distributed bin-pack leg: planning is manifest math only (live
-    * counts and prefix sums), tasks decode exactly their bin's slices
-    * and write the output files, the driver adopts metadata under an
-    * optimistic version re-check. */
-  private def compactFilesDistributed(targetRows: Long): (Int, Int) = {
     val spark = org.apache.spark.sql.SparkSession.active
     val (v0, before, snapFiles, snapDvs, snapEqs, dir, i2n, ids0, spec0) =
       synchronized {
         (currentVersion, files.length, files, dvs, eqs,
-          lakeDir.get.getAbsolutePath, idToName, colIds, specIdNow)
+          lakeDir.getAbsolutePath, idToName, colIds, specIdNow)
       }
     def dvOf(f: GraftLakeFile): Set[Long] =
       snapDvs.getOrElse(f.id, Set.empty)
@@ -3531,7 +3295,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     // bin offsets must index the FULLY-live order (rows − DV − probe
     // matches): files under unresolved equality deletes price their
     // bins from the memoized probe counts — the same one-time key-pass
-    // the scan-less COUNT pays (VERDICT r17 tasks 2-3); packing them
+    // the scan-less COUNT pays; packing them
     // also RESOLVES their read debt, like DVs, so they qualify as
     // candidates even at target size
     val affected = snapFiles.filter(f => probesOf(f).nonEmpty)
@@ -3541,7 +3305,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         affected).getOrElse(throw new IllegalStateException(
           // fail LOUDLY: a silent DV-only fallback would skew bin
           // offsets against the task-side post-probe slicing and
-          // lose/duplicate rows in the rewrite (advice r18)
+          // lose/duplicate rows in the rewrite
           "cannot price eq-aware compaction bins without an active " +
             "SparkSession to run the live-count probe"))
     def liveCount(f: GraftLakeFile): Long =
@@ -3572,7 +3336,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
               val hi = math.min(end, offsets(i + 1))
               if (lo >= hi) None
               else Some(GraftLakeTaskFiles.RewriteSlice(
-                candidates(i).path.get, types,
+                candidates(i).path, types,
                 dvOf(candidates(i)).toArray.sorted,
                 (lo - offsets(i)).toInt, (hi - offsets(i)).toInt,
                 probesOf(candidates(i))))
@@ -3587,10 +3351,11 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     val specs = specsB.result()
     val gone = packedIds.result()
     if (gone.isEmpty) return (before, before)
+    // a bin set of only fully-deleted files packs into no output file
     val metas =
       if (specs.isEmpty) Vector.empty[GraftLakeFileMeta]
       else spark.sparkContext
-        .parallelize(specs, math.max(1, specs.length))
+        .parallelize(specs, specs.length)
         .flatMap(GraftLakeTaskFiles.rewriteTask(dir))
         .collect().sortBy(_._1).toVector.map(_._2)
     commitHook()
@@ -3626,21 +3391,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     }
   }
 
-  /** Row-batch convenience for the driver-resident callers (memory
-    * storage, maintenance rewrites, delta inserts, cluster). */
-  private def mkRowFiles(batches: Vector[Vector[InternalRow]],
-      sortedBy: Seq[Int] = Nil): Vector[GraftLakeFile] =
-    mkFiles(batches.map(GraftLakePendingRows(_)), sortedBy)
-
   /** ADOPT a task-written parquet file: validate the write's pinned
-    * field ids against the current schema (the concurrent-ALTER guard
-    * the row path enforces by arity), claim the next file number by
-    * no-replace rename (a cross-writer collision is the same
-    * stale-snapshot conflict as the row path's), and register the
+    * field ids against the current schema (the concurrent-ALTER guard),
+    * claim the next file number by no-replace rename (a cross-writer
+    * collision is a stale-snapshot conflict), and register the
     * task-collected manifest block verbatim. Compaction REWRITES pass
     * `requireCurrent = false`: their rows deliberately keep the source
-    * generation's layout (the mkFiles-vs-rewriteFile lesson), so the
-    * meta's own cols/types ARE the contract. */
+    * generation's layout, so the meta's own cols/types ARE the
+    * contract. */
   private def adoptFile(m: GraftLakeFileMeta,
       requireCurrent: Boolean = true): GraftLakeFile = {
     if (requireCurrent && m.cols != colIds) {
@@ -3653,7 +3411,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     }
     fileSeq += 1
     val id = s"$tableName#f$fileSeq"
-    val target = new java.io.File(lakeDir.get, s"f$fileSeq.parquet")
+    val target = new java.io.File(lakeDir, s"f$fileSeq.parquet")
     // CLAIM the file number FIRST, through the commit arbiter (O_EXCL
     // on POSIX, conditional PUT on object stores — GraftCommitArbiter):
     // ATOMIC_MOVE on Linux is a bare rename(2) that silently REPLACES
@@ -3685,108 +3443,11 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         arbiter.release(target, token)
         throw e
     }
-    val gf = GraftLakeFile(id, Vector.empty, m.cols,
-      Some(target.getAbsolutePath), m.types, m.bytes, m.stats, m.nRows,
-      m.nulls, m.sums, m.dsums, m.sorted, m.nstats, m.nnulls, m.blooms,
-      m.pkey, m.pnames, m.pspecId, m.ndv)
-    log.foreach(_.writeFileManifest(gf))
+    val gf = GraftLakeFile(id, m.cols, target.getAbsolutePath, m.types,
+      m.bytes, m.stats, m.nRows, m.nulls, m.sums, m.dsums, m.sorted,
+      m.nstats, m.nnulls, m.blooms, m.pkey, m.pnames, m.pspecId, m.ndv)
+    log.writeFileManifest(gf)
     gf
-  }
-
-  private def mkFiles(pendings: Vector[GraftLakePending],
-      sortedBy: Seq[Int] = Nil): Vector[GraftLakeFile] =
-    pendings.flatMap {
-      case GraftLakePendingFile(meta) => Vector(adoptFile(meta))
-      case GraftLakePendingRows(rows) => mkFilesFromRows(Vector(rows),
-        sortedBy)
-    }
-
-  private def mkFilesFromRows(batches: Vector[Vector[InternalRow]],
-      sortedBy: Seq[Int] = Nil): Vector[GraftLakeFile] = {
-    // FANOUT WRITE (partitioned tables): split every task batch by its
-    // evaluated partition-key tuple so each committed file is
-    // PARTITION-PURE, and stamp the key into the manifest. The write
-    // distribution already clusters whole keys per task, so the split
-    // yields one file per key — no fragment explosion — and the keyed
-    // (SPJ) read side can then plan per-key FILE LISTS that decode in
-    // executors (Iceberg's fanout-writer + partition-tuple manifest
-    // contract). Row order within a key is preserved (stable split).
-    val keyedBatches: Vector[(Option[Vector[Any]], Vector[InternalRow])] =
-      if (specNow.isEmpty)
-        batches.filter(_.nonEmpty).map(b => (None, b))
-      else {
-        val idx = specNow.map(t => schemaNow.fieldIndex(t.srcCol))
-        val tys = idx.map(schemaNow.fields(_).dataType)
-        batches.filter(_.nonEmpty).flatMap { b =>
-          val groups = scala.collection.mutable.LinkedHashMap
-            .empty[Vector[Any],
-              scala.collection.mutable.Builder[InternalRow,
-                Vector[InternalRow]]]
-          b.foreach { r =>
-            val k = Vector.tabulate(specNow.length)(i =>
-              specNow(i).eval(r.get(idx(i), tys(i)), tys(i)))
-            groups.getOrElseUpdate(k, Vector.newBuilder[InternalRow]) += r
-          }
-          groups.toVector.map { case (k, rs) => (Some(k), rs.result()) }
-        }
-      }
-    keyedBatches.map { case (pkey, rows) =>
-      fileSeq += 1
-      // stamp the CURRENT column ids: rows were written under them. A
-      // schema change between the write's planning and its commit would
-      // skew row arity against the manifest — abort loudly, never stamp
-      // a manifest the rows don't match.
-      require(rows.head.numFields == colIds.length,
-        s"write to $tableName carries ${rows.head.numFields} columns but " +
-          s"the table now has ${colIds.length}: a concurrent ALTER TABLE " +
-          "landed mid-statement — retry against the current schema")
-      val id = s"$tableName#f$fileSeq"
-      val types = schemaNow.fields.map(_.dataType).toSeq
-      // per-file min/max + null-count stats, collected once at write
-      // time (what a table format reads back out of parquet footers)
-      val stats = GraftLakeStats.collect(rows, colIds, types)
-      val nulls = GraftLakeStats.nullCounts(rows, colIds)
-      val sums = GraftLakeStats.intSums(rows, colIds, types)
-      val dsums = GraftLakeStats.decSums(rows, colIds, types)
-      val (nstats, nnulls) = GraftLakeStats.collectNested(rows, colIds,
-        types)
-      val blooms = GraftLakeStats.bloomCollect(rows, colIds, types)
-      val ndv = GraftLakeStats.ndvCollect(rows, colIds, types)
-      lakeDir match {
-        case Some(dir) =>
-          val p = new java.io.File(dir, s"f$fileSeq.parquet")
-            .getAbsolutePath
-          val bytes = try GraftParquetIO.write(p,
-            schemaNow.fieldNames.toSeq, types, rows)
-          catch { case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-            // cross-writer data-file claim: another driver of the same
-            // durable root already minted this file number — the same
-            // stale-snapshot loss as the version-file CAS, surfaced
-            // BEFORE any state mutates (mkFiles runs ahead of the
-            // files/dvs assignment in every commit path)
-            throw new IllegalStateException(
-              s"write conflict on $tableName: data file f$fileSeq" +
-                ".parquet was already written by another writer — this " +
-                "writer's snapshot is stale; reopen the table and retry " +
-                "the statement", e)
-          }
-          val gf = GraftLakeFile(id, Vector.empty, colIds, Some(p), types,
-            bytes, stats, rows.length.toLong, nulls, sums, dsums, sortedBy,
-            nstats, nnulls, blooms, pkey,
-            pnames = schemaNow.fieldNames.toSeq, pspecId = specIdNow,
-            ndv = ndv)
-          log.foreach(_.writeFileManifest(gf)) // immutable once written
-          gf
-        // memory files record their write-time types too: compaction
-        // rewrites and type-widened scans both need the file's PHYSICAL
-        // layout, which the current schema no longer describes after an
-        // ALTER (ADVICE r12)
-        case None => GraftLakeFile(id, rows, colIds, types = types,
-          stats = stats, nulls = nulls, sums = sums, dsums = dsums,
-          sortedBy = sortedBy, nstats = nstats, nnulls = nnulls,
-          blooms = blooms, pkey = pkey, pspecId = specIdNow, ndv = ndv)
-      }
-    }
   }
 
   private[graft] def snapshot: GraftLakeSnapshot =
@@ -3795,16 +3456,15 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private[graft] def eqDeletes: Vector[GraftEqDelete] = synchronized(eqs)
 
   /** Per-file LIVE row counts under unresolved equality deletes —
-    * rows − DV − live probe matches (VERDICT r17 task 3). The scan-less
+    * rows − DV − live probe matches. The scan-less
     * COUNT pays ONE distributed key-probe pass per (file, DV,
     * epoch-set) signature — each task drives the vectorized reader
     * projected to the key column only ([[GraftLakeColumnar.countLive]])
     * — and memoizes the result, so every later COUNT answers from
     * metadata until the file's read debt changes (a growing DV or a new
     * epoch re-keys the signature; compaction makes the memo moot).
-    * Memory-backed files count driver-side where their rows already
-    * live. Returns None when a parquet probe job cannot run (no active
-    * session). Only counts cross the driver — never rows. */
+    * Returns None when the probe job cannot run (no active session).
+    * Only counts cross the driver — never rows. */
   private val eqLiveMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   private[sources] def eqLiveCounts(snap: GraftLakeSnapshot,
@@ -3813,7 +3473,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       snap.eqs.flatMap(_.probeFor(f))
     // signature of the file's CURRENT read debt: an MD5 over the full
     // sorted DV (content, not Set.hashCode — a collision would serve a
-    // wrong count forever, review r18) plus the applicable keys paths.
+    // wrong count forever) plus the applicable keys paths.
     // The memo keys on FILE ID and stores (signature, count), so a
     // growing DV REPLACES the entry instead of accreting stale ones —
     // one live entry per file, bounded by the table's file count.
@@ -3836,19 +3496,15 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     // concurrent caller over a NEWER snapshot of the same file (a
     // current COUNT racing a time-travel COUNT, or compaction pricing)
     // may overwrite the memo entry between our put and return; that
-    // must not leak its count into our answer (judge r18 finding 1).
+    // must not leak its count into our answer.
     val hits: Map[String, Long] =
       targets.flatMap(f => hit(f).map(f.id -> _)).toMap
     val missing = targets.filterNot(f => hits.contains(f.id))
-    val (probeable, direct) =
-      missing.partition(f => f.path.isDefined && probesOf(f).nonEmpty)
+    val (probeable, direct) = missing.partition(f => probesOf(f).nonEmpty)
     val directCounts: Map[String, Long] = direct.map { f =>
       // no applicable probe (file predates every key column) → pure
-      // metadata math; memory files count from driver-resident rows
-      val n =
-        if (probesOf(f).isEmpty)
-          f.numRows - snap.dvs.getOrElse(f.id, Set.empty).size.toLong
-        else snap.liveRows(f).size.toLong
+      // metadata math
+      val n = f.numRows - snap.dvs.getOrElse(f.id, Set.empty).size.toLong
       eqLiveMemo.put(f.id, (sig(f), n))
       f.id -> n
     }.toMap
@@ -3857,14 +3513,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       // same session-resolution order as the maintenance callers
       // (SparkSession.active): active thread session, then the default
       // — a default-but-not-active thread must not silently refuse and
-      // leave callers pricing eq files at DV-only counts (review r18)
+      // leave callers pricing eq files at DV-only counts
       val spark = org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .getOrElse(return None)
       val i2n = idToName
       val specs = probeable.map { f =>
         val probes = probesOf(f)
-        (f.id, GraftLakeFilePartition(f.id, Vector.empty,
+        (f.id, GraftLakeFilePartition(f.id,
           snap.dvs.get(f.id).map(_.toArray.sorted)
             .getOrElse(Array.empty[Long]),
           GraftLakeFieldIds.resolve(f.cols, i2n),
@@ -3885,7 +3541,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             val sets = fp.eqProbes.map { case (ci, p, vt) =>
               (ci, GraftEqDelete.loadProbe(p, vt)) }
             var live = 0L
-            GraftParquetIO.read(fp.path.get, fp.types).zipWithIndex
+            GraftParquetIO.read(fp.path, fp.types).zipWithIndex
               .foreach { case (r, pos) =>
                 val dead = java.util.Arrays.binarySearch(
                   fp.deleted, pos.toLong) >= 0 ||
@@ -3919,7 +3575,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private[graft] def deletionVectors: Map[String, Set[Long]] =
     synchronized(dvs)
 
-  private def appendFiles(pendings: Vector[GraftLakePending],
+  private def appendFiles(pendings: Vector[GraftLakeFileMeta],
       plannedChecks: Set[(String, String)]): Unit =
     synchronized {
       // appends rebase across DATA commits unconditionally: under
@@ -3944,29 +3600,25 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private def commitEpoch(queryId: String, truncate: Boolean,
       upsertKey: Option[String] = None,
       plannedChecks: Set[(String, String)] = Set.empty)(
-      epochId: Long, pendings: Vector[GraftLakePending],
+      epochId: Long, pendings: Vector[GraftLakeFileMeta],
       keyMetas: Vector[GraftLakeFileMeta] = Vector.empty): Unit =
     synchronized {
       // the builder refuses the combination at build time
       // (graft.upsert.key is append-mode only); assert it here too so
       // the truncate-first branch order below can never silently turn
-      // an upsert sink into a blind replace (ADVICE r19)
+      // an upsert sink into a blind replace
       require(!(truncate && upsertKey.isDefined),
         s"streaming sink on $tableName cannot combine Complete-mode " +
           "truncate with graft.upsert.key")
-      if (streamEpochs.get(queryId).exists(_ >= epochId)) {
-        pendings.foreach {
-          case GraftLakePendingFile(m) =>
-            new java.io.File(m.tmpPath).delete()
-          case _ => ()
-        }
-        keyMetas.foreach(m => new java.io.File(m.tmpPath).delete())
-      } else if (truncate) {
+      if (streamEpochs.get(queryId).exists(_ >= epochId))
+        (pendings ++ keyMetas).foreach(m =>
+          new java.io.File(m.tmpPath).delete())
+      else if (truncate) {
         // Complete-mode sink: each epoch blindly replaces the table —
         // order-dependent by definition, so a cross-writer CAS loss
         // stays LOUD (rebasing would silently erase the winner's rows)
         requireNoNewChecks(plannedChecks)
-        files = mkFiles(pendings); dvs = Map.empty
+        files = pendings.map(adoptFile(_)); dvs = Map.empty
         recordCommit(dataChange = true, txn = Some(queryId -> epochId))
         streamEpochs += queryId -> epochId
       } else {
@@ -3977,8 +3629,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         // mint ONCE; the commit loop re-applies them verbatim.
         upsertKey match {
           case Some(keyName) =>
-            // STREAMING UPSERT via EQUALITY DELETES (VERDICT r16 task
-            // 4): the epoch's keys logically delete every matching row
+            // STREAMING UPSERT via EQUALITY DELETES: the epoch's keys
+            // logically delete every matching row
             // in files minted BEFORE this epoch (belowSeq is captured
             // before any adoption, so the epoch's own files — data AND
             // keys — are never subject to their own delete; a rebase
@@ -4061,7 +3713,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * by commit records, not by the file listing. */
   private def adoptEqFile(m: GraftLakeFileMeta): String = {
     fileSeq += 1
-    val target = new java.io.File(lakeDir.get, s"e$fileSeq.parquet")
+    val target = new java.io.File(lakeDir, s"e$fileSeq.parquet")
     val arbiter = GraftCommitArbiter.active
     // a conflicting adoption leaves the task temp IN PLACE: the
     // auto-rebase loop re-adopts it under the next free number
@@ -4124,11 +3776,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private def adoptEqFileRebased(m: GraftLakeFileMeta): String =
     retryCas(cleanup = new java.io.File(m.tmpPath).delete())(
       adoptEqFile(m))
-  private def truncateTo(pendings: Vector[GraftLakePending],
+  private def truncateTo(pendings: Vector[GraftLakeFileMeta],
       plannedChecks: Set[(String, String)]): Unit =
     synchronized {
       requireNoNewChecks(plannedChecks)
-      files = mkFiles(pendings); dvs = Map.empty; recordCommit(true)
+      files = pendings.map(adoptFile(_)); dvs = Map.empty
+      recordCommit(true)
     }
 
   // ---- metadata-only DELETE (SupportsDeleteV2) ----------------------------
@@ -4196,7 +3849,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * this write re-derives from its snapshot — the classic lost update.
     * Abort loudly instead (Iceberg's validateDataFilesExist contract). */
   private def replaceGroups(removed: Set[String],
-      pendings: Vector[GraftLakePending],
+      pendings: Vector[GraftLakeFileMeta],
       eqs0: Vector[GraftEqDelete],
       plannedChecks: Set[(String, String)]): Unit = {
     commitHook()
@@ -4207,7 +3860,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       // on the refreshed state; a cross-writer replace of a scanned
       // group is the lost update and stays loud (no CAS cause — never
       // retried); a concurrent equality-delete epoch or ADD CONSTRAINT
-      // invalidates the rewritten rows and stays loud too (ADVICE r19)
+      // invalidates the rewritten rows and stays loud too
       commitWithRebase { () =>
         val gone = removed -- files.map(_.id).toSet
         if (gone.nonEmpty) throw new IllegalStateException(
@@ -4235,7 +3888,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private def applyDelta(expected: Map[String, Set[Long]],
       eqs0: Vector[GraftEqDelete], plannedChecks: Set[(String, String)])(
       deleted: Map[String, Set[Long]],
-      pendings: Vector[GraftLakePending]): Unit = {
+      pendings: Vector[GraftLakeFileMeta]): Unit = {
     commitHook()
     synchronized {
       val minted = mintWithRebase(pendings)
@@ -4245,7 +3898,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       // its DV is the MoR lost update and stays loud (no CAS cause),
       // as are a concurrent equality-delete epoch (its logical deletes
       // cannot reach this delta's re-inserted rows) and a concurrent
-      // ADD CONSTRAINT (the rows were never validated) — ADVICE r19
+      // ADD CONSTRAINT (the rows were never validated)
       commitWithRebase { () =>
         val gone = deleted.keySet -- files.map(_.id).toSet
         if (gone.nonEmpty) throw new IllegalStateException(
@@ -4269,82 +3922,6 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       }
     }
   }
-  /** Compact ONE file's deletion vector away: rewrite the file as its
-    * live rows (or drop it if fully dead) and clear the DV — the
-    * maintenance that amortizes merge-on-read's read debt, file-at-a-
-    * time, never table-at-a-time. A file without a DV is untouched.
-    *
-    * The rewrite preserves the file's OWN manifest (cols/types): the
-    * live rows are still in the file's write-time layout, and stamping
-    * them with the CURRENT schema's ids (mkFiles) would break after any
-    * ALTER — an arity change made CALL system.compact throw, and an
-    * arity-PRESERVING evolution (DROP one + ADD another) would silently
-    * serve old values under the wrong field id (ADVICE r12 high). */
-  private[graft] def compactFile(fileId: String): Unit = synchronized {
-    // cross-writer rebase by RE-DERIVATION: every attempt reads the
-    // file, its DV, and the applicable equality deletes from the
-    // CURRENT state, so a refresh after a CAS loss makes re-running the
-    // whole block the validation — if a concurrent writer compacted the
-    // file away first, the guard finds nothing and this is a no-op
-    retryCas() {
-      if (dvs.contains(fileId) || eqs.exists(e =>
-          files.exists(f => f.id == fileId && e.probeFor(f).isDefined)))
-        files.find(_.id == fileId).foreach { f =>
-          // liveRows applies BOTH the DV and any equality deletes — the
-          // rewrite's rows are clean, its new file number exceeds every
-          // belowSeq, and recordCommit prunes resolved eq records
-          val live = GraftLakeSnapshot(files, dvs, eqs).liveRows(f)
-          files = files.filterNot(_.id == fileId) ++ rewriteFile(f, live)
-          dvs -= fileId
-          recordCommit(dataChange = false) // maintenance: relation unchanged
-        }
-    }
-  }
-
-  /** Rewrite `rows` as a new file under `f`'s write-time manifest —
-    * same field ids, same physical types, freshly collected stats. */
-  private def rewriteFile(
-      f: GraftLakeFile, rows: Vector[InternalRow]): Vector[GraftLakeFile] =
-    if (rows.isEmpty) Vector.empty
-    else {
-      fileSeq += 1
-      val id = s"$tableName#f$fileSeq"
-      val stats = GraftLakeStats.collect(rows, f.cols, f.types)
-      val nulls = GraftLakeStats.nullCounts(rows, f.cols)
-      val sums = GraftLakeStats.intSums(rows, f.cols, f.types)
-      val dsums = GraftLakeStats.decSums(rows, f.cols, f.types)
-      val (nstats, nnulls) = GraftLakeStats.collectNested(rows, f.cols,
-        f.types)
-      val blooms = GraftLakeStats.bloomCollect(rows, f.cols, f.types)
-      val ndv = GraftLakeStats.ndvCollect(rows, f.cols, f.types)
-      Vector(lakeDir match {
-        case Some(dir) =>
-          val p = new java.io.File(dir, s"f$fileSeq.parquet")
-            .getAbsolutePath
-          // parquet column names are labels only (reads are positional by
-          // the file's recorded types); dropped ids get a synthetic name
-          val names = f.cols.map(cid =>
-            idToName.getOrElse(cid, s"_dropped_$cid"))
-          val bytes = try GraftParquetIO.write(p, names, f.types, rows)
-          catch { case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-            throw new IllegalStateException(
-              s"write conflict on $tableName: data file f$fileSeq" +
-                ".parquet was already written by another writer — this " +
-                "writer's snapshot is stale; reopen the table and retry " +
-                "the statement", e)
-          }
-          val gf = GraftLakeFile(id, Vector.empty, f.cols, Some(p), f.types,
-            bytes, stats, rows.length.toLong, nulls, sums, dsums,
-            nstats = nstats, nnulls = nnulls, blooms = blooms,
-            pkey = f.pkey, pnames = names, pspecId = f.pspecId, ndv = ndv)
-          log.foreach(_.writeFileManifest(gf))
-          gf
-        case None => GraftLakeFile(id, rows, f.cols, types = f.types,
-          stats = stats, nulls = nulls, sums = sums, dsums = dsums,
-          nstats = nstats, nnulls = nnulls, blooms = blooms,
-          pkey = f.pkey, pspecId = f.pspecId, ndv = ndv)
-      })
-    }
 
   override def name(): String = tableName
   override def schema(): StructType = synchronized(schemaNow)
@@ -4491,7 +4068,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             case None =>
               if (truncateRequested) truncateTo(pendings, plannedChecks)
               else appendFiles(pendings, plannedChecks)
-          }, fileWrite = fileWriteInfo)
+          }, fileWriteInfo)
         }
         override def toStreaming
             : org.apache.spark.sql.connector.write.streaming
@@ -4502,16 +4079,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           // `graft.upsert.key`: streaming UPSERT by equality delete —
           // each epoch's keys logically delete prior matches, with no
           // read-side probe of existing data (the Flink→Iceberg CDC
-          // writer shape). Requires parquet storage (keys files are
-          // real files read by scan tasks).
+          // writer shape; keys files are real files read by scan tasks)
+          val fw = fileWriteInfo
           val upsert = upsertKeyName
             .map { keyName =>
               require(!truncateRequested,
                 "graft.upsert.key is append-mode only")
-              val fw = fileWriteInfo.getOrElse(throw
-                new UnsupportedOperationException(
-                  s"graft.upsert.key needs graft.storage = parquet on " +
-                    tableName))
               val ki = fw.names.indexOf(keyName)
               require(ki >= 0, s"upsert key $keyName not in " +
                 s"$tableName's schema (${fw.names.mkString(", ")})")
@@ -4522,8 +4095,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             }
           new GraftLakeStreamingWrite(
             commitEpoch(info.queryId(), truncateRequested,
-              upsert.map(_.keyName), plannedChecks),
-            fileWrite = fileWriteInfo, upsert = upsert)
+              upsert.map(_.keyName), plannedChecks), fw, upsert)
         }
       }
     }
@@ -4573,9 +4145,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
                   "the conf (or publish first) before UPDATE/DELETE/MERGE"))
             override def toBatch: DeltaBatchWrite =
               new GraftLakeDeltaBatchWrite(
-                applyDelta(snap.dvs, snap.eqs, opChecks),
-                opSchema.fields.map(_.dataType), onDone = pinPaths(snap),
-                fileWrite = fileWriteInfo)
+                applyDelta(snap.dvs, snap.eqs, opChecks), fileWriteInfo,
+                opSchema.fields.map(_.dataType), onDone = pinPaths(snap))
           }
         }
     }
@@ -4622,10 +4193,9 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             override def toBatch: BatchWrite =
               new GraftLakeBatchWrite(
                 pendings => replaceGroups(state.scanned, pendings,
-                  snap.eqs, opChecks),
+                  snap.eqs, opChecks), fileWriteInfo,
                 rowLevel = Some(opSchema.fields.map(_.dataType)),
-                onDone = pinPaths(snap),
-                fileWrite = fileWriteInfo)
+                onDone = pinPaths(snap))
           }
         }
     }
@@ -4659,16 +4229,26 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       checks = constraintsFromRestore(r.constraints)
       if (checks.nonEmpty) everHadConstraints = true
     case None =>
-      log.foreach { lg =>
-        lg.writeTable(tableName, partSpec, mergeOnRead)
-        lg.writeCommit(0, history.head._1, dataChange = true,
-          commitTimes.head, schemaNow, colIds, colDefaults, fileSeq,
-          nextColId)
-      }
+      log.writeTable(tableName, partSpec, mergeOnRead)
+      log.writeCommit(0, history.head._1, dataChange = true,
+        commitTimes.head, schemaNow, colIds, colDefaults, fileSeq,
+        nextColId)
   }
 }
 
 object GraftLakeTable {
+  /** Roots of the tables that have no durable root (no warehouse, no
+    * `graft.location`): only this JVM's registry can reach them, so
+    * whatever a DROP has not deleted goes when the JVM exits. */
+  private val tempRoots = ConcurrentHashMap.newKeySet[java.io.File]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    tempRoots.forEach(GraftParquetIO.deleteRecursively(_))))
+  private def tempRoot(): java.io.File = {
+    val d = java.nio.file.Files.createTempDirectory("graft_lake_").toFile
+    tempRoots.add(d)
+    d
+  }
+
   /** Row-level-operation pins older than this are considered abandoned
     * (planned but never committed/aborted) and reaped at vacuum time —
     * sized far above any statement's real plan→commit latency. */
@@ -4838,7 +4418,7 @@ class GraftLakeScanBuilder(snapshot: GraftLakeSnapshot,
     // an unresolved EQUALITY DELETE hides a content-defined number of
     // rows per file, so VALUE-derived aggregates (MIN/MAX/SUM/
     // COUNT(col)/AVG) refuse until CALL system.compact resolves it.
-    // COUNT(*) still pushes (VERDICT r17 task 3): each affected file's
+    // COUNT(*) still pushes: each affected file's
     // contribution is its memoized live count — rows − DV − live probe
     // matches, computed once by a distributed key-column pass — so
     // the first COUNT pays one narrow probe job and every later COUNT
@@ -5236,7 +4816,7 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
   // (keyed partitions interleave files and cannot synthesize
   // _file/_pos), or when the CURRENT spec references a column this
   // scan's schema lacks — a VERSION AS OF pinned before the column was
-  // added must not crash keyGroups on fieldIndex (spec evolution)
+  // added has no key to group on (spec evolution)
   private val fileGrained = partSpec.isEmpty || rowLevel.isDefined ||
     requiredSchema.fieldNames.exists(n =>
       n == GraftLakeTable.FileCol || n == GraftLakeTable.PosCol) ||
@@ -5250,17 +4830,13 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
     * stats skipping kept 2 of 10k files reports the 2-file footprint —
     * and the planner BROADCASTS the filtered side without a hint, the
     * decision that matters most at lake scale (Iceberg reports exactly
-    * this). On-disk bytes for parquet storage; a schema-sized row
-    * estimate for driver-resident files (whose `bytes` is 0). */
+    * this). The size is the active files' on-disk bytes. */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val liveRows = active.map(f =>
       f.numRows - snapshot.dvs.getOrElse(f.id, Set.empty).size.toLong).sum
-    val diskBytes = active.map(_.bytes).sum
-    val size =
-      if (diskBytes > 0) diskBytes
-      else liveRows * math.max(1L, fullSchema.defaultSize.toLong)
-    // PER-COLUMN stats for the optimizer (VERDICT r16 task 5): HLL
+    val size = active.map(_.bytes).sum
+    // PER-COLUMN stats for the optimizer: HLL
     // registers from the write-time manifests merge associatively into
     // distinctCount, null counts sum, min/max reduce — Spark's
     // transformV2Stats turns these into catalyst ColumnStat, so
@@ -5404,11 +4980,10 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
       if (usable.nonEmpty)
         active = active.filter(f =>
           GraftLakeStats.mayMatch(f, usable.toSeq, nameToId, colDefaults))
-      if (active.length < before) runtimePruned = true
     }
     val keeps = predicates.flatMap(fileIdsOf)
     if (keeps.nonEmpty) {
-      // SNAPSHOT-DIVERGENCE validation (ADVICE r10): the group-filter
+      // SNAPSHOT-DIVERGENCE validation: the group-filter
       // subquery plans through the table's REGULAR newScanBuilder (Spark's
       // RowLevelOperationRuntimeGroupFiltering deliberately swaps the
       // row-level operation table for the original one "to leverage a
@@ -5474,50 +5049,12 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
     }
   }
 
-  // set when runtime filtering shrank the active file set AFTER the
-  // cached key grouping was forced (outputPartitioning runs at planning,
-  // filter() at execution prep): planInputPartitions then re-groups from
-  // the surviving files — Spark's contract allows reporting a SUBSET of
-  // the original partition values after runtime filtering
-  @volatile private var runtimePruned = false
-  private lazy val keyed: Array[(InternalRow, Vector[InternalRow])] =
-    keyGroups()
-  private def keyGroups(): Array[(InternalRow, Vector[InternalRow])] = {
-    val idx = partSpec.map(t => fullSchema.fieldIndex(t.srcCol))
-    val types = idx.map(fullSchema.fields(_).dataType)
-    // keyed partitions interleave files, so rows are normalized to the
-    // CURRENT schema here (default- or null-filling post-evolution
-    // columns, widening pre-widening physical values); the file-grained
-    // path projects lazily in the reader instead
-    def normalized(f: GraftLakeFile): Vector[InternalRow] = {
-      val rows = snapshot.liveRows(f)
-      GraftLakeReaders.normalizer(fullSchema, namesOf(f), f.types,
-          nameDefaults) match {
-        case None => rows
-        case Some(nz) => rows.map(nz)
-      }
-    }
-    // group by the TRANSFORMED key (identity: the value itself;
-    // days/bucket: the derived partition id) — hidden partitioning's
-    // read side: each distinct transform value is one input split
-    active.flatMap(normalized)
-      .groupBy(r => partSpec.indices.map(i =>
-        partSpec(i).eval(r.get(idx(i), types(i)), types(i))))
-      .toArray
-      // deterministic partition order; Spark re-sorts by grouped key
-      // values when aligning the two sides of an SPJ
-      .sortBy(_._1.map(String.valueOf).mkString("\u0000"))
-      .map { case (k, rs) => (new GenericInternalRow(k.toArray), rs) }
-  }
-
   override def outputPartitioning(): Partitioning =
     if (!keyedPlanning) new UnknownPartitioning(active.length.max(1))
     else new KeyGroupedPartitioning(
       partSpec.map(_.toV2).toArray[
         org.apache.spark.sql.connector.expressions.Expression],
-      // the metadata grouping when available — forcing `keyed` here
-      // would decode every file on the driver at planning time
-      fileKeyGroups().map(_.length).getOrElse(keyed.length))
+      fileKeyGroups().length)
 
   /** Is the WHOLE scan globally ordered on its files' first sort
     * column — partitions planned in file order, each an ascending run,
@@ -5557,8 +5094,8 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
     }
   }
 
-  /** Per-partition SORT ORDER (SupportsReportOrdering, VERDICT r13 task
-    * 4): each file-grained partition is one file, and files written by
+  /** Per-partition SORT ORDER (SupportsReportOrdering): each
+    * file-grained partition is one file, and files written by
     * `CALL system.cluster` are ascending runs on the cluster key — the
     * manifest records it ([[GraftLakeFile.sortedBy]]). Report the
     * common sorted prefix across ALL active files (resolved to live,
@@ -5586,7 +5123,7 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
   }
 
   private def filePartOf(f: GraftLakeFile): GraftLakeFilePartition =
-    GraftLakeFilePartition(f.id, f.rows,
+    GraftLakeFilePartition(f.id,
       snapshot.dvs.get(f.id).map(_.toArray.sorted)
         .getOrElse(Array.empty[Long]), namesOf(f),
       f.path, f.types, f.pnames,
@@ -5595,12 +5132,6 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
       // planning; a file predating the key column has nothing to match)
       snapshot.eqs.flatMap(_.probeFor(f)))
 
-  /** Keyed planning WITHOUT touching rows: when every active file is
-    * PARTITION-PURE (fanout-written, key stamped in the manifest), the
-    * key grouping is pure metadata — group FILES by their key tuple and
-    * let tasks decode. Files from before the fanout write (or staged
-    * through paths that bypass it) return None and the scan falls back
-    * to the driver-normalized row grouping below. */
   /** Every active file partition-pure AND stamped under the CURRENT
     * spec: a tuple evaluated under an older spec is a different key
     * space — trusting it would group (and SPJ-align) rows wrongly. */
@@ -5608,42 +5139,33 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
     active.nonEmpty &&
       active.forall(f => f.pkey.isDefined && f.pspecId == pspecId)
 
-  /** May this scan report KeyGroupedPartitioning at all? Metadata-keyed
-    * when stamps are uniform; the ROW-evaluated keyed fallback (which
-    * materializes and groups rows on the DRIVER) is acceptable only for
-    * memory-backed tables — a parquet table whose stamps don't qualify
-    * (pre-fanout files, or a spec evolution awaiting its rewrite)
-    * reports UnknownPartitioning instead, so joins SHUFFLE rather than
-    * pulling the lake through the driver at plan time. */
-  private def keyedPlanning: Boolean = !fileGrained &&
-    (metaKeyed || active.forall(_.path.isEmpty))
+  /** May this scan report KeyGroupedPartitioning? Only when the key
+    * grouping is pure metadata: every active file PARTITION-PURE
+    * (fanout-written, key stamped in the manifest under the current
+    * spec). A table whose stamps don't qualify (pre-fanout files, or a
+    * spec evolution awaiting its rewrite) reports UnknownPartitioning,
+    * so joins SHUFFLE rather than pulling the lake through the driver
+    * at plan time. */
+  private def keyedPlanning: Boolean = !fileGrained && metaKeyed
 
-  private def fileKeyGroups()
-      : Option[Array[(InternalRow, Vector[GraftLakeFile])]] =
-    if (!metaKeyed) None
-    else Some(active.groupBy(_.pkey.get).toArray
+  /** The active files grouped by their stamped key tuple, in a
+    * deterministic order; recomputed from `active`, so a runtime filter
+    * that pruned files reports the surviving subset of keys. */
+  private def fileKeyGroups(): Array[(InternalRow, Vector[GraftLakeFile])] =
+    active.groupBy(_.pkey.get).toArray
       .sortBy(_._1.map(String.valueOf).mkString("\u0000"))
       .map { case (k, fs) => (new GenericInternalRow(k.toArray): InternalRow,
-        fs) })
+        fs) }
 
   override def planInputPartitions(): Array[InputPartition] =
-    if (!keyedPlanning)
-      // parquet-backed files ship only their PATH to tasks; the reader
-      // decodes real columnar bytes executor-side (memory-backed files
-      // ship their rows, as before)
-      active.map(filePartOf).toArray
-    else fileKeyGroups() match {
-      case Some(gs) =>
-        // per-key FILE LISTS: decode + schema-normalization + DV
-        // filtering all happen in tasks (the reader applies the same
-        // by-name extractors as the file-grained path, per file)
-        gs.map { case (k, fs) =>
-          GraftLakeKeyedFilesPartition(fs.map(filePartOf), k)
-            : InputPartition }
-      case None =>
-        (if (runtimePruned) keyGroups() else keyed)
-          .map { case (k, rs) => GraftLakeKeyedPartition(rs, k) }
-    }
+    // partitions ship only file PATHS and manifests; tasks decode
+    if (!keyedPlanning) active.map(filePartOf).toArray
+    else
+      // per-key FILE LISTS: decode + schema-normalization + DV
+      // filtering all happen in tasks (the reader applies the same
+      // by-name extractors as the file-grained path, per file)
+      fileKeyGroups().map { case (k, fs) =>
+        GraftLakeKeyedFilesPartition(fs.map(filePartOf), k): InputPartition }
 
   override def createReaderFactory(): PartitionReaderFactory =
     // columnar (vectorized) decode whenever the WHOLE active set
@@ -5651,17 +5173,14 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
     // runtime filtering only shrinks `active`, so a decision taken
     // over the current set stays valid for every planned partition;
     // any scan `GraftLakeColumnar.eligible` rejects reads through the
-    // row path. Keyed (SPJ) scans go
-    // columnar too when their planning is the per-key FILE-LIST shape
-    // (every active file partition-pure) — the chained per-file batch
-    // readers preserve the key grouping.
-    // unresolved equality deletes stay columnar too: the batch reader
-    // loads each probe's keys parquet task-side and key-checks rows
-    // into the same selection view the DV filter uses
+    // row path. Keyed (SPJ) scans go columnar too — the chained
+    // per-file batch readers preserve the key grouping. Unresolved
+    // equality deletes stay columnar as well: the batch reader loads
+    // each probe's keys parquet task-side and key-checks rows into the
+    // same selection view the DV filter uses
     new GraftLakeReaderFactory(fullSchema, requiredSchema, nameDefaults,
-      (!keyedPlanning || metaKeyed) &&
-        GraftLakeColumnar.eligible(active,
-          requiredSchema, namesOf, nameDefaults))
+      GraftLakeColumnar.eligible(active, requiredSchema, namesOf,
+        nameDefaults))
 }
 
 /** `deleted` is the file's deletion vector as a SORTED primitive
@@ -5670,20 +5189,12 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
   * large-task warning at sf1); the array is 8 bytes/position and
   * membership is a binary search. */
 final case class GraftLakeFilePartition(
-    fileId: String, rows: Vector[InternalRow],
-    deleted: Array[Long], cols: Seq[String],
-    path: Option[String] = None, types: Seq[DataType] = Nil,
-    pnames: Seq[String] = Nil,
+    fileId: String, deleted: Array[Long], cols: Seq[String],
+    path: String, types: Seq[DataType], pnames: Seq[String] = Nil,
     // unresolved equality deletes this file is subject to: (column
     // position in the FILE layout, keys parquet path, key value type)
     eqProbes: Seq[(Int, String, DataType)] = Nil)
     extends InputPartition
-
-final case class GraftLakeKeyedPartition(
-    rows: Vector[InternalRow], key: InternalRow)
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow = key
-}
 
 /** One partition key's PARTITION-PURE files: the keyed (SPJ) input
   * split that ships paths/manifests instead of rows — tasks decode,
@@ -5696,15 +5207,13 @@ final case class GraftLakeKeyedFilesPartition(
 }
 
 /** One changed file in one commit: the unit of change-feed parallelism.
-  * `rows` carry their ORIGINAL in-file positions so `_pos` stays the
+  * The partition ships the file's PATH plus a position selection and
+  * the task decodes — the driver plans the feed from metadata alone.
+  * Rows keep their ORIGINAL in-file positions so `_pos` stays the
   * stable merge-on-read row id even for rows surfaced as deletes. */
 final case class GraftLakeChangePartition(fileId: String,
-    rows: Vector[(Long, InternalRow)], changeType: String, version: Long,
-    cols: Seq[String], types: Seq[DataType] = Nil,
-    // parquet-backed files ship their PATH + a position selection and
-    // decode in the task — the driver plans the feed from metadata
-    // alone (`rows` above stays empty then)
-    path: Option[String] = None,
+    changeType: String, version: Long, cols: Seq[String],
+    types: Seq[DataType], path: String,
     // positions to EXCLUDE (the file's deletion vector at the emitting
     // snapshot) — used by whole-file insert/delete legs. SORTED
     // primitive array: ships per task, binary-search membership (a
@@ -5835,7 +5344,7 @@ class GraftLakeFilesTable(parent: GraftLakeTable)
         if (v == null) null else UTF8String.fromString(String.valueOf(v))
       new GenericInternalRow(Array[Any](
         UTF8String.fromString(f.id),
-        f.path.map(UTF8String.fromString).orNull,
+        UTF8String.fromString(f.path),
         f.numRows, f.numRows - dead, dead, f.bytes,
         f.pkey.map(k => UTF8String.fromString(
           k.map(String.valueOf).mkString("[", ", ", "]"))).orNull,
@@ -5863,7 +5372,7 @@ class GraftLakeFilesTable(parent: GraftLakeTable)
   * SCHEMA-FAITHFUL: `schema()` is the schema the version was COMMITTED
   * under (per-commit schema record), so a pre-ALTER pin still serves a
   * since-dropped column and does not back-fill a since-added one — the
-  * Delta/Iceberg snapshot-schema contract (ADVICE r13). The scan rides
+  * Delta/Iceberg snapshot-schema contract. The scan rides
   * [[GraftLakeTable.scanBuilderAt]] (same snapshot-selection machinery
   * as the read-option spelling, including scan-less aggregates over the
   * pinned manifest, but resolving names/defaults through the version's
@@ -5877,7 +5386,7 @@ class GraftLakePinnedTable(parent: GraftLakeTable, version: String)
     util.EnumSet.of(TableCapability.BATCH_READ)
   // metadata columns delegate to the parent: `SELECT _file FROM t
   // VERSION AS OF v` must resolve exactly like the read-option spelling
-  // of the same snapshot read (ADVICE r13)
+  // of the same snapshot read
   override def metadataColumns(): Array[MetadataColumn] =
     parent.metadataColumns()
   override def newScanBuilder(
@@ -5952,7 +5461,7 @@ class GraftLakeRefsTable(parent: GraftLakeTable)
   * the table an operator reads before choosing compaction targets or
   * auditing skew — control-plane-sized, planned as a driver-local
   * scan. `n_live_rows` is EXACT even under unresolved EQUALITY-DELETE
-  * debt (VERDICT r19 task 5): when the snapshot carries unresolved
+  * debt: when the snapshot carries unresolved
   * epochs, the summary routes through the scan-less COUNT's key-probe
   * machinery ([[GraftLakeTable.eqLiveCounts]]) — the first read pays
   * the one-task-per-file probe pass, every later read answers from the
@@ -6148,7 +5657,7 @@ class GraftLakeChangeStream(parent: GraftLakeTable,
       start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftLakeVersionOffset].v
     val e = end.asInstanceOf[GraftLakeVersionOffset].v
-    // RETENTION vs CHECKPOINT (VERDICT r13 task 6): a restart resumes
+    // RETENTION vs CHECKPOINT: a restart resumes
     // from the checkpointed version offset; if retention expired commits
     // PAST that offset, the unreplayed churn is gone — silently skipping
     // to the floor would desync every downstream replica. Fail loudly
@@ -6187,49 +5696,22 @@ private[sources] object GraftLakeChanges {
     def namesOf(f: GraftLakeFile): Seq[String] =
       GraftLakeFieldIds.resolve(f.cols, idToName)
     val parts = Vector.newBuilder[InputPartition]
-    // One leg of one touched file per partition. Parquet-backed files
-    // ship PATH + position selection and decode in the TASK (the
-    // manifest's row count decides emptiness), so feed planning is
-    // metadata-only; memory files materialize here as before. Cost
-    // stays ∝ the files each commit touched, either way.
+    // One leg of one touched file per partition: PATH + position
+    // selection, decoded in the TASK (the manifest's row count decides
+    // emptiness), so feed planning is metadata-only and its cost stays
+    // ∝ the files each commit touched. Eq probes ride as SPECS; the
+    // task loads the keys parquets and filters after its position
+    // selection (a probe-only partition may legitimately yield zero
+    // rows).
     def emit(f: GraftLakeFile, ct: String, v: Long, drop: Set[Long],
         keepOnly: Option[Set[Long]],
         eqDrop: Seq[(Int, String, DataType)] = Nil,
         eqKeep: Option[(Int, String, DataType)] = None): Unit = {
       val n = keepOnly.map(_.size.toLong).getOrElse(f.numRows - drop.size)
-      if (n > 0) {
-        if (f.path.isDefined)
-          // eq probes ride as SPECS; the task loads the keys parquets
-          // and filters after its position selection (a probe-only
-          // partition may legitimately yield zero rows)
-          parts += GraftLakeChangePartition(f.id, Vector.empty, ct, v,
-            namesOf(f), f.types, f.path, drop.toArray.sorted,
-            keepOnly.map(_.toArray.sorted), eqDrop, eqKeep)
-        else {
-          // memory files: rows are driver-resident already, so the
-          // probes apply here with the same canon/null-never-matches
-          // semantics as the task-side parquet leg
-          val dropSets = eqDrop.map { case (ci, p, vt) =>
-            (ci, GraftEqDelete.loadProbe(p, vt)) }
-          val keepSet = eqKeep.map { case (ci, p, vt) =>
-            (ci, GraftEqDelete.loadProbe(p, vt)) }
-          def keyAt(r: InternalRow, ci: Int): Any =
-            if (r.isNullAt(ci)) null
-            else GraftEqDelete.canon(r.get(ci, f.types(ci)))
-          val rows = f.loadRows.zipWithIndex.collect {
-            case (r, p) if keepOnly.map(_.contains(p.toLong))
-              .getOrElse(!drop.contains(p.toLong)) &&
-              dropSets.forall { case (ci, s) =>
-                val k = keyAt(r, ci); k == null || !s.contains(k) } &&
-              keepSet.forall { case (ci, s) =>
-                val k = keyAt(r, ci); k != null && s.contains(k) } =>
-              (p.toLong, r)
-          }
-          if (rows.nonEmpty)
-            parts += GraftLakeChangePartition(f.id, rows, ct, v,
-              namesOf(f), f.types)
-        }
-      }
+      if (n > 0)
+        parts += GraftLakeChangePartition(f.id, ct, v, namesOf(f), f.types,
+          f.path, drop.toArray.sorted, keepOnly.map(_.toArray.sorted),
+          eqDrop, eqKeep)
     }
     // rows already equality-deleted AT snapshot `s`: exclude them from
     // every leg — a downstream replica applying the feed deleted them
@@ -6244,7 +5726,7 @@ private[sources] object GraftLakeChanges {
         val v = (fromVersion + i).toLong
         // an EQUALITY-DELETE commit's delete leg is row-content-defined:
         // only a key probe against every prior applicable file can
-        // enumerate it. The feed SERVES it (VERDICT r17 task 2) by
+        // enumerate it. The feed SERVES it by
         // shipping probe specs — each prior file with seq ≤ belowSeq
         // emits a delete partition whose task keeps exactly the rows
         // whose key hits the epoch's keys parquet, minus rows already
@@ -6274,7 +5756,7 @@ private[sources] object GraftLakeChanges {
         // (rollback past a compaction restores the pre-compaction file
         // plus its DV): only the file's LIVE-in-cur rows are inserts —
         // emitting the DV'd positions would resurrect dead rows
-        // downstream (ADVICE r11). Rows equality-deleted at the
+        // downstream. Rows equality-deleted at the
         // emitting snapshot are excluded from every leg the same way:
         // the replica already applied the epoch's own delete leg.
         cur.files.filterNot(f => prevIds.contains(f.id)).foreach { f =>
@@ -6298,7 +5780,7 @@ private[sources] object GraftLakeChanges {
           // DELETE) resurrects the previously position-deleted rows:
           // without the insert leg a CDC replica applying the feed would
           // permanently miss them — the self-heal contract rollback's
-          // docstring promises (ADVICE r11).
+          // docstring promises.
           val shrunk = prevDead -- curDead
           if (shrunk.nonEmpty) emit(f, "insert", v, Set.empty, Some(shrunk),
             eqDeadAt(cur, f))
@@ -6321,36 +5803,31 @@ class GraftLakeChangeReaderFactory(fullSchema: StructType,
   override def createReader(
       p: InputPartition): PartitionReader[InternalRow] = {
     val cp = p.asInstanceOf[GraftLakeChangePartition]
-    // parquet-backed leg: decode HERE (executor-side) and apply the
-    // partition's position selection — original in-file positions stay
-    // the `_pos` values either way
-    val rows: Vector[(Long, InternalRow)] = cp.path match {
-      case Some(pq) =>
-        // equality-delete probe sets load HERE, task-side: the keys
-        // parquets are one upsert epoch each (small); canonicalization
-        // and null-never-matches follow GraftEqDelete.loadProbe, the
-        // same semantics every other probe consumer shares
-        val dropSets = cp.eqDrop.map { case (ci, p, vt) =>
-          (ci, GraftEqDelete.loadProbe(p, vt)) }
-        val keepSet = cp.eqKeep.map { case (ci, p, vt) =>
-          (ci, GraftEqDelete.loadProbe(p, vt)) }
-        def keyAt(r: InternalRow, ci: Int): Any =
-          if (r.isNullAt(ci)) null
-          else GraftEqDelete.canon(r.get(ci, cp.types(ci)))
-        val all = GraftParquetIO.read(pq, cp.types)
-        all.zipWithIndex.collect {
-          case (r, pos) if cp.keepOnly
-            .map(ks => java.util.Arrays.binarySearch(ks, pos.toLong) >= 0)
-            .getOrElse(
-              java.util.Arrays.binarySearch(cp.drop, pos.toLong) < 0) &&
-            dropSets.forall { case (ci, s) =>
-              val k = keyAt(r, ci); k == null || !s.contains(k) } &&
-            keepSet.forall { case (ci, s) =>
-              val k = keyAt(r, ci); k != null && s.contains(k) } =>
-            (pos.toLong, r)
-        }
-      case None => cp.rows
-    }
+    // decode HERE (executor-side) and apply the partition's position
+    // selection — original in-file positions stay the `_pos` values.
+    // Equality-delete probe sets load task-side too: the keys parquets
+    // are one upsert epoch each (small); canonicalization and
+    // null-never-matches follow GraftEqDelete.loadProbe, the same
+    // semantics every other probe consumer shares
+    val dropSets = cp.eqDrop.map { case (ci, p, vt) =>
+      (ci, GraftEqDelete.loadProbe(p, vt)) }
+    val keepSet = cp.eqKeep.map { case (ci, p, vt) =>
+      (ci, GraftEqDelete.loadProbe(p, vt)) }
+    def keyAt(r: InternalRow, ci: Int): Any =
+      if (r.isNullAt(ci)) null
+      else GraftEqDelete.canon(r.get(ci, cp.types(ci)))
+    val rows: Vector[(Long, InternalRow)] =
+      GraftParquetIO.read(cp.path, cp.types).zipWithIndex.collect {
+        case (r, pos) if cp.keepOnly
+          .map(ks => java.util.Arrays.binarySearch(ks, pos.toLong) >= 0)
+          .getOrElse(
+            java.util.Arrays.binarySearch(cp.drop, pos.toLong) < 0) &&
+          dropSets.forall { case (ci, s) =>
+            val k = keyAt(r, ci); k == null || !s.contains(k) } &&
+          keepSet.forall { case (ci, s) =>
+            val k = keyAt(r, ci); k != null && s.contains(k) } =>
+          (pos.toLong, r)
+      }
     val fileUtf8 = UTF8String.fromString(cp.fileId)
     val typeUtf8 = UTF8String.fromString(cp.changeType)
     val extract: Array[(InternalRow, Long) => Any] =
@@ -6369,9 +5846,7 @@ class GraftLakeChangeReaderFactory(fullSchema: StructType,
             val d = defaults.getOrElse(f.name, null)
             (_: InternalRow, _: Long) => d
           } else {
-            val phys =
-              if (cp.types.nonEmpty) cp.types(i) else f.dataType
-            val ex = GraftLakeReaders.extractor(i, phys, f.dataType)
+            val ex = GraftLakeReaders.extractor(i, cp.types(i), f.dataType)
             (r: InternalRow, _: Long) => ex(r)
           }
         }
@@ -6465,35 +5940,19 @@ class GraftLakeReaderFactory(fullSchema: StructType,
         }
       case _ => ()
     }
-    val (fileId, rows, deleted, cols, ptypes) = p match {
-      case fp: GraftLakeFilePartition =>
-        val rs = fp.path match {
-          case Some(pq) => GraftParquetIO.read(pq, fp.types)
-          case None => fp.rows
-        }
-        (fp.fileId, rs, fp.deleted, fp.cols, fp.types)
-      case GraftLakeKeyedPartition(rs, _) =>
-        // keyed rows are pre-DV-filtered AND pre-normalized to the
-        // current schema; scans needing _file/_pos are planned
-        // file-grained, so no extractor below can ask for them
-        require(requiredSchema.fieldNames.forall(n =>
-          n != GraftLakeTable.FileCol && n != GraftLakeTable.PosCol),
-          "keyed partition asked for _file/_pos — file-grained fallback " +
-            "should have been planned")
-        ("", rs, Array.empty[Long], fullSchema.fieldNames.toSeq,
-          Nil: Seq[DataType])
-    }
+    val fp = p.asInstanceOf[GraftLakeFilePartition]
+    val rows = GraftParquetIO.read(fp.path, fp.types)
+    val deleted = fp.deleted
     val identity = requiredSchema == fullSchema && deleted.isEmpty &&
-      cols == fullSchema.fieldNames.toSeq &&
-      (ptypes.isEmpty ||
-        ptypes == fullSchema.fields.map(_.dataType).toSeq)
+      fp.cols == fullSchema.fieldNames.toSeq &&
+      fp.types == fullSchema.fields.map(_.dataType).toSeq
     // per-field extractors: data columns resolved BY NAME against the
     // file's manifest (absent → exists-default/NULL: schema evolution
     // without rewrite; physical-type mismatch → widened read),
     // `_file`/`_pos` synthesized from the partition's file id and the
     // row's original position (positions survive DV filtering — that is
     // what makes a position-delete key stable)
-    val fileUtf8 = UTF8String.fromString(fileId)
+    val fileUtf8 = UTF8String.fromString(fp.fileId)
     val extract: Array[(InternalRow, Long) => Any] =
       requiredSchema.fields.map { f =>
         if (f.name == GraftLakeTable.FileCol)
@@ -6501,13 +5960,12 @@ class GraftLakeReaderFactory(fullSchema: StructType,
         else if (f.name == GraftLakeTable.PosCol)
           (_: InternalRow, pos: Long) => pos
         else {
-          val i = cols.indexOf(f.name)
+          val i = fp.cols.indexOf(f.name)
           if (i < 0) {
             val d = defaults.getOrElse(f.name, null)
             (_: InternalRow, _: Long) => d
           } else {
-            val phys = if (ptypes.nonEmpty) ptypes(i) else f.dataType
-            val ex = GraftLakeReaders.extractor(i, phys, f.dataType)
+            val ex = GraftLakeReaders.extractor(i, fp.types(i), f.dataType)
             (r: InternalRow, _: Long) => ex(r)
           }
         }
@@ -6516,16 +5974,16 @@ class GraftLakeReaderFactory(fullSchema: StructType,
     // one small keys parquet per upsert epoch) and rows matching any
     // probe are skipped IN PLACE — like the DV check below, the skip
     // happens during iteration so `_pos` keeps original file ordinals
-    val eqSkip: InternalRow => Boolean = p match {
-      case fp: GraftLakeFilePartition if fp.eqProbes.nonEmpty =>
+    val eqSkip: InternalRow => Boolean =
+      if (fp.eqProbes.isEmpty) _ => false
+      else {
         val probes = fp.eqProbes.map { case (ci, path, vt) =>
           (ci, fp.types(ci), GraftEqDelete.loadProbe(path, vt))
         }
         r => probes.exists { case (ci, t, set) =>
           !r.isNullAt(ci) && set.contains(GraftEqDelete.canon(r.get(ci, t)))
         }
-      case _ => _ => false
-    }
+      }
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
       private var pos = -1L
@@ -6547,20 +6005,9 @@ class GraftLakeReaderFactory(fullSchema: StructType,
   }
 }
 
-/** What a committed write hands the table: either driver-resident ROWS
-  * (memory storage; each non-empty batch becomes one file) or an
-  * already-written TASK-SIDE parquet file plus its manifest block
-  * (parquet storage) — the commit then only renames and registers, so
-  * the DATA PLANE never passes through the driver (the shape that
-  * failed loudly at sf1×16: 24M buffered rows tripped
-  * spark.driver.maxResultSize before this split existed). */
-sealed trait GraftLakePending
-final case class GraftLakePendingRows(rows: Vector[InternalRow])
-    extends GraftLakePending
-final case class GraftLakePendingFile(meta: GraftLakeFileMeta)
-    extends GraftLakePending
-
-/** A task-written parquet file awaiting adoption: the temp path, the
+/** What a committed write hands the table: a task-written parquet file
+  * awaiting adoption — the commit only renames and registers it, so the
+  * DATA PLANE never passes through the driver. Carries the temp path, the
   * WRITE-TIME schema identity (field ids + physical types + parquet
   * labels, pinned when the write was built — the driver validates ids
   * against the current schema at commit, the concurrent-ALTER guard),
@@ -6586,29 +6033,24 @@ final case class GraftLakeFileWriteInfo(dir: String, names: Seq[String],
     partSpec: Seq[GraftPartTransform], pspecId: Int = 0)
 
 /** The driver applies the per-task commits via `apply` exactly once.
-  * `rowLevel` (the operation's column types) enables row-level mode:
-  * rows arrive as [__row_operation, data..., metadata...] — DELETEs are
-  * dropped, writes keep the data slice. With `fileWrite` set (parquet
-  * storage), tasks write their own parquet files and ship METADATA-ONLY
-  * commit messages; without it, tasks buffer rows (memory storage). */
+  * Tasks write their own parquet files and ship METADATA-ONLY commit
+  * messages. `rowLevel` (the operation's column types) enables
+  * row-level mode: rows arrive as [__row_operation, data...,
+  * metadata...] — DELETEs are dropped, writes keep the data slice. */
 class GraftLakeBatchWrite(
-    apply: Vector[GraftLakePending] => Unit,
+    apply: Vector[GraftLakeFileMeta] => Unit,
+    fileWrite: GraftLakeFileWriteInfo,
     rowLevel: Option[Array[DataType]] = None,
-    onDone: () => Unit = () => (),
-    fileWrite: Option[GraftLakeFileWriteInfo] = None)
+    onDone: () => Unit = () => ())
     extends BatchWrite {
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    // standalone classes: the factory ships to tasks and must not
+    // a standalone class: the factory ships to tasks and must not
     // capture this BatchWrite (whose `apply` closes over the table)
-    fileWrite match {
-      case Some(fw) => new GraftLakeFileWriterFactory(fw, rowLevel)
-      case None => new GraftLakeWriterFactory(rowLevel)
-    }
+    new GraftLakeFileWriterFactory(fileWrite, rowLevel)
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     try apply(messages.toVector.flatMap {
-      case GraftLakeCommit(rows) => Vector(GraftLakePendingRows(rows))
-      case GraftLakeFilesCommit(fs) => fs.map(GraftLakePendingFile(_))
+      case GraftLakeFilesCommit(fs) => fs
       case other => throw new IllegalStateException(
         s"unexpected commit message $other")
     })
@@ -6622,26 +6064,11 @@ class GraftLakeBatchWrite(
     } finally onDone()
 }
 
-class GraftLakeWriterFactory(rowLevel: Option[Array[DataType]])
-    extends DataWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val buf = Vector.newBuilder[InternalRow]
-      // rows are reused buffers — copy before retaining
-      override def write(row: InternalRow): Unit =
-        GraftLakeRowSlice(rowLevel, row).foreach(buf += _)
-      override def commit(): WriterCommitMessage =
-        GraftLakeCommit(buf.result())
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
-    }
-}
-
-/** Row-level slice shared by both writer kinds: under `rowLevel`, rows
+/** Row-level slice of the task-side writer: under `rowLevel`, rows
   * arrive [__row_operation, data(0..n-1), metadata...] — DELETEs drop,
   * writes keep the copied data slice (typed extract from the copied
-  * row's buffer keeps UTF8String memory alive — GC-safe). */
+  * row's buffer keeps UTF8String memory alive — GC-safe). Rows are
+  * reused buffers, so every kept row is a copy. */
 private[sources] object GraftLakeRowSlice {
   def apply(rowLevel: Option[Array[DataType]],
       row: InternalRow): Option[InternalRow] = rowLevel match {
@@ -6655,18 +6082,14 @@ private[sources] object GraftLakeRowSlice {
   }
 }
 
-/** TASK-SIDE parquet writer: buffers rows per partition-key tuple (the
-  * fanout split), then at task commit writes one temp parquet per key
-  * into the table dir, collects the manifest stats block (min/max,
-  * nulls, sums, nested, blooms) right there, and ships METADATA ONLY.
-  * The driver's commit adopts each temp file by rename — write
-  * bandwidth scales with executors, not with one driver heap. */
 /** The shared task-side file buffer: groups ALREADY-COPIED rows by
   * their evaluated partition-key tuple (the fanout split, run where the
   * rows are), then at task commit writes one temp parquet per key into
   * the table dir and collects the full manifest stats block right
-  * there. Used by both the append/CoW writer and the MoR delta
-  * writer's insert side. */
+  * there, shipping METADATA ONLY. Used by both the append/CoW writer
+  * and the MoR delta writer's insert side. The driver's commit adopts
+  * each temp file by rename — write bandwidth scales with executors,
+  * not with one driver heap. */
 private[sources] final class GraftLakeTaskFiles(fw: GraftLakeFileWriteInfo) {
   private val groups = scala.collection.mutable.LinkedHashMap
     .empty[Option[Vector[Any]],
@@ -6811,9 +6234,9 @@ class GraftLakeFileWriterFactory(fw: GraftLakeFileWriteInfo,
   * replayed epoch after a restart is dropped by the table's watermark
   * (see GraftLakeTable.commitEpoch). */
 class GraftLakeStreamingWrite(
-    applyEpoch: (Long, Vector[GraftLakePending],
+    applyEpoch: (Long, Vector[GraftLakeFileMeta],
       Vector[GraftLakeFileMeta]) => Unit,
-    fileWrite: Option[GraftLakeFileWriteInfo],
+    fileWrite: GraftLakeFileWriteInfo,
     upsert: Option[GraftUpsertInfo] = None)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
@@ -6823,9 +6246,8 @@ class GraftLakeStreamingWrite(
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val pendings = messages.toVector.flatMap {
-      case GraftLakeCommit(rows) => Vector(GraftLakePendingRows(rows))
-      case GraftLakeFilesCommit(fs) => fs.map(GraftLakePendingFile(_))
-      case GraftLakeUpsertCommit(fs, _) => fs.map(GraftLakePendingFile(_))
+      case GraftLakeFilesCommit(fs) => fs
+      case GraftLakeUpsertCommit(fs, _) => fs
       case other => throw new IllegalStateException(
         s"unexpected commit message $other")
     }
@@ -6853,21 +6275,19 @@ class GraftLakeStreamingWrite(
 final case class GraftUpsertInfo(keyIdx: Int, keyName: String,
     keyId: Int, keyType: DataType)
 
-/** Streaming writer factory: delegates to the batch writers — a
+/** Streaming writer factory: delegates to the batch writer — a
   * streaming task's rows are written exactly like a batch task's
-  * (task-side temp parquet under parquet storage, buffered rows under
-  * memory storage); the epoch id only matters at commit. Upsert mode
-  * additionally writes the task's KEYS as their own temp parquet (the
-  * equality-delete file) — one extra small file per task, no read of
-  * anything. */
-class GraftLakeStreamingWriterFactory(
-    fileWrite: Option[GraftLakeFileWriteInfo],
+  * (task-side temp parquet); the epoch id only matters at commit.
+  * Upsert mode additionally writes the task's KEYS as their own temp
+  * parquet (the equality-delete file) — one extra small file per task,
+  * no read of anything. */
+class GraftLakeStreamingWriterFactory(fw: GraftLakeFileWriteInfo,
     upsert: Option[GraftUpsertInfo] = None)
     extends org.apache.spark.sql.connector.write.streaming
       .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = (fileWrite, upsert) match {
-    case (Some(fw), Some(u)) =>
+      epochId: Long): DataWriter[InternalRow] = upsert match {
+    case Some(u) =>
       new DataWriter[InternalRow] {
         private val tf = new GraftLakeTaskFiles(fw)
         private val keys = Vector.newBuilder[InternalRow]
@@ -6903,13 +6323,9 @@ class GraftLakeStreamingWriterFactory(
         override def abort(): Unit = tf.abort()
         override def close(): Unit = ()
       }
-    case (Some(fw), None) =>
+    case None =>
       new GraftLakeFileWriterFactory(fw, None)
         .createWriter(partitionId, taskId)
-    case (None, Some(u)) => throw new UnsupportedOperationException(
-      s"graft.upsert.key (${u.keyName}) needs parquet storage")
-    case (None, None) =>
-      new GraftLakeWriterFactory(None).createWriter(partitionId, taskId)
   }
 }
 
@@ -6919,8 +6335,8 @@ final case class GraftLakeUpsertCommit(files: Vector[GraftLakeFileMeta],
     keys: Vector[GraftLakeFileMeta]) extends WriterCommitMessage
 
 /** Exact-chunk partitioner for maintenance rewrites: global row index
-  * `idx` lands in output file `idx / chunk` — the distributed
-  * equivalent of the driver leg's `grouped(chunk)`. */
+  * `idx` lands in output file `idx / chunk` — `grouped(chunk)` over a
+  * distributed, globally sorted relation. */
 private[sources] class GraftChunkPartitioner(n: Int, chunk: Long)
     extends org.apache.spark.Partitioner {
   override def numPartitions: Int = n
@@ -6928,23 +6344,20 @@ private[sources] class GraftChunkPartitioner(n: Int, chunk: Long)
     math.min(n - 1L, key.asInstanceOf[Long] / chunk).toInt
 }
 
-final case class GraftLakeCommit(rows: Vector[InternalRow])
-    extends WriterCommitMessage
-
 final case class GraftLakeFilesCommit(files: Vector[GraftLakeFileMeta])
     extends WriterCommitMessage
 
 /** Merge-on-read batch write: tasks report (file, pos) deletes —
   * intrinsically metadata-sized — and inserts; the commit merges the
   * deletes into the table's deletion vectors and appends the inserts as
-  * new files. With `fileWrite` set (parquet storage) the INSERT side is
-  * task-side too: tasks write their own temp parquet and ship metadata,
-  * the same no-driver data plane as [[GraftLakeBatchWrite]]. */
+  * new files. The INSERT side is task-side too: tasks write their own
+  * temp parquet and ship metadata, the same no-driver data plane as
+  * [[GraftLakeBatchWrite]]. */
 class GraftLakeDeltaBatchWrite(
-    apply: (Map[String, Set[Long]], Vector[GraftLakePending]) => Unit,
+    apply: (Map[String, Set[Long]], Vector[GraftLakeFileMeta]) => Unit,
+    fileWrite: GraftLakeFileWriteInfo,
     types: Array[DataType],
-    onDone: () => Unit = () => (),
-    fileWrite: Option[GraftLakeFileWriteInfo] = None)
+    onDone: () => Unit = () => ())
     extends DeltaBatchWrite {
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
@@ -6954,28 +6367,25 @@ class GraftLakeDeltaBatchWrite(
       val ms = messages.toVector.map(_.asInstanceOf[GraftLakeDeltaCommit])
       val deleted = ms.flatMap(_.deleted)
         .groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).toSet }
-      apply(deleted, ms.flatMap(m =>
-        m.insertedFiles.map(GraftLakePendingFile(_)) :+
-          GraftLakePendingRows(m.inserted)))
+      apply(deleted, ms.flatMap(_.insertedFiles))
     } finally onDone()
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     try messages.foreach {
       // a committed task's insert files never got adopted — unlink them
-      case GraftLakeDeltaCommit(_, _, fs) =>
+      case GraftLakeDeltaCommit(_, fs) =>
         fs.foreach(m => new java.io.File(m.tmpPath).delete())
       case _ => ()
     } finally onDone()
 }
 
 class GraftLakeDeltaWriterFactory(types: Array[DataType],
-    fileWrite: Option[GraftLakeFileWriteInfo])
+    fileWrite: GraftLakeFileWriteInfo)
     extends DeltaWriterFactory {
   override def createWriter(
       partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
       private val dels = Vector.newBuilder[(String, Long)]
-      private val ins = Vector.newBuilder[InternalRow]
-      private val tf = fileWrite.map(new GraftLakeTaskFiles(_))
+      private val tf = new GraftLakeTaskFiles(fileWrite)
       // `id` is the rowId projection in declared order: (_file, _pos)
       override def delete(meta: InternalRow, id: InternalRow): Unit =
         dels += ((id.getUTF8String(0).toString, id.getLong(1)))
@@ -6990,24 +6400,18 @@ class GraftLakeDeltaWriterFactory(types: Array[DataType],
           s"insert row has ${row.numFields} fields, expected " +
             s"${types.length} data columns")
         val r = row.copy()
-        val copied = new GenericInternalRow(
-          Array.tabulate[Any](types.length)(i => r.get(i, types(i))))
-        tf match {
-          case Some(t) => t.add(copied)
-          case None => ins += copied
-        }
+        tf.add(new GenericInternalRow(
+          Array.tabulate[Any](types.length)(i => r.get(i, types(i)))))
       }
       override def commit(): WriterCommitMessage =
-        GraftLakeDeltaCommit(dels.result(), ins.result(),
-          tf.map(_.finish()).getOrElse(Vector.empty))
-      override def abort(): Unit = tf.foreach(_.abort())
+        GraftLakeDeltaCommit(dels.result(), tf.finish())
+      override def abort(): Unit = tf.abort()
       override def close(): Unit = ()
     }
 }
 
 final case class GraftLakeDeltaCommit(deleted: Vector[(String, Long)],
-    inserted: Vector[InternalRow],
-    insertedFiles: Vector[GraftLakeFileMeta] = Vector.empty)
+    insertedFiles: Vector[GraftLakeFileMeta])
     extends WriterCommitMessage
 
 /** The catalog's maintenance procedures — Spark 4's DSv2 `CALL`
@@ -7138,7 +6542,7 @@ private[sources] object GraftLakeProcedures {
           // the catalog-qualified name lets the rewrite re-read the
           // table through its own DSv2 scan — the distributed leg
           val (b, a) = t.clusterBy(cols, input.getInt(2), "sort",
-            Some(s"$catalog.${input.getUTF8String(0)}"))
+            s"$catalog.${input.getUTF8String(0)}")
           Array(new GenericInternalRow(Array[Any](b, a)))
         }
       })
@@ -7157,7 +6561,7 @@ private[sources] object GraftLakeProcedures {
           val cols = input.getUTF8String(1).toString.split(",")
             .map(_.trim).filter(_.nonEmpty).toSeq
           val (b, a) = t.clusterBy(cols, input.getInt(2), "zorder",
-            Some(s"$catalog.${input.getUTF8String(0)}"))
+            s"$catalog.${input.getUTF8String(0)}")
           Array(new GenericInternalRow(Array[Any](b, a)))
         }
       })

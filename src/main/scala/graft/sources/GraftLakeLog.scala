@@ -19,8 +19,8 @@ private[graft] final class GraftClaimConflict(msg: String)
     extends Exception(msg)
 
 /** Cross-writer commit arbitration — THE seam between the lake's
-  * optimistic-commit protocol and the store's atomicity primitive
-  * (VERDICT r17 task 4). Every immutable object the log commits (a
+  * optimistic-commit protocol and the store's atomicity primitive.
+  * Every immutable object the log commits (a
   * v<N>.json version record, an f<N>.parquet data-file number, an
   * e<N>.parquet keys file, a g*.json manifest group) is arbitrated
   * through exactly three operations:
@@ -85,7 +85,7 @@ private[graft] object PosixCommitArbiter extends GraftCommitArbiter {
             s"${target.getName} is already claimed or committed")
       }
     once(retriable = true)
-    // the claim's inode IS the writer token (ADVICE r16): a reclaimer
+    // the claim's inode IS the writer token: a reclaimer
     // deletes this file and creates its own, so a changed/absent key
     // proves the claim is no longer ours. fileKey can be null on
     // exotic filesystems — verification is then skipped (the O_EXCL
@@ -97,7 +97,7 @@ private[graft] object PosixCommitArbiter extends GraftCommitArbiter {
 
   override def fill(target: File, token: AnyRef, src: File): Unit = {
     if (token != null) {
-      // VERIFY-BEFORE-FILL (ADVICE r16): ATOMIC_MOVE is a plain
+      // VERIFY-BEFORE-FILL: ATOMIC_MOVE is a plain
       // rename(2) — it replaces silently. A writer stalled PAST the
       // 1-hour stale window between claim and fill can have its name
       // reclaimed by another writer; blindly filling would clobber the
@@ -249,11 +249,10 @@ private[graft] object DirSwapCommitArbiter extends GraftCommitArbiter {
   }
 }
 
-/** DURABLE table metadata for `graft.storage = parquet` lake tables
-  * (VERDICT r15 task 2): commit history + file manifests persisted as
-  * FILES under the table root, so the table's whole state — data,
-  * schema history, time travel, change feed, refs — survives a JVM
-  * restart and the in-memory registry becomes a cache.
+/** DURABLE lake table metadata: commit history + file manifests
+  * persisted as FILES under the table root, so the table's whole state
+  * — data, schema history, time travel, change feed, refs — survives a
+  * JVM restart and the in-memory registry becomes a cache.
   *
   * Layout (the Iceberg metadata-as-files shape, minimally expressed
   * over this engine's linear history):
@@ -346,7 +345,7 @@ private[sources] class GraftLakeLog(root: File) {
         // a FAILED fill (disk full, permissions, the reclaim conflict
         // above) must not leave OUR unfilled claim behind: it would
         // block every writer's commit of this version for the full
-        // stale window (ADVICE r16). The arbiter releases only what is
+        // stale window. The arbiter releases only what is
         // provably still OURS.
         if (claimed) arbiter.release(target, token)
         throw e
@@ -363,10 +362,10 @@ private[sources] class GraftLakeLog(root: File) {
 
   def writeFileManifest(f: GraftLakeFile): Unit = {
     import GraftLakeLog._
-    val name = new File(f.path.get).getName.stripSuffix(".parquet")
+    val name = new File(f.path).getName.stripSuffix(".parquet")
     writeAtomic(s"$name.manifest.json", JsonMethods.compact(JObject(
       "id" -> JString(f.id),
-      "file" -> JString(new File(f.path.get).getName),
+      "file" -> JString(new File(f.path).getName),
       "cols" -> JArray(f.cols.map(i => JInt(BigInt(i))).toList),
       "types" -> JArray(f.types.map(t => JString(t.json)).toList),
       "pnames" -> JArray(f.pnames.map(JString(_)).toList),
@@ -393,7 +392,7 @@ private[sources] class GraftLakeLog(root: File) {
       // bloom bit-words as base64 of big-endian longs — compact and
       // byte-exact (a corrupted bloom would be a correctness bug: a
       // bloom MISS is treated as proof of absence). bloomv pins the
-      // HASH FUNCTION generation (ADVICE r16): restore drops blooms
+      // HASH FUNCTION generation: restore drops blooms
       // written under any other generation — conservative no-pruning
       // instead of silent false negatives.
       "bloomv" -> JInt(BigInt(GraftLakeLog.BloomHashVersion)),
@@ -452,8 +451,8 @@ private[sources] class GraftLakeLog(root: File) {
       // duplicate even across a crash mid-commit
       txn.map { case (app, epoch) => "txn" -> (JObject(
         "app" -> JString(app), "epoch" -> JLong(epoch)): JValue) }.toList ++
-      // CHECK-constraint vector, ATOMIC with the version CAS (ADVICE
-      // r20): a rebase refresh derives constraints from the WON commit
+      // CHECK-constraint vector, ATOMIC with the version CAS: a rebase
+      // refresh derives constraints from the WON commit
       // record, so the concurrent-refresh lost-update window on the
       // separately-timed constraints.json cannot erase a winner's
       // constraint. Carried on every commit once the table ever had
@@ -545,7 +544,7 @@ private[sources] class GraftLakeLog(root: File) {
       }
     }
 
-  /** MANIFEST GROUPING (VERDICT r16 task 3): restore used to parse one
+  /** MANIFEST GROUPING: restore used to parse one
     * JSON per data file — O(files) serial driver work at open; at
     * millions of files that is the planning bottleneck Iceberg bounds
     * with manifest grouping. Called after every successful commit:
@@ -761,14 +760,13 @@ private[sources] object GraftLakeLog {
       }
     GraftLakeFile(
       id = str(m, "id"),
-      rows = Vector.empty,
       cols = arr(m, "cols").map(intOf),
-      path = Some(new File(root, str(m, "file")).getAbsolutePath),
+      path = new File(root, str(m, "file")).getAbsolutePath,
       types = arr(m, "types").map(j =>
         DataType.fromJson(j.asInstanceOf[JString].s)),
       bytes = longOf(m \ "bytes"),
       stats = statPairs("stats").map { case (k, v) => k.toInt -> v }.toMap,
-      nRows = longOf(m \ "rows"),
+      numRows = longOf(m \ "rows"),
       nulls = objFields(m, "nulls").map { case (k, v) =>
         k.toInt -> longOf(v) }.toMap,
       sums = objFields(m, "sums").map { case (k, v) =>
@@ -842,7 +840,7 @@ private[sources] object GraftLakeLog {
 
     // file manifests → shared file objects: manifest GROUPS first (one
     // parse per GroupSize files — the O(files) → O(groups) planning
-    // bound, VERDICT r16 task 3), then the loose ungrouped tail. A
+    // bound), then the loose ungrouped tail. A
     // loose manifest whose id a group already covered is the
     // crash-between-fill-and-delete leftover — same bytes, either wins.
     val listing = Option(dir.listFiles()).getOrElse(Array.empty)
@@ -967,7 +965,7 @@ private[sources] object GraftLakeLog {
     // retained commit record carrying a "constraints" vector — it was
     // written atomically with that version's CAS, so a rebase refresh
     // reads the WINNER's vector, never a constraints.json a concurrent
-    // ALTER has not persisted yet (ADVICE r20 lost-update race).
+    // ALTER has not persisted yet (the lost-update race).
     // Fallback for logs with no carrying commit (legacy records, or a
     // table created WITH constraints before its first post-create
     // commit): constraints.json (absent file = none ever added).

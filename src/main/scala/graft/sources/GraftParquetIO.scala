@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
@@ -12,12 +11,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Real columnar IO for `graft.storage = parquet` lake tables: each
-  * committed file group lands as an actual parquet file (written by
-  * Spark's own parquet write support, read back row-at-a-time through
-  * parquet-mr's `Group` API), so write-amplification claims are measured
-  * in BYTES on disk rather than driver-object identity, and the reader
-  * factories exercise genuine columnar decode in tasks.
+/** Real columnar IO for lake tables: each committed file group lands
+  * as an actual parquet file (written by Spark's own parquet write
+  * support, read back row-at-a-time through parquet-mr's `Group` API),
+  * so write-amplification claims are measured in BYTES on disk, and the
+  * reader factories exercise genuine columnar decode in tasks.
   *
   * Supports primitive/string/temporal/decimal(<=18) leaves composed to
   * ANY nesting depth of ARRAY / STRUCT / MAP — the shapes training-data
@@ -29,7 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * required key; optional value } }`). Leaf types outside the supported
   * set reject loudly at table creation ([[supported]]). Row order is
   * write order (single sequential writer per file), which is what keeps
-  * `_pos`-keyed deletion vectors stable across the storage modes. */
+  * `_pos`-keyed deletion vectors stable.
+  *
+  * Lake roots are local directories, so files are written and read
+  * through parquet's own `java.nio` `LocalOutputFile`/`LocalInputFile`:
+  * no Hadoop FileSystem, so no `.crc` checksum sidecar and no `chmod`
+  * fork per file (Hadoop's LocalFileSystem forks one when its native
+  * library is absent). Every write and read copies one [[confTemplate]]
+  * instead of building a `new Configuration()`, which re-parses
+  * Hadoop's XML defaults (10–13 ms per file on 4 cores). */
 object GraftParquetIO {
 
   private def primSupported(dt: DataType): Boolean = dt match {
@@ -51,25 +57,15 @@ object GraftParquetIO {
     case _ => primSupported(dt)
   }
 
-  /** Write one file group; returns its size in bytes (the currency of
-    * the write-amplification assertions). Spark's own
-    * [[org.apache.spark.sql.execution.datasources.parquet
-    * .ParquetWriteSupport]] streams InternalRows straight into parquet
-    * column writers through a RecordConsumer, with no per-row object
-    * tree. Encodings are the standard modern shapes (3-level LIST/MAP,
-    * INT64-micros timestamps, DECIMAL(<=9) as INT32 and DECIMAL(10-18) as
-    * INT64), which both the Group reader below and the vectorized batch
-    * reader serve. */
-  def write(path: String, names: Seq[String],
-      types: Seq[DataType], rows: Vector[InternalRow]): Long = {
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+  /** The one immutable conf every write and read copies: no Hadoop
+    * defaults (nothing here goes through a Hadoop FileSystem's
+    * config-driven behaviour), plus every setting Spark's write support
+    * reads at init. Executor-side there is no session, so the values
+    * are pinned here explicitly — they ARE this engine's write
+    * contract. Never mutated after construction. */
+  private val confTemplate: Configuration = {
     import org.apache.spark.sql.internal.SQLConf
-    val schema = StructType(names.zip(types).map { case (n, t) =>
-      StructField(n, t) })
-    val conf = new Configuration()
-    ParquetWriteSupport.setSchema(schema, conf)
-    // executor-side: no session — pin every init-read setting in the
-    // Hadoop conf explicitly (values = this engine's write contract)
+    val conf = new Configuration(false)
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
       "TIMESTAMP_MICROS")
@@ -80,15 +76,48 @@ object GraftParquetIO {
     conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "true")
     // read by the schema converter even though no VARIANT column exists
     conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
-    val writer = new RowWriterBuilder(new Path(path))
-      .withConf(conf).build()
-    try rows.foreach(writer.write) finally writer.close()
-    new java.io.File(path).length()
+    conf
   }
 
-  private class RowWriterBuilder(path: Path)
+  /** Write one file group to a NEW local file; returns its size in
+    * bytes (the currency of the write-amplification assertions).
+    * Spark's own [[org.apache.spark.sql.execution.datasources.parquet
+    * .ParquetWriteSupport]] streams InternalRows straight into parquet
+    * column writers through a RecordConsumer, with no per-row object
+    * tree. Encodings are the standard modern shapes (3-level LIST/MAP,
+    * INT64-micros timestamps, DECIMAL(<=9) as INT32 and DECIMAL(10-18) as
+    * INT64), which both the Group reader below and the vectorized batch
+    * reader serve. */
+  def write(path: String, names: Seq[String],
+      types: Seq[DataType], rows: Vector[InternalRow]): Long = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+    val conf = new Configuration(confTemplate)
+    ParquetWriteSupport.setSchema(StructType(names.zip(types).map {
+      case (n, t) => StructField(n, t) }), conf)
+    val file = java.nio.file.Paths.get(path)
+    val writer = new RowWriterBuilder(
+      new org.apache.parquet.io.LocalOutputFile(file)).withConf(conf).build()
+    try rows.foreach(writer.write) finally writer.close()
+    java.nio.file.Files.size(file)
+  }
+
+  /** Reads through parquet's `java.nio` LocalInputFile with a template
+    * copy: `ParquetReader.builder(_, Path)` would build (and parse) a
+    * default Hadoop conf of its own before any `withConf` replaced it. */
+  private class GroupReaderBuilder(path: String)
+      extends ParquetReader.Builder[Group](
+        new org.apache.parquet.io.LocalInputFile(
+          java.nio.file.Paths.get(path)),
+        new org.apache.parquet.conf.HadoopParquetConfiguration(
+          new Configuration(confTemplate))) {
+    override def getReadSupport()
+        : org.apache.parquet.hadoop.api.ReadSupport[Group] =
+      new GroupReadSupport()
+  }
+
+  private class RowWriterBuilder(file: org.apache.parquet.io.OutputFile)
       extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-        InternalRow, RowWriterBuilder](path) {
+        InternalRow, RowWriterBuilder](file) {
     override def self(): RowWriterBuilder = this
     override def getWriteSupport(conf: Configuration)
         : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
@@ -157,7 +186,7 @@ object GraftParquetIO {
       new ArrayBasedMapData(new GenericArrayData(keys),
         new GenericArrayData(vals))
     case other => throw new UnsupportedOperationException(
-      s"graft.storage=parquet cannot read ${other.sql}")
+      s"lake files cannot hold ${other.sql}")
   }
 
   /** TEST HOOK: files opened by this reader since JVM start — the
@@ -169,9 +198,7 @@ object GraftParquetIO {
     * the file's write-time column types. */
   def read(path: String, types: Seq[DataType]): Vector[InternalRow] = {
     reads.incrementAndGet()
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), new Path(path))
-      .withConf(new Configuration()).build()
+    val reader = new GroupReaderBuilder(path).build()
     val out = Vector.newBuilder[InternalRow]
     try {
       var g = reader.read()

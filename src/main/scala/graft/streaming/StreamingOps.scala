@@ -399,8 +399,8 @@ object StreamingOps {
     * table must equal the batch aggregate — the same oracle as the
     * update-mode query, now through the full SQL merge machinery per
     * batch. At 100 TB the per-batch merge cost is the table format's
-    * touched-file rewrite (here coarsened to the whole in-memory group,
-    * like the rest of the graftlake harness table).
+    * touched-file rewrite (here the file groups the batch's keys
+    * touch).
     */
   def mergeSink(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.catalog.graftlake",

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Durable catalog metadata (VERDICT r15 task 2): a parquet-storage lake
-  * table's COMMIT LOG lives as files under `<root>/_graft_log`
-  * (table.json + per-file manifests + one manifest-list JSON per commit
-  * + refs.json), so the in-memory registry is a cache. The spec's "JVM
+/** Durable catalog metadata: a lake table's COMMIT LOG lives as files
+  * under `<root>/_graft_log` (table.json + per-file manifests + one
+  * manifest-list JSON per commit + refs.json), so the in-memory registry
+  * is a cache. The spec's "JVM
   * restart" is [[graft.sources.GraftLakeCatalog.evict]]: drop the
   * registry entry, then prove the NEXT access rebuilds the table from
   * disk alone — current state, time travel (version, tag, timestamp),
@@ -34,8 +34,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t = "graftdur.dur_main"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     // v1, v2: two appends
     spark.range(0, 10).selectExpr("id AS k", "concat('a', id) AS s")
       .coalesce(1).writeTo(t).append()
@@ -108,8 +107,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_expire"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     for (b <- 0 until 4)
       spark.range(b * 10L, (b + 1) * 10L).selectExpr("id AS k")
         .coalesce(1).writeTo(t).append()
@@ -139,13 +137,11 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_guard"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     spark.range(0, 5).selectExpr("id AS k").writeTo(t).append()
     evict("dur_guard")
     // the root still holds a table — a blind CREATE must not shadow it
-    val e = intercept[Exception](spark.sql(s"CREATE TABLE $t (x BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')"))
+    val e = intercept[Exception](spark.sql(s"CREATE TABLE $t (x BIGINT)"))
     assert(e.getMessage.toLowerCase.contains("already exists"), e.getMessage)
     // the durable table is still intact and reopenable
     assert(spark.table(t).count() == 5)
@@ -167,8 +163,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_conc"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT)")
     spark.range(0, 100).selectExpr("id AS k", "CAST(0 AS BIGINT) AS v")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -266,8 +261,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t2 = s"graftdur2.dur_two_$tag"
     spark.sql(s"DROP TABLE IF EXISTS $t1")
     spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t1).append() // v1 via driver 1
     // driver 2 reopens from disk (its own registry) and commits v2
@@ -346,8 +340,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t1 = "graftdur.dur_ck_race"
     val t2 = "graftdur2.dur_ck_race"
     spark.sql(s"DROP TABLE IF EXISTS $t1")
-    spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT)")
     spark.range(1, 6).selectExpr("id AS k").coalesce(1)
       .writeTo(t1).append() // v1 via driver 1
     // driver 2 reopens from disk and commits the constraint (v2);
@@ -393,8 +386,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t1 = "graftdur.dur_ck_revert"
     val t2 = "graftdur2.dur_ck_revert"
     spark.sql(s"DROP TABLE IF EXISTS $t1")
-    spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT)")
     spark.range(1, 4).selectExpr("id AS k").coalesce(1)
       .writeTo(t1).append() // v1 via driver 1
     // driver 2 advances the log (v2); driver 1 is stale, so its ALTER's
@@ -441,8 +433,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t1 = "graftdur.dur_ck_clobber"
     val t2 = "graftdur2.dur_ck_clobber"
     spark.sql(s"DROP TABLE IF EXISTS $t1")
-    spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT)")
     spark.range(1, 4).selectExpr("id AS k").coalesce(1)
       .writeTo(t1).append() // v1 via driver 1
     // driver 2 reopens from disk and installs k_pos (v2)
@@ -486,8 +477,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t1 = "graftdur.dur_ck_record"
     spark.sql(s"DROP TABLE IF EXISTS $t1")
-    spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT)")
     spark.range(1, 4).selectExpr("id AS k").coalesce(1)
       .writeTo(t1).append()
     spark.sql(s"ALTER TABLE $t1 ADD CONSTRAINT k_pos CHECK (k > 0)")
@@ -587,8 +577,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_ctas"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t TBLPROPERTIES " +
-      "('graft.storage' = 'parquet') AS " +
+    spark.sql(s"CREATE TABLE $t AS " +
       "SELECT id AS k, concat('v', id) AS s FROM range(100)")
     assert(spark.table(t).count() == 100)
     evict("dur_ctas")
@@ -611,8 +600,7 @@ class DurableCatalogSpec extends SparkTestBase {
     // a FAILING CTAS must leave nothing: no table, no staged residue
     val tf = "graftdur.dur_ctas_fail"
     intercept[Exception] {
-      spark.sql(s"CREATE TABLE $tf TBLPROPERTIES " +
-        "('graft.storage' = 'parquet') AS " +
+      spark.sql(s"CREATE TABLE $tf AS " +
         "SELECT IF(id < 50, id, raise_error('boom')) AS k FROM range(100)")
     }
     intercept[Exception](spark.table(tf).count())
@@ -622,8 +610,7 @@ class DurableCatalogSpec extends SparkTestBase {
       .map(_.getString(1)).contains("dur_ctas_fail"))
     // RTAS: new schema, new contents; the old table serves until the
     // atomic flip, and the replacement survives a reopen (pointer route)
-    spark.sql(s"REPLACE TABLE $t TBLPROPERTIES " +
-      "('graft.storage' = 'parquet') AS " +
+    spark.sql(s"REPLACE TABLE $t AS " +
       "SELECT id AS k2 FROM range(7)")
     assert(spark.table(t).columns.toSeq == Seq("k2") &&
       spark.table(t).count() == 7)
@@ -631,8 +618,7 @@ class DurableCatalogSpec extends SparkTestBase {
     assert(spark.table(t).count() == 7,
       "the replaced table reopens through its location pointer")
     // replace AGAIN (pointer → pointer): the old staged target retires
-    spark.sql(s"REPLACE TABLE $t TBLPROPERTIES " +
-      "('graft.storage' = 'parquet') AS " +
+    spark.sql(s"REPLACE TABLE $t AS " +
       "SELECT id AS k3 FROM range(3)")
     evict("dur_ctas")
     assert(spark.table(t).columns.toSeq == Seq("k3") &&
@@ -642,8 +628,7 @@ class DurableCatalogSpec extends SparkTestBase {
     // CREATE OR REPLACE on a missing table creates
     val tc = "graftdur.dur_corp"
     spark.sql(s"DROP TABLE IF EXISTS $tc")
-    spark.sql(s"CREATE OR REPLACE TABLE $tc TBLPROPERTIES " +
-      "('graft.storage' = 'parquet') AS SELECT 1 AS x")
+    spark.sql(s"CREATE OR REPLACE TABLE $tc AS SELECT 1 AS x")
     assert(spark.table(tc).count() == 1)
     // DROP cleans the pointer and its target storage
     spark.sql(s"DROP TABLE $t")
@@ -663,8 +648,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_orphan"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -704,8 +688,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t = "graftdur.dur_orphan_gc"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t).append() // v1
     spark.range(10, 20).selectExpr("id AS k").coalesce(1)
@@ -793,8 +776,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t1 = "graftdur.dur_zombie"
     val t2 = "graftdur2.dur_zombie"
     spark.sql(s"DROP TABLE IF EXISTS $t1")
-    spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT)")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t1).append() // v1
     assert(spark.table(t2).count() == 10) // driver 2 reopens at v1
@@ -849,8 +831,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t1 = "graftdur.dur_sink_race"
     val t2 = "graftdur2.dur_sink_race"
     spark.sql(s"DROP TABLE IF EXISTS $t1")
-    spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT)")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t1).append() // v1 via driver 1
     // driver 2 (the batch ingest) commits v2; driver 1's sink is stale
@@ -881,8 +862,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_col"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 100).selectExpr("id AS k", "concat('v', id) AS s")
       .coalesce(1).writeTo(t).append()
     spark.sql(s"ALTER TABLE $t RENAME COLUMN s TO label")
@@ -906,8 +886,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_sink"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     val winfo = new LogicalWriteInfo {
       override def options(): CaseInsensitiveStringMap =
         CaseInsensitiveStringMap.empty()
@@ -972,8 +951,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_2sink"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     def winfo(qid: String) = new LogicalWriteInfo {
       override def options(): CaseInsensitiveStringMap =
         CaseInsensitiveStringMap.empty()
@@ -1014,8 +992,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_claim"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -1073,8 +1050,7 @@ class DurableCatalogSpec extends SparkTestBase {
       "a torn CREATE must not list as a table")
     // a fresh CREATE reclaims the abandoned v0 claim and succeeds
     spark.sql(s"CREATE TABLE $t2 (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      s"'graft.location' = '${tornRoot.getAbsolutePath}')")
+      s"TBLPROPERTIES (\'graft.location' = '${tornRoot.getAbsolutePath}')")
     spark.range(0, 3).selectExpr("id AS k").coalesce(1)
       .writeTo(t2).append()
     assert(spark.table(t2).count() == 3)
@@ -1082,22 +1058,25 @@ class DurableCatalogSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("registry-as-cache invariants: memory CREATE cannot shadow, listTables sees disk") {
+  test("registry-as-cache invariants: a fresh-registry CREATE cannot shadow, listTables sees disk") {
     useCatalog()
     val t = "graftdur.dur_shadow"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     spark.range(0, 5).selectExpr("id AS k").coalesce(1)
       .writeTo(t).append()
-    evict("dur_shadow")
-    // a default (memory-storage) CREATE on a fresh registry must refuse
-    // to shadow the durable table at the same warehouse root
-    val e = intercept[Exception] {
-      spark.sql(s"CREATE TABLE $t (k BIGINT)")
+    // a CREATE on a fresh registry (the table not yet reopened in this
+    // JVM) must refuse to shadow the durable table at the same
+    // warehouse root — with or without the explicit storage property
+    for (props <- Seq("", " TBLPROPERTIES ('graft.storage' = 'parquet')")) {
+      evict("dur_shadow")
+      val e = intercept[Exception] {
+        spark.sql(s"CREATE TABLE $t (k BIGINT)$props")
+      }
+      assert(Option(e.getMessage).exists(m =>
+        m.contains("already exists") || m.contains("TABLE_OR_VIEW")),
+        s"$e")
     }
-    assert(Option(e.getMessage).exists(m =>
-      m.contains("already exists") || m.contains("TABLE_OR_VIEW")), s"$e")
     assert(spark.table(t).count() == 5, "the durable table is intact")
     // listTables serves from disk too: evict and list
     evict("dur_shadow")
@@ -1123,8 +1102,7 @@ class DurableCatalogSpec extends SparkTestBase {
       .createTempDirectory("graft_ext_").toFile
     val extRoot = new java.io.File(ext, "dur_ext_data")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      s"'graft.location' = '${extRoot.getAbsolutePath}')")
+      s"TBLPROPERTIES (\'graft.location' = '${extRoot.getAbsolutePath}')")
     spark.range(0, 10).selectExpr("id AS k", "concat('x', id) AS s")
       .coalesce(1).writeTo(t).append()
     spark.sql(s"DELETE FROM $t WHERE k = 7")
@@ -1141,8 +1119,7 @@ class DurableCatalogSpec extends SparkTestBase {
       s"external-location tables must list from the pointer, got " +
         listed.mkString(", "))
     // the identifier is still GUARDED: a blind re-CREATE must refuse
-    val e = intercept[Exception](spark.sql(s"CREATE TABLE $t (x BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')"))
+    val e = intercept[Exception](spark.sql(s"CREATE TABLE $t (x BIGINT)"))
     assert(e.getMessage.toLowerCase.contains("already exists"), s"$e")
     // DROP deletes the external root AND frees the identifier for good
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -1165,8 +1142,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t = "graftdur.dur_iofail"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t).append() // v1
     val table = graft.sources.GraftLakeCatalog
@@ -1205,8 +1181,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_bloomv"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 50).selectExpr("id AS k", "concat('w', id) AS s")
       .coalesce(1).writeTo(t).append()
     val logDir = new java.io.File(new java.io.File(
@@ -1242,8 +1217,7 @@ class DurableCatalogSpec extends SparkTestBase {
     useCatalog()
     val t = "graftdur.dur_groups"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     // 130 data files in ONE commit (one file per write task)
     spark.range(0, 13000).selectExpr("id AS k", "concat('v', id) AS s")
       .repartition(130).writeTo(t).append()
@@ -1295,8 +1269,7 @@ class DurableCatalogSpec extends SparkTestBase {
     val t = "graftdur.dur_pspec"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING) " +
-      "PARTITIONED BY (cat) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "PARTITIONED BY (cat)")
     spark.range(0, 20).selectExpr("id AS k",
       "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS cat")
       .writeTo(t).append()

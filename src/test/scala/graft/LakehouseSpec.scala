@@ -254,7 +254,8 @@ class LakehouseSpec extends SparkTestBase {
     val staleWrite = opA.newWriteBuilder(writeInfo(spark.table(t).schema))
       .build().toBatch
     val ex = intercept[IllegalStateException] {
-      staleWrite.commit(Array(graft.sources.GraftLakeCommit(Vector.empty)))
+      staleWrite.commit(
+        Array(graft.sources.GraftLakeFilesCommit(Vector.empty)))
     }
     assert(ex.getMessage.contains("write conflict"))
     assert(spark.table(t).where("s = 'B'").count() == 1,
@@ -411,8 +412,8 @@ class LakehouseSpec extends SparkTestBase {
         Expressions.literal(UTF8String.fromString(id)))).toArray[
         org.apache.spark.sql.connector.expressions.Expression]))
     val snap = GraftLakeSnapshot(
-      Vector(GraftLakeFile("t#f1", Vector.empty, Seq(0)),
-        GraftLakeFile("t#f2", Vector.empty, Seq(0))), Map.empty)
+      Vector(GraftLakeFile("t#f1", Seq(0), "t/f1.parquet"),
+        GraftLakeFile("t#f2", Seq(0), "t/f2.parquet")), Map.empty)
     def scanWith(current: Set[String]) = new GraftLakeScan(snap, schema,
       schema, Nil, Some(new GroupScanState(Set("t#f1", "t#f2"))),
       () => current, Map(0 -> "k"))
@@ -920,78 +921,102 @@ class LakehouseSpec extends SparkTestBase {
     }
   }
 
-  test("parquet storage mode: row-level registry queries are mode-identical") {
-    // the registry's row-level statements (ref_update_delete_sql,
-    // ref_merge_into_sql, ref_merge_on_read, ref_change_feed) run over a
-    // memory-backed and a parquet-backed table; memory mode is
-    // oracle-green, so row-for-row equality proves parquet mode is too
+  test("graft.storage accepts only parquet: the retired memory tier fails at CREATE") {
     spark.conf.set("spark.sql.catalog.graftlake",
       classOf[graft.sources.GraftLakeCatalog].getName)
-    val orders = graft.sources.Tables(spark, Sf, "orders")
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    orders.filter(col("o_orderkey") % 2 === 0)
-      .withColumn("o_orderstatus", lit("U"))
-      .createOrReplaceTempView("spec_tier_batch")
-    def merge(t: String): Unit = spark.sql(
-      s"""MERGE INTO $t t USING spec_tier_batch b
-         |ON t.o_orderkey = b.o_orderkey
-         |WHEN MATCHED THEN UPDATE SET
-         |  o_orderstatus = b.o_orderstatus, o_totalprice = b.o_totalprice
-         |WHEN NOT MATCHED THEN INSERT
-         |  (o_orderkey, o_orderstatus, o_totalprice)
-         |  VALUES (b.o_orderkey, b.o_orderstatus, b.o_totalprice)
-         |""".stripMargin)
-    def relations(storage: String): Seq[Seq[org.apache.spark.sql.Row]] = {
-      def create(op: String, mode: String) = {
-        val name = s"spec_tier_${op}_$storage"
-        spark.sql(s"DROP TABLE IF EXISTS graftlake.$name")
-        spark.sql(s"CREATE TABLE graftlake.$name (o_orderkey BIGINT, " +
-          "o_orderstatus STRING, o_totalprice DOUBLE) TBLPROPERTIES " +
-          s"('graft.mode' = '$mode', 'graft.storage' = '$storage')")
-        orders.filter(col("o_orderkey") % 3 =!= 0)
-          .writeTo(s"graftlake.$name").append()
-        name -> graft.sources.GraftLakeCatalog.tableFor("graftlake", name).get
-      }
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
-      val (upd, updT) = create("upddel", "copy-on-write")
-      spark.sql(s"UPDATE graftlake.$upd SET o_orderstatus = 'X' " +
-        "WHERE o_orderkey % 10 = 1")
-      spark.sql(s"DELETE FROM graftlake.$upd " +
-        "WHERE o_orderstatus = 'F' AND o_orderkey % 10 = 2")
-      val (cow, cowT) = create("cow", "copy-on-write")
-      merge(s"graftlake.$cow")
-      val (mor, morT) = create("mor", "merge-on-read")
-      val v0 = morT.currentVersion
-      merge(s"graftlake.$mor")
-      val feed = spark.read
-        .option("graft.changes.from", v0.toString)
-        .option("graft.changes.to", morT.currentVersion.toString)
-        .table(s"graftlake.$mor")
-        .select(col("_change_type"), col("_commit_version") - v0,
-          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      // the tier under test really is the one each table was created with
-      Seq(updT, cowT, morT).foreach(tb => assert(
-        tb.filePaths.nonEmpty == (storage == "parquet") &&
-          tb.filePaths.values.forall(p => new java.io.File(p).isFile),
-        s"$storage: file groups must live in the $storage tier"))
-      val tables = Seq(upd, cow, mor).map(n => s"graftlake.$n")
-      val out = tables.map(n => rows(spark.table(n))) :+ rows(feed)
-      tables.foreach(n => spark.sql(s"DROP TABLE $n"))
-      out
+    val t = "graftlake.spec_storage_prop"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    def refused(sql: String, value: String): Unit = {
+      val e = intercept[Exception](spark.sql(sql))
+      assert(Option(e.getMessage).exists(
+        _.contains(s"unsupported graft.storage '$value'")), s"$e")
+      assert(graft.sources.GraftLakeCatalog
+        .tableFor("graftlake", "spec_storage_prop").isEmpty,
+        "a refused CREATE registers nothing")
     }
-    val mem = relations("memory")
-    val pq = relations("parquet")
-    Seq("UPDATE + DELETE", "CoW MERGE", "MoR MERGE", "change feed")
-      .zip(mem.zip(pq)).foreach { case (what, (m, p)) =>
-        assert(m.nonEmpty, s"$what: empty relation proves nothing")
-        val same = m == p
-        assert(same, s"$what must produce the identical relation in " +
-          s"parquet storage: memory-only ${m.diff(p).take(3)}, " +
-          s"parquet-only ${p.diff(m).take(3)}")
-      }
-    assert(pq.last.map(_.getString(0)).toSet == Set("insert", "delete"),
-      "the change feed carries both pre-images and new rows")
+    for (v <- Seq("memory", "MEMORY", "delta")) {
+      refused(s"CREATE TABLE $t (k BIGINT) " +
+        s"TBLPROPERTIES ('graft.storage' = '$v')", v)
+      // the staged (CTAS) path validates the same way
+      refused(s"CREATE TABLE $t TBLPROPERTIES ('graft.storage' = '$v') " +
+        "AS SELECT 1L AS k", v)
+    }
+    // 'parquet' restates the one tier and is accepted
+    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
+      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.range(0, 10).selectExpr("id AS k").writeTo(t).append()
+    val table = graft.sources.GraftLakeCatalog
+      .tableFor("graftlake", "spec_storage_prop").get
+    assert(table.filePaths.values.forall(new java.io.File(_).isFile))
+    assert(spark.table(t).count() == 10)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("lake writes leave no checksum sidecars: only live files and the log remain") {
+    spark.conf.set("spark.sql.catalog.graftlake",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    val t = "graftlake.spec_no_sidecar"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
+    spark.range(0, 100).selectExpr("id AS k", "'a' AS s")
+      .repartition(2).writeTo(t).append()
+    val table = graft.sources.GraftLakeCatalog
+      .tableFor("graftlake", "spec_no_sidecar").get
+    val dir = new java.io.File(table.filePaths.values.head).getParentFile
+    def listing: Seq[String] = dir.list().toSeq.sorted
+    def liveListing: Seq[String] = (table.filePaths.values.toSeq
+      .map(new java.io.File(_).getName) :+ "_graft_log").sorted
+    // a cutoff in the future: every unreferenced file counts as orphan
+    def removeOrphans(): (Int, Int) = {
+      val r = spark.sql("CALL graftlake.system.remove_orphan_files(" +
+        s"'spec_no_sidecar', ${System.currentTimeMillis() + 3600000L}L)")
+        .head()
+      (r.getInt(0), r.getInt(1))
+    }
+    assert(listing == liveListing,
+      s"an append leaves only its data files: ${listing.mkString(", ")}")
+    assert(removeOrphans() == (0, 0),
+      "a freshly written table has no orphan to reclaim")
+    spark.sql(s"UPDATE $t SET s = 'b' WHERE k = 7")
+    spark.sql(s"CALL graftlake.system.expire_versions('spec_no_sidecar', 1)")
+    assert(removeOrphans() == (0, 0),
+      "expire's vacuum already removed every unreferenced file")
+    assert(listing == liveListing,
+      s"after UPDATE + expire: only live files and the log, got " +
+        listing.mkString(", "))
+    assert(!dir.listFiles().exists(_.getName.endsWith(".crc")))
+    assert(spark.table(t).where("s = 'b'").count() == 1)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a lake scan's input partitions ship no rows: the largest does not grow with 10x the table") {
+    // the SPJ fixture's tables (join_spj_storage) at sf0.001 and at
+    // sf0.01 — ten times the rows, the same partition keys: every
+    // planned partition is a per-key FILE LIST (paths + manifests), so
+    // the largest serialized partition must stay flat
+    def largestPartition(sf: String): Int = {
+      Lakehouse.spjPlanned(spark, sf)
+      try Seq("spj_orders", "spj_cust").map { name =>
+        val table = graft.sources.GraftLakeCatalog
+          .tableFor("graftlake", name).get
+        val parts = table.newScanBuilder(
+          org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+          .build().toBatch.planInputPartitions()
+        assert(parts.nonEmpty && parts.forall(
+          _.isInstanceOf[graft.sources.GraftLakeKeyedFilesPartition]),
+          s"$name plans per-key file lists: ${parts.map(_.getClass)}")
+        val ser = org.apache.spark.SparkEnv.get.closureSerializer
+          .newInstance()
+        parts.map(p => ser.serialize(p).limit()).max
+      }.max
+      finally Seq("spj_orders", "spj_cust")
+        .foreach(n => spark.sql(s"DROP TABLE IF EXISTS graftlake.$n"))
+    }
+    val small = largestPartition(Sf)
+    val large = largestPartition(SfOracle)
+    // slack for path-length noise only (temp dir names, file numbers)
+    assert(large <= small + 256,
+      s"largest partition grew with the table: $small B -> $large B")
   }
 
   test("parquet storage: write amplification is measured bytes (CoW one file, MoR ~zero)") {
@@ -1002,8 +1027,7 @@ class LakehouseSpec extends SparkTestBase {
       val t = s"graftlake.spec_pq_$tag"
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-        s"TBLPROPERTIES ('graft.mode' = '$mode', " +
-        "'graft.storage' = 'parquet')")
+        s"TBLPROPERTIES ('graft.mode' = '$mode')")
       for (b <- 0 until 4)
         spark.range(b * 1000L, (b + 1) * 1000L)
           .selectExpr("id AS k", "repeat('x', 32) AS s")
@@ -1062,7 +1086,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_pq_evolve"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, p BIGINT, s STRING) " +
-      "PARTITIONED BY (p) TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "PARTITIONED BY (p)")
     spark.range(0, 20).selectExpr("id AS k", "id % 2 AS p",
       "concat('v', id) AS s").coalesce(1).writeTo(t).append()
     spark.sql(s"ALTER TABLE $t ADD COLUMNS (w DOUBLE)")
@@ -1106,8 +1130,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_pq_expire"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read', " +
-      "'graft.storage' = 'parquet')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 10).selectExpr("id AS k", "'a' AS s")
       .coalesce(1).writeTo(t).append() // v1: f1
     val table = graft.sources.GraftLakeCatalog
@@ -1202,8 +1225,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_agg_push"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('s', id) AS s")
@@ -1267,8 +1289,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_agg_eqd"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, b BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, b BIGINT)")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('s', id) AS s", s"$b AS b")
@@ -1468,8 +1489,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_agg_group"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, st STRING, v DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, st STRING, v DOUBLE)")
     // a partition-keyed writer lands one single-valued file per key —
     // exactly the layout Iceberg answers per-partition aggregates on
     for ((st, b) <- Seq("A", "B", "C").zipWithIndex)
@@ -1864,22 +1884,24 @@ class LakehouseSpec extends SparkTestBase {
         "cluster rewrite")
     spark.sql(s"DROP TABLE IF EXISTS $t")
 
-    // parquet storage mode: the rewrite lands REAL files and the
-    // relation survives byte-identical
+    // the rewrite lands REAL files, and the clustered relation is the
+    // one plain Spark computes from the same input
     val tp = "graftlake.spec_cluster_pq"
     spark.sql(s"DROP TABLE IF EXISTS $tp")
-    spark.sql(s"CREATE TABLE $tp (k BIGINT, v STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
-    for (b <- 0 until 3)
-      spark.range(0, 50).selectExpr(s"id * 3 + $b AS k",
-        s"concat('v', id * 3 + $b) AS v")
-        .coalesce(1).writeTo(tp).append()
-    val beforePq = spark.table(tp).collect().map(_.toString).sorted.toSeq
+    spark.sql(s"CREATE TABLE $tp (k BIGINT, v STRING)")
+    val stripes = (0 until 3).map(b => spark.range(0, 50)
+      .selectExpr(s"id * 3 + $b AS k", s"concat('v', id * 3 + $b) AS v"))
+    stripes.foreach(_.coalesce(1).writeTo(tp).append())
     spark.sql(s"CALL graftlake.system.cluster('spec_cluster_pq', 'k', 3)")
-    assert(spark.table(tp).collect().map(_.toString).sorted.toSeq
-      == beforePq, "parquet-mode clustering must not change the relation")
+    val table = graft.sources.GraftLakeCatalog
+      .tableFor("graftlake", "spec_cluster_pq").get
+    assert(table.filePaths.size == 3 && table.filePaths.values.forall(p =>
+      new java.io.File(p).isFile), "three stripes, each a real file")
+    assert(spark.table(tp).collect().map(_.toString).sorted.toSeq ==
+      stripes.reduce(_ union _).collect().map(_.toString).sorted.toSeq,
+      "clustering must serve exactly the written relation")
     assert(parts(spark.table(tp).where("k < 50")) == 1,
-      "parquet-mode stripes must prune like memory-mode ones")
+      "a third-range predicate plans ONE stripe")
     spark.sql(s"DROP TABLE IF EXISTS $tp")
   }
 
@@ -1888,8 +1910,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_agg_where"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, st STRING, v DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, st STRING, v DOUBLE)")
     for ((st, b) <- Seq("A", "B", "C").zipWithIndex)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", s"'$st' AS st", "CAST(id AS DOUBLE) AS v")
@@ -1952,42 +1973,40 @@ class LakehouseSpec extends SparkTestBase {
   test("ARRAY columns land in parquet storage and survive row-level SQL") {
     spark.conf.set("spark.sql.catalog.graftlake",
       classOf[graft.sources.GraftLakeCatalog].getName)
-    def build(t: String, props: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"CREATE TABLE $t (k BIGINT, emb ARRAY<FLOAT>, " +
-        s"tags ARRAY<STRING>)$props")
-      spark.range(0, 100).selectExpr("id AS k",
-        "CASE WHEN id % 7 = 0 THEN NULL ELSE array(CAST(id AS FLOAT), " +
-          "CAST(-id AS FLOAT), CAST(0.5 AS FLOAT)) END AS emb",
-        "CASE WHEN id % 5 = 0 THEN array() ELSE " +
-          "array(concat('t', id), NULL) END AS tags")
-        .coalesce(2).writeTo(t).append()
-      spark.createDataFrame(Seq((3L, Array(9.0f)), (999L, Array(1.5f))))
-        .toDF("k", "emb")
-        .selectExpr("k", "emb", "array('new') AS tags")
-        .createOrReplaceTempView(s"${t.split('.').last}_src")
-      spark.sql(s"MERGE INTO $t t USING ${t.split('.').last}_src b " +
-        "ON t.k = b.k " +
-        "WHEN MATCHED THEN UPDATE SET emb = b.emb, tags = b.tags " +
-        "WHEN NOT MATCHED THEN INSERT (k, emb, tags) " +
-        "VALUES (b.k, b.emb, b.tags)")
-    }
-    build("graftlake.spec_arr_mem", "")
-    build("graftlake.spec_arr_pq",
-      " TBLPROPERTIES ('graft.storage' = 'parquet')")
+    val t = "graftlake.spec_arr_pq"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, emb ARRAY<FLOAT>, " +
+      "tags ARRAY<STRING>)")
+    val base = spark.range(0, 100).selectExpr("id AS k",
+      "CASE WHEN id % 7 = 0 THEN NULL ELSE array(CAST(id AS FLOAT), " +
+        "CAST(-id AS FLOAT), CAST(0.5 AS FLOAT)) END AS emb",
+      "CASE WHEN id % 5 = 0 THEN array() ELSE " +
+        "array(concat('t', id), NULL) END AS tags")
+    base.coalesce(2).writeTo(t).append()
+    val src = spark.createDataFrame(
+      Seq((3L, Array(9.0f)), (999L, Array(1.5f))))
+      .toDF("k", "emb").selectExpr("k", "emb", "array('new') AS tags")
+    src.createOrReplaceTempView("spec_arr_pq_src")
+    spark.sql(s"MERGE INTO $t t USING spec_arr_pq_src b " +
+      "ON t.k = b.k " +
+      "WHEN MATCHED THEN UPDATE SET emb = b.emb, tags = b.tags " +
+      "WHEN NOT MATCHED THEN INSERT (k, emb, tags) " +
+      "VALUES (b.k, b.emb, b.tags)")
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftlake", "spec_arr_pq").get
     assert(table.filePaths.nonEmpty && table.filePaths.values.forall(p =>
       new java.io.File(p).isFile),
       "array file groups are real parquet files")
-    def rows(t: String) = spark.table(t).orderBy("k").collect()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("k").collect()
       .map(r => (r.getLong(0),
         Option(r.getSeq[Float](1)).map(_.toList),
         Option(r.getSeq[String](2)).map(_.toList))).toSeq
-    val mem = rows("graftlake.spec_arr_mem")
-    val pq = rows("graftlake.spec_arr_pq")
-    assert(mem == pq,
-      "parquet-backed arrays must be row-identical to memory storage")
+    // the MERGE's relation as plain Spark computes it from the same input
+    val expected = base.join(src.select("k"), Seq("k"), "left_anti")
+      .unionByName(src)
+    val pq = rows(spark.table(t))
+    assert(pq == rows(expected),
+      "parquet-backed arrays must be row-identical to the merged input")
     assert(pq.length == 101 && pq.exists(_._1 == 999L))
     assert(pq.find(_._1 == 3L).get._2.contains(List(9.0f)))
     assert(pq.find(_._1 == 11L).get._3.contains(List("t11", null)),
@@ -1995,8 +2014,7 @@ class LakehouseSpec extends SparkTestBase {
     assert(pq.find(_._1 == 5L).get._3.contains(Nil),
       "an EMPTY array stays distinct from a NULL column")
     assert(pq.find(_._1 == 7L).get._2.isEmpty, "null arrays stay null")
-    Seq("graftlake.spec_arr_mem", "graftlake.spec_arr_pq")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+    spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
   test("ADD COLUMN DEFAULT back-fills old files; INT widens to BIGINT in place") {
@@ -2046,8 +2064,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_vacuum_pin"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read', " +
-      "'graft.storage' = 'parquet')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 100).selectExpr("id AS k", "'a' AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -2082,8 +2099,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_stale_pin"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read', " +
-      "'graft.storage' = 'parquet')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 50).selectExpr("id AS k", "'a' AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -2516,8 +2532,8 @@ class LakehouseSpec extends SparkTestBase {
     // side filters): tags 1000-1099 = day 12's first 100 timestamps
     spark.range(0, 2000)
       .selectExpr("timestamp_ntz'2024-01-10 00:00:00' + " +
-        "make_interval(0, 0, 0, CAST(id / 500 AS INT), 0, 0, id % 500) " +
-        "AS d_ts", "id AS tag")
+        "make_interval(0, 0, 0, CAST(id / 500 AS INT), 0, 0, id % 500) AS " +
+        "d_ts", "id AS tag")
       .createOrReplaceTempView("spec_rtf_dim")
     val joined = spark.table(t)
       .join(spark.table("spec_rtf_dim")
@@ -2600,8 +2616,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"CREATE TABLE $t (k BIGINT, " +
       "span STRUCT<s: INT, e: INT, label: STRING>, " +
       "toks ARRAY<STRUCT<t: STRING, p: DOUBLE>>, " +
-      "scores MAP<STRING, DOUBLE>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "scores MAP<STRING, DOUBLE>)")
     spark.sql(s"""INSERT INTO $t VALUES
       (1, named_struct('s', 0, 'e', 5, 'label', 'A'),
         array(named_struct('t', 'hi', 'p', 0.9D),
@@ -2635,8 +2650,7 @@ class LakehouseSpec extends SparkTestBase {
     // arbitrarily deep nesting is accepted; BINARY leaves are not (yet)
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql("CREATE TABLE graftlake.spec_nested_deep " +
-      "(k BIGINT, deep ARRAY<MAP<STRING, ARRAY<STRUCT<a: INT>>>>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "(k BIGINT, deep ARRAY<MAP<STRING, ARRAY<STRUCT<a: INT>>>>)")
     spark.sql("INSERT INTO graftlake.spec_nested_deep VALUES " +
       "(1, array(map('x', array(named_struct('a', 7)))))")
     assert(spark.sql("SELECT deep[0]['x'][0].a " +
@@ -2644,8 +2658,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS graftlake.spec_nested_deep")
     intercept[Exception] {
       spark.sql("CREATE TABLE graftlake.spec_nested_bad " +
-        "(k BIGINT, b STRUCT<x: BINARY>) " +
-        "TBLPROPERTIES ('graft.storage' = 'parquet')")
+        "(k BIGINT, b STRUCT<x: BINARY>)")
     }
   }
 
@@ -2912,8 +2925,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_wap_pq"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t).append()
     spark.sql(s"CALL graftlake.system.create_branch('spec_wap_pq', 'b')")
@@ -2944,8 +2956,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_taskwrite"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftlake", "spec_taskwrite").get
     val winfo = new LogicalWriteInfo {
@@ -3030,8 +3041,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_dcluster"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (x BIGINT, y BIGINT, v STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (x BIGINT, y BIGINT, v STRING)")
     for (s <- 0 until 4) // row-major slabs: every file spans all of y
       spark.range(s * 1024, (s + 1) * 1024)
         .selectExpr("id DIV 64 AS x", "id % 64 AS y",
@@ -3136,8 +3146,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, " +
       "CONSTRAINT k_pos CHECK (k > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.sql(s"INSERT INTO $t VALUES (5, 'a'), (6, 'b')")
     def state(): Seq[String] =
       spark.table(t).orderBy("k").collect().map(_.toString).toSeq
@@ -3194,8 +3203,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (amount BIGINT, s STRING, " +
       "CONSTRAINT amount_pos CHECK (amount > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.sql(s"INSERT INTO $t VALUES (5, 'a'), (6, 'b')")
     spark.sql(s"ALTER TABLE $t RENAME COLUMN amount TO price")
     val table = graft.sources.GraftLakeCatalog
@@ -3227,8 +3235,7 @@ class LakehouseSpec extends SparkTestBase {
     val t2 = "graftck.spec_ck_widen"
     spark.sql(s"DROP TABLE IF EXISTS $t2")
     spark.sql(s"CREATE TABLE $t2 (v INT, " +
-      "CONSTRAINT v_pos CHECK (v > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT v_pos CHECK (v > 0))")
     spark.sql(s"INSERT INTO $t2 VALUES (1)")
     spark.sql(s"ALTER TABLE $t2 ALTER COLUMN v TYPE BIGINT")
     spark.sql(s"INSERT INTO $t2 VALUES (6000000000)") // needs BIGINT
@@ -3264,8 +3271,7 @@ class LakehouseSpec extends SparkTestBase {
     val t3 = "graftck.spec_ck_nested"
     spark.sql(s"DROP TABLE IF EXISTS $t3")
     spark.sql(s"CREATE TABLE $t3 (k BIGINT, s STRUCT<leaf: BIGINT>, " +
-      "CONSTRAINT leaf_pos CHECK (s.leaf > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT leaf_pos CHECK (s.leaf > 0))")
     spark.sql(s"INSERT INTO $t3 VALUES (1, named_struct('leaf', 5L))")
     intercept[Exception](
       spark.sql(s"INSERT INTO $t3 VALUES (2, named_struct('leaf', -1L))"))
@@ -3304,8 +3310,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t4")
     spark.sql(s"CREATE TABLE $t4 (x BIGINT, z BIGINT, " +
       "arr ARRAY<BIGINT>, " +
-      "CONSTRAINT has_pos CHECK (exists(arr, x -> x > 0))) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT has_pos CHECK (exists(arr, x -> x > 0)))")
     spark.sql(s"INSERT INTO $t4 VALUES (1, 1, array(-1L, 5L))")
     intercept[Exception](
       spark.sql(s"INSERT INTO $t4 VALUES (2, 2, array(-1L, -2L))"))
@@ -3365,8 +3370,7 @@ class LakehouseSpec extends SparkTestBase {
       val t = s"graftck.spec_ck_race_$tag"
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-        "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-        s"'graft.mode' = '$mode')")
+        s"TBLPROPERTIES (\'graft.mode' = '$mode')")
       spark.range(0, 10).selectExpr("id AS k", "'v' AS s")
         .coalesce(1).writeTo(t).append()
       val table = graft.sources.GraftLakeCatalog
@@ -3408,8 +3412,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, " +
       "CONSTRAINT k_cap CHECK (k < 100)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 10).selectExpr("id AS k", "'v' AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -3449,8 +3452,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftck.spec_ck_persist"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (amount BIGINT, " +
-      "CONSTRAINT pos_chk CHECK (amount > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT pos_chk CHECK (amount > 0))")
     spark.sql(s"INSERT INTO $t VALUES (5)")
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftck", "spec_ck_persist").get
@@ -3491,8 +3493,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftck.spec_eq_race"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 20).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -3540,7 +3541,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING) " +
       "PARTITIONED BY (cat) TBLPROPERTIES " +
-      "('graft.storage' = 'parquet', 'graft.mode' = 'merge-on-read')")
+      "('graft.mode' = 'merge-on-read')")
     spark.range(0, 100)
       .selectExpr("id AS k", "IF(id % 2 = 0, 'a', 'b') AS cat")
       .writeTo(t).append()
@@ -3562,8 +3563,7 @@ class LakehouseSpec extends SparkTestBase {
     // an UNPARTITIONED table aggregates under the NULL partition
     val tu = "graftlake.spec_parts_meta_u"
     spark.sql(s"DROP TABLE IF EXISTS $tu")
-    spark.sql(s"CREATE TABLE $tu (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $tu (k BIGINT)")
     spark.range(0, 30).selectExpr("id AS k").coalesce(1)
       .writeTo(tu).append()
     val u = spark.table(s"$tu.partitions").collect()
@@ -3613,8 +3613,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_meta_delete"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     for (b <- 0 until 4) // disjoint ranges: each file decides any k-cut
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('v', id) AS s")
@@ -3680,8 +3679,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_maint_rebase"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('v', id) AS s")
@@ -3756,7 +3754,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING, v STRING) " +
       "PARTITIONED BY (cat) TBLPROPERTIES " +
-      "('graft.storage' = 'parquet', 'graft.mode' = 'merge-on-read')")
+      "('graft.mode' = 'merge-on-read')")
     // 12 fragment appends per category — 24 tiny partition-pure files
     for (i <- 0 until 12; c <- Seq("a", "b"))
       spark.sql(s"INSERT INTO $t VALUES (${i * 2 +
@@ -3820,8 +3818,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_binpack_eqd"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('old', id) AS s")
@@ -3888,8 +3885,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_evolve"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING, v DOUBLE) " +
-      "PARTITIONED BY (cat) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "PARTITIONED BY (cat)")
     spark.range(0, 100)
       .selectExpr("id AS k", "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' " +
         "END AS cat", "CAST(id AS DOUBLE) AS v")
@@ -3973,8 +3969,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_taskdelta"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a'), (2, 'b')")
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftlake", "spec_taskdelta").get
@@ -3984,11 +3979,11 @@ class LakehouseSpec extends SparkTestBase {
       Seq("k", "s"), Seq(LongType, StringType), Seq(0, 1), Nil)
     val w = new graft.sources.GraftLakeDeltaWriterFactory(
       Array[org.apache.spark.sql.types.DataType](LongType, StringType),
-      Some(fw)).createWriter(0, 0)
+      fw).createWriter(0, 0)
     w.insert(new GenericInternalRow(
       Array[Any](9L, UTF8String.fromString("z"))))
     val m = w.commit().asInstanceOf[graft.sources.GraftLakeDeltaCommit]
-    assert(m.inserted.isEmpty && m.insertedFiles.length == 1,
+    assert(m.insertedFiles.length == 1,
       "insert rows left the task as a FILE, not as driver-bound rows")
     assert(m.insertedFiles.head.nRows == 1 &&
       m.insertedFiles.head.stats.nonEmpty,
@@ -4018,8 +4013,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_psink"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING) " +
-      "PARTITIONED BY (cat) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "PARTITIONED BY (cat)")
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_psink_").toFile
     val land = new java.io.File(tmp, "land")
@@ -4080,8 +4074,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_cdf_paths"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 50).selectExpr("id AS k", "concat('v', id) AS s")
       .coalesce(1).writeTo(t).append()
     spark.sql(s"DELETE FROM $t WHERE k % 10 = 0") // DV-growth delete leg
@@ -4099,7 +4092,7 @@ class LakehouseSpec extends SparkTestBase {
       case c: graft.sources.GraftLakeChangePartition => c }
     assert(cps.length == 2, s"insert leg + DV-growth delete leg: ${
       cps.map(c => (c.changeType, c.version)).toSeq}")
-    cps.foreach(c => assert(c.path.isDefined && c.rows.isEmpty,
+    cps.foreach(c => assert(new java.io.File(c.path).isFile,
       s"${c.changeType} leg must ship a path, not rows"))
     // ... and the feed still renders exactly the right rows
     val feed = spark.read.option("graft.changes.from", "0").table(s"$t.changes")
@@ -4125,8 +4118,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftfan.spec_fanout"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, p BIGINT, s STRING) " +
-      "PARTITIONED BY (p) TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "PARTITIONED BY (p) TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     // two appends, each one task batch spanning 3 keys → 6 pure files
     for (b <- 0 until 2)
       spark.range(b * 30L, (b + 1) * 30L)
@@ -4235,8 +4227,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.conf.set("spark.sql.catalog.graftblm.warehouse", wh)
     val t = "graftblm.spec_bloom_dur"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     for (b <- 0 until 4)
       spark.range(0, 500).selectExpr(s"id * 4 + $b AS k")
         .coalesce(1).writeTo(t).append()
@@ -4318,8 +4309,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.conf.set("spark.sql.catalog.grafteqd.warehouse", wh)
     val t = "grafteqd.spec_eqd"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 300).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(2).writeTo(t).append()
     def table() = graft.sources.GraftLakeCatalog
@@ -4492,8 +4482,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_eqd_dup"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 10).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(1).writeTo(t).append()
     def table() = graft.sources.GraftLakeCatalog
@@ -4543,8 +4532,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_eqd_col"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k INT, s STRING, v BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 100)
       .selectExpr("cast(id AS int) AS k", "concat('old', id) AS s",
         "id * 10 AS v")
@@ -4645,8 +4633,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.conf.set("spark.sql.catalog.graftarb.warehouse", wh)
     val t = "graftarb.spec_arbiter"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 10).selectExpr("id AS k", "'a' AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -4790,8 +4777,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftpc.spec_probe_cache"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('old', id) AS s")
@@ -4847,8 +4833,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftrc.spec_count_race"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 100).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(1).writeTo(t).append()
     def table() = graft.sources.GraftLakeCatalog

@@ -116,15 +116,12 @@ class PlanSpec extends SparkTestBase {
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       Seq(tA, tB).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      // parquet storage: SPJ must plan from MANIFEST key stamps (the
-      // evolution legs below assert the stamp gating — memory tables
-      // would stay keyed through driver-side row grouping instead)
+      // SPJ plans from MANIFEST key stamps (the evolution legs below
+      // assert the stamp gating)
       spark.sql(s"CREATE TABLE $tA (k BIGINT, a DOUBLE) " +
-        "PARTITIONED BY (bucket(8, k)) " +
-        "TBLPROPERTIES ('graft.storage' = 'parquet')")
+        "PARTITIONED BY (bucket(8, k))")
       spark.sql(s"CREATE TABLE $tB (k BIGINT, b STRING) " +
-        "PARTITIONED BY (bucket(8, k)) " +
-        "TBLPROPERTIES ('graft.storage' = 'parquet')")
+        "PARTITIONED BY (bucket(8, k))")
       spark.range(0, 400).selectExpr("id AS k", "CAST(id AS DOUBLE) AS a")
         .writeTo(tA).append()
       spark.range(0, 400, 2).selectExpr("id AS k", "concat('x', id) AS b")
@@ -621,8 +618,7 @@ class PlanSpec extends SparkTestBase {
       val src = spark.read.parquet(s"$SfOracle/$t.parquet")
       val ddl = src.schema.fields
         .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-      spark.sql(s"CREATE TABLE graftlake.cbo_$t ($ddl) " +
-        "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      spark.sql(s"CREATE TABLE graftlake.cbo_$t ($ddl)")
       src.writeTo(s"graftlake.cbo_$t").append()
       // NO ANALYZE — the manifests are the only stats source
     }

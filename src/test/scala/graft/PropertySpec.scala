@@ -224,14 +224,36 @@ object PropertySpec extends Properties("graft.kernels") {
       Array[Any](i.toLong))
       : org.apache.spark.sql.catalyst.InternalRow)
 
+  /** Rows `0 until n` read back through a one-column (`k BIGINT`) lake
+    * file's row reader, with `dead` as the file's deletion vector. */
+  private def dvRead(n: Int, dead: Set[Int],
+      req: org.apache.spark.sql.types.StructType)
+      : List[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import graft.sources.{GraftLakeFilePartition, GraftLakeReaderFactory,
+      GraftParquetIO}
+    val f = java.io.File.createTempFile("graft_dv_prop", ".parquet")
+    f.delete() // the writer creates a NEW file
+    try {
+      GraftParquetIO.write(f.getAbsolutePath, Seq("k"), Seq(LongType),
+        lakeRows(n))
+      val reader = new GraftLakeReaderFactory(
+        StructType(Seq(StructField("k", LongType))), req)
+        .createReader(GraftLakeFilePartition("f",
+          dead.map(_.toLong).toArray.sorted, Seq("k"), f.getAbsolutePath,
+          Seq(LongType)))
+      val got = List.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
+      while (reader.next()) got += reader.get().copy()
+      got.result()
+    } finally { f.delete(); () }
+  }
+
   property("DV filter keeps exactly the non-deleted rows, in order") =
     Prop.forAll(rowsAndDeletes) { case (n, dead) =>
-      import graft.sources.{GraftLakeFile, GraftLakeSnapshot}
-      val rows = lakeRows(n)
-      val f = GraftLakeFile("f", rows, Seq(0))
-      val live = GraftLakeSnapshot(Vector(f),
-        Map("f" -> dead.map(_.toLong))).liveRows(f)
-      live == (0 until n).filterNot(dead).map(rows)
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      dvRead(n, dead, StructType(Seq(StructField("k", LongType))))
+        .map(_.getLong(0)) ==
+        (0 until n).filterNot(dead).map(_.toLong).toList
     }
 
   // ---- parquet-backed lake storage round trip -----------------------------
@@ -419,7 +441,8 @@ object PropertySpec extends Properties("graft.kernels") {
         Array[Any](v.map(Long.box).orNull)): InternalRow).toVector
       val stats = graft.sources.GraftLakeStats.collect(
         rows, Seq(7), Seq(LongType))
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(7), stats = stats)
+      val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
+        numRows = rows.length, stats = stats)
       val pred = new Predicate(op, Array(
         Expressions.column("k"), Expressions.literal(lit)))
       val may = graft.sources.GraftLakeStats.mayMatch(
@@ -467,7 +490,8 @@ object PropertySpec extends Properties("graft.kernels") {
         .toVector
       val (nstats, nnulls) = graft.sources.GraftLakeStats.collectNested(
         rows, Seq(7), Seq(stT))
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(7),
+      val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
+        numRows = rows.length,
         types = Seq(stT), nstats = nstats, nnulls = nnulls)
       val ref = Expressions.column("s.leaf")
       val pred =
@@ -523,7 +547,8 @@ object PropertySpec extends Properties("graft.kernels") {
       val stats = graft.sources.GraftLakeStats.collect(
         rows, Seq(7), Seq(DoubleType))
       val nulls = graft.sources.GraftLakeStats.nullCounts(rows, Seq(7))
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(7),
+      val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
+        numRows = rows.length,
         stats = stats, nulls = nulls)
       val colRef = Expressions.column("k")
       val pred = op match {
@@ -593,7 +618,8 @@ object PropertySpec extends Properties("graft.kernels") {
       val stats = graft.sources.GraftLakeStats.collect(
         rows, Seq(3), Seq(StringType))
       val nulls = graft.sources.GraftLakeStats.nullCounts(rows, Seq(3))
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(3),
+      val f = graft.sources.GraftLakeFile("f", Seq(3), "f.parquet",
+        numRows = rows.length,
         stats = stats, nulls = nulls)
       val colRef = Expressions.column("s")
       val pred = op match {
@@ -726,7 +752,8 @@ object PropertySpec extends Properties("graft.kernels") {
       // added later with (or without) a declared default
       val rows = Vector.fill(n)(new GenericInternalRow(
         Array[Any](0L)): InternalRow)
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(1))
+      val f = graft.sources.GraftLakeFile("f", Seq(1), "f.parquet",
+        numRows = rows.length)
       val defaults: Map[Int, Any] =
         dflt.map(d => Map(3 -> (UTF8String.fromString(d): Any)))
           .getOrElse(Map.empty)
@@ -765,20 +792,9 @@ object PropertySpec extends Properties("graft.kernels") {
   property("DV reader skips deleted positions and _pos stays original") =
     Prop.forAll(rowsAndDeletes) { case (n, dead) =>
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      import graft.sources.{GraftLakeFilePartition, GraftLakeReaderFactory}
-      val full = StructType(Seq(StructField("k", LongType)))
       val req = StructType(
         Seq(StructField("k", LongType), StructField("_pos", LongType)))
-      val reader = new GraftLakeReaderFactory(full, req)
-        .createReader(
-          GraftLakeFilePartition("f", lakeRows(n),
-            dead.map(_.toLong).toArray.sorted, Seq("k")))
-      val got = List.newBuilder[(Long, Long)]
-      while (reader.next()) {
-        val r = reader.get()
-        got += ((r.getLong(0), r.getLong(1)))
-      }
-      got.result() ==
+      dvRead(n, dead, req).map(r => (r.getLong(0), r.getLong(1))) ==
         (0 until n).filterNot(dead).map(i => (i.toLong, i.toLong)).toList
     }
 
@@ -806,7 +822,8 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](v))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
-      val f = GraftLakeFile("f", rows, Seq(0), types = Seq(LongType),
+      val f = GraftLakeFile("f", Seq(0), "f.parquet",
+        numRows = rows.length, types = Seq(LongType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(LongType)),
         nulls = Map(0 -> 0L),
         blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(LongType)))
@@ -822,7 +839,8 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](UTF8String.fromString(v)))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
-      val f = GraftLakeFile("f", rows, Seq(0), types = Seq(StringType),
+      val f = GraftLakeFile("f", Seq(0), "f.parquet",
+        numRows = rows.length, types = Seq(StringType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(StringType)),
         nulls = Map(0 -> 0L),
         blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(StringType)))
@@ -840,7 +858,8 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](v))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
-      val f = GraftLakeFile("f", rows, Seq(0), types = Seq(IntegerType),
+      val f = GraftLakeFile("f", Seq(0), "f.parquet",
+        numRows = rows.length, types = Seq(IntegerType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(IntegerType)),
         nulls = Map(0 -> 0L),
         blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(IntegerType)))
