@@ -772,10 +772,10 @@ final case class GraftLakeFile(id: String, cols: Seq[Int], path: String,
     // a driver OOM at 100 TB
     pkey: Option[Vector[Any]] = None,
     // the parquet file's internal column LABELS (write-time names),
-    // positionally aligned with `cols`: the columnar reader projects by
-    // label, and a post-write RENAME changes only the id→name mapping —
-    // the file keeps its labels
-    pnames: Seq[String] = Nil,
+    // positionally aligned with `cols`: the reader projects by label,
+    // and a post-write RENAME changes only the id→name mapping — the
+    // file keeps its labels
+    pnames: Seq[String],
     // which PARTITION SPEC `pkey` was evaluated under (0 = the CREATE
     // spec): partition-spec evolution never rewrites files, so the
     // stamp tells keyed (SPJ) planning whether a file's tuple is
@@ -1723,22 +1723,6 @@ private[sources] object GraftLakeReaders {
     StructType(requiredSchema.fields.map(f =>
       byName.get(f.name).map(dt => f.copy(dataType = dt)).getOrElse(f)))
   }
-
-  /** Per-field extractor from a stored row: reads slot `i` as the
-    * file's PHYSICAL type and widens to the current logical type when
-    * the column was retyped after the file was written (INT→BIGINT,
-    * FLOAT→DOUBLE — the only changes ALTER COLUMN TYPE admits). */
-  def extractor(i: Int, phys: DataType,
-      logical: DataType): InternalRow => Any = (phys, logical) match {
-    case (org.apache.spark.sql.types.IntegerType, LongType) =>
-      r => if (r.isNullAt(i)) null
-        else java.lang.Long.valueOf(r.getInt(i).toLong)
-    case (org.apache.spark.sql.types.FloatType,
-        org.apache.spark.sql.types.DoubleType) =>
-      r => if (r.isNullAt(i)) null
-        else java.lang.Double.valueOf(r.getFloat(i).toDouble)
-    case _ => r => r.get(i, phys)
-  }
 }
 
 private[sources] object GraftLakeFieldIds {
@@ -1784,9 +1768,6 @@ final case class GraftEqDelete(colId: Int, path: String, belowSeq: Int,
       val i = f.cols.indexOf(colId)
       if (i < 0) None else Some((i, path, valueType))
     }
-  /** The probe set, read from the keys parquet (small: one upsert
-    * epoch's keys) and canonicalized. */
-  def loadValues(): Set[Any] = GraftEqDelete.loadProbe(path, valueType)
 }
 
 object GraftEqDelete {
@@ -1817,9 +1798,7 @@ object GraftEqDelete {
         else {
           probeReads.incrementAndGet()
           new java.lang.ref.SoftReference(
-            GraftParquetIO.read(path, Seq(valueType)).iterator
-              .filterNot(_.isNullAt(0))
-              .map(r => canon(r.get(0, valueType))).toSet)
+            GraftLakeColumnar.keys(path, valueType))
         }
       })
       out = ref.get()
@@ -3253,12 +3232,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * the same field ids and physical types. */
   private def rewriteSpecOf(idx: Int, f: GraftLakeFile, dv: Set[Long],
       eqProbes: Seq[(Int, String, DataType)], i2n: Map[Int, String])
-      : GraftLakeTaskFiles.RewriteSpec =
-    GraftLakeTaskFiles.RewriteSpec(idx, f.cols, f.types,
-      f.cols.map(cid => i2n.getOrElse(cid, s"_dropped_$cid")), f.pkey,
-      Vector(GraftLakeTaskFiles.RewriteSlice(f.path, f.types,
-        dv.toArray.sorted, 0, (f.numRows - dv.size).toInt, eqProbes)),
+      : GraftLakeTaskFiles.RewriteSpec = {
+    val names = f.cols.map(cid => i2n.getOrElse(cid, s"_dropped_$cid"))
+    GraftLakeTaskFiles.RewriteSpec(idx, f.cols, f.types, names, f.pkey,
+      Vector(GraftLakeTaskFiles.RewriteSlice(
+        GraftLakeFilePartition.of(f, dv, names, eqProbes),
+        0, (f.numRows - dv.size).toInt)),
       pspecId = f.pspecId)
+  }
 
   /** BIN-PACKING small-file compaction (Iceberg `rewrite_data_files`
     * binpack strategy): coalesce fragmented files toward `targetRows`
@@ -3336,10 +3317,9 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
               val hi = math.min(end, offsets(i + 1))
               if (lo >= hi) None
               else Some(GraftLakeTaskFiles.RewriteSlice(
-                candidates(i).path, types,
-                dvOf(candidates(i)).toArray.sorted,
-                (lo - offsets(i)).toInt, (hi - offsets(i)).toInt,
-                probesOf(candidates(i))))
+                GraftLakeFilePartition.of(candidates(i),
+                  dvOf(candidates(i)), names, probesOf(candidates(i))),
+                (lo - offsets(i)).toInt, (hi - offsets(i)).toInt))
             }
             specsB += GraftLakeTaskFiles.RewriteSpec(idx, cols, types,
               names, pkey, slices, pspecId = psid)
@@ -3458,8 +3438,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   /** Per-file LIVE row counts under unresolved equality deletes —
     * rows − DV − live probe matches. The scan-less
     * COUNT pays ONE distributed key-probe pass per (file, DV,
-    * epoch-set) signature — each task drives the vectorized reader
-    * projected to the key column only ([[GraftLakeColumnar.countLive]])
+    * epoch-set) signature — each task drives the one reader over the
+    * probe key chunks only ([[GraftLakeColumnar.countLive]])
     * — and memoizes the result, so every later COUNT answers from
     * metadata until the file's read debt changes (a growing DV or a new
     * epoch re-keys the signature; compaction makes the memo moot).
@@ -3518,42 +3498,13 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .getOrElse(return None)
       val i2n = idToName
-      val specs = probeable.map { f =>
-        val probes = probesOf(f)
-        (f.id, GraftLakeFilePartition(f.id,
-          snap.dvs.get(f.id).map(_.toArray.sorted)
-            .getOrElse(Array.empty[Long]),
-          GraftLakeFieldIds.resolve(f.cols, i2n),
-          f.path, f.types, f.pnames, probes),
-          // project the first probe's key column — the narrowest
-          // decode that still drives every probe
-          GraftLakeFieldIds.resolve(f.cols, i2n)(probes.head._1))
-      }
+      val specs = probeable.map(f => GraftLakeFilePartition.of(f,
+        snap.dvs.getOrElse(f.id, Set.empty),
+        GraftLakeFieldIds.resolve(f.cols, i2n), probesOf(f)))
       val counted = spark.sparkContext
         .parallelize(specs, specs.length)
-        .map { case (id, fp, keyName) =>
-          // key-column-only vectorized count; a file predating the
-          // write-time-label manifest (no columnar alignment) falls
-          // back to the row decode — still task-side
-          val n = if (fp.pnames.length == fp.cols.length)
-            GraftLakeColumnar.countLive(fp, keyName)
-          else {
-            val sets = fp.eqProbes.map { case (ci, p, vt) =>
-              (ci, GraftEqDelete.loadProbe(p, vt)) }
-            var live = 0L
-            GraftParquetIO.read(fp.path, fp.types).zipWithIndex
-              .foreach { case (r, pos) =>
-                val dead = java.util.Arrays.binarySearch(
-                  fp.deleted, pos.toLong) >= 0 ||
-                  sets.exists { case (ci, s) => !r.isNullAt(ci) &&
-                    s.contains(GraftEqDelete.canon(
-                      r.get(ci, fp.types(ci)))) }
-                if (!dead) live += 1
-              }
-            live
-          }
-          (id, n)
-        }
+        // decodes only the probe key chunks
+        .map(fp => (fp.fileId, GraftLakeColumnar.countLive(fp)))
         .collect().toMap
       probeable.foreach(f =>
         eqLiveMemo.put(f.id, (sig(f), counted(f.id))))
@@ -5123,10 +5074,8 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
   }
 
   private def filePartOf(f: GraftLakeFile): GraftLakeFilePartition =
-    GraftLakeFilePartition(f.id,
-      snapshot.dvs.get(f.id).map(_.toArray.sorted)
-        .getOrElse(Array.empty[Long]), namesOf(f),
-      f.path, f.types, f.pnames,
+    GraftLakeFilePartition.of(f, snapshot.dvs.getOrElse(f.id, Set.empty),
+      namesOf(f),
       // equality-delete probes, resolved to the file's own column
       // POSITION — the task reads the keys parquet itself (metadata-only
       // planning; a file predating the key column has nothing to match)
@@ -5162,25 +5111,13 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
     if (!keyedPlanning) active.map(filePartOf).toArray
     else
       // per-key FILE LISTS: decode + schema-normalization + DV
-      // filtering all happen in tasks (the reader applies the same
-      // by-name extractors as the file-grained path, per file)
+      // filtering all happen in tasks (the same reader as the
+      // file-grained path, chained per file)
       fileKeyGroups().map { case (k, fs) =>
         GraftLakeKeyedFilesPartition(fs.map(filePartOf), k): InputPartition }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // columnar (vectorized) decode whenever the WHOLE active set
-    // qualifies — Spark requires scan-uniform columnar-ness, and
-    // runtime filtering only shrinks `active`, so a decision taken
-    // over the current set stays valid for every planned partition;
-    // any scan `GraftLakeColumnar.eligible` rejects reads through the
-    // row path. Keyed (SPJ) scans go columnar too — the chained
-    // per-file batch readers preserve the key grouping. Unresolved
-    // equality deletes stay columnar as well: the batch reader loads
-    // each probe's keys parquet task-side and key-checks rows into the
-    // same selection view the DV filter uses
-    new GraftLakeReaderFactory(fullSchema, requiredSchema, nameDefaults,
-      GraftLakeColumnar.eligible(active, requiredSchema, namesOf,
-        nameDefaults))
+    new GraftLakeReaderFactory(requiredSchema, nameDefaults)
 }
 
 /** `deleted` is the file's deletion vector as a SORTED primitive
@@ -5190,15 +5127,30 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
   * membership is a binary search. */
 final case class GraftLakeFilePartition(
     fileId: String, deleted: Array[Long], cols: Seq[String],
-    path: String, types: Seq[DataType], pnames: Seq[String] = Nil,
+    path: String, types: Seq[DataType], pnames: Seq[String],
     // unresolved equality deletes this file is subject to: (column
     // position in the FILE layout, keys parquet path, key value type)
-    eqProbes: Seq[(Int, String, DataType)] = Nil)
+    eqProbes: Seq[(Int, String, DataType)] = Nil,
+    // the change feed's DV growth/shrink legs: positions to emit
+    // EXCLUSIVELY (SORTED); overrides `deleted` when set
+    keepOnly: Option[Array[Long]] = None,
+    // the change feed's new-epoch delete leg: emit ONLY rows whose key
+    // hits this probe (applied after `eqProbes`)
+    eqKeep: Option[(Int, String, DataType)] = None)
     extends InputPartition
+
+object GraftLakeFilePartition {
+  /** File `f` under deletion vector `dv` and `eqProbes`, its columns
+    * resolved to `cols`. */
+  def of(f: GraftLakeFile, dv: Set[Long], cols: Seq[String],
+      eqProbes: Seq[(Int, String, DataType)]): GraftLakeFilePartition =
+    GraftLakeFilePartition(f.id, dv.toArray.sorted, cols, f.path, f.types,
+      f.pnames, eqProbes)
+}
 
 /** One partition key's PARTITION-PURE files: the keyed (SPJ) input
   * split that ships paths/manifests instead of rows — tasks decode,
-  * normalize (by-name extractors) and DV-filter each file themselves,
+  * normalize and DV-filter each file themselves,
   * so a partitioned lake scan's driver cost is pure metadata. */
 final case class GraftLakeKeyedFilesPartition(
     files: Seq[GraftLakeFilePartition], key: InternalRow)
@@ -5207,30 +5159,16 @@ final case class GraftLakeKeyedFilesPartition(
 }
 
 /** One changed file in one commit: the unit of change-feed parallelism.
-  * The partition ships the file's PATH plus a position selection and
-  * the task decodes — the driver plans the feed from metadata alone.
-  * Rows keep their ORIGINAL in-file positions so `_pos` stays the
-  * stable merge-on-read row id even for rows surfaced as deletes. */
-final case class GraftLakeChangePartition(fileId: String,
-    changeType: String, version: Long, cols: Seq[String],
-    types: Seq[DataType], path: String,
-    // positions to EXCLUDE (the file's deletion vector at the emitting
-    // snapshot) — used by whole-file insert/delete legs. SORTED
-    // primitive array: ships per task, binary-search membership (a
-    // boxed Set[Long] at sf1 DV sizes was a ~20 MB task closure)
-    drop: Array[Long] = Array.empty,
-    // positions to EMIT EXCLUSIVELY (DV growth/shrink legs); overrides
-    // `drop` when set
-    keepOnly: Option[Array[Long]] = None,
-    // EQUALITY-DELETE probe specs (key column position in the FILE
-    // layout, keys parquet path, key type), applied AFTER the position
-    // selection. `eqDrop`: rows whose key hits ANY of these sets were
-    // already dead at the emitting snapshot — exclude them. `eqKeep`:
-    // the new-epoch delete leg — emit ONLY rows whose key hits this
-    // set. Tasks load the keys parquets themselves (driver ships paths
-    // only, same no-data-plane rule as the scan's eqProbes).
-    eqDrop: Seq[(Int, String, DataType)] = Nil,
-    eqKeep: Option[(Int, String, DataType)] = None) extends InputPartition
+  * The partition ships the file's PATH plus a row selection and the
+  * task decodes — the driver plans the feed from metadata alone. The
+  * selection rides the file partition: `deleted` (the DV at the
+  * emitting snapshot) or `keepOnly` (DV growth/shrink legs), then
+  * `eqProbes` (rows already equality-deleted at the emitting snapshot)
+  * and `eqKeep` (a new epoch's delete leg). Rows keep their ORIGINAL
+  * in-file positions so `_pos` stays the stable merge-on-read row id
+  * even for rows surfaced as deletes. */
+final case class GraftLakeChangePartition(file: GraftLakeFilePartition,
+    changeType: String, version: Long) extends InputPartition
 
 /** Change-feed scan over a commit-history slice: emits the row-level
   * diff of each consecutive snapshot pair as insert/delete partitions.
@@ -5264,7 +5202,7 @@ class GraftLakeChangeFeedScanBuilder(
     override def readSchema(): StructType = required
     override def toBatch: Batch = this
     override def createReaderFactory(): PartitionReaderFactory =
-      new GraftLakeChangeReaderFactory(fullSchema, required,
+      new GraftLakeReaderFactory(required,
         colDefaults.flatMap { case (id, v) =>
           idToName.get(id).map(_ -> v) })
     override def planInputPartitions(): Array[InputPartition] =
@@ -5609,7 +5547,7 @@ class GraftLakeChangesTable(parent: GraftLakeTable)
             override def planInputPartitions(): Array[InputPartition] =
               GraftLakeChanges.partitions(hist, from, parent.idToName)
             override def createReaderFactory(): PartitionReaderFactory =
-              new GraftLakeChangeReaderFactory(parent.schema(), required,
+              new GraftLakeReaderFactory(required,
                 parent.nameDefaults)
           }
         }
@@ -5675,8 +5613,7 @@ class GraftLakeChangeStream(parent: GraftLakeTable,
       parent.idToName)
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftLakeChangeReaderFactory(parent.schema(), requiredSchema,
-      parent.nameDefaults)
+    new GraftLakeReaderFactory(requiredSchema, parent.nameDefaults)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -5709,9 +5646,10 @@ private[sources] object GraftLakeChanges {
         eqKeep: Option[(Int, String, DataType)] = None): Unit = {
       val n = keepOnly.map(_.size.toLong).getOrElse(f.numRows - drop.size)
       if (n > 0)
-        parts += GraftLakeChangePartition(f.id, ct, v, namesOf(f), f.types,
-          f.path, drop.toArray.sorted, keepOnly.map(_.toArray.sorted),
-          eqDrop, eqKeep)
+        parts += GraftLakeChangePartition(
+          GraftLakeFilePartition.of(f, drop, namesOf(f), eqDrop).copy(
+            keepOnly = keepOnly.map(_.toArray.sorted), eqKeep = eqKeep),
+          ct, v)
     }
     // rows already equality-deleted AT snapshot `s`: exclude them from
     // every leg — a downstream replica applying the feed deleted them
@@ -5791,104 +5729,33 @@ private[sources] object GraftLakeChanges {
   }
 }
 
-/** Projects stored rows to the pruned read schema, synthesizing the
-  * change-feed metadata (`_change_type`, `_commit_version`) alongside
-  * `_file`/`_pos` from the partition's tags. Data columns resolve BY
-  * NAME against the partition's column manifest (absent → NULL), so the
-  * feed replays commits written under OLDER schemas correctly. */
-class GraftLakeChangeReaderFactory(fullSchema: StructType,
-    requiredSchema: StructType,
-    defaults: Map[String, Any] = Map.empty)
+/** Serves every lake read partition — file-grained, keyed (SPJ) file
+  * lists and change-feed legs — as ColumnarBatches through the one
+  * reader ([[GraftLakeColumnar.reader]]): data columns resolve BY NAME
+  * against the partition's column manifest (a column absent from the
+  * file — added after it was written — reads its EXISTS-default or
+  * NULL; a column retyped after the write reads through the widening
+  * view), and `_file`/`_pos` plus the change feed's `_change_type` /
+  * `_commit_version` are synthesized from the partition's tags. */
+class GraftLakeReaderFactory(requiredSchema: StructType,
+    defaults: Map[String, Any])
     extends PartitionReaderFactory {
-  override def createReader(
-      p: InputPartition): PartitionReader[InternalRow] = {
-    val cp = p.asInstanceOf[GraftLakeChangePartition]
-    // decode HERE (executor-side) and apply the partition's position
-    // selection — original in-file positions stay the `_pos` values.
-    // Equality-delete probe sets load task-side too: the keys parquets
-    // are one upsert epoch each (small); canonicalization and
-    // null-never-matches follow GraftEqDelete.loadProbe, the same
-    // semantics every other probe consumer shares
-    val dropSets = cp.eqDrop.map { case (ci, p, vt) =>
-      (ci, GraftEqDelete.loadProbe(p, vt)) }
-    val keepSet = cp.eqKeep.map { case (ci, p, vt) =>
-      (ci, GraftEqDelete.loadProbe(p, vt)) }
-    def keyAt(r: InternalRow, ci: Int): Any =
-      if (r.isNullAt(ci)) null
-      else GraftEqDelete.canon(r.get(ci, cp.types(ci)))
-    val rows: Vector[(Long, InternalRow)] =
-      GraftParquetIO.read(cp.path, cp.types).zipWithIndex.collect {
-        case (r, pos) if cp.keepOnly
-          .map(ks => java.util.Arrays.binarySearch(ks, pos.toLong) >= 0)
-          .getOrElse(
-            java.util.Arrays.binarySearch(cp.drop, pos.toLong) < 0) &&
-          dropSets.forall { case (ci, s) =>
-            val k = keyAt(r, ci); k == null || !s.contains(k) } &&
-          keepSet.forall { case (ci, s) =>
-            val k = keyAt(r, ci); k != null && s.contains(k) } =>
-          (pos.toLong, r)
-      }
-    val fileUtf8 = UTF8String.fromString(cp.fileId)
-    val typeUtf8 = UTF8String.fromString(cp.changeType)
-    val extract: Array[(InternalRow, Long) => Any] =
-      requiredSchema.fields.map { f =>
-        if (f.name == GraftLakeTable.FileCol)
-          (_: InternalRow, _: Long) => fileUtf8
-        else if (f.name == GraftLakeTable.PosCol)
-          (_: InternalRow, pos: Long) => pos
-        else if (f.name == GraftLakeTable.ChangeTypeCol)
-          (_: InternalRow, _: Long) => typeUtf8
-        else if (f.name == GraftLakeTable.CommitVersionCol)
-          (_: InternalRow, _: Long) => cp.version
-        else {
-          val i = cp.cols.indexOf(f.name)
-          if (i < 0) {
-            val d = defaults.getOrElse(f.name, null)
-            (_: InternalRow, _: Long) => d
-          } else {
-            val ex = GraftLakeReaders.extractor(i, cp.types(i), f.dataType)
-            (r: InternalRow, _: Long) => ex(r)
-          }
-        }
-      }
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      private var cur: InternalRow = _
-      override def next(): Boolean = {
-        i += 1
-        if (i < rows.length) {
-          val (pos, r) = rows(i)
-          cur = new GenericInternalRow(extract.map(_(r, pos)): Array[Any])
-          true
-        } else false
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
-  }
-}
+  import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** Projects stored rows to the pruned read schema through the
-  * partition's COLUMN MANIFEST (name-based resolution: a column absent
-  * from the file — added after it was written — reads its EXISTS-default
-  * or NULL; a column retyped after the write widens per value),
-  * synthesizing `_file` from the partition's file id. */
-class GraftLakeReaderFactory(fullSchema: StructType,
-    requiredSchema: StructType,
-    defaults: Map[String, Any] = Map.empty,
-    columnar: Boolean = false)
-    extends PartitionReaderFactory {
+  override def supportColumnarReads(p: InputPartition): Boolean = true
 
-  // scan-uniform by construction: the Scan decides once over its whole
-  // active file set (see GraftLakeScan.createReaderFactory)
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+  override def createColumnarReader(
+      p: InputPartition): PartitionReader[ColumnarBatch] =
     p match {
+      case fp: GraftLakeFilePartition =>
+        GraftLakeColumnar.reader(fp, requiredSchema, defaults)
+      case cp: GraftLakeChangePartition =>
+        GraftLakeColumnar.reader(cp.file, requiredSchema, defaults ++ Map(
+          GraftLakeTable.ChangeTypeCol ->
+            UTF8String.fromString(cp.changeType),
+          GraftLakeTable.CommitVersionCol -> cp.version))
       case kf: GraftLakeKeyedFilesPartition =>
         // per-key file list: chain the per-file batch readers
-        import org.apache.spark.sql.vectorized.ColumnarBatch
         new PartitionReader[ColumnarBatch] {
           private val it = kf.files.iterator
           private var cur: PartitionReader[ColumnarBatch] = _
@@ -5907,102 +5774,12 @@ class GraftLakeReaderFactory(fullSchema: StructType,
           override def get(): ColumnarBatch = cur.get()
           override def close(): Unit = if (cur != null) cur.close()
         }
-      case fp: GraftLakeFilePartition =>
-        GraftLakeColumnar.reader(fp, requiredSchema, defaults)
-      case other => throw new IllegalStateException(
-        s"columnar read planned for ${other.getClass.getSimpleName}")
     }
 
   override def createReader(
-      p: InputPartition): PartitionReader[InternalRow] = {
-    p match {
-      // per-key file list (partition-pure SPJ planning): chain the
-      // per-file readers — each applies the same by-name/default/
-      // widening extractors and DV filter as a file-grained partition
-      case kf: GraftLakeKeyedFilesPartition =>
-        return new PartitionReader[InternalRow] {
-          private val it = kf.files.iterator
-          private var cur: PartitionReader[InternalRow] = _
-          private var row: InternalRow = _
-          override def next(): Boolean = {
-            while (true) {
-              if (cur == null) {
-                if (!it.hasNext) return false
-                cur = createReader(it.next())
-              }
-              if (cur.next()) { row = cur.get(); return true }
-              cur.close(); cur = null
-            }
-            false
-          }
-          override def get(): InternalRow = row
-          override def close(): Unit = if (cur != null) cur.close()
-        }
-      case _ => ()
-    }
-    val fp = p.asInstanceOf[GraftLakeFilePartition]
-    val rows = GraftParquetIO.read(fp.path, fp.types)
-    val deleted = fp.deleted
-    val identity = requiredSchema == fullSchema && deleted.isEmpty &&
-      fp.cols == fullSchema.fieldNames.toSeq &&
-      fp.types == fullSchema.fields.map(_.dataType).toSeq
-    // per-field extractors: data columns resolved BY NAME against the
-    // file's manifest (absent → exists-default/NULL: schema evolution
-    // without rewrite; physical-type mismatch → widened read),
-    // `_file`/`_pos` synthesized from the partition's file id and the
-    // row's original position (positions survive DV filtering — that is
-    // what makes a position-delete key stable)
-    val fileUtf8 = UTF8String.fromString(fp.fileId)
-    val extract: Array[(InternalRow, Long) => Any] =
-      requiredSchema.fields.map { f =>
-        if (f.name == GraftLakeTable.FileCol)
-          (_: InternalRow, _: Long) => fileUtf8
-        else if (f.name == GraftLakeTable.PosCol)
-          (_: InternalRow, pos: Long) => pos
-        else {
-          val i = fp.cols.indexOf(f.name)
-          if (i < 0) {
-            val d = defaults.getOrElse(f.name, null)
-            (_: InternalRow, _: Long) => d
-          } else {
-            val ex = GraftLakeReaders.extractor(i, fp.types(i), f.dataType)
-            (r: InternalRow, _: Long) => ex(r)
-          }
-        }
-      }
-    // unresolved equality deletes: probe sets are read HERE (task-side,
-    // one small keys parquet per upsert epoch) and rows matching any
-    // probe are skipped IN PLACE — like the DV check below, the skip
-    // happens during iteration so `_pos` keeps original file ordinals
-    val eqSkip: InternalRow => Boolean =
-      if (fp.eqProbes.isEmpty) _ => false
-      else {
-        val probes = fp.eqProbes.map { case (ci, path, vt) =>
-          (ci, fp.types(ci), GraftEqDelete.loadProbe(path, vt))
-        }
-        r => probes.exists { case (ci, t, set) =>
-          !r.isNullAt(ci) && set.contains(GraftEqDelete.canon(r.get(ci, t)))
-        }
-      }
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      private var pos = -1L
-      override def next(): Boolean = {
-        pos += 1
-        while (pos < rows.length &&
-          (java.util.Arrays.binarySearch(deleted, pos) >= 0 ||
-            eqSkip(rows(pos.toInt)))) pos += 1
-        if (pos < rows.length) {
-          val r = rows(pos.toInt)
-          cur = if (identity) r
-          else new GenericInternalRow(extract.map(_(r, pos)): Array[Any])
-          true
-        } else false
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
-  }
+      p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "lake reads are columnar: Spark plans ColumnarToRow above the scan")
 }
 
 /** What a committed write hands the table: a task-written parquet file
@@ -6160,17 +5937,10 @@ private[sources] object GraftLakeTaskFiles {
     * LIVE rows (deletion-vector positions dropped, equality-delete
     * probes applied), sliced [from, until) in fully-live order — how a
     * bin boundary lands mid-file without the driver ever seeing a row.
-    * The DV ships as a SORTED primitive array: a boxed Set[Long] with
-    * ~1M positions serialized to ~20 MB per task closure (Spark's
-    * large-task warning at sf1); the array is 8 bytes/position and
-    * membership is a binary search. */
-  final case class RewriteSlice(path: String, types: Seq[DataType],
-      dv: Array[Long], from: Int, until: Int,
-      // equality-delete probes: (column position in this file, keys
-      // parquet path, key value type) — applied task-side after the DV
-      // filter and BEFORE the slice, so bin offsets planned from
-      // eq-aware live counts (rows − DV − probe matches) land exactly
-      eqProbes: Seq[(Int, String, DataType)] = Nil)
+    * Bin offsets are planned from eq-aware live counts (rows − DV −
+    * probe matches), so the slice lands exactly. */
+  final case class RewriteSlice(file: GraftLakeFilePartition, from: Int,
+      until: Int)
 
   /** One output file of a distributed compaction rewrite: ordered
     * slices whose concatenation IS the file's rows, plus the
@@ -6181,31 +5951,13 @@ private[sources] object GraftLakeTaskFiles {
       pkey: Option[Vector[Any]], slices: Vector[RewriteSlice],
       pspecId: Int = 0)
 
-  /** Task body of a distributed rewrite: decode the slices' live rows
+  /** Task body of a distributed rewrite: stream the slices' live rows
     * in order, write one temp parquet with the GENERATION's layout,
     * ship metadata. None for an all-dead output (fully deleted file). */
   def rewriteTask(dir: String)(
       spec: RewriteSpec): Option[(Int, GraftLakeFileMeta)] = {
-    val rows = spec.slices.flatMap { s =>
-      val all = GraftParquetIO.read(s.path, s.types)
-      val live =
-        if (s.dv.isEmpty) all
-        else all.zipWithIndex.collect {
-          case (r, i) if java.util.Arrays.binarySearch(s.dv, i.toLong) < 0
-            => r
-        }
-      // equality-delete resolution: probe sets read HERE, in the task,
-      // BEFORE the slice — [from, until) indexes the fully-live order
-      // (post-DV, post-probe), which is what the bin-packing planner's
-      // eq-aware live counts measure
-      val probed = s.eqProbes.foldLeft(live) { case (rs, (ci, path, vt)) =>
-        val probe = GraftEqDelete.loadProbe(path, vt)
-        val t = s.types(ci)
-        rs.filterNot(r => !r.isNullAt(ci) &&
-          probe.contains(GraftEqDelete.canon(r.get(ci, t))))
-      }
-      probed.slice(s.from, s.until)
-    }
+    val rows = spec.slices.flatMap(s =>
+      GraftLakeColumnar.liveRows(s.file)(_.slice(s.from, s.until).toVector))
     if (rows.isEmpty) None
     else Some((spec.idx, writeOne(dir, spec.names, spec.types, spec.cols,
       spec.pkey, rows, spec.pspecId)))

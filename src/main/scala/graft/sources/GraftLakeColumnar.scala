@@ -1,26 +1,29 @@
 package graft.sources
 
-import java.util.{ArrayList => JArrayList}
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** VECTORIZED decode for parquet-backed lake scans.
-  *
-  * The row path ([[GraftParquetIO.read]]) decodes through parquet-mr's
-  * example `Group` API — one materialized object tree per record — which
-  * is correct but row-at-a-time; at 100 TB the decode CPU on the scan
-  * path dominates. This module instead drives Spark's own
+/** The one decoder of lake files: every task-side read of a data file
+  * or an equality-delete keys file (scans, the change feed, compaction
+  * rewrites, live counts, probe loads) drives Spark's own
   * `VectorizedParquetRecordReader` (the engine under the built-in
-  * parquet source): column chunks decode straight into
-  * `OnHeapColumnVector`s in 4k-row batches, the DSv2 factory hands the
+  * parquet source). Column chunks decode straight into
+  * `OnHeapColumnVector`s in 4k-row batches; scans hand the
   * `ColumnarBatch` to Spark, and `ColumnarToRow` consumes it inside
   * whole-stage codegen — the exact physical shape `spark.read.parquet`
-  * produces.
+  * produces. No task decodes a whole file into memory.
   *
   * Lake semantics are preserved by COMPOSING the batch, not rewriting
   * the decode:
@@ -28,110 +31,42 @@ import org.apache.spark.unsafe.types.UTF8String
   *    write-time names ([[GraftLakeFile.pnames]], positionally aligned
   *    with the id manifest), so a projection maps current name → field
   *    id → file position → write-time label, and a RENAMEd column keeps
-  *    decoding from the right chunk;
+  *    decoding from the right chunk. A label missing from the footer
+  *    fails the open loudly instead of null-filling;
   *  - schema evolution: a column ADDed after the file was written has
   *    no chunk to decode — it rides as a [[ConstantColumnVector]]
   *    serving the EXISTS-default (or null), per batch, zero copies;
-  *  - type widening: a file written before a
-  *    widening ALTER COLUMN TYPE decodes at its PHYSICAL type and is
-  *    served through a zero-copy [[WidenedVector]] view presenting the
-  *    logical type (INT→BIGINT, FLOAT→DOUBLE — the engine's full
-  *    widening surface), so ONE pre-ALTER file no longer demotes the
-  *    whole scan off the columnar path;
-  *  - deletion vectors: a position-deleted file
-  *    decodes batches normally, then each batch is SELECTION-FILTERED —
-  *    surviving row ordinals land in a shared selection array and every
-  *    data vector is served through a zero-copy [[SelectedVector]] view
-  *    that remaps row ids through it. A hot merge-on-read table is
-  *    mostly DV'd between compactions; the decode win must survive
-  *    row-level ops, not just freshly-compacted tables;
-  *  - `_file` is a constant vector, `_pos` an `OnHeapColumnVector`
-  *    refilled with the batch's run of SURVIVING ordinal positions
-  *    (files are written by a single sequential writer, so parquet read
-  *    order IS `_pos` order, and positions skip DV'd rows exactly like
-  *    the row path).
+  *  - type widening: a file written before a widening ALTER COLUMN
+  *    TYPE decodes at its PHYSICAL type and is served through a
+  *    zero-copy [[WidenedVector]] view presenting the logical type
+  *    (INT→BIGINT, FLOAT→DOUBLE — the engine's full widening surface);
+  *  - row selection: which rows of a file are live is decided here
+  *    once — a position is not in the DV (or is in the change feed's
+  *    `keepOnly` list) and its key hits no equality-delete probe (and
+  *    hits the `eqKeep` probe when one is set). Surviving row ordinals
+  *    land in a shared selection array and every data vector is served
+  *    through a zero-copy [[SelectedVector]] view;
+  *  - `_file` (and the change feed's `_change_type` /
+  *    `_commit_version`) are constant vectors, `_pos` an
+  *    `OnHeapColumnVector` refilled with the batch's run of SURVIVING
+  *    ordinal positions (files are written by a single sequential
+  *    writer, so parquet read order IS `_pos` order).
   *
-  * Scans that need per-row work the batch cannot express stay on the
-  * row path (the factory falls back whenever [[eligible]] says no):
-  * NESTED type evolution (widening is top-level-only by the ALTER
-  * surface), physical/logical mismatches outside the widening pairs,
-  * and files without write-time labels. Eligibility is decided ONCE per
-  * scan over the whole active file set, because Spark requires every
-  * partition of a scan to agree on columnar vs row output. */
+  * A read that needs no column values (`SELECT _file, _pos`, a
+  * projection of only post-write columns, a live count) still decodes
+  * one chunk — the file's narrowest column — to count rows. */
 object GraftLakeColumnar {
 
   /** Decode batch size — Spark's own default parquet batch capacity. */
   val BatchSize = 4096
 
-  private def primVectorizable(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | DoubleType | FloatType | BooleanType |
-         StringType | DateType | TimestampType | TimestampNTZType => true
-    case d: DecimalType => d.precision <= 18
-    case _ => false
-  }
-
-  /** Types the vectorized path serves: the full lake storage
-    * surface — primitives AND nested containers (Spark's
-    * vectorized reader decodes standard 3-level LIST / plain-group
-    * STRUCT / 3-level MAP into nested column vectors; these files are
-    * written in exactly those encodings). */
-  def vectorizable(dt: DataType): Boolean = dt match {
-    case ArrayType(et, _) => vectorizable(et)
-    case StructType(fields) =>
-      fields.nonEmpty && fields.forall(f => vectorizable(f.dataType))
-    case MapType(kt, vt, _) =>
-      primVectorizable(kt) && vectorizable(vt)
-    case other => primVectorizable(other)
-  }
-
-  /** The widening pairs ALTER COLUMN TYPE allows (top-level only): a
-    * pre-ALTER file's physical chunk decodes at `phys` and a zero-copy
-    * view presents `logical`. */
-  private def widenable(phys: DataType, logical: DataType): Boolean =
-    (phys, logical) match {
-      case (IntegerType, LongType) => true
-      case (FloatType, DoubleType) => true
-      case _ => false
-    }
-
-  /** Scan-level eligibility: EVERY active file must be parquet-backed
-    * and serve every required data column from a physically-identical
-    * chunk, a WIDENABLE chunk (Int→Long / Float→Double view), or a
-    * constant (absent → default) — and at least one required column
-    * must actually decode from each file (a zero-column projection has
-    * no batch to drive). Deletion vectors do NOT disqualify: batches
-    * are selection-filtered per file (see [[SelectedVector]]). */
-  def eligible(files: Seq[GraftLakeFile],
-      required: StructType, namesOf: GraftLakeFile => Seq[String],
-      defaults: Map[String, Any]): Boolean = {
-    val dataFields = required.fields.filterNot(f =>
-      f.name == GraftLakeTable.FileCol || f.name == GraftLakeTable.PosCol)
-    dataFields.nonEmpty &&
-    dataFields.forall(f => vectorizable(f.dataType)) &&
-    files.forall { f =>
-      f.pnames.length == f.cols.length && {
-        val names = namesOf(f)
-        dataFields.exists(fld => names.contains(fld.name)) &&
-        dataFields.forall { fld =>
-          val i = names.indexOf(fld.name)
-          if (i >= 0) f.types(i) == fld.dataType ||
-            widenable(f.types(i), fld.dataType)
-          // absent column: a constant vector serves it — null for any
-          // type, a non-null EXISTS-default only if primitive
-          else defaults.getOrElse(fld.name, null) == null ||
-            primVectorizable(fld.dataType)
-        }
-      }
-    }
-  }
-
   /** A per-batch constant column: the EXISTS-default (or null) an old
-    * file serves for a post-write ADD COLUMN, vectorized. */
+    * file serves for a post-write ADD COLUMN, or a change-feed tag. */
   private def constant(dt: DataType, v: Any): ConstantColumnVector = {
     val c = new ConstantColumnVector(BatchSize, dt)
     // null serves ANY type (including nested — isNullAt answers before
-    // any child vector is consulted); non-null constants are primitive
-    // by eligibility
+    // any child vector is consulted); non-null constants are primitive:
+    // the lake log persists no nested default, so ALTER refuses one
     if (v == null) c.setNull()
     else dt match {
       case LongType | TimestampType | TimestampNTZType =>
@@ -217,136 +152,151 @@ object GraftLakeColumnar {
       })
   }
 
-  /** Executor-side columnar reader for one parquet-backed file group.
-    * Only called when [[eligible]] approved the scan. */
+  /** The one open of a lake parquet file: the `InputSplit` overload
+    * over a copy of [[GraftParquetIO.conf]] carrying the requested
+    * Spark schema (write-time labels at the file's physical types).
+    * The path-and-columns overload builds a default-loading Hadoop
+    * `Configuration` per open (~10 ms); this one reads only the copy.
+    * Spark's read support null-fills a requested label the footer
+    * lacks, so [[open]] checks every label against the footer itself. */
+  private final class LakeFileReader extends VectorizedParquetRecordReader(
+      // rebase CORRECTED: these files are written by this engine with
+      // proleptic-Gregorian day/micro values — no legacy calendar exists
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, BatchSize) {
+    def open(path: String, labels: Seq[String], types: Seq[DataType]): Unit = {
+      val conf = GraftParquetIO.conf()
+      conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+        StructType(labels.zip(types).map { case (l, t) =>
+          StructField(l, t) }).json)
+      // the base class casts the split to the `mapred` FileSplit; the
+      // range covers every row group
+      initialize(new FileSplit(new Path(path), 0L, Long.MaxValue,
+        Array.empty[String]), new TaskAttemptContextImpl(conf,
+        new TaskAttemptID()))
+      labels.find(l => !fileSchema.containsField(l)).foreach { l =>
+        throw new java.io.IOException(
+          s"lake file $path has no column labelled $l")
+      }
+    }
+  }
+
+  /** Canonical probe key of row `i` of `v` (read at the FILE's
+    * physical type): Int-family values widen to Long so a pre-widening
+    * file matches post-widening keys; null never matches. */
+  private def keyAt(v: ColumnVector, dt: DataType, i: Int): Any =
+    if (v.isNullAt(i)) null
+    else dt match {
+      case LongType | TimestampType | TimestampNTZType =>
+        java.lang.Long.valueOf(v.getLong(i))
+      case IntegerType | DateType => java.lang.Long.valueOf(v.getInt(i).toLong)
+      case StringType => v.getUTF8String(i)
+      case other => throw new IllegalStateException(
+        s"unprobeable equality-delete key type ${other.sql}")
+    }
+
+  /** Executor-side columnar reader for one lake file: `required`
+    * columns in order, the file's data columns resolved by name against
+    * `fp.cols`, `_file`/`_pos` synthesized, and every other name served
+    * as a constant from `consts` (EXISTS-defaults, change-feed tags;
+    * null when absent). Only the file's LIVE rows are served (see the
+    * class doc). */
   def reader(fp: GraftLakeFilePartition, required: StructType,
-      defaults: Map[String, Any]): PartitionReader[ColumnarBatch] = {
-    // required data columns present in the file: output slot → file
-    // position; requested from parquet under the file's WRITE-TIME
-    // labels, in output order (the reader's batch preserves request
-    // order, so batch column j serves the j-th present field)
-    val present: Array[(Int, Int)] =
-      required.fields.zipWithIndex.flatMap { case (fld, oi) =>
+      consts: Map[String, Any]): PartitionReader[ColumnarBatch] = {
+    // file position → batch column, in request order: the required data
+    // columns the file holds (in output order), then probe keys the
+    // projection lacks (probed only, never exposed), then — when nothing
+    // else decodes — the narrowest column, only to count rows. Each
+    // label is requested once: a duplicate would build a
+    // duplicate-field parquet schema
+    val slot = scala.collection.mutable.LinkedHashMap.empty[Int, Int]
+    def decode(fi: Int): Int = slot.getOrElseUpdate(fi, slot.size)
+    val dataSlot: Array[Int] = required.fields.map { fld =>
+      val fi =
         if (fld.name == GraftLakeTable.FileCol ||
-            fld.name == GraftLakeTable.PosCol) None
-        else {
-          val fi = fp.cols.indexOf(fld.name)
-          if (fi >= 0) Some((oi, fi)) else None
-        }
+            fld.name == GraftLakeTable.PosCol) -1
+        else fp.cols.indexOf(fld.name)
+      if (fi < 0) -1
+      else (fp.types(fi), fld.dataType) match {
+        case (p, l) if p == l => decode(fi)
+        case (IntegerType, LongType) | (FloatType, DoubleType) => decode(fi)
+        case (p, l) => throw new IllegalStateException(
+          s"lake file ${fp.fileId} stores ${fld.name} as ${p.sql}, " +
+            s"which does not widen to ${l.sql}")
       }
-    val requestCols = new JArrayList[String](present.length)
-    present.foreach { case (_, fi) => requestCols.add(fp.pnames(fi)) }
-    // EQUALITY-DELETE probes (columnar leg): each
-    // probe needs the key column's VALUES — reuse its decoded chunk if
-    // the projection already carries it, else request it as an EXTRA
-    // trailing column (probed only, never exposed in the output batch).
-    // Requesting the same label twice would build a duplicate-field
-    // parquet schema, hence the reuse.
-    val eqDecodedIdx: Array[Int] = fp.eqProbes.map { case (fi, _, _) =>
-      present.indexWhere(_._2 == fi) match {
-        case j if j >= 0 => j
-        case _ =>
-          requestCols.add(fp.pnames(fi))
-          requestCols.size - 1
-      }
-    }.toArray
-    // rebase CORRECTED: these files are written by this engine with
-    // proleptic-Gregorian day/micro values — no legacy calendar exists
-    GraftParquetIO.reads.incrementAndGet() // same no-probe-counter as row IO
-    val vec = new VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, BatchSize)
-    var initialized = false
-    try {
-      vec.initialize(fp.path, requestCols)
-      initialized = true
-    } finally if (!initialized) vec.close()
+    }
+    // equality-delete probes, resolved to (batch column, physical type,
+    // probe set): the keys parquet is read once per executor (cached)
+    def probe(p: (Int, String, DataType)): (Int, DataType, Set[Any]) =
+      (decode(p._1), fp.types(p._1), GraftEqDelete.loadProbe(p._2, p._3))
+    val drops: Array[(Int, DataType, Set[Any])] = fp.eqProbes.map(probe).toArray
+    val keep: (Int, DataType, Set[Any]) = fp.eqKeep.map(probe).orNull
+    if (slot.isEmpty) decode(fp.types.indices.minBy(fp.types(_).defaultSize))
+    val fis = slot.keys.toSeq
+    GraftParquetIO.reads.incrementAndGet()
+    val vec = new LakeFileReader
+    try vec.open(fp.path, fis.map(fp.pnames), fis.map(fp.types))
+    catch { case e: Throwable => vec.close(); throw e }
     val decoded = vec.resultBatch()
-    val needPos =
-      required.fieldNames.contains(GraftLakeTable.PosCol)
-    val posVec = if (needPos) new OnHeapColumnVector(BatchSize, LongType)
+    val posVec =
+      if (required.fieldNames.contains(GraftLakeTable.PosCol))
+        new OnHeapColumnVector(BatchSize, LongType)
       else null
-    val outIdxToBatch = present.zipWithIndex
-      .map { case ((oi, _), j) => oi -> j }.toMap
-    val oiToFile = present.toMap
     val mine = Vector.newBuilder[ColumnVector] // vectors this reader owns
     if (posVec != null) mine += posVec
-    // the file's DELETION VECTOR, already sorted ascending (see
-    // GraftLakeFilePartition.deleted): batches are selection-filtered
-    // against it below, walking `di` monotonically with read order
-    val dv: Array[Long] = fp.deleted
-    // equality-delete probes, resolved to (decoded column, physical
-    // type, probe set): the keys parquet is read ONCE per file here in
-    // the task, and each batch row's key is checked against the set —
-    // so a hot CDC table keeps vectorized decode between compactions,
-    // the same reason DVs ride the selection view instead of demoting
-    // the scan. Widened keys canonicalize (Int value vs Long key).
-    val probes: Array[(Int, DataType, Set[Any])] =
-      fp.eqProbes.zipWithIndex.map { case ((fi, kpath, vt), j) =>
-        (eqDecodedIdx(j), fp.types(fi), GraftEqDelete.loadProbe(kpath, vt))
-      }.toArray
-    val sel: Array[Int] =
-      if (dv.isEmpty && probes.isEmpty) null else new Array[Int](BatchSize)
+    def own(c: ConstantColumnVector): ColumnVector = { mine += c; c }
     val out: Array[ColumnVector] =
       required.fields.zipWithIndex.map { case (fld, oi) =>
         if (fld.name == GraftLakeTable.FileCol) {
           val c = new ConstantColumnVector(BatchSize, StringType)
           c.setUtf8String(UTF8String.fromString(fp.fileId))
-          mine += c
-          c
+          own(c)
         } else if (fld.name == GraftLakeTable.PosCol) posVec
-        else outIdxToBatch.get(oi) match {
-          case Some(j) =>
-            val raw = decoded.column(j)
-            // physical ≠ logical on a pre-widening file: serve the
-            // logical type through the zero-copy widening view
-            if (fp.types(oiToFile(oi)) == fld.dataType) raw
-            else new WidenedVector(raw, fld.dataType)
-          case None =>
-            val c = constant(fld.dataType,
-              defaults.getOrElse(fld.name, null))
-            mine += c
-            c
+        else if (dataSlot(oi) < 0)
+          own(constant(fld.dataType, consts.getOrElse(fld.name, null)))
+        else {
+          val raw = decoded.column(dataSlot(oi))
+          // physical ≠ logical on a pre-widening file: serve the
+          // logical type through the zero-copy widening view
+          if (fp.types(fp.cols.indexOf(fld.name)) == fld.dataType) raw
+          else new WidenedVector(raw, fld.dataType)
         }
       }
     val owned = mine.result()
-    // DV'd files serve the FILTERED view: data vectors remap through
-    // the shared selection array; constants are selection-invariant and
-    // `_pos` is filled directly with surviving ordinals
-    val served: Array[ColumnVector] =
+    // position selection: `marked` is the DV (rows dropped) or the
+    // change feed's keepOnly list (rows kept), sorted ascending and
+    // walked with a monotone cursor in read order
+    val marked: Array[Long] = fp.keepOnly.getOrElse(fp.deleted)
+    val keepMarked = fp.keepOnly.isDefined
+    val sel: Array[Int] =
+      if (marked.isEmpty && !keepMarked && drops.isEmpty && keep == null) null
+      else new Array[Int](BatchSize)
+    // selected files serve the FILTERED view: data vectors remap
+    // through the shared selection array; constants are
+    // selection-invariant and `_pos` is filled directly with surviving
+    // ordinals
+    val batch = new ColumnarBatch(
       if (sel == null) out
       else out.map {
         case c: ConstantColumnVector => c
         case v if v eq posVec => v
         case v => new SelectedVector(v, sel)
-      }
-    val batch = new ColumnarBatch(served)
-    // is batch row i hit by any equality-delete probe? Key values are
-    // read at the FILE's physical type and canonicalized (Int → Long)
-    // to match the probe set's representation; null keys never match.
-    def eqHit(i: Int): Boolean = {
+      })
+    def hits(p: (Int, DataType, Set[Any]), i: Int): Boolean = {
+      val k = keyAt(decoded.column(p._1), p._2, i)
+      k != null && p._3.contains(k)
+    }
+    // does batch row i pass the key probes?
+    def keyLive(i: Int): Boolean = {
       var j = 0
-      while (j < probes.length) {
-        val (ci, dt, set) = probes(j)
-        val v = decoded.column(ci)
-        if (!v.isNullAt(i)) {
-          val k: Any = dt match {
-            case LongType | TimestampType | TimestampNTZType =>
-              java.lang.Long.valueOf(v.getLong(i))
-            case IntegerType | DateType =>
-              java.lang.Long.valueOf(v.getInt(i).toLong) // == canon
-            case StringType => v.getUTF8String(i)
-            case other => throw new IllegalStateException(
-              s"unprobeable equality-delete key type ${other.sql}")
-          }
-          if (set.contains(k)) return true
-        }
+      while (j < drops.length) {
+        if (hits(drops(j), i)) return false
         j += 1
       }
-      false
+      keep == null || hits(keep, i)
     }
     new PartitionReader[ColumnarBatch] {
       private var base = 0L
-      private var di = 0 // monotone cursor into dv (read order = pos order)
+      private var di = 0 // monotone cursor into marked (read = pos order)
       override def next(): Boolean = {
         while (vec.nextBatch()) {
           val n = decoded.numRows()
@@ -361,17 +311,17 @@ object GraftLakeColumnar {
             batch.setNumRows(n)
             return true
           }
-          // deleted positions inside this batch's [lo, lo + n) range
+          // marked positions inside this batch's [lo, lo + n) range
           val d0 = di
-          while (di < dv.length && dv(di) < lo + n) di += 1
+          while (di < marked.length && marked(di) < lo + n) di += 1
           if (posVec != null) posVec.reset()
           var i = 0
           var d = d0
           var o = 0
           while (i < n) {
-            if (d < di && dv(d) == lo + i) d += 1 // position-deleted
-            else if (probes.length != 0 && eqHit(i)) () // key-deleted
-            else {
+            val isMarked = d < di && marked(d) == lo + i
+            if (isMarked) d += 1
+            if (isMarked == keepMarked && keyLive(i)) {
               sel(o) = i
               if (posVec != null) posVec.putLong(o, lo + i)
               o += 1
@@ -394,21 +344,59 @@ object GraftLakeColumnar {
     }
   }
 
-  /** LIVE-row count of one parquet file under its DV + equality-delete
-    * probes (the scan-less COUNT's one-time probe pass): drives
-    * [[reader]] — the exact batch/selection semantics
-    * every scan uses — projected to a single key column at the FILE's
-    * own physical type, so only key chunks decode (further probes ride
-    * as trailing requests the reader adds itself). The caller memoizes
-    * per (file, DV, epoch-set); this stays a per-task, data-plane-free
-    * helper. */
-  def countLive(fp: GraftLakeFilePartition, keyName: String): Long = {
-    val i = fp.cols.indexOf(keyName)
-    require(i >= 0, s"count key $keyName absent from file ${fp.fileId}")
-    val required = StructType(Seq(StructField(keyName, fp.types(i))))
-    val r = reader(fp, required, Map.empty)
+  /** The LIVE rows of one file in read order, every column at its
+    * physical type in the file's own layout, each row an independent
+    * copy — streamed batch by batch, so `body` sees an iterator over the
+    * open file and holds only what it keeps. The file closes when
+    * `body` returns. */
+  def liveRows[T](fp: GraftLakeFilePartition)(
+      body: Iterator[InternalRow] => T): T = {
+    val schema = StructType(fp.cols.zip(fp.types).map { case (n, t) =>
+      StructField(n, t) })
+    val r = reader(fp, schema, Map.empty)
+    try {
+      val copy = UnsafeProjection.create(schema)
+      body(Iterator.continually(r.next()).takeWhile(identity)
+        .flatMap(_ => r.get().rowIterator().asScala)
+        .map(row => copy(row).copy()))
+    } finally r.close()
+  }
+
+  /** LIVE-row count of one file under its DV + equality-delete probes
+    * (the scan-less COUNT's one-time probe pass): only the probe key
+    * chunks decode. */
+  def countLive(fp: GraftLakeFilePartition): Long = {
+    val r = reader(fp, new StructType(), Map.empty)
     var n = 0L
     try { while (r.next()) n += r.get().numRows() } finally r.close()
     n
+  }
+
+  /** The canonical non-null keys of an equality-delete keys file (one
+    * column, labelled with the key's write-time name). */
+  def keys(path: String, dt: DataType): Set[Any] = {
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(path)),
+      org.apache.parquet.HadoopReadOptions.builder(GraftParquetIO.conf())
+        .build())
+    val label = try footer.getFileMetaData.getSchema.getFieldName(0)
+      finally footer.close()
+    val fp = GraftLakeFilePartition(path, Array.empty, Seq(label), path,
+      Seq(dt), Seq(label))
+    val r = reader(fp, StructType(Seq(StructField(label, dt))), Map.empty)
+    val out = Set.newBuilder[Any]
+    try while (r.next()) {
+      val b = r.get()
+      var i = 0
+      while (i < b.numRows()) {
+        keyAt(b.column(0), dt, i) match {
+          case null => ()
+          case s: UTF8String => out += s.copy() // the vector is reused
+          case k => out += k
+        }
+        i += 1
+      }
+    } finally r.close()
+    out.result()
   }
 }

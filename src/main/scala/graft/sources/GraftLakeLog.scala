@@ -42,16 +42,14 @@ private[graft] final class GraftClaimConflict(msg: String)
   * fill = re-verify inode + atomic rename(2) over the claim.
   *
   * Object-store contract (S3-class, documented for the cluster port —
-  * not instantiable in this sandbox): claim = conditional PUT
+  * no implementation ships yet): claim = conditional PUT
   * (`If-None-Match: *`) of a zero-length marker, token = the returned
   * ETag / version-id; fill = conditional PUT (`If-Match: <token>`) of
   * the content — one round trip, no rename needed because the
   * conditional PUT IS the single-winner CAS; release = conditional
-  * DELETE (`If-Match: <token>`). Stores without conditional writes
-  * need a catalog-level swap (DynamoDB/REST catalog pointer CAS)
-  * behind this same trait. Everything above this seam — stale-claim
-  * reclamation policy, conflict semantics, revert-on-failure — is
-  * store-agnostic. */
+  * DELETE (`If-Match: <token>`). Everything above this seam —
+  * stale-claim reclamation policy, conflict semantics,
+  * revert-on-failure — is store-agnostic. */
 private[graft] trait GraftCommitArbiter {
   def claim(target: File): AnyRef
   def fill(target: File, token: AnyRef, src: File): Unit
@@ -133,120 +131,6 @@ private[graft] object PosixCommitArbiter extends GraftCommitArbiter {
         try Files.deleteIfExists(target.toPath)
         catch { case _: java.io.IOException => () }
     }
-}
-
-/** Catalog-swap arbitration for stores WITHOUT a conditional write —
-  * the documented fallback route at [[GraftCommitArbiter]] ("stores
-  * without conditional writes need a catalog-level swap behind this
-  * same trait"), expressed over the one primitive plain filesystems
-  * (and FUSE-mounted object-store gateways) share: rename(2) of a
-  * NON-EMPTY directory onto an existing name fails atomically in the
-  * kernel (ENOTEMPTY/EEXIST). Exclusivity therefore comes from a
-  * directory-pointer CAS, not from O_CREAT|O_EXCL:
-  *
-  *  - claim: write a uniquely-named PROPOSAL directory (unique names
-  *    never conflict — the object-store discipline) holding an
-  *    `owner.<uuid>` marker, then atomically swing it to the
-  *    per-target lock position `<name>.lock.d`. Exactly one swing
-  *    wins; the loser's rename fails in the kernel. The winner then
-  *    publishes the same zero-byte in-flight placeholder at the target
-  *    name the POSIX arbiter creates, so every artifact observable
-  *    above the seam — in-flight markers, stale ages, filled objects —
-  *    is identical.
-  *  - fill: verify our `owner.<uuid>` marker still sits in the lock
-  *    (a stale-reclaimer deletes the whole lock dir, marker included,
-  *    before installing its own — so a missing marker IS the lost
-  *    CAS), publish atomically over the placeholder, drop the lock.
-  *  - release: only with our marker still present — remove our
-  *    unfilled placeholder and the lock.
-  *
-  * Stale claims (writer died between swing and fill) are reclaimed at
-  * most once, gated by the same [[GraftLakeLog.staleClaim]] age on the
-  * placeholder — or, for the swing→placeholder crash window where no
-  * placeholder exists yet, by the lock directory's own age. */
-private[graft] object DirSwapCommitArbiter extends GraftCommitArbiter {
-  private def lockOf(target: File): File =
-    new File(target.getParentFile, target.getName + ".lock.d")
-  private def deleteTree(d: File): Unit = {
-    Option(d.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-    d.delete()
-  }
-  private def staleLock(lock: File, target: File): Boolean =
-    GraftLakeLog.staleClaim(target) || (!target.exists() &&
-      lock.lastModified() <
-        System.currentTimeMillis() - GraftLakeLog.StaleClaimMillis)
-
-  override def claim(target: File): AnyRef = {
-    def acquire(retriable: Boolean): String = {
-      // a FILLED object holds its name forever — same loud conflict as
-      // the POSIX arbiter's O_EXCL hit on a committed file
-      if (target.isFile && target.length() > 0L)
-        throw new GraftClaimConflict(
-          s"${target.getName} is already claimed or committed")
-      val owner = java.util.UUID.randomUUID().toString
-      val prop = new File(target.getParentFile,
-        s".${target.getName}.prop.$owner")
-      Files.createDirectory(prop.toPath)
-      Files.createFile(new File(prop, s"owner.$owner").toPath)
-      val lock = lockOf(target)
-      try {
-        // THE CAS: rename onto an existing non-empty lock dir fails
-        // atomically in the kernel — exactly one proposal wins
-        Files.move(prop.toPath, lock.toPath,
-          StandardCopyOption.ATOMIC_MOVE)
-        owner
-      } catch {
-        case _: java.nio.file.FileSystemException =>
-          deleteTree(prop)
-          if (retriable && staleLock(lock, target)) {
-            // abandoned in-flight claim: reclaim the name at most once
-            deleteTree(lock)
-            if (target.isFile && target.length() == 0L) target.delete()
-            acquire(retriable = false)
-          } else throw new GraftClaimConflict(
-            s"${target.getName} is already claimed or committed")
-      }
-    }
-    val owner = acquire(retriable = true)
-    // RE-CHECK FILLED UNDER THE LOCK: a racer that committed this name
-    // and dropped its lock between our pre-check and our swing would
-    // otherwise be clobbered by our fill's replacing publish. Holding
-    // the lock serializes this check against every other fill.
-    if (target.isFile && target.length() > 0L) {
-      deleteTree(lockOf(target))
-      throw new GraftClaimConflict(
-        s"${target.getName} is already claimed or committed")
-    }
-    // the zero-byte in-flight placeholder (under our lock, so no race):
-    // readers and the stale-age gate observe the same artifact the
-    // POSIX protocol leaves. An orphan placeholder from a crashed
-    // release is simply adopted — we hold the lock for this name.
-    try Files.createFile(target.toPath)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    owner
-  }
-
-  override def fill(target: File, token: AnyRef, src: File): Unit = {
-    val marker = new File(lockOf(target), s"owner.$token")
-    if (!marker.isFile) throw new GraftClaimConflict(
-      s"claim of ${target.getName} was reclaimed as stale")
-    Files.move(src.toPath, target.toPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    deleteTree(lockOf(target)) // filled: the name itself now conflicts
-  }
-
-  override def release(target: File, token: AnyRef): Unit = {
-    val lock = lockOf(target)
-    if (new File(lock, s"owner.$token").isFile) {
-      // provably ours and unfilled: drop placeholder first, then the
-      // lock — the reverse order could strand a zero-byte target that
-      // a later claim would have to adopt
-      if (target.isFile && target.length() == 0L)
-        try Files.deleteIfExists(target.toPath)
-        catch { case _: java.io.IOException => () }
-      deleteTree(lock)
-    }
-  }
 }
 
 /** DURABLE lake table metadata: commit history + file manifests
@@ -802,7 +686,15 @@ private[sources] object GraftLakeLog {
         while (w < words.length) { words(w) = bb.getLong; w += 1 }
         k.toInt -> words
       }.toMap,
-      pnames = arr(m, "pnames").map(_.asInstanceOf[JString].s),
+      // write-time labels are how the reader finds each column's chunk:
+      // a manifest without them cannot be read, so it fails the open
+      pnames = (m \ "pnames") match {
+        case JArray(vs) if vs.length == arr(m, "cols").length =>
+          vs.map(_.asInstanceOf[JString].s)
+        case _ => throw new IllegalStateException(
+          s"file manifest ${str(m, "id")} under $root has no write-time " +
+            "column labels (pnames) for its columns")
+      },
       ndv = objFields(m, "ndv").map { case (k, JString(b64)) =>
         k.toInt -> java.util.Base64.getDecoder.decode(b64)
       }.toMap)

@@ -3,15 +3,15 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The vectorized lake-scan contract (VERDICT r15 task 1): parquet-backed
-  * file groups decode through Spark's VectorizedParquetRecordReader into
-  * ColumnarBatches, and the physical plan shows it — `ColumnarToRow`
-  * above the BatchScan is the pin that a refactor can't silently drop
-  * back to row-at-a-time Group decode. Semantics stay the custom scan's:
-  * field-id resolution across RENAME, EXISTS-defaults for post-write ADD
-  * COLUMN, `_file`/`_pos` metadata, and a row fallback wherever a batch
-  * can't express the read (deletion vectors, widened types, nested
-  * columns). */
+/** The vectorized lake-read contract: every lake file decodes through
+  * the one reader (`GraftLakeColumnar.reader`, over Spark's
+  * VectorizedParquetRecordReader) into ColumnarBatches, and the physical
+  * plan shows it — `ColumnarToRow` above the BatchScan is the pin for
+  * every scan shape: deletion vectors, equality deletes, widened types,
+  * nested columns, post-write ADD COLUMN, metadata-only projections and
+  * the change feed. Semantics stay the custom scan's: field-id resolution
+  * across RENAME, EXISTS-defaults for post-write ADD COLUMN, and
+  * `_file`/`_pos` metadata. */
 class ColumnarScanSpec extends SparkTestBase {
 
   private def plan(df: DataFrame): String =
@@ -84,8 +84,8 @@ class ColumnarScanSpec extends SparkTestBase {
   }
 
   test("deletion vectors stay columnar: batches selection-filter against the DV") {
-    // VERDICT r16 task 1: a hot merge-on-read table is mostly DV'd
-    // between compactions — the decode win must survive row-level ops.
+    // a hot merge-on-read table is mostly DV'd between compactions —
+    // the decode win must survive row-level ops
     useCatalog()
     val t = "graftlake.spec_colscan_dv"
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -130,9 +130,8 @@ class ColumnarScanSpec extends SparkTestBase {
   }
 
   test("a post-MERGE merge-on-read table plans columnar and answers exactly") {
-    // the VERDICT r16 'done' gate: MERGE leaves DVs + insert files on a
-    // MoR table; the scan must keep the vectorized plan and the merged
-    // state must be exact.
+    // MERGE leaves DVs + insert files on a MoR table; the scan must keep
+    // the vectorized plan and the merged state must be exact
     useCatalog()
     val t = "graftlake.spec_colscan_mor"
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -161,9 +160,8 @@ class ColumnarScanSpec extends SparkTestBase {
   }
 
   test("widened columns decode columnar through the physical-type view") {
-    // VERDICT r16 task 2: one pre-ALTER file (INT/FLOAT physical) used
-    // to demote the WHOLE scan to the row path — Spark requires
-    // scan-uniform columnar-ness. The widening view keeps it columnar.
+    // a pre-ALTER file (INT/FLOAT physical) decodes at its physical type
+    // and the widening view presents the logical type
     useCatalog()
     val t = "graftlake.spec_colscan_widen"
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -283,11 +281,10 @@ class ColumnarScanSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("nested and DECIMAL(7,2) files: columnar scan and Group row reader exact") {
+  test("nested and DECIMAL(7,2) files: scan and lake reader exact") {
     // the writer stores DECIMAL(<=9) as INT32 and DECIMAL(10-18) as
-    // INT64; the vectorized scan and the Group row reader (the path of
-    // every scan `GraftLakeColumnar.eligible` rejects) must both serve
-    // either, nested columns included
+    // INT64; the scan and the reader's row stream (what compaction
+    // rewrites consume) must both serve either, nested columns included
     useCatalog()
     val t = "graftlake.spec_writer_readers"
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -322,11 +319,13 @@ class ColumnarScanSpec extends SparkTestBase {
     assert(plan(spark.table(t)).contains("ColumnarToRow"),
       s"parquet files must scan columnar:\n${plan(spark.table(t))}")
     assert(answers() == expected, s"columnar read: ${answers()}")
-    // row reader: write -> read one file over the same columns
+    // the reader's row stream: write -> read one file over the same
+    // columns
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
     import org.apache.spark.sql.types._
-    import graft.sources.GraftParquetIO
+    import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition,
+      GraftParquetIO}
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("small", DecimalType(7, 2)),
       StructField("big", DecimalType(16, 3)),
@@ -356,8 +355,10 @@ class ColumnarScanSpec extends SparkTestBase {
         pschema.getType(pschema.getFieldIndex(c)).asPrimitiveType
           .getPrimitiveTypeName.name) == Seq("INT32", "INT64"),
         s"both decimal encodings must be exercised: $pschema")
-      val got = GraftParquetIO.read(file.getPath,
-        schema.fields.map(_.dataType).toSeq).map(toScala)
+      val names = schema.fieldNames.toSeq
+      val got = GraftLakeColumnar.liveRows(GraftLakeFilePartition("f",
+        Array.empty, names, file.getPath, schema.fields.map(_.dataType).toSeq,
+        names))(_.map(toScala).toVector)
       assert(got == want, s"row read: ${got.take(3)}")
     } finally file.delete()
     // row-level op over the files (CoW rewrite reads via the scan)
@@ -387,6 +388,181 @@ class ColumnarScanSpec extends SparkTestBase {
         (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(agg.toSeq == (0L until 4L).map(p =>
       (p, 20L, (0L until 80L).filter(_ % 4 == p).sum)).toSeq, agg.toSeq)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a projection of only a post-write ADD COLUMN stays columnar and serves the default") {
+    useCatalog()
+    val t = "graftlake.spec_colscan_added_only"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
+    spark.range(0, 10).selectExpr("id AS k", "concat('old', id) AS s")
+      .coalesce(1).writeTo(t).append()
+    spark.sql(s"ALTER TABLE $t ADD COLUMNS (w BIGINT DEFAULT 7)")
+    spark.range(10, 15).selectExpr("id AS k", "concat('new', id) AS s",
+      "id * 100 AS w").coalesce(1).writeTo(t).append()
+    // the old file holds none of the projected columns: it decodes its
+    // narrowest chunk only to count rows and serves w as a constant
+    val df = spark.table(t).select("w")
+    assert(plan(df).contains("ColumnarToRow"),
+      s"a projection the old file cannot decode must stay columnar:\n" +
+        plan(df))
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
+      (Seq.fill(10)(7L) ++ (10L until 15L).map(_ * 100)).sorted)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a scan with no data columns (_file, _pos on a DV'd table) is columnar and counts exactly") {
+    useCatalog()
+    val t = "graftlake.spec_colscan_meta_only"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
+    spark.range(0, 5000).selectExpr("id AS k", "concat('v', id) AS s")
+      .coalesce(1).writeTo(t).append()
+    spark.range(5000, 5100).selectExpr("id AS k", "concat('v', id) AS s")
+      .coalesce(1).writeTo(t).append()
+    spark.sql(s"DELETE FROM $t WHERE k % 7 = 0")
+    val df = spark.table(t).select(col("_file"), col("_pos"))
+    assert(plan(df).contains("ColumnarToRow"),
+      s"a metadata-only projection must stay columnar:\n${plan(df)}")
+    val rows = df.collect().map(r => (r.getString(0), r.getLong(1)))
+    val live = (0L until 5100L).filterNot(_ % 7 == 0)
+    assert(rows.length == live.length)
+    // one file per append, written in k order: `_pos` is k in the
+    // first and k - 5000 in the second, DV'd positions skipped
+    assert(rows.map(_._2).sorted.toSeq ==
+      live.map(k => if (k < 5000) k else k - 5000).sorted)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("the change feed of a merge-on-read MERGE is columnar and exact") {
+    useCatalog()
+    val t = "graftlake.spec_colscan_cdf"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
+    spark.range(0, 30).where("id % 3 != 0")
+      .selectExpr("id AS k", "'o' AS s", "CAST(id AS DOUBLE) AS v")
+      .coalesce(1).writeTo(t).append()
+    val table = graft.sources.GraftLakeCatalog
+      .tableFor("graftlake", "spec_colscan_cdf").get
+    val loadedV = table.currentVersion
+    spark.range(0, 30).where("id % 2 = 0")
+      .selectExpr("id AS k", "'U' AS s", "CAST(id * 10 AS DOUBLE) AS v")
+      .createOrReplaceTempView("colscan_cdf_src")
+    spark.sql(s"""MERGE INTO $t t USING colscan_cdf_src b ON t.k = b.k
+      WHEN MATCHED THEN UPDATE SET s = b.s, v = b.v
+      WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (b.k, b.s, b.v)""")
+    val feed = spark.read
+      .option("graft.changes.from", loadedV.toString)
+      .option("graft.changes.to", table.currentVersion.toString)
+      .table(t)
+      .select(col("_change_type"), col("_commit_version") - loadedV,
+        col("k"), col("s"), col("v"))
+    assert(plan(feed).contains("ColumnarToRow"),
+      s"the change feed must decode columnar:\n${plan(feed)}")
+    val got = feed.collect().map(r => (r.getString(0), r.getLong(1),
+      r.getLong(2), r.getString(3), r.getDouble(4))).sorted.toSeq
+    val matched = (0L until 30L).filter(k => k % 2 == 0 && k % 3 != 0)
+    val want = (matched.map(k => ("delete", 1L, k, "o", k.toDouble)) ++
+      (0L until 30L).filter(_ % 2 == 0)
+        .map(k => ("insert", 1L, k, "U", k * 10.0))).sorted
+    assert(got == want, s"feed: $got")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("the change feed across an unresolved equality delete is columnar and exact") {
+    useCatalog()
+    val t = "graftlake.spec_colscan_eqcdf"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, v DOUBLE)")
+    spark.range(0, 30).where("id % 3 != 0")
+      .selectExpr("id AS k", "'o' AS s", "CAST(id AS DOUBLE) AS v")
+      .coalesce(1).writeTo(t).append()
+    val table = graft.sources.GraftLakeCatalog
+      .tableFor("graftlake", "spec_colscan_eqcdf").get
+    val loadedV = table.currentVersion
+    val land = java.nio.file.Files.createTempDirectory("eqcdf_land_").toFile
+    val chk = java.nio.file.Files.createTempDirectory("eqcdf_chk_").toFile
+    spark.range(0, 30).where("id % 2 = 0")
+      .selectExpr("id AS k", "'U' AS s", "CAST(id * 10 AS DOUBLE) AS v")
+      .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
+    try {
+      val q = spark.readStream.schema(spark.table(t).schema)
+        .parquet(land.getAbsolutePath)
+        .writeStream
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .option("graft.upsert.key", "k")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(t)
+      graft.streaming.StreamingOps.awaitDrained(q)
+    } finally Seq(land, chk).foreach(graft.sources.GraftParquetIO
+      .deleteRecursively)
+    assert(table.eqDeletes.nonEmpty,
+      "precondition: the feed is read under the unresolved equality delete")
+    val feed = spark.read
+      .option("graft.changes.from", loadedV.toString)
+      .option("graft.changes.to", table.currentVersion.toString)
+      .table(t)
+      .select(col("_change_type"), col("k"), col("s"), col("v"))
+    assert(plan(feed).contains("ColumnarToRow"),
+      s"the probed delete leg must decode columnar:\n${plan(feed)}")
+    val got = feed.collect().map(r => (r.getString(0), r.getLong(1),
+      r.getString(2), r.getDouble(3))).sorted.toSeq
+    val hit = (0L until 30L).filter(k => k % 2 == 0 && k % 3 != 0)
+    val want = (hit.map(k => ("delete", k, "o", k.toDouble)) ++
+      (0L until 30L).filter(_ % 2 == 0)
+        .map(k => ("insert", k, "U", k * 10.0))).sorted
+    assert(got == want, s"feed: $got")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a label absent from the file's footer fails the read instead of null-filling") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.types._
+    import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition,
+      GraftParquetIO}
+    val file = java.io.File.createTempFile("graft_labels", ".parquet")
+    file.delete()
+    try {
+      GraftParquetIO.write(file.getPath, Seq("k", "v"),
+        Seq(LongType, LongType), Vector.tabulate(5)(i =>
+          new GenericInternalRow(Array[Any](i.toLong, i * 2L)): InternalRow))
+      val required = StructType(Seq(StructField("k", LongType),
+        StructField("v", LongType)))
+      def read(labels: Seq[String]): Long = {
+        val r = GraftLakeColumnar.reader(GraftLakeFilePartition("f",
+          Array.empty, Seq("k", "v"), file.getPath,
+          Seq(LongType, LongType), labels), required, Map.empty)
+        var sum = 0L
+        try while (r.next()) {
+          val b = r.get()
+          (0 until b.numRows()).foreach(i => sum += b.column(1).getLong(i))
+        } finally r.close()
+        sum
+      }
+      assert(read(Seq("k", "v")) == 20L, "control: the true labels read")
+      // the manifest claims `v` is labelled `w`: the footer has no `w`
+      val e = intercept[Exception](read(Seq("k", "w")))
+      assert(causeMessages(e).contains("no column labelled w"),
+        s"the open must name the missing label: $e")
+    } finally file.delete()
+  }
+
+  test("ADD COLUMN with a nested DEFAULT is refused: no nested constant reaches a read") {
+    useCatalog()
+    val t = "graftlake.spec_colscan_nested_default"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
+    spark.range(0, 5).selectExpr("id AS k").coalesce(1).writeTo(t).append()
+    val e = intercept[Exception](spark.sql(
+      s"ALTER TABLE $t ADD COLUMNS (xs ARRAY<BIGINT> DEFAULT array(1, 2))"))
+    assert(causeMessages(e).contains("cannot persist lake metadata value"),
+      s"got: $e")
+    assert(spark.table(t).schema.fieldNames.toSeq == Seq("k") &&
+      spark.table(t).count() == 5)
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 }

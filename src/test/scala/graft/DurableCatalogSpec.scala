@@ -230,29 +230,17 @@ class DurableCatalogSpec extends SparkTestBase {
       "the reopened log must replay the same linear history")
   }
 
-  /** The cross-writer commit contract, parameterized by ARBITER
-    * (VERDICT r18 task 8): identical whether exclusivity comes from
-    * O_EXCL claims (POSIX / conditional PUT) or from the
-    * directory-pointer rename CAS. Since the auto-rebase landed
+  /** The cross-writer commit contract through the POSIX arbiter
+    * (O_EXCL claims). Since the auto-rebase landed
     * (Iceberg's commit-retry contract), a stale writer whose change is
     * COMPATIBLE under snapshot isolation — an append, or a row-level
     * delta whose target files the winner left untouched — refreshes
     * from the log and lands WITHOUT manual intervention; only a
     * genuine lost update (the winner touched the same rows) stays a
     * loud conflict, with the loser's in-memory mutation reverted. */
-  private def crossWriterCas(arbiter: graft.sources.GraftCommitArbiter,
-      tag: String): Unit = {
+  private def crossWriterCas(tag: String): Unit = {
     // the cross-driver shape the in-JVM registry cannot arbitrate: two
-    // catalog instances (separate registries) share one durable root.
-    // The helper installs the arbiter itself so the parameter cannot
-    // silently diverge from the active one.
-    val prevArbiter = graft.sources.GraftCommitArbiter.active
-    graft.sources.GraftCommitArbiter.active = arbiter
-    try crossWriterCasBody(tag)
-    finally graft.sources.GraftCommitArbiter.active = prevArbiter
-  }
-
-  private def crossWriterCasBody(tag: String): Unit = {
+    // catalog instances (separate registries) share one durable root
     useCatalog()
     spark.conf.set("spark.sql.catalog.graftdur2",
       classOf[graft.sources.GraftLakeCatalog].getName)
@@ -322,7 +310,7 @@ class DurableCatalogSpec extends SparkTestBase {
   }
 
   test("two catalogs over one warehouse: version-file CAS rejects the stale writer") {
-    crossWriterCas(graft.sources.PosixCommitArbiter, "posix")
+    crossWriterCas("posix")
   }
 
   test("a stale driver's append refuses to rebase past a cross-driver ADD CONSTRAINT") {
@@ -509,62 +497,40 @@ class DurableCatalogSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t1")
   }
 
-  test("dir-swap arbiter primitives: lock CAS, filled-name conflict, stale reclaim, lost fill") {
-    import graft.sources.{DirSwapCommitArbiter => arb, GraftClaimConflict}
-    val dir = java.nio.file.Files.createTempDirectory("dirswap_").toFile
-    def mkSrc(n: String): java.io.File = {
-      val f = new java.io.File(dir, n)
-      java.nio.file.Files.write(f.toPath, "content".getBytes("UTF-8"))
-      f
-    }
-    // (1) in-flight exclusivity: the second claim of a name loses at
-    // the directory-rename CAS while the first holds the lock
-    val v1 = new java.io.File(dir, "v1.json")
-    val tok1 = arb.claim(v1)
-    assert(v1.isFile && v1.length() == 0L, "in-flight placeholder")
-    intercept[GraftClaimConflict](arb.claim(v1))
-    // (2) fill publishes atomically, drops the lock; the FILLED name
-    // conflicts forever after
-    arb.fill(v1, tok1, mkSrc("s1"))
-    assert(v1.length() > 0L)
-    assert(!new java.io.File(dir, "v1.json.lock.d").exists())
-    intercept[GraftClaimConflict](arb.claim(v1))
-    // (3) stale reclaim: an abandoned claim older than the window is
-    // reclaimed AT MOST ONCE, and the stalled original's fill loses —
-    // its owner marker died with the reclaimed lock
-    val v2 = new java.io.File(dir, "v2.json")
-    val stalled = arb.claim(v2)
-    val old = System.currentTimeMillis() - 61L * 60 * 1000
-    assert(v2.setLastModified(old))
-    new java.io.File(dir, "v2.json.lock.d").setLastModified(old)
-    val reclaimer = arb.claim(v2) // wins by reclaiming
-    intercept[GraftClaimConflict](arb.fill(v2, stalled, mkSrc("s2")))
-    arb.fill(v2, reclaimer, mkSrc("s3"))
-    assert(v2.length() > 0L, "the reclaimer's commit survives")
-    // (4) release removes only an UNFILLED claim of our own; the name
-    // is immediately reusable
-    val v3 = new java.io.File(dir, "v3.json")
-    val tok3 = arb.claim(v3)
-    arb.release(v3, tok3)
-    assert(!v3.exists() && !new java.io.File(dir, "v3.json.lock.d").exists())
-    val tok4 = arb.claim(v3)
-    arb.fill(v3, tok4, mkSrc("s4"))
-    assert(v3.length() > 0L)
-    // ... and release never touches a filled object
-    arb.release(v3, tok4)
-    assert(v3.length() > 0L)
-  }
-
-  test("two catalogs, dir-swap arbiter: the rename-CAS route rejects the stale writer") {
-    // the SAME contract through DirSwapCommitArbiter — proof the
-    // non-conditional-store route (catalog swap via atomic directory
-    // rename) arbitrates cross-writer races identically (VERDICT r18
-    // task 8)
-    val prev = graft.sources.GraftCommitArbiter.active
-    graft.sources.GraftCommitArbiter.active =
-      graft.sources.DirSwapCommitArbiter
-    try crossWriterCas(graft.sources.DirSwapCommitArbiter, "dirswap")
-    finally graft.sources.GraftCommitArbiter.active = prev
+  test("a file manifest restored without write-time labels fails the open and names it") {
+    useCatalog()
+    val t = "graftdur.dur_unlabeled"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
+    spark.range(0, 10).selectExpr("id AS k", "concat('a', id) AS s")
+      .coalesce(1).writeTo(t).append()
+    spark.range(10, 20).selectExpr("id AS k", "concat('b', id) AS s")
+      .coalesce(1).writeTo(t).append()
+    val logDir = new java.io.File(new java.io.File(wh, "dur_unlabeled"),
+      "_graft_log")
+    val manifests = Option(logDir.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".manifest.json")).sortBy(_.getName)
+    assert(manifests.length == 2,
+      s"precondition: one loose manifest per data file, got " +
+        manifests.map(_.getName).mkString(", "))
+    // strip the labels from ONE manifest, as a pre-label writer left it
+    val m = manifests.head
+    import org.json4s._
+    val json = org.json4s.jackson.JsonMethods.parse(
+      new String(java.nio.file.Files.readAllBytes(m.toPath), "UTF-8"))
+    val stripped = json.removeField(_._1 == "pnames")
+    assert(stripped != json, "precondition: the manifest carried pnames")
+    java.nio.file.Files.write(m.toPath, org.json4s.jackson.JsonMethods
+      .compact(stripped).getBytes("UTF-8"))
+    evict("dur_unlabeled")
+    val e = intercept[Exception](spark.table(t).collect())
+    val msg = causeMessages(e)
+    assert(msg.contains("no write-time column labels") &&
+      msg.contains("dur_unlabeled#f"),
+      s"the open must fail loudly and name the manifest: $msg")
+    graft.sources.GraftParquetIO.deleteRecursively(
+      new java.io.File(wh, "dur_unlabeled"))
+    graft.sources.GraftLakeCatalog.evict("graftdur", "dur_unlabeled")
   }
 
   test("atomic CTAS/RTAS: staged publish, failures leave nothing, REPLACE flips atomically") {

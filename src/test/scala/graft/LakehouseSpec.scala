@@ -412,8 +412,9 @@ class LakehouseSpec extends SparkTestBase {
         Expressions.literal(UTF8String.fromString(id)))).toArray[
         org.apache.spark.sql.connector.expressions.Expression]))
     val snap = GraftLakeSnapshot(
-      Vector(GraftLakeFile("t#f1", Seq(0), "t/f1.parquet"),
-        GraftLakeFile("t#f2", Seq(0), "t/f2.parquet")), Map.empty)
+      Vector(GraftLakeFile("t#f1", Seq(0), "t/f1.parquet", pnames = Seq("k")),
+        GraftLakeFile("t#f2", Seq(0), "t/f2.parquet", pnames = Seq("k"))),
+      Map.empty)
     def scanWith(current: Set[String]) = new GraftLakeScan(snap, schema,
       schema, Nil, Some(new GroupScanState(Set("t#f1", "t#f2"))),
       () => current, Map(0 -> "k"))
@@ -4092,7 +4093,7 @@ class LakehouseSpec extends SparkTestBase {
       case c: graft.sources.GraftLakeChangePartition => c }
     assert(cps.length == 2, s"insert leg + DV-growth delete leg: ${
       cps.map(c => (c.changeType, c.version)).toSeq}")
-    cps.foreach(c => assert(new java.io.File(c.path).isFile,
+    cps.foreach(c => assert(new java.io.File(c.file.path).isFile,
       s"${c.changeType} leg must ship a path, not rows"))
     // ... and the feed still renders exactly the right rows
     val feed = spark.read.option("graft.changes.from", "0").table(s"$t.changes")

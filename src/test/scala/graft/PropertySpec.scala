@@ -225,26 +225,46 @@ object PropertySpec extends Properties("graft.kernels") {
       : org.apache.spark.sql.catalyst.InternalRow)
 
   /** Rows `0 until n` read back through a one-column (`k BIGINT`) lake
-    * file's row reader, with `dead` as the file's deletion vector. */
+    * file's reader, with `dead` as the file's deletion vector. */
   private def dvRead(n: Int, dead: Set[Int],
       req: org.apache.spark.sql.types.StructType)
       : List[org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import graft.sources.{GraftLakeFilePartition, GraftLakeReaderFactory,
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.LongType
+    import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition,
       GraftParquetIO}
     val f = java.io.File.createTempFile("graft_dv_prop", ".parquet")
     f.delete() // the writer creates a NEW file
     try {
       GraftParquetIO.write(f.getAbsolutePath, Seq("k"), Seq(LongType),
         lakeRows(n))
-      val reader = new GraftLakeReaderFactory(
-        StructType(Seq(StructField("k", LongType))), req)
-        .createReader(GraftLakeFilePartition("f",
-          dead.map(_.toLong).toArray.sorted, Seq("k"), f.getAbsolutePath,
-          Seq(LongType)))
+      val reader = GraftLakeColumnar.reader(GraftLakeFilePartition("f",
+        dead.map(_.toLong).toArray.sorted, Seq("k"), f.getAbsolutePath,
+        Seq(LongType), Seq("k")), req, Map.empty)
       val got = List.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
-      while (reader.next()) got += reader.get().copy()
+      try while (reader.next())
+        reader.get().rowIterator().asScala.foreach(got += _.copy())
+      finally reader.close()
       got.result()
+    } finally { f.delete(); () }
+  }
+
+  /** Write `rows` as a lake file and read them back through the one
+    * reader ([[graft.sources.GraftLakeColumnar.liveRows]]): (file bytes,
+    * rows). */
+  private def lakeRoundTrip(names: Seq[String],
+      types: Seq[org.apache.spark.sql.types.DataType],
+      rows: Vector[org.apache.spark.sql.catalyst.InternalRow])
+      : (Long, List[org.apache.spark.sql.catalyst.InternalRow]) = {
+    import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition,
+      GraftParquetIO}
+    val f = java.io.File.createTempFile("graft_pq_prop", ".parquet")
+    f.delete() // parquet-mr refuses to overwrite an existing file
+    try {
+      val bytes = GraftParquetIO.write(f.getAbsolutePath, names, types,
+        rows)
+      (bytes, GraftLakeColumnar.liveRows(GraftLakeFilePartition("f",
+        Array.empty, names, f.getAbsolutePath, types, names))(_.toList))
     } finally { f.delete(); () }
   }
 
@@ -280,21 +300,15 @@ object PropertySpec extends Properties("graft.kernels") {
           s.map(UTF8String.fromString).orNull, b.map(Boolean.box).orNull))
           : org.apache.spark.sql.catalyst.InternalRow
       }.toVector
-      val f = java.io.File.createTempFile("graft_pq_prop", ".parquet")
-      f.delete() // parquet-mr refuses to overwrite an existing file
-      try {
-        val bytes = graft.sources.GraftParquetIO.write(f.getAbsolutePath,
-          Seq("l", "d", "s", "b"), types, rows)
-        val back = graft.sources.GraftParquetIO.read(f.getAbsolutePath, types)
-        bytes > 0 && back.length == rows.length &&
-          back.zip(rows).forall { case (g, e) =>
-            (0 until 4).forall { i =>
-              (g.isNullAt(i) && e.isNullAt(i)) ||
-                (!g.isNullAt(i) && !e.isNullAt(i) &&
-                  g.get(i, types(i)) == e.get(i, types(i)))
-            }
+      val (bytes, back) = lakeRoundTrip(Seq("l", "d", "s", "b"), types, rows)
+      bytes > 0 && back.length == rows.length &&
+        back.zip(rows).forall { case (g, e) =>
+          (0 until 4).forall { i =>
+            (g.isNullAt(i) && e.isNullAt(i)) ||
+              (!g.isNullAt(i) && !e.isNullAt(i) &&
+                g.get(i, types(i)) == e.get(i, types(i)))
           }
-      } finally { f.delete(); () }
+        }
     }
 
   // arrays (parquet 3-level LIST groups): null arrays, EMPTY arrays and
@@ -325,22 +339,15 @@ object PropertySpec extends Properties("graft.kernels") {
           arr(sa.map(_.map(_.map(UTF8String.fromString))))))
           : org.apache.spark.sql.catalyst.InternalRow
       }.toVector
-      val f = java.io.File.createTempFile("graft_pq_arr", ".parquet")
-      f.delete()
-      try {
-        graft.sources.GraftParquetIO.write(f.getAbsolutePath,
-          Seq("emb", "tags"), types, rows)
-        val back = graft.sources.GraftParquetIO.read(f.getAbsolutePath,
-          types)
-        def norm(r: org.apache.spark.sql.catalyst.InternalRow)
-            : (Option[List[Any]], Option[List[Any]]) = (
-          if (r.isNullAt(0)) None
-          else Some(r.getArray(0).toObjectArray(FloatType).toList),
-          if (r.isNullAt(1)) None
-          else Some(r.getArray(1).toObjectArray(StringType).toList))
-        back.length == rows.length &&
-          back.map(norm) == rows.map(norm)
-      } finally { f.delete(); () }
+      val back = lakeRoundTrip(Seq("emb", "tags"), types, rows)._2
+      def norm(r: org.apache.spark.sql.catalyst.InternalRow)
+          : (Option[List[Any]], Option[List[Any]]) = (
+        if (r.isNullAt(0)) None
+        else Some(r.getArray(0).toObjectArray(FloatType).toList),
+        if (r.isNullAt(1)) None
+        else Some(r.getArray(1).toObjectArray(StringType).toList))
+      back.length == rows.length &&
+        back.map(norm) == rows.map(norm)
     }
 
   // nested containers (STRUCT groups, 3-level MAP, ARRAY<STRUCT>): the
@@ -389,37 +396,30 @@ object PropertySpec extends Properties("graft.kernels") {
           }.orNull).toArray[Any])).orNull))
           : org.apache.spark.sql.catalyst.InternalRow
       }.toVector
-      val f = java.io.File.createTempFile("graft_pq_nested", ".parquet")
-      f.delete()
-      try {
-        graft.sources.GraftParquetIO.write(f.getAbsolutePath,
-          Seq("st", "m", "aos"), types, rows)
-        val back = graft.sources.GraftParquetIO.read(f.getAbsolutePath,
-          types)
-        // canonical view: every container flattened to comparable scala
-        def normStruct(v: Any): Any = v match {
+      val back = lakeRoundTrip(Seq("st", "m", "aos"), types, rows)._2
+      // canonical view: every container flattened to comparable scala
+      def normStruct(v: Any): Any = v match {
+        case null => null
+        case r: org.apache.spark.sql.catalyst.InternalRow =>
+          (if (r.isNullAt(0)) null else r.getLong(0),
+            if (r.isNullAt(1)) null else r.getUTF8String(1).toString)
+      }
+      def norm(r: org.apache.spark.sql.catalyst.InternalRow) = (
+        normStruct(if (r.isNullAt(0)) null else r.getStruct(0, 2)),
+        if (r.isNullAt(1)) null
+        else {
+          val m = r.getMap(1)
+          m.keyArray().toObjectArray(StringType).map(_.toString).toList
+            .zip(m.valueArray().toObjectArray(DoubleType).toList)
+        },
+        if (r.isNullAt(2)) null
+        else r.getArray(2).toObjectArray(aosElemT).toList.map {
           case null => null
-          case r: org.apache.spark.sql.catalyst.InternalRow =>
-            (if (r.isNullAt(0)) null else r.getLong(0),
-              if (r.isNullAt(1)) null else r.getUTF8String(1).toString)
-        }
-        def norm(r: org.apache.spark.sql.catalyst.InternalRow) = (
-          normStruct(if (r.isNullAt(0)) null else r.getStruct(0, 2)),
-          if (r.isNullAt(1)) null
-          else {
-            val m = r.getMap(1)
-            m.keyArray().toObjectArray(StringType).map(_.toString).toList
-              .zip(m.valueArray().toObjectArray(DoubleType).toList)
-          },
-          if (r.isNullAt(2)) null
-          else r.getArray(2).toObjectArray(aosElemT).toList.map {
-            case null => null
-            case e: org.apache.spark.sql.catalyst.InternalRow =>
-              (if (e.isNullAt(0)) null else e.getInt(0),
-                if (e.isNullAt(1)) null else e.getUTF8String(1).toString)
-          })
-        back.length == rows.length && back.map(norm) == rows.map(norm)
-      } finally { f.delete(); () }
+          case e: org.apache.spark.sql.catalyst.InternalRow =>
+            (if (e.isNullAt(0)) null else e.getInt(0),
+              if (e.isNullAt(1)) null else e.getUTF8String(1).toString)
+        })
+      back.length == rows.length && back.map(norm) == rows.map(norm)
     }
 
   // ---- min/max file-skipping soundness ------------------------------------
@@ -442,6 +442,7 @@ object PropertySpec extends Properties("graft.kernels") {
       val stats = graft.sources.GraftLakeStats.collect(
         rows, Seq(7), Seq(LongType))
       val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
+        pnames = Seq("k"),
         numRows = rows.length, stats = stats)
       val pred = new Predicate(op, Array(
         Expressions.column("k"), Expressions.literal(lit)))
@@ -491,6 +492,7 @@ object PropertySpec extends Properties("graft.kernels") {
       val (nstats, nnulls) = graft.sources.GraftLakeStats.collectNested(
         rows, Seq(7), Seq(stT))
       val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
+        pnames = Seq("s"),
         numRows = rows.length,
         types = Seq(stT), nstats = nstats, nnulls = nnulls)
       val ref = Expressions.column("s.leaf")
@@ -548,6 +550,7 @@ object PropertySpec extends Properties("graft.kernels") {
         rows, Seq(7), Seq(DoubleType))
       val nulls = graft.sources.GraftLakeStats.nullCounts(rows, Seq(7))
       val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
+        pnames = Seq("k"),
         numRows = rows.length,
         stats = stats, nulls = nulls)
       val colRef = Expressions.column("k")
@@ -619,6 +622,7 @@ object PropertySpec extends Properties("graft.kernels") {
         rows, Seq(3), Seq(StringType))
       val nulls = graft.sources.GraftLakeStats.nullCounts(rows, Seq(3))
       val f = graft.sources.GraftLakeFile("f", Seq(3), "f.parquet",
+        pnames = Seq("s"),
         numRows = rows.length,
         stats = stats, nulls = nulls)
       val colRef = Expressions.column("s")
@@ -753,6 +757,7 @@ object PropertySpec extends Properties("graft.kernels") {
       val rows = Vector.fill(n)(new GenericInternalRow(
         Array[Any](0L)): InternalRow)
       val f = graft.sources.GraftLakeFile("f", Seq(1), "f.parquet",
+        pnames = Seq("s"),
         numRows = rows.length)
       val defaults: Map[Int, Any] =
         dflt.map(d => Map(3 -> (UTF8String.fromString(d): Any)))
@@ -823,6 +828,7 @@ object PropertySpec extends Properties("graft.kernels") {
           Array[Any](v))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
       val f = GraftLakeFile("f", Seq(0), "f.parquet",
+        pnames = Seq("c"),
         numRows = rows.length, types = Seq(LongType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(LongType)),
         nulls = Map(0 -> 0L),
@@ -840,6 +846,7 @@ object PropertySpec extends Properties("graft.kernels") {
           Array[Any](UTF8String.fromString(v)))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
       val f = GraftLakeFile("f", Seq(0), "f.parquet",
+        pnames = Seq("c"),
         numRows = rows.length, types = Seq(StringType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(StringType)),
         nulls = Map(0 -> 0L),
@@ -859,6 +866,7 @@ object PropertySpec extends Properties("graft.kernels") {
           Array[Any](v))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
       val f = GraftLakeFile("f", Seq(0), "f.parquet",
+        pnames = Seq("c"),
         numRows = rows.length, types = Seq(IntegerType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(IntegerType)),
         nulls = Map(0 -> 0L),
