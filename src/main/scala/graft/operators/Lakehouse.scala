@@ -1197,7 +1197,7 @@ object Lakehouse {
       "_pid" + ProcessHandle.current().pid()
     val chk = new File(tmp, s"graft_scdf_chk_$tag")
     val sink = new File(tmp, s"graft_scdf_sink_$tag")
-    Seq(chk, sink).foreach(graft.streaming.StreamingOps.deleteRecursively)
+    Seq(chk, sink).foreach(graft.sources.GraftParquetIO.deleteRecursively)
     def drain(): Unit = Session.withLeanDrain(spark, chk.getAbsolutePath) {
       val q = spark.readStream
         .option("graft.stream.startingVersion", "0")
@@ -1311,7 +1311,7 @@ object Lakehouse {
       "_pid" + ProcessHandle.current().pid()
     val land = new File(tmp, s"graft_ssink_land_$tag")
     val chk = new File(tmp, s"graft_ssink_chk_$tag")
-    Seq(land, chk).foreach(graft.streaming.StreamingOps.deleteRecursively)
+    Seq(land, chk).foreach(graft.sources.GraftParquetIO.deleteRecursively)
     val base = Tables(spark, sfDir, "events")
       .select(col("event_id"), col("event_type"), col("user_id"),
         col("value"))
@@ -1369,7 +1369,7 @@ object Lakehouse {
       "_pid" + ProcessHandle.current().pid()
     val land = new File(tmp, s"graft_eqd_land_$tag")
     val chk = new File(tmp, s"graft_eqd_chk_$tag")
-    Seq(land, chk).foreach(graft.streaming.StreamingOps.deleteRecursively)
+    Seq(land, chk).foreach(graft.sources.GraftParquetIO.deleteRecursively)
     // the upsert batch arrives as 3 landing files → 3 epochs, each
     // committing (data files + equality-delete keys file) atomically
     base.filter(col("o_orderkey") % 2 === 0)
@@ -1419,7 +1419,7 @@ object Lakehouse {
       "_pid" + ProcessHandle.current().pid()
     val land = new File(tmp, s"graft_eqdcf_land_$tag")
     val chk = new File(tmp, s"graft_eqdcf_chk_$tag")
-    Seq(land, chk).foreach(graft.streaming.StreamingOps.deleteRecursively)
+    Seq(land, chk).foreach(graft.sources.GraftParquetIO.deleteRecursively)
     base.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
@@ -1598,7 +1598,7 @@ object Lakehouse {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
       "_pid" + ProcessHandle.current().pid()
     val wh = new File(tmp, s"graft_ctas_wh_$tag")
-    graft.streaming.StreamingOps.deleteRecursively(wh)
+    graft.sources.GraftParquetIO.deleteRecursively(wh)
     spark.conf.set("spark.sql.catalog.gctas",
       classOf[graft.sources.GraftLakeCatalog].getName)
     spark.conf.set("spark.sql.catalog.gctas.warehouse", wh.getAbsolutePath)
@@ -1642,7 +1642,7 @@ object Lakehouse {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
       "_pid" + ProcessHandle.current().pid()
     val wh = new File(tmp, s"graft_cw_wh_$tag")
-    graft.streaming.StreamingOps.deleteRecursively(wh)
+    graft.sources.GraftParquetIO.deleteRecursively(wh)
     Seq("gcw", "gcw2").foreach { c =>
       spark.conf.set(s"spark.sql.catalog.$c",
         classOf[graft.sources.GraftLakeCatalog].getName)

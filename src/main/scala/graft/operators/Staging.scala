@@ -103,16 +103,12 @@ private[graft] object Staging {
             StandardOpenOption.CREATE, StandardOpenOption.WRITE)
           try {
             Option(ch.tryLock()).foreach { l =>
-              try { deleteRecursively(sib); lockFile.delete() }
-              finally l.release()
+              try {
+                graft.sources.GraftParquetIO.deleteRecursively(sib)
+                lockFile.delete()
+              } finally l.release()
             }
           } finally ch.close()
         }
     } catch { case _: Exception => () }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
 }

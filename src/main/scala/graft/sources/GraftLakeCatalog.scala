@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1742,31 +1742,32 @@ final case class GraftLakeSnapshot(files: Vector[GraftLakeFile],
 
 /** One EQUALITY DELETE (the Flink→Iceberg
   * streaming-upsert shape): all rows whose `colId` value appears in the
-  * keys file at `path` are logically deleted from every data file whose
+  * keys file at `path` (one column, written under the parquet `label`)
+  * are logically deleted from every data file whose
   * file NUMBER is ≤ `belowSeq` (the sequence-number applicability rule:
   * files minted after the delete — including every rewrite, whose rows
   * were read through the delete — are untouched). Written WITHOUT any
   * read-side probe of existing data; `CALL system.compact` resolves it
   * into rewrites. Keys are read EXECUTOR-side by the scan tasks; the
   * driver only ships the path. */
-final case class GraftEqDelete(colId: Int, path: String, belowSeq: Int,
-    valueType: DataType) {
+final case class GraftEqDelete(colId: Int, path: String, label: String,
+    belowSeq: Int, valueType: DataType) {
   def appliesTo(f: GraftLakeFile): Boolean =
     GraftEqDelete.seqOf(f.id) <= belowSeq
   /** THE applicability rule every consumer shares: the
     * probe spec of this epoch against `f` — (key column position in
-    * the FILE layout, keys path, value type) — or None when the epoch
+    * the FILE layout, this delete) — or None when the epoch
     * cannot touch the file: wrong sequence range, or the file PREDATES
     * the key column (no row can match a key it never stored). Scan
     * planning, compaction candidates, live counts, the change feed,
     * and the retention prune all decide through this one method, so
     * "applicable" can never mean different things to different
     * consumers. */
-  def probeFor(f: GraftLakeFile): Option[(Int, String, DataType)] =
+  def probeFor(f: GraftLakeFile): Option[(Int, GraftEqDelete)] =
     if (!appliesTo(f)) None
     else {
       val i = f.cols.indexOf(colId)
-      if (i < 0) None else Some((i, path, valueType))
+      if (i < 0) None else Some((i, this))
     }
 }
 
@@ -1789,8 +1790,8 @@ object GraftEqDelete {
     * feed), so canonicalization/null semantics cannot diverge.
     * `compute` holds the bin lock while loading, so concurrent tasks on
     * one executor block for the one load instead of racing N reads. */
-  def loadProbe(path: String, valueType: DataType): Set[Any] = {
-    val key = (path, valueType)
+  def loadProbe(e: GraftEqDelete): Set[Any] = {
+    val key = (e.path, e.valueType)
     var out: Set[Any] = null
     while (out == null) {
       val ref = probeCache.compute(key, (_, old) => {
@@ -1798,7 +1799,7 @@ object GraftEqDelete {
         else {
           probeReads.incrementAndGet()
           new java.lang.ref.SoftReference(
-            GraftLakeColumnar.keys(path, valueType))
+            GraftLakeColumnar.keys(e.path, e.label, e.valueType))
         }
       })
       out = ref.get()
@@ -1917,7 +1918,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   /** Task-side write recipe: the table dir plus the CURRENT schema
     * identity, captured when the write is built — adoption re-validates
     * the ids at commit, so a concurrent ALTER still aborts loudly (see
-    * [[adoptFile]]). */
+    * [[mint]]). */
   private def fileWriteInfo: GraftLakeFileWriteInfo = synchronized(
     GraftLakeFileWriteInfo(lakeDir.getAbsolutePath,
       schemaNow.fieldNames.toSeq, schemaNow.fields.map(_.dataType).toSeq,
@@ -2006,7 +2007,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * commit and a constraint rewrite can leave a predicate naming a
     * dead column. It also gives the rebase admission
     * guard a rename-stable identity to compare (see
-    * [[requireNoNewChecks]]). A NESTED reference (`s.leaf`) keys on its
+    * [[admitsChecks]]). A NESTED reference (`s.leaf`) keys on its
     * ROOT column — only top-level columns carry ids, and a rename can
     * only touch the root — so `s.leaf > 0` persists as
     * `__gcol_<id(s)>__.leaf > 0`. Attributes whose root matches no
@@ -2149,6 +2150,15 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           require(GraftParquetIO.supported(add.dataType()),
             s"lake tables cannot store added column " +
               s"${add.fieldNames()(0)}: ${add.dataType().sql}")
+          // the EXISTS-default persists as a scalar in the commit record
+          // and serves pre-evolution files as a constant column
+          require(add.defaultValue() == null || (add.dataType() match {
+              case _: ArrayType | _: MapType | _: StructType => false
+              case _ => true
+            }),
+            s"added column ${add.fieldNames()(0)} " +
+              s"(${add.dataType().sql}) cannot take a DEFAULT: nested " +
+              "defaults are unsupported on lake tables")
           checkFresh(add.fieldNames()(0))
           // DEFAULT <literal>: the internal value becomes the id's
           // EXISTS-DEFAULT (what pre-evolution files read back — the
@@ -2436,8 +2446,9 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   // DV-skew check against the refreshed state, so a winner that only
   // appended rebases silently while a winner that touched the same
   // rows stays a LOUD conflict; blind replacements (INSERT OVERWRITE,
-  // Complete-mode epochs) never rebase — their outcome is
-  // order-dependent by definition.
+  // Complete-mode epochs, rollback, publish) land only at the version
+  // they started from — their outcome is order-dependent by definition.
+  // Every commit runs through [[mint]] and [[commit]].
 
   /** Count of cross-writer rebases this table performed (test probe). */
   @volatile private[graft] var rebases: Long = 0L
@@ -2457,14 +2468,13 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     false
   }
 
-  /** Adopt the durable log's CURRENT state in place — the rebase
-    * refresh. The registry entry is a cache over `_graft_log`; this is
-    * the same verbatim installation a reopen performs, minus the new
-    * object. `fileSeq` only ever moves FORWARD: numbers this writer
-    * claimed (or collided on) must never be re-minted, and a crashed
-    * writer's orphan object is skipped the same way. */
-  private def refreshFromLog(): Unit = {
-    val r = GraftLakeLog.restore(lakeDir)
+  /** Install a restored log state verbatim — what a reopen does at
+    * construction and what a CAS loss refreshes to (the registry entry
+    * is a cache over `_graft_log`). `fileSeq` only ever moves FORWARD:
+    * numbers this writer claimed (or collided on) must never be
+    * re-minted, and a crashed writer's orphan object is skipped the
+    * same way. */
+  private def install(r: GraftLakeLog.Restored): Unit = {
     files = r.files
     dvs = r.dvs
     eqs = r.history.last._1.eqs
@@ -2485,14 +2495,18 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     if (r.pspecNow.nonEmpty || r.pspecId > 0) specNow = r.pspecNow
     checks = constraintsFromRestore(r.constraints)
     if (checks.nonEmpty) everHadConstraints = true
+  }
+
+  /** The rebase refresh: adopt the durable log's CURRENT state. */
+  private def refreshFromLog(): Unit = {
+    install(GraftLakeLog.restore(lakeDir))
     rebases += 1
   }
 
-  /** THE retry skeleton every rebase path shares: run `body`; on a CAS
-    * loss, refresh from the log and re-run, bounded by
-    * [[GraftLakeTable.MaxCommitRebases]]. Any FINAL failure — a
-    * non-CAS error, or an exhausted retry budget — runs `cleanup` once
-    * before propagating. */
+  /** Run `body`; on a CAS loss, refresh from the log and re-run,
+    * bounded by [[GraftLakeTable.MaxCommitRebases]]. Any FINAL failure
+    * — a non-CAS error, or an exhausted retry budget — runs `cleanup`
+    * once before propagating. Only [[mint]] and [[commit]] call it. */
   private def retryCas[T](cleanup: => Unit = ())(body: => T): T = {
     var tries = 0
     while (true) {
@@ -2510,14 +2524,42 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     throw new IllegalStateException("unreachable")
   }
 
-  /** Run `attempt` (validate → mutate → recordCommit); on a CAS loss,
-    * refresh and re-run, bounded. recordCommit reverts the in-memory
-    * mutation before propagating, so every iteration starts from a
-    * durable state. `attempt` must NOT mint files — minted artifacts
-    * (exclusively-claimed numbers, durable manifests) are created once
-    * by [[mintWithRebase]] and re-applied verbatim on every retry. */
-  private def commitWithRebase(attempt: () => Unit): Unit =
-    retryCas()(attempt())
+  /** THE commit loop every table commit (data and maintenance) runs:
+    * each attempt re-runs `admit` against the current state, then
+    * `apply` mutates it and [[recordCommit]] claims the next version.
+    * On a CAS loss the state is refreshed from the log and the attempt
+    * re-runs; recordCommit reverts the in-memory mutation before
+    * propagating, so every attempt starts from a durable state.
+    * `admit` throws a loud conflict, or returns false when nothing is
+    * left to commit (a delete that drops no file). A `txn` epoch the
+    * table already recorded — this driver's replay, or a zombie
+    * driver's epoch another driver landed first — commits nothing.
+    * Neither `admit` nor `apply` mints: minted artifacts come from
+    * [[mint]] once and are re-applied verbatim on every attempt. */
+  private def commit(admit: => Boolean, dataChange: Boolean,
+      txn: Option[(String, Long)] = None)(apply: => Unit): Unit =
+    retryCas() {
+      val replayed = txn.exists { case (q, e) =>
+        streamEpochs.get(q).exists(_ >= e) }
+      if (!replayed && admit) {
+        apply
+        recordCommit(dataChange, txn)
+        txn.foreach(streamEpochs += _)
+      }
+    }
+
+  /** Admission of a BLIND replacement (INSERT OVERWRITE, a Complete-mode
+    * epoch, rollback, publish): its outcome depends on commit order, so
+    * it lands only at the version it started from — a concurrent commit
+    * is a loud conflict, never silently erased. A lost CAS has already
+    * refreshed the state, so re-running the statement lands. */
+  private def admitsAt(v0: Int, what: String): Boolean = {
+    if (currentVersion != v0) throw new IllegalStateException(
+      s"write conflict on $tableName: a concurrent commit moved it from " +
+        s"version $v0 to $currentVersion while $what was replacing its " +
+        "contents — re-run the statement against the current state")
+    true
+  }
 
   /** Loud-conflict guard every data commit's rebase attempt runs:
     * CHECK enforcement is injected by the ANALYZER, so a write planned
@@ -2533,7 +2575,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * natural way to tighten a check) is still a loud conflict, while a
     * concurrent RENAME COLUMN (id-stable, semantics unchanged) rebases
     * fine. Concurrent DROPs are always compatible. */
-  private def requireNoNewChecks(planned: Set[(String, String)]): Unit = {
+  private def admitsChecks(planned: Set[(String, String)]): Boolean = {
     val fresh = checks
       .map(c => (c.name, canonicalCheckSql(c.predicateSql)))
       .filterNot(planned)
@@ -2543,6 +2585,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         "write was planned — its rows were never validated against " +
         "them; re-run the statement so the analyzer injects the new " +
         "check(s)")
+    true
   }
   /** The constraint identities a write is planned under — captured at
     * builder/operation construction, compared by every rebase. */
@@ -2556,9 +2599,9 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * snapshot under FRESH file numbers above it, so the winner's
     * deletes can never apply to them and the upserted key would end up
     * with two live rows. The maintenance paths already
-    * refuse this (maintenanceRebaseOk's eqs check); this is the same
+    * refuse this ([[commitRewrite]]'s eqs check); this is the same
     * admission rule for UPDATE/MERGE/DELETE commits. */
-  private def requireNoNewEqEpochs(eqs0: Vector[GraftEqDelete]): Unit = {
+  private def admitsEqEpochs(eqs0: Vector[GraftEqDelete]): Boolean = {
     val fresh = eqs.filterNot(eqs0.contains)
     if (fresh.nonEmpty) throw new IllegalStateException(
       s"write conflict on $tableName: ${fresh.length} concurrent " +
@@ -2566,26 +2609,66 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         "snapshot — their logical deletes cannot apply to this " +
         "statement's rewritten rows (fresh file numbers exceed the " +
         "delete sequence); retry the statement against the current state")
+    true
   }
 
-  /** Mint pendings into claimed, durable files, retrying each pending
-    * past CAS losses (a winner took the number this writer was about
-    * to use — refresh and mint the next one). Pendings are minted ONE
-    * at a time so an adoption that already consumed its task temp is
-    * never re-run; on final failure the REMAINING pendings' temps are
-    * unlinked (the already-minted files stay — unreferenced claimed
-    * objects, vacuum's concern, exactly like a failed manual retry). */
-  private def mintWithRebase(
-      pendings: Vector[GraftLakeFileMeta]): Vector[GraftLakeFile] = {
-    val out = Vector.newBuilder[GraftLakeFile]
-    var i = 0
-    while (i < pendings.length) {
-      out += retryCas(cleanup = pendings.drop(i).foreach(m =>
-        new java.io.File(m.tmpPath).delete()))(adoptFile(pendings(i)))
-      i += 1
+  /** THE adoption: turn each task temp into a claimed, durable file —
+    * claim the next file number through the commit arbiter (O_EXCL on
+    * POSIX, conditional PUT on object stores — GraftCommitArbiter), fill
+    * the claim from the temp, and for data files journal the manifest.
+    * `kind` says what the temps become (see [[GraftLakeTable.Mint]]).
+    * Temps mint ONE at a time, once each: a claim lost to another
+    * writer leaves the temp in place, refreshes from the log and
+    * re-claims the next free number; only a successful fill consumes a
+    * temp. On a final failure the temps not yet adopted are unlinked
+    * (already-minted files stay — unreferenced claimed objects,
+    * remove_orphan_files' concern). */
+  private def mint(metas: Vector[GraftLakeFileMeta],
+      kind: GraftLakeTable.Mint): Vector[GraftLakeFile] =
+    metas.indices.toVector.map { i =>
+      val m = metas(i)
+      retryCas(cleanup = GraftLakeTaskFiles.unlink(metas.drop(i))) {
+        // the concurrent-ALTER guard: a write pinned its field ids when
+        // it was built; rewrites keep their source generation's layout
+        if (kind.current && m.cols != colIds)
+          throw new IllegalStateException(s"write to $tableName carries " +
+            s"field ids ${m.cols.mkString(",")} but the table now has " +
+            s"${colIds.mkString(",")}: a concurrent ALTER TABLE landed " +
+            "mid-statement — retry against the current schema")
+        fileSeq += 1
+        val name = s"${kind.prefix}$fileSeq.parquet"
+        val target = new java.io.File(lakeDir, name)
+        // the claim is the real CAS: ATOMIC_MOVE on Linux is a bare
+        // rename(2) that silently REPLACES an existing target, so the
+        // fill replaces only a claim verified still ours
+        val arbiter = GraftCommitArbiter.active
+        val token = try arbiter.claim(target)
+          catch {
+            case e: GraftClaimConflict =>
+              throw new IllegalStateException(
+                s"write conflict on $tableName: $name was already " +
+                  "written by another writer — this writer's snapshot is " +
+                  "stale; reopen the table and retry the statement", e)
+          }
+        try arbiter.fill(target, token, new java.io.File(m.tmpPath))
+        catch {
+          case e: GraftClaimConflict =>
+            throw new IllegalStateException(
+              s"write conflict on $tableName: the claim of $name was " +
+                "reclaimed as stale by another writer — reopen the table " +
+                "and retry the statement", e)
+          case e: Throwable =>
+            arbiter.release(target, token)
+            throw e
+        }
+        val gf = GraftLakeFile(s"$tableName#${kind.prefix}$fileSeq", m.cols,
+          target.getAbsolutePath, m.types, m.bytes, m.stats, m.nRows,
+          m.nulls, m.sums, m.dsums, m.sorted, m.nstats, m.nnulls, m.blooms,
+          m.pkey, m.pnames, m.pspecId, m.ndv)
+        if (kind.manifest) log.writeFileManifest(gf)
+        gf
+      }
     }
-    out.result()
-  }
 
   /** The (schema, field ids, exists-defaults) a RETAINED version was
     * committed under — what a pinned read resolves through. */
@@ -2657,10 +2740,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * the reverse churn, and a second rollback can undo the undo). */
   private[sources] def rollbackTo(v: Int): Unit = synchronized {
     val snap = snapshotAt(v)
-    files = snap.files
-    dvs = snap.dvs
-    eqs = snap.eqs
-    recordCommit(dataChange = true)
+    val v0 = currentVersion
+    commit(admitsAt(v0, s"rollback to version $v"), dataChange = true) {
+      files = snap.files
+      dvs = snap.dvs
+      eqs = snap.eqs
+    }
   }
 
   /** Drop history so only the last `keepLast` versions stay readable.
@@ -2934,17 +3019,20 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     }
 
   /** Stage an append on the branch: based on the branch HEAD, invisible
-    * to main until fast_forward. Files are adopted eagerly but
+    * to main until fast_forward. Files are minted eagerly but
     * referenced only by the branch. */
   private def appendToBranch(
       name: String, pendings: Vector[GraftLakeFileMeta]): Unit =
     synchronized {
-      val b = branchRefs.getOrElse(name, throw new IllegalArgumentException(
-        s"no branch '$name' on $tableName — CALL system.create_branch " +
-          "first"))
+      def branch = branchRefs.getOrElse(name, throw new
+        IllegalArgumentException(s"no branch '$name' on $tableName — " +
+          "CALL system.create_branch first"))
+      branch // refuse before minting
+      val minted = mint(pendings, GraftLakeTable.DataFiles)
+      // read the ref AFTER minting: a lost claim refreshes the refs
+      val b = branch
       val head = b.staged.lastOption.map(_._1).getOrElse(snapshotAt(b.base))
-      val snap = GraftLakeSnapshot(head.files ++ pendings.map(adoptFile(_)),
-        head.dvs, head.eqs)
+      val snap = GraftLakeSnapshot(head.files ++ minted, head.dvs, head.eqs)
       branchRefs += name -> b.copy(staged = b.staged :+ (snap, true))
       persistRefs()
     }
@@ -2964,10 +3052,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         s"cannot fast-forward $tableName to branch '$name': main advanced " +
           s"from the branch's fork base ${b.base} to $from — the branch " +
           "has diverged; drop it and re-stage against the current state")
-      b.staged.foreach { case (snap, dataChange) =>
-        files = snap.files
-        dvs = snap.dvs
-        recordCommit(dataChange)
+      b.staged.zipWithIndex.foreach { case ((snap, dataChange), i) =>
+        commit(admitsAt(from + i, s"publish of branch '$name'"),
+            dataChange) {
+          files = snap.files
+          dvs = snap.dvs
+        }
       }
       branchRefs += name -> StagedBranch(currentVersion, Vector.empty)
       persistRefs()
@@ -2989,9 +3079,11 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           s"from the branch's fork base ${b.base} to $from — the branch " +
           "has diverged; drop it and re-stage against the current state")
       b.staged.lastOption.foreach { case (head, _) =>
-        files = head.files
-        dvs = head.dvs
-        recordCommit(dataChange = true)
+        commit(admitsAt(from, s"publish of branch '$name'"),
+            dataChange = true) {
+          files = head.files
+          dvs = head.dvs
+        }
       }
       branchRefs += name -> StagedBranch(currentVersion, Vector.empty)
       persistRefs()
@@ -3004,6 +3096,50 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private def branchStagedPaths: Set[String] =
     branchRefs.values.flatMap(_.staged.flatMap(_._1.files))
       .map(_.path).toSet
+
+  private def pinRewrite(): GraftLakeTable.RewritePin =
+    GraftLakeTable.RewritePin(currentVersion, dvs, eqs, colIds, specIdNow)
+
+  /** THE maintenance commit the three rewrites (cluster, compact,
+    * compact_files) share: mint `metas` and `swap` them in for
+    * `sources`, whose deletion vectors go with them, as one
+    * dataChange = false commit — the relation is unchanged, the change
+    * feed stays silent. Admission is Iceberg's RewriteDataFiles rule: a
+    * rewrite derived from the pinned state still lands iff every commit
+    * since was COMPATIBLE with it — each source file is still live with
+    * the exact DV the rewrite dropped, no NEW equality-delete epoch
+    * arrived (its logical deletes would not reach the rewrite's fresh
+    * file numbers — landing would resurrect rows), and the field-id and
+    * partition-spec identity is unchanged (renames and widening are
+    * id-stable). Concurrent pure appends pass: `swap` carries the files
+    * it does not replace. A refused rewrite is loud and unlinks its
+    * temps; `what` names the touched target in the message. */
+  private def commitRewrite(pin: GraftLakeTable.RewritePin,
+      sources: Seq[GraftLakeFile], metas: Vector[GraftLakeFileMeta],
+      what: String)(
+      swap: Vector[GraftLakeFile] => Vector[GraftLakeFile]): Unit = {
+    val gone = sources.map(_.id).toSet
+    def admits: Boolean = {
+      val live = files.iterator.map(_.id).toSet
+      val compatible = currentVersion == pin.version ||
+        sources.forall(f => live.contains(f.id) &&
+          dvs.getOrElse(f.id, Set.empty) ==
+            pin.dvs.getOrElse(f.id, Set.empty)) &&
+        eqs.forall(pin.eqs.contains) &&
+        colIds == pin.ids && specIdNow == pin.spec
+      if (!compatible) throw new IllegalStateException(
+        s"write conflict on $tableName: a concurrent commit touched " +
+          s"$what — retry against the current state")
+      true
+    }
+    try admits
+    catch { case e: Throwable => GraftLakeTaskFiles.unlink(metas); throw e }
+    val minted = mint(metas, GraftLakeTable.Rewrites)
+    commit(admits, dataChange = false) {
+      files = swap(minted)
+      dvs = dvs.filterNot { case (id, _) => gone.contains(id) }
+    }
+  }
 
   /** Rewrite the whole table RANGE-CLUSTERED by `colNames`: all live
     * rows, normalized to the current schema, sorted by the cluster key
@@ -3038,7 +3174,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       s"unknown cluster strategy '$strategy' (sort, zorder)")
     import org.apache.spark.sql.{functions => F}
     val spark = org.apache.spark.sql.SparkSession.active
-    val (v0, before, totalLive, fw, sortIds, base0, ids0, spec0) =
+    val (v0, before, totalLive, fw, sortIds, baseFiles, pin) =
       synchronized {
         val names = schemaNow.fieldNames.toSeq
         colNames.foreach(n => require(names.contains(n),
@@ -3050,7 +3186,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           if (strategy == "sort")
             colNames.map(c => colIds(names.indexOf(c)))
           else Nil,
-          GraftLakeSnapshot(files, dvs, eqs), colIds, specIdNow)
+          files, pinRewrite())
       }
     // PIN the rewrite's read to the captured version: spark.table would
     // plan its scan lazily at action time against the then-current
@@ -3120,32 +3256,13 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         .flatMap(_._2).map(_.copy(sorted = sortIds))
     commitHook()
     synchronized {
-      // rebase admission (Iceberg RewriteDataFiles): the rewrite read
-      // EVERY base file's live rows, so all of them must be untouched
-      // since the pin; concurrent pure appends ride through unclustered
-      // (their files — and any DVs a later commit put on them — are
-      // carried verbatim). Anything else would resurrect or lose rows:
-      // abort loudly, unlink the temps.
-      def admit(): Unit =
-        if (currentVersion != v0 && !maintenanceRebaseOk(base0.files,
-            base0.dvs, base0.eqs, ids0, spec0))
-          throw new IllegalStateException(
-            s"write conflict on $tableName: a concurrent commit " +
-              "touched the rewritten files while the cluster rewrite " +
-              "was running — retry the CALL against the current state")
-      try admit()
-      catch {
-        case e: Throwable =>
-          metas.foreach(m => new java.io.File(m.tmpPath).delete())
-          throw e
-      }
-      val adopted = metas.map(adoptFileRebased(_))
-      val baseIds = base0.files.map(_.id).toSet
-      commitWithRebase { () =>
-        admit()
-        files = adopted ++ files.filterNot(f => baseIds.contains(f.id))
-        dvs = dvs.filter { case (id, _) => !baseIds.contains(id) }
-        recordCommit(dataChange = false) // maintenance: relation unchanged
+      // the rewrite read EVERY base file's live rows, so all of them
+      // must be untouched since the pin; concurrent pure appends ride
+      // through unclustered, after the clustered files
+      val baseIds = baseFiles.map(_.id).toSet
+      commitRewrite(pin, baseFiles, metas,
+          "the rewritten files while the cluster rewrite was running") {
+        minted => minted ++ files.filterNot(f => baseIds.contains(f.id))
       }
       (before, files.length)
     }
@@ -3169,7 +3286,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     compactWhere(_.id == fileId)
 
   private def compactWhere(pick: GraftLakeFile => Boolean): Int = {
-    val (v0, targets, dir, i2n, eqs0, ids0, spec0) = synchronized {
+    val (pin, targets, dir, i2n) = synchronized {
       val ts = files
         .filter(f => pick(f) && (dvs.contains(f.id) ||
           eqs.exists(_.probeFor(f).isDefined)))
@@ -3179,8 +3296,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           // file's own column POSITION (tasks read the keys parquet
           // themselves — the driver ships only paths)
           eqs.flatMap(_.probeFor(f))))
-      (currentVersion, ts, lakeDir.getAbsolutePath, idToName,
-        eqs, colIds, specIdNow)
+      (pinRewrite(), ts, lakeDir.getAbsolutePath, idToName)
     }
     if (targets.isEmpty) return 0
     val specs = targets.zipWithIndex.map { case ((f, dv, eqProbes), i) =>
@@ -3191,35 +3307,21 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       .collect().toMap
     commitHook()
     synchronized {
-      // per-file rebase admission: each replacement lands iff ITS
-      // source file is still live with the exact DV the rewrite
-      // dropped and no new eq-delete epoch arrived — a concurrent
-      // append (the normal streaming-ingest race) rides through; a
-      // concurrent touch of a target aborts the remaining rewrites
-      // loudly with the unadopted temps unlinked
-      targets.zipWithIndex.foreach { case ((f, dv0, _), i) =>
-        def admit(): Unit =
-          if (currentVersion != v0 &&
-              !maintenanceRebaseOk(Seq(f), Map(f.id -> dv0), eqs0,
-                ids0, spec0))
-            throw new IllegalStateException(
-              s"write conflict on $tableName: a concurrent commit " +
-                s"touched ${f.id} while CALL system.compact was " +
-                "rewriting — retry against the current state")
-        try admit()
+      // one commit per file, each admitted on ITS source file alone: a
+      // concurrent append (the normal streaming-ingest race) rides
+      // through; a concurrent touch of a target aborts the remaining
+      // rewrites loudly with their temps unlinked
+      targets.indices.foreach { i =>
+        val f = targets(i)._1
+        try commitRewrite(pin, Seq(f), metaByIdx.get(i).toVector,
+            s"${f.id} while CALL system.compact was rewriting") {
+          minted => files.filterNot(_.id == f.id) ++ minted
+        }
         catch {
           case e: Throwable =>
-            (i until targets.length).foreach(j => metaByIdx.get(j)
-              .foreach(m => new java.io.File(m.tmpPath).delete()))
+            GraftLakeTaskFiles.unlink(
+              (i + 1 until targets.length).flatMap(metaByIdx.get))
             throw e
-        }
-        val adopted = metaByIdx.get(i)
-          .map(adoptFileRebased(_, requireCurrent = false)).toVector
-        commitWithRebase { () =>
-          admit()
-          files = files.filterNot(_.id == f.id) ++ adopted
-          dvs -= f.id
-          recordCommit(dataChange = false) // maintenance: per-file commit
         }
       }
       targets.size
@@ -3231,7 +3333,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * rows keep the file's generation layout, so the replacement carries
     * the same field ids and physical types. */
   private def rewriteSpecOf(idx: Int, f: GraftLakeFile, dv: Set[Long],
-      eqProbes: Seq[(Int, String, DataType)], i2n: Map[Int, String])
+      eqProbes: Seq[(Int, GraftEqDelete)], i2n: Map[Int, String])
       : GraftLakeTaskFiles.RewriteSpec = {
     val names = f.cols.map(cid => i2n.getOrElse(cid, s"_dropped_$cid"))
     GraftLakeTaskFiles.RewriteSpec(idx, f.cols, f.types, names, f.pkey,
@@ -3264,14 +3366,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private[sources] def compactFiles(targetRows: Long): (Int, Int) = {
     require(targetRows >= 1, s"target_rows must be >= 1, got $targetRows")
     val spark = org.apache.spark.sql.SparkSession.active
-    val (v0, before, snapFiles, snapDvs, snapEqs, dir, i2n, ids0, spec0) =
-      synchronized {
-        (currentVersion, files.length, files, dvs, eqs,
-          lakeDir.getAbsolutePath, idToName, colIds, specIdNow)
-      }
+    val (pin, before, snapFiles, dir, i2n) = synchronized {
+      (pinRewrite(), files.length, files, lakeDir.getAbsolutePath, idToName)
+    }
+    val snapDvs = pin.dvs
+    val snapEqs = pin.eqs
     def dvOf(f: GraftLakeFile): Set[Long] =
       snapDvs.getOrElse(f.id, Set.empty)
-    def probesOf(f: GraftLakeFile): Seq[(Int, String, DataType)] =
+    def probesOf(f: GraftLakeFile): Seq[(Int, GraftEqDelete)] =
       snapEqs.flatMap(_.probeFor(f))
     // bin offsets must index the FULLY-live order (rows − DV − probe
     // matches): files under unresolved equality deletes price their
@@ -3340,94 +3442,15 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         .collect().sortBy(_._1).toVector.map(_._2)
     commitHook()
     synchronized {
-      // rebase admission: the bins sliced only the PACKED candidates'
-      // live rows, so only those must be untouched since the pin (live,
-      // same DV, no new eq-delete epoch, same field-id/spec identity) —
-      // a concurrent append, or even a row-level delta on a file this
-      // pack never read, rides through verbatim; a touch of a packed
-      // file aborts loudly with the temps unlinked
-      val packed = snapFiles.filter(f => gone.contains(f.id))
-      def admit(): Unit =
-        if (currentVersion != v0 &&
-            !maintenanceRebaseOk(packed, snapDvs, snapEqs, ids0, spec0))
-          throw new IllegalStateException(
-            s"write conflict on $tableName: a concurrent commit " +
-              "touched a packed file while CALL system.compact_files " +
-              "was rewriting — retry against the current state")
-      try admit()
-      catch {
-        case e: Throwable =>
-          metas.foreach(m => new java.io.File(m.tmpPath).delete())
-          throw e
-      }
-      val adopted = metas.map(adoptFileRebased(_, requireCurrent = false))
-      commitWithRebase { () =>
-        admit()
-        files = files.filterNot(f => gone.contains(f.id)) ++ adopted
-        dvs = dvs.filterNot { case (id, _) => gone.contains(id) }
-        recordCommit(dataChange = false) // maintenance: relation unchanged
+      // the bins sliced only the PACKED candidates' live rows, so only
+      // those must be untouched since the pin — a concurrent append, or
+      // a row-level delta on a file this pack never read, rides through
+      commitRewrite(pin, snapFiles.filter(f => gone.contains(f.id)), metas,
+          "a packed file while CALL system.compact_files was rewriting") {
+        minted => files.filterNot(f => gone.contains(f.id)) ++ minted
       }
       (before, files.length)
     }
-  }
-
-  /** ADOPT a task-written parquet file: validate the write's pinned
-    * field ids against the current schema (the concurrent-ALTER guard),
-    * claim the next file number by no-replace rename (a cross-writer
-    * collision is a stale-snapshot conflict), and register the
-    * task-collected manifest block verbatim. Compaction REWRITES pass
-    * `requireCurrent = false`: their rows deliberately keep the source
-    * generation's layout, so the meta's own cols/types ARE the
-    * contract. */
-  private def adoptFile(m: GraftLakeFileMeta,
-      requireCurrent: Boolean = true): GraftLakeFile = {
-    if (requireCurrent && m.cols != colIds) {
-      new java.io.File(m.tmpPath).delete()
-      throw new IllegalStateException(
-        s"write to $tableName carries field ids ${m.cols.mkString(",")} " +
-          s"but the table now has ${colIds.mkString(",")}: a concurrent " +
-          "ALTER TABLE landed mid-statement — retry against the current " +
-          "schema")
-    }
-    fileSeq += 1
-    val id = s"$tableName#f$fileSeq"
-    val target = new java.io.File(lakeDir, s"f$fileSeq.parquet")
-    // CLAIM the file number FIRST, through the commit arbiter (O_EXCL
-    // on POSIX, conditional PUT on object stores — GraftCommitArbiter):
-    // ATOMIC_MOVE on Linux is a bare rename(2) that silently REPLACES
-    // an existing target, so relying on the move to detect a
-    // cross-writer collision would let a stale writer clobber a
-    // committed writer's data file. The claim is the real CAS; the
-    // fill then replaces only our own claim (verified still ours).
-    val arbiter = GraftCommitArbiter.active
-    // a conflicting adoption leaves the task temp IN PLACE — the
-    // auto-rebase loop ([[mintWithRebase]]) re-adopts it under the next
-    // free number; only a successful fill consumes the temp
-    val token = try arbiter.claim(target)
-      catch {
-        case e: GraftClaimConflict =>
-          throw new IllegalStateException(
-            s"write conflict on $tableName: data file " +
-              s"f$fileSeq.parquet was already written by another " +
-              "writer — this writer's snapshot is stale; reopen the " +
-              "table and retry the statement", e)
-      }
-    try arbiter.fill(target, token, new java.io.File(m.tmpPath))
-    catch {
-      case e: GraftClaimConflict =>
-        throw new IllegalStateException(
-          s"write conflict on $tableName: the claim of " +
-            s"f$fileSeq.parquet was reclaimed as stale by another " +
-            "writer — reopen the table and retry the statement", e)
-      case e: Throwable =>
-        arbiter.release(target, token)
-        throw e
-    }
-    val gf = GraftLakeFile(id, m.cols, target.getAbsolutePath, m.types,
-      m.bytes, m.stats, m.nRows, m.nulls, m.sums, m.dsums, m.sorted,
-      m.nstats, m.nnulls, m.blooms, m.pkey, m.pnames, m.pspecId, m.ndv)
-    log.writeFileManifest(gf)
-    gf
   }
 
   private[graft] def snapshot: GraftLakeSnapshot =
@@ -3449,7 +3472,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
   private[sources] def eqLiveCounts(snap: GraftLakeSnapshot,
       targets: Vector[GraftLakeFile]): Option[Map[String, Long]] = {
-    def probesOf(f: GraftLakeFile): Seq[(Int, String, DataType)] =
+    def probesOf(f: GraftLakeFile): Seq[(Int, GraftEqDelete)] =
       snap.eqs.flatMap(_.probeFor(f))
     // signature of the file's CURRENT read debt: an MD5 over the full
     // sorted DV (content, not Set.hashCode — a collision would serve a
@@ -3463,7 +3486,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       val buf = java.nio.ByteBuffer.allocate(8)
       dv.foreach { p =>
         buf.clear(); buf.putLong(p); md.update(buf.array()) }
-      probesOf(f).map(_._2).sorted
+      probesOf(f).map(_._2.path).sorted
         .foreach(p => md.update(p.getBytes("UTF-8")))
       md.digest().map("%02x".format(_)).mkString
     }
@@ -3526,213 +3549,110 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private[graft] def deletionVectors: Map[String, Set[Long]] =
     synchronized(dvs)
 
+  /** Appends rebase across DATA commits unconditionally: under snapshot
+    * isolation a concurrent commit can never conflict with pure file
+    * additions. A concurrent ADD CONSTRAINT is the one exception — the
+    * rows were minted un-validated — and stays loud. */
   private def appendFiles(pendings: Vector[GraftLakeFileMeta],
       plannedChecks: Set[(String, String)]): Unit =
     synchronized {
-      // appends rebase across DATA commits unconditionally: under
-      // snapshot isolation a concurrent commit can never conflict with
-      // pure file additions. A concurrent ADD CONSTRAINT is the one
-      // exception — the rows were minted un-validated — and stays loud
-      // (requireNoNewChecks re-runs on every rebase attempt).
-      val minted = mintWithRebase(pendings)
-      commitWithRebase { () =>
-        requireNoNewChecks(plannedChecks)
+      val minted = mint(pendings, GraftLakeTable.DataFiles)
+      commit(admitsChecks(plannedChecks), dataChange = true) {
         files = files ++ minted
-        recordCommit(true)
       }
     }
+
+  /** The BLIND replacement (INSERT OVERWRITE, a Complete-mode epoch):
+    * the table becomes exactly `pendings`, admitted only at the version
+    * this commit started from (see [[admitsAt]]). */
+  private def overwrite(pendings: Vector[GraftLakeFileMeta],
+      plannedChecks: Set[(String, String)],
+      txn: Option[(String, Long)] = None): Unit =
+    synchronized {
+      val v0 = currentVersion
+      val minted = mint(pendings, GraftLakeTable.DataFiles)
+      commit(admitsAt(v0, "an overwrite") && admitsChecks(plannedChecks),
+          dataChange = true, txn) {
+        files = minted
+        dvs = Map.empty
+      }
+    }
+
   /** One streaming EPOCH lands as one atomic commit stamped with
     * (queryId, epochId) — Delta's txn action, persisted inside the
     * commit record itself so the stamp and the data are indivisible. A
     * replayed epoch (restart from checkpoint re-offers the last batch)
     * is detected by the watermark and dropped: its task-written temps
     * are unlinked and NOTHING commits — exactly-once across restarts,
-    * including a crash between data-write and checkpoint-advance. */
+    * including a crash between data-write and checkpoint-advance.
+    * Complete-mode epochs are overwrites; append and upsert epochs
+    * REBASE across cross-writer commits (concurrent maintenance racing
+    * a streaming sink is the normal production state, and neither
+    * conflicts with additions under snapshot isolation). */
   private def commitEpoch(queryId: String, truncate: Boolean,
-      upsertKey: Option[String] = None,
-      plannedChecks: Set[(String, String)] = Set.empty)(
+      upsertKey: Option[String], plannedChecks: Set[(String, String)])(
       epochId: Long, pendings: Vector[GraftLakeFileMeta],
-      keyMetas: Vector[GraftLakeFileMeta] = Vector.empty): Unit =
+      keyMetas: Vector[GraftLakeFileMeta]): Unit =
     synchronized {
       // the builder refuses the combination at build time
       // (graft.upsert.key is append-mode only); assert it here too so
-      // the truncate-first branch order below can never silently turn
-      // an upsert sink into a blind replace
+      // the truncate branch can never silently turn an upsert sink
+      // into a blind replace
       require(!(truncate && upsertKey.isDefined),
         s"streaming sink on $tableName cannot combine Complete-mode " +
           "truncate with graft.upsert.key")
+      val txn = Some(queryId -> epochId)
       if (streamEpochs.get(queryId).exists(_ >= epochId))
-        (pendings ++ keyMetas).foreach(m =>
-          new java.io.File(m.tmpPath).delete())
-      else if (truncate) {
-        // Complete-mode sink: each epoch blindly replaces the table —
-        // order-dependent by definition, so a cross-writer CAS loss
-        // stays LOUD (rebasing would silently erase the winner's rows)
-        requireNoNewChecks(plannedChecks)
-        files = pendings.map(adoptFile(_)); dvs = Map.empty
-        recordCommit(dataChange = true, txn = Some(queryId -> epochId))
-        streamEpochs += queryId -> epochId
-      } else {
-        // Append and upsert epochs REBASE across cross-writer commits
-        // (concurrent maintenance — compaction, clustering — racing a
-        // streaming sink is the normal production state, and neither
-        // conflicts with additions under snapshot isolation). Artifacts
-        // mint ONCE; the commit loop re-applies them verbatim.
-        upsertKey match {
-          case Some(keyName) =>
-            // STREAMING UPSERT via EQUALITY DELETES: the epoch's keys
-            // logically delete every matching row
-            // in files minted BEFORE this epoch (belowSeq is captured
-            // before any adoption, so the epoch's own files — data AND
-            // keys — are never subject to their own delete; a rebase
-            // winner's files mint ABOVE it, so concurrent additions are
-            // never subject either — snapshot semantics). ZERO
-            // read-side probe of existing data: the keys files were
-            // written task-side, and nothing here opens a data file.
-            // EVERY fallible step (adoption can throw on a concurrent
-            // ALTER or a cross-writer claim) runs BEFORE any state
-            // assignment — a failure must not leave a phantom equality
-            // delete riding the table's next successful commit.
-            val belowSeq = fileSeq
-            val ki = schemaNow.fieldNames.indexOf(keyName)
-            require(ki >= 0, s"upsert key $keyName not in ${tableName}'s " +
-              s"schema (${schemaNow.fieldNames.mkString(", ")})")
-            val keyId = colIds(ki)
-            val keyType = schemaNow.fields(ki).dataType
-            val newFiles = mintWithRebase(pendings)
-            val ownIds = newFiles.map(_.id).toSet
-            val newEqs = keyMetas.map(m =>
-              GraftEqDelete(keyId, adoptEqFileRebased(m), belowSeq,
-                keyType))
-            commitWithRebase { () =>
-              // re-check the replay watermark AFTER every refresh:
-              // another instance of this query (zombie driver failover)
-              // may have committed this very epoch while we lost the
-              // race — committing again would double-apply it. The
-              // minted artifacts become unreferenced claimed objects,
-              // exactly like an aborted write.
-              if (!streamEpochs.get(queryId).exists(_ >= epochId)) {
-                // SEQUENCE GUARD: the epoch's keys delete files with
-                // seq ≤ belowSeq, captured pre-mint. A rebase winner
-                // that MINTED files (append, compaction rewrite) put
-                // rows ABOVE that threshold which this epoch's delete
-                // could never cover — if any carried the upserted key,
-                // the one-row-per-key invariant would silently break
-                // (Iceberg assigns delete sequence at COMMIT; our
-                // file-number sequence is fixed at mint). Refuse
-                // loudly: the streaming query fails, the restart
-                // replays the epoch from the checkpoint with a fresh
-                // belowSeq over the winner's files — self-healing.
-                // Winners that only touched DVs or removed files
-                // rebase fine.
-                val foreign = files.filter(f =>
-                  !ownIds.contains(f.id) &&
-                    f.id.split("#f").last.toInt > belowSeq)
-                if (foreign.nonEmpty) throw new IllegalStateException(
-                  s"write conflict on $tableName: concurrent commit(s) " +
-                    s"added ${foreign.map(_.id).mkString(", ")} above " +
-                    "this upsert epoch's delete sequence — the epoch " +
-                    "must replay against the current state (streaming " +
-                    "restart re-offers it from the checkpoint)")
-                requireNoNewChecks(plannedChecks)
-                eqs = eqs ++ newEqs
-                files = files ++ newFiles
-                recordCommit(dataChange = true,
-                  txn = Some(queryId -> epochId))
-                streamEpochs += queryId -> epochId
-              }
-            }
-          case None =>
-            val newFiles = mintWithRebase(pendings)
-            commitWithRebase { () =>
-              if (!streamEpochs.get(queryId).exists(_ >= epochId)) {
-                requireNoNewChecks(plannedChecks)
-                files = files ++ newFiles
-                recordCommit(dataChange = true,
-                  txn = Some(queryId -> epochId))
-                streamEpochs += queryId -> epochId
-              }
-            }
+        GraftLakeTaskFiles.unlink(pendings ++ keyMetas)
+      else if (truncate) overwrite(pendings, plannedChecks, txn)
+      else {
+        // STREAMING UPSERT via EQUALITY DELETES: the epoch's keys
+        // logically delete every matching row in files minted BEFORE
+        // this epoch (belowSeq is captured before any mint, so the
+        // epoch's own files — data AND keys — are never subject to their
+        // own delete). ZERO read-side probe of existing data: the keys
+        // files were written task-side. An append epoch is an upsert
+        // with no keys.
+        val belowSeq = fileSeq
+        val key = upsertKey.map { keyName =>
+          val ki = schemaNow.fieldNames.indexOf(keyName)
+          require(ki >= 0, s"upsert key $keyName not in ${tableName}'s " +
+            s"schema (${schemaNow.fieldNames.mkString(", ")})")
+          (colIds(ki), schemaNow.fields(ki).dataType)
+        }
+        val newFiles = mint(pendings, GraftLakeTable.DataFiles)
+        val ownIds = newFiles.map(_.id).toSet
+        val newEqs = key.toVector.flatMap { case (keyId, keyType) =>
+          mint(keyMetas, GraftLakeTable.KeysFiles).map(k =>
+            GraftEqDelete(keyId, k.path, k.pnames.head, belowSeq, keyType))
+        }
+        // SEQUENCE GUARD: the epoch's keys delete files with seq ≤
+        // belowSeq, captured pre-mint. A rebase winner that MINTED files
+        // (append, compaction rewrite) put rows ABOVE that threshold
+        // which this epoch's delete could never cover — if any carried
+        // the upserted key, the one-row-per-key invariant would silently
+        // break (Iceberg assigns delete sequence at COMMIT; our
+        // file-number sequence is fixed at mint). Refuse loudly: the
+        // streaming query fails, the restart replays the epoch from the
+        // checkpoint with a fresh belowSeq — self-healing. Winners that
+        // only touched DVs or removed files rebase fine.
+        def admitsSequence: Boolean = upsertKey.isEmpty || {
+          val foreign = files.filter(f => !ownIds.contains(f.id) &&
+            GraftEqDelete.seqOf(f.id) > belowSeq)
+          if (foreign.nonEmpty) throw new IllegalStateException(
+            s"write conflict on $tableName: concurrent commit(s) added " +
+              s"${foreign.map(_.id).mkString(", ")} above this upsert " +
+              "epoch's delete sequence — the epoch must replay against " +
+              "the current state (streaming restart re-offers it from " +
+              "the checkpoint)")
+          true
+        }
+        commit(admitsSequence && admitsChecks(plannedChecks),
+            dataChange = true, txn) {
+          eqs = eqs ++ newEqs
+          files = files ++ newFiles
         }
       }
-    }
-
-  /** Adopt a task-written EQUALITY-DELETE keys file: claim the next
-    * file number (same O_EXCL protocol as data files, shared counter so
-    * numbers never collide), rename into place as `e<N>.parquet`, and
-    * return the durable path. No manifest — the keys file is referenced
-    * by commit records, not by the file listing. */
-  private def adoptEqFile(m: GraftLakeFileMeta): String = {
-    fileSeq += 1
-    val target = new java.io.File(lakeDir, s"e$fileSeq.parquet")
-    val arbiter = GraftCommitArbiter.active
-    // a conflicting adoption leaves the task temp IN PLACE: the
-    // auto-rebase loop re-adopts it under the next free number
-    val token = try arbiter.claim(target)
-      catch {
-        case e: GraftClaimConflict =>
-          throw new IllegalStateException(
-            s"write conflict on $tableName: keys file e$fileSeq.parquet " +
-              "was already written by another writer — this writer's " +
-              "snapshot is stale; reopen the table and retry", e)
-      }
-    try arbiter.fill(target, token, new java.io.File(m.tmpPath))
-    catch {
-      case e: GraftClaimConflict =>
-        throw new IllegalStateException(
-          s"write conflict on $tableName: the claim of " +
-            s"e$fileSeq.parquet was reclaimed as stale by another " +
-            "writer — reopen the table and retry", e)
-      case e: Throwable =>
-        arbiter.release(target, token)
-        throw e
-    }
-    target.getAbsolutePath
-  }
-
-  /** [[adoptFile]] with the cross-writer rebase loop — the maintenance
-    * rewrites' twin of [[mintWithRebase]]: a CAS loss on the file
-    * number refreshes and re-adopts the same task temp under the next
-    * free number. Final failure unlinks the temp. */
-  private def adoptFileRebased(m: GraftLakeFileMeta,
-      requireCurrent: Boolean = true): GraftLakeFile =
-    retryCas(cleanup = new java.io.File(m.tmpPath).delete())(
-      adoptFile(m, requireCurrent))
-
-  /** Maintenance-rebase admission (Iceberg RewriteDataFiles semantics):
-    * a rewrite derived from an older snapshot may still land iff every
-    * commit since then was COMPATIBLE with it — each rewritten source
-    * file is still live with the exact deletion vector the rewrite
-    * dropped, no NEW equality-delete epoch arrived (its logical deletes
-    * would not apply to the rewrite's fresh file numbers — landing
-    * anyway would resurrect rows), and the field-id/partition-spec
-    * identity is unchanged (renames and type widening are id-stable and
-    * therefore fine). Concurrent pure APPENDS pass — the caller carries
-    * the appended files through its replacement state untouched. */
-  private def maintenanceRebaseOk(sources: Iterable[GraftLakeFile],
-      dvs0: Map[String, Set[Long]], eqs0: Vector[GraftEqDelete],
-      ids0: Vector[Int], spec0: Int): Boolean = {
-    val live = files.iterator.map(_.id).toSet
-    sources.forall(f => live.contains(f.id) &&
-      dvs.getOrElse(f.id, Set.empty) ==
-        dvs0.getOrElse(f.id, Set.empty)) &&
-      eqs.forall(eqs0.contains) &&
-      colIds == ids0 && specIdNow == spec0
-  }
-
-  /** [[adoptEqFile]] with the cross-writer rebase loop: a CAS loss on
-    * the keys-file number refreshes and re-adopts under the next free
-    * number (the temp survives a conflicting attempt — only a
-    * successful fill consumes it). Final failure unlinks the temp. */
-  private def adoptEqFileRebased(m: GraftLakeFileMeta): String =
-    retryCas(cleanup = new java.io.File(m.tmpPath).delete())(
-      adoptEqFile(m))
-  private def truncateTo(pendings: Vector[GraftLakeFileMeta],
-      plannedChecks: Set[(String, String)]): Unit =
-    synchronized {
-      requireNoNewChecks(plannedChecks)
-      files = pendings.map(adoptFile(_)); dvs = Map.empty
-      recordCommit(true)
     }
 
   // ---- metadata-only DELETE (SupportsDeleteV2) ----------------------------
@@ -3773,7 +3693,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   override def deleteWhere(
       predicates: Array[org.apache.spark.sql.connector.expressions
         .filter.Predicate]): Unit = synchronized {
-    commitWithRebase { () =>
+    var drop = Set.empty[String]
+    def admitsDrop: Boolean = {
       val n2i = schemaNow.fieldNames.zip(colIds).toMap
       val verdicts = files.map(f => f.id ->
         GraftLakeStats.decideConj(f, predicates, n2i, colDefaults))
@@ -3783,13 +3704,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           s"write conflict on $tableName: a concurrent commit added " +
             "file(s) the metadata-only DELETE cannot decide from " +
             "stats — retry the statement against the current state")
-      val drop = verdicts.collect {
-        case (id, Some(true)) => id }.toSet
-      if (drop.nonEmpty) {
-        files = files.filterNot(f => drop.contains(f.id))
-        dvs = dvs.filterNot { case (id, _) => drop.contains(id) }
-        recordCommit(dataChange = true)
-      }
+      drop = verdicts.collect { case (id, Some(true)) => id }.toSet
+      drop.nonEmpty
+    }
+    commit(admitsDrop, dataChange = true) {
+      files = files.filterNot(f => drop.contains(f.id))
+      dvs = dvs.filterNot { case (id, _) => drop.contains(id) }
     }
   }
   /** The group-replacing (copy-on-write) commit: drop exactly `removed`
@@ -3805,24 +3725,25 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       plannedChecks: Set[(String, String)]): Unit = {
     commitHook()
     synchronized {
-      val minted = mintWithRebase(pendings)
+      val minted = mint(pendings, GraftLakeTable.DataFiles)
       // every admission rule re-runs on every rebase: a cross-writer
       // APPEND leaves the scanned groups intact and the rewrite lands
       // on the refreshed state; a cross-writer replace of a scanned
       // group is the lost update and stays loud (no CAS cause — never
       // retried); a concurrent equality-delete epoch or ADD CONSTRAINT
       // invalidates the rewritten rows and stays loud too
-      commitWithRebase { () =>
+      def admitsGroups: Boolean = {
         val gone = removed -- files.map(_.id).toSet
         if (gone.nonEmpty) throw new IllegalStateException(
           s"write conflict on $tableName: scanned group(s) ${gone.mkString(", ")} " +
             "were replaced by a concurrent commit after this operation's " +
             "snapshot — retry the statement against the current state")
-        requireNoNewEqEpochs(eqs0)
-        requireNoNewChecks(plannedChecks)
+        true
+      }
+      commit(admitsGroups && admitsEqEpochs(eqs0) &&
+          admitsChecks(plannedChecks), dataChange = true) {
         files = files.filterNot(f => removed.contains(f.id)) ++ minted
         dvs = dvs.filterNot { case (id, _) => removed.contains(id) }
-        recordCommit(true)
       }
     }
   }
@@ -3842,7 +3763,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       pendings: Vector[GraftLakeFileMeta]): Unit = {
     commitHook()
     synchronized {
-      val minted = mintWithRebase(pendings)
+      val minted = mint(pendings, GraftLakeTable.DataFiles)
       // every validation re-runs on every rebase against the refreshed
       // state — a winner that only appended passes them and this delta
       // lands rebased; a winner that compacted a target file or grew
@@ -3850,7 +3771,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       // as are a concurrent equality-delete epoch (its logical deletes
       // cannot reach this delta's re-inserted rows) and a concurrent
       // ADD CONSTRAINT (the rows were never validated)
-      commitWithRebase { () =>
+      def admitsDeletes: Boolean = {
         val gone = deleted.keySet -- files.map(_.id).toSet
         if (gone.nonEmpty) throw new IllegalStateException(
           s"write conflict on $tableName: delete target file(s) " +
@@ -3863,13 +3784,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             s"${skewed.mkString(", ")} changed since this operation's " +
             "snapshot — a concurrent row-level commit touched the same " +
             "file(s); retry the statement against the current state")
-        requireNoNewEqEpochs(eqs0)
-        requireNoNewChecks(plannedChecks)
+        true
+      }
+      commit(admitsDeletes && admitsEqEpochs(eqs0) &&
+          admitsChecks(plannedChecks), dataChange = true) {
         dvs = (dvs.keySet ++ deleted.keySet).map(id =>
           id -> (dvs.getOrElse(id, Set.empty) ++
             deleted.getOrElse(id, Set.empty))).toMap
         files = files ++ minted
-        recordCommit(true)
       }
     }
   }
@@ -3975,7 +3897,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         Option(info.options.get("graft.upsert.key"))
       // the CHECK constraints this write's analysis injected row
       // assertions for — the commit refuses to land past any name
-      // outside this set (see requireNoNewChecks)
+      // outside this set (see admitsChecks)
       private val plannedChecks = plannedCheckSet
       private var truncateRequested = false
       override def truncate(): WriteBuilder = {
@@ -4017,7 +3939,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           new GraftLakeBatchWrite(pendings => branch match {
             case Some(b) => appendToBranch(b, pendings)
             case None =>
-              if (truncateRequested) truncateTo(pendings, plannedChecks)
+              if (truncateRequested) overwrite(pendings, plannedChecks)
               else appendFiles(pendings, plannedChecks)
           }, fileWriteInfo)
         }
@@ -4158,27 +4080,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   // journals its identity + the v0 creation commit so the table is
   // reopenable from its very first version.
   reopenFrom match {
-    case Some(r) =>
-      files = r.files
-      dvs = r.dvs
-      eqs = r.history.last._1.eqs
-      fileSeq = r.fileSeq
-      schemaNow = r.schemaNow
-      colIds = r.colIds
-      nextColId = r.nextColId
-      colDefaults = r.colDefaults
-      history = r.history
-      baseVersion = r.baseVersion
-      commitTimes = r.commitTimes
-      commitSchemas = r.commitSchemas
-      tagRefs = r.tagRefs
-      branchRefs = r.branches.map { case (n, (base, staged)) =>
-        n -> StagedBranch(base, staged) }
-      streamEpochs = r.txns
-      specIdNow = r.pspecId
-      if (r.pspecNow.nonEmpty || r.pspecId > 0) specNow = r.pspecNow
-      checks = constraintsFromRestore(r.constraints)
-      if (checks.nonEmpty) everHadConstraints = true
+    case Some(r) => install(r)
     case None =>
       log.writeTable(tableName, partSpec, mergeOnRead)
       log.writeCommit(0, history.head._1, dataChange = true,
@@ -4210,6 +4112,29 @@ object GraftLakeTable {
     * log refresh + re-validation, so exhausting it means the table is
     * under sustained contention and the caller should back off. */
   private[graft] val MaxCommitRebases: Int = 4
+
+  /** What a maintenance rewrite read: the version, deletion vectors,
+    * equality deletes and field-id/partition-spec identity it pinned
+    * before its distributed pass. */
+  private[sources] final case class RewritePin(version: Int,
+      dvs: Map[String, Set[Long]], eqs: Vector[GraftEqDelete],
+      ids: Vector[Int], spec: Int)
+
+  /** What [[GraftLakeTable.mint]] turns a task temp into: `prefix` names
+    * the claimed object (`f<N>` data, `e<N>` equality-delete keys — one
+    * number sequence, so numbers never collide), `manifest` journals a
+    * file manifest, and `current` requires the write's field ids to be
+    * the table's current ones (the concurrent-ALTER guard). */
+  private[sources] sealed abstract class Mint(val prefix: String,
+      val manifest: Boolean, val current: Boolean)
+  /** A write's data files, stamped with the current schema's ids. */
+  private[sources] case object DataFiles extends Mint("f", true, true)
+  /** Rewrite output: rows keep their source generation's layout, and the
+    * rewrite's own admission checks the field-id identity. */
+  private[sources] case object Rewrites extends Mint("f", true, false)
+  /** Equality-delete keys files: referenced by commit records, never
+    * listed, so no manifest. */
+  private[sources] case object KeysFiles extends Mint("e", false, false)
 
   /** The `spark.wap.branch` session conf (Iceberg's write-audit-publish
     * spelling), read on the PLANNING thread — SQLConf is thread-local,
@@ -5129,21 +5054,21 @@ final case class GraftLakeFilePartition(
     fileId: String, deleted: Array[Long], cols: Seq[String],
     path: String, types: Seq[DataType], pnames: Seq[String],
     // unresolved equality deletes this file is subject to: (column
-    // position in the FILE layout, keys parquet path, key value type)
-    eqProbes: Seq[(Int, String, DataType)] = Nil,
+    // position in the FILE layout, the delete)
+    eqProbes: Seq[(Int, GraftEqDelete)] = Nil,
     // the change feed's DV growth/shrink legs: positions to emit
     // EXCLUSIVELY (SORTED); overrides `deleted` when set
     keepOnly: Option[Array[Long]] = None,
     // the change feed's new-epoch delete leg: emit ONLY rows whose key
     // hits this probe (applied after `eqProbes`)
-    eqKeep: Option[(Int, String, DataType)] = None)
+    eqKeep: Option[(Int, GraftEqDelete)] = None)
     extends InputPartition
 
 object GraftLakeFilePartition {
   /** File `f` under deletion vector `dv` and `eqProbes`, its columns
     * resolved to `cols`. */
   def of(f: GraftLakeFile, dv: Set[Long], cols: Seq[String],
-      eqProbes: Seq[(Int, String, DataType)]): GraftLakeFilePartition =
+      eqProbes: Seq[(Int, GraftEqDelete)]): GraftLakeFilePartition =
     GraftLakeFilePartition(f.id, dv.toArray.sorted, cols, f.path, f.types,
       f.pnames, eqProbes)
 }
@@ -5642,8 +5567,8 @@ private[sources] object GraftLakeChanges {
     // rows).
     def emit(f: GraftLakeFile, ct: String, v: Long, drop: Set[Long],
         keepOnly: Option[Set[Long]],
-        eqDrop: Seq[(Int, String, DataType)] = Nil,
-        eqKeep: Option[(Int, String, DataType)] = None): Unit = {
+        eqDrop: Seq[(Int, GraftEqDelete)] = Nil,
+        eqKeep: Option[(Int, GraftEqDelete)] = None): Unit = {
       val n = keepOnly.map(_.size.toLong).getOrElse(f.numRows - drop.size)
       if (n > 0)
         parts += GraftLakeChangePartition(
@@ -5655,7 +5580,7 @@ private[sources] object GraftLakeChanges {
     // every leg — a downstream replica applying the feed deleted them
     // when the epoch's own delete leg was emitted
     def eqDeadAt(s: GraftLakeSnapshot, f: GraftLakeFile)
-        : Seq[(Int, String, DataType)] =
+        : Seq[(Int, GraftEqDelete)] =
       s.eqs.flatMap(_.probeFor(f))
     for (i <- 1 until history.length) {
       val (prev, _) = history(i - 1)
@@ -5826,19 +5751,10 @@ class GraftLakeBatchWrite(
     // capture this BatchWrite (whose `apply` closes over the table)
     new GraftLakeFileWriterFactory(fileWrite, rowLevel)
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    try apply(messages.toVector.flatMap {
-      case GraftLakeFilesCommit(fs) => fs
-      case other => throw new IllegalStateException(
-        s"unexpected commit message $other")
-    })
+    try apply(GraftLakeFilesCommit.of(messages).flatMap(_.files))
     finally onDone()
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    try messages.foreach {
-      // a committed task's files never got adopted — unlink them
-      case GraftLakeFilesCommit(fs) =>
-        fs.foreach(m => new java.io.File(m.tmpPath).delete())
-      case _ => ()
-    } finally onDone()
+    try GraftLakeFilesCommit.unlink(messages) finally onDone()
 }
 
 /** Row-level slice of the task-side writer: under `rowLevel`, rows
@@ -5901,6 +5817,10 @@ private[sources] final class GraftLakeTaskFiles(fw: GraftLakeFileWriteInfo) {
 }
 
 private[sources] object GraftLakeTaskFiles {
+  /** Unlink task temps that were never adopted. */
+  def unlink(ms: Iterable[GraftLakeFileMeta]): Unit =
+    ms.foreach(m => new java.io.File(m.tmpPath).delete())
+
   /** Write ONE temp parquet into `dir` and collect its full manifest
     * stats block — the task-side unit every distributed write and
     * rewrite shares. `cols`/`types`/`names` are the rows' WRITE-TIME
@@ -5997,27 +5917,12 @@ class GraftLakeStreamingWrite(
     new GraftLakeStreamingWriterFactory(fileWrite, upsert)
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val pendings = messages.toVector.flatMap {
-      case GraftLakeFilesCommit(fs) => fs
-      case GraftLakeUpsertCommit(fs, _) => fs
-      case other => throw new IllegalStateException(
-        s"unexpected commit message $other")
-    }
-    val keyMetas = messages.toVector.flatMap {
-      case GraftLakeUpsertCommit(_, ks) => ks
-      case _ => Vector.empty
-    }
-    applyEpoch(epochId, pendings, keyMetas)
+    val ms = GraftLakeFilesCommit.of(messages)
+    applyEpoch(epochId, ms.flatMap(_.files), ms.flatMap(_.keys))
   }
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftLakeFilesCommit(fs) =>
-        fs.foreach(m => new java.io.File(m.tmpPath).delete())
-      case GraftLakeUpsertCommit(fs, ks) =>
-        (fs ++ ks).foreach(m => new java.io.File(m.tmpPath).delete())
-      case _ => ()
-    }
+    GraftLakeFilesCommit.unlink(messages)
 }
 
 /** Upsert-epoch identity: the key column's slot in the write schema
@@ -6066,7 +5971,7 @@ class GraftLakeStreamingWriterFactory(fw: GraftLakeFileWriteInfo,
         }
         override def commit(): WriterCommitMessage = {
           val ks = keys.result()
-          GraftLakeUpsertCommit(tf.finish(),
+          GraftLakeFilesCommit(tf.finish(),
             if (ks.isEmpty) Vector.empty
             else Vector(GraftLakeTaskFiles.writeOne(fw.dir,
               Seq(u.keyName), Seq(u.keyType), Seq(u.keyId), None, ks,
@@ -6081,11 +5986,6 @@ class GraftLakeStreamingWriterFactory(fw: GraftLakeFileWriteInfo,
   }
 }
 
-/** An upsert epoch's task output: the data files plus the task's
-  * equality-delete KEYS file(s). */
-final case class GraftLakeUpsertCommit(files: Vector[GraftLakeFileMeta],
-    keys: Vector[GraftLakeFileMeta]) extends WriterCommitMessage
-
 /** Exact-chunk partitioner for maintenance rewrites: global row index
   * `idx` lands in output file `idx / chunk` — `grouped(chunk)` over a
   * distributed, globally sorted relation. */
@@ -6096,8 +5996,31 @@ private[sources] class GraftChunkPartitioner(n: Int, chunk: Long)
     math.min(n - 1L, key.asInstanceOf[Long] / chunk).toInt
 }
 
-final case class GraftLakeFilesCommit(files: Vector[GraftLakeFileMeta])
+/** THE task commit message every lake write ships: the data files the
+  * task wrote, the equality-delete KEYS files of an upsert epoch, and
+  * the (file, position) deletes of a merge-on-read delta — all
+  * metadata; the rows stay in the task-written temps. */
+final case class GraftLakeFilesCommit(files: Vector[GraftLakeFileMeta],
+    keys: Vector[GraftLakeFileMeta] = Vector.empty,
+    deleted: Vector[(String, Long)] = Vector.empty)
     extends WriterCommitMessage
+
+object GraftLakeFilesCommit {
+  def of(messages: Array[WriterCommitMessage]): Vector[GraftLakeFilesCommit] =
+    messages.toVector.map {
+      case c: GraftLakeFilesCommit => c
+      case other => throw new IllegalStateException(
+        s"unexpected commit message $other")
+    }
+  /** An aborted write: the committed tasks' temps never got adopted —
+    * unlink them (a failed task's slot is null). */
+  def unlink(messages: Array[WriterCommitMessage]): Unit =
+    messages.foreach {
+      case c: GraftLakeFilesCommit =>
+        GraftLakeTaskFiles.unlink(c.files ++ c.keys)
+      case _ => ()
+    }
+}
 
 /** Merge-on-read batch write: tasks report (file, pos) deletes —
   * intrinsically metadata-sized — and inserts; the commit merges the
@@ -6116,18 +6039,13 @@ class GraftLakeDeltaBatchWrite(
     new GraftLakeDeltaWriterFactory(types, fileWrite)
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     try {
-      val ms = messages.toVector.map(_.asInstanceOf[GraftLakeDeltaCommit])
+      val ms = GraftLakeFilesCommit.of(messages)
       val deleted = ms.flatMap(_.deleted)
         .groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).toSet }
-      apply(deleted, ms.flatMap(_.insertedFiles))
+      apply(deleted, ms.flatMap(_.files))
     } finally onDone()
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    try messages.foreach {
-      // a committed task's insert files never got adopted — unlink them
-      case GraftLakeDeltaCommit(_, fs) =>
-        fs.foreach(m => new java.io.File(m.tmpPath).delete())
-      case _ => ()
-    } finally onDone()
+    try GraftLakeFilesCommit.unlink(messages) finally onDone()
 }
 
 class GraftLakeDeltaWriterFactory(types: Array[DataType],
@@ -6156,15 +6074,11 @@ class GraftLakeDeltaWriterFactory(types: Array[DataType],
           Array.tabulate[Any](types.length)(i => r.get(i, types(i)))))
       }
       override def commit(): WriterCommitMessage =
-        GraftLakeDeltaCommit(dels.result(), tf.finish())
+        GraftLakeFilesCommit(tf.finish(), deleted = dels.result())
       override def abort(): Unit = tf.abort()
       override def close(): Unit = ()
     }
 }
-
-final case class GraftLakeDeltaCommit(deleted: Vector[(String, Long)],
-    insertedFiles: Vector[GraftLakeFileMeta])
-    extends WriterCommitMessage
 
 /** The catalog's maintenance procedures — Spark 4's DSv2 `CALL`
   * statement (`CALL <catalog>.system.<proc>(...)`), the surface Iceberg

@@ -226,8 +226,8 @@ object GraftLakeColumnar {
     }
     // equality-delete probes, resolved to (batch column, physical type,
     // probe set): the keys parquet is read once per executor (cached)
-    def probe(p: (Int, String, DataType)): (Int, DataType, Set[Any]) =
-      (decode(p._1), fp.types(p._1), GraftEqDelete.loadProbe(p._2, p._3))
+    def probe(p: (Int, GraftEqDelete)): (Int, DataType, Set[Any]) =
+      (decode(p._1), fp.types(p._1), GraftEqDelete.loadProbe(p._2))
     val drops: Array[(Int, DataType, Set[Any])] = fp.eqProbes.map(probe).toArray
     val keep: (Int, DataType, Set[Any]) = fp.eqKeep.map(probe).orNull
     if (slot.isEmpty) decode(fp.types.indices.minBy(fp.types(_).defaultSize))
@@ -373,14 +373,9 @@ object GraftLakeColumnar {
   }
 
   /** The canonical non-null keys of an equality-delete keys file (one
-    * column, labelled with the key's write-time name). */
-  def keys(path: String, dt: DataType): Set[Any] = {
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-      new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(path)),
-      org.apache.parquet.HadoopReadOptions.builder(GraftParquetIO.conf())
-        .build())
-    val label = try footer.getFileMetaData.getSchema.getFieldName(0)
-      finally footer.close()
+    * column, written under `label` — the key's write-time name, which
+    * the eq-delete log entry records). */
+  def keys(path: String, label: String, dt: DataType): Set[Any] = {
     val fp = GraftLakeFilePartition(path, Array.empty, Seq(label), path,
       Seq(dt), Seq(label))
     val r = reader(fp, StructType(Seq(StructField(label, dt))), Map.empty)

@@ -312,6 +312,7 @@ private[sources] class GraftLakeLog(root: File) {
       "eqs" -> JArray(snap.eqs.map(e => JObject(
         "col" -> JInt(BigInt(e.colId)),
         "file" -> JString(new File(e.path).getName),
+        "label" -> JString(e.label),
         "below" -> JInt(BigInt(e.belowSeq)),
         "type" -> JString(e.valueType.json))).toList),
       "dataChange" -> JBool(dataChange),
@@ -488,10 +489,8 @@ private[sources] class GraftLakeLog(root: File) {
 
 private[sources] object GraftLakeLog {
   val LogDir = "_graft_log"
-  /** Manifests per group file (see [[GraftLakeLog.groupManifests]]);
-    * sys-prop override is a test knob, not a user surface. */
-  val GroupSize: Int =
-    Integer.getInteger("graft.lake.manifest.group", 64).intValue()
+  /** Manifests per group file (see [[GraftLakeLog.groupManifests]]). */
+  val GroupSize: Int = 64
   /** TEST HOOK: log JSON files parsed by restore since the last reset —
     * the bounded-open spec's probe (reads must scale with manifest
     * GROUPS, not with data files). */
@@ -753,8 +752,17 @@ private[sources] object GraftLakeLog {
       arr(j, "files").map(f => fileById(f.asInstanceOf[JString].s)).toVector,
       dvsOf(j \ "dvs"),
       arr(j, "eqs").map { e =>
+        // the keys file's write-time label is how the reader finds its
+        // one column: an entry without it cannot be read
+        val label = (e \ "label") match {
+          case JString(l) => l
+          case _ => throw new IllegalStateException(
+            s"equality delete ${str(e, "file")} of table " +
+              s"${str(t, "name")} under $root has no write-time key " +
+              "label")
+        }
         GraftEqDelete(intOf(e \ "col"),
-          new File(root, str(e, "file")).getAbsolutePath,
+          new File(root, str(e, "file")).getAbsolutePath, label,
           intOf(e \ "below"), DataType.fromJson(str(e, "type")))
       }.toVector)
 

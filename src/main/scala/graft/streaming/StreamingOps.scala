@@ -1404,7 +1404,7 @@ object StreamingOps {
     val tmp = sys.props("java.io.tmpdir")
     val chk = new java.io.File(tmp, s"graft_kafka_chk_$topic")
     val sink = new java.io.File(tmp, s"graft_kafka_sink_$topic")
-    Seq(chk, sink).foreach(deleteRecursively)
+    Seq(chk, sink).foreach(graft.sources.GraftParquetIO.deleteRecursively)
     InMemoryLog.reset(topic)
     InMemoryLog.append(topic, records.take(half))
     drainLog(spark, topic, chk, sink, math.max(1, half / 4))
@@ -1417,12 +1417,6 @@ object StreamingOps {
         countDistinct(col("user_id")).as("n_users"),
         dsum(col("value")).as("sum_value"))
       .orderBy("event_type")
-  }
-
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
   }
 
   val queries: Seq[Query] = Seq(

@@ -533,6 +533,99 @@ class DurableCatalogSpec extends SparkTestBase {
     graft.sources.GraftLakeCatalog.evict("graftdur", "dur_unlabeled")
   }
 
+  test("an equality delete restored without its keys-file label fails the open and names the table") {
+    import org.apache.spark.sql.connector.write.LogicalWriteInfo
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    useCatalog()
+    val t = "graftdur.dur_eq_unlabeled"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
+    val winfo = new LogicalWriteInfo {
+      override def options(): CaseInsensitiveStringMap =
+        new CaseInsensitiveStringMap(
+          java.util.Map.of("graft.upsert.key", "k"))
+      override def queryId(): String = "q-eq-label"
+      override def schema(): org.apache.spark.sql.types.StructType =
+        spark.table(t).schema
+    }
+    def upsertEpoch(epoch: Long, lo: Long, hi: Long): Unit = {
+      val sw = graft.sources.GraftLakeCatalog
+        .tableFor("graftdur", "dur_eq_unlabeled").get
+        .newWriteBuilder(winfo).build().toStreaming
+      val w = sw.createStreamingWriterFactory(null)
+        .createWriter(0, 0, epoch)
+      (lo until hi).foreach(i =>
+        w.write(new GenericInternalRow(Array[Any](i))))
+      sw.commit(epoch, Array(w.commit()))
+    }
+    upsertEpoch(0, 0, 10)
+    upsertEpoch(1, 5, 15) // keys 5..9 equality-delete their first rows
+    assert(spark.table(t).count() == 15)
+    val logDir = new java.io.File(new java.io.File(wh, "dur_eq_unlabeled"),
+      "_graft_log")
+    val last = Option(logDir.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.matches("v\\d+\\.json"))
+      .maxBy(_.getName.stripPrefix("v").stripSuffix(".json").toInt)
+    // strip the label from the last commit's eq-delete entry, as a
+    // pre-label writer left it
+    import org.json4s._
+    val json = org.json4s.jackson.JsonMethods.parse(
+      new String(java.nio.file.Files.readAllBytes(last.toPath), "UTF-8"))
+    val stripped = json.removeField(_._1 == "label")
+    assert(stripped != json, "precondition: the eq-delete carried a label")
+    java.nio.file.Files.write(last.toPath, org.json4s.jackson.JsonMethods
+      .compact(stripped).getBytes("UTF-8"))
+    evict("dur_eq_unlabeled")
+    val e = intercept[Exception](spark.table(t).collect())
+    val msg = causeMessages(e)
+    assert(msg.contains("no write-time key label") &&
+      msg.contains("dur_eq_unlabeled"),
+      s"the open must fail loudly and name the table: $msg")
+    graft.sources.GraftParquetIO.deleteRecursively(
+      new java.io.File(wh, "dur_eq_unlabeled"))
+    graft.sources.GraftLakeCatalog.evict("graftdur", "dur_eq_unlabeled")
+  }
+
+  test("a stale driver's INSERT OVERWRITE stays loud and changes nothing; its re-run lands") {
+    // a blind replacement is admitted only at the version it started
+    // from: a concurrent commit from another driver is a loud conflict
+    // (never silently erased), and the loss refreshes this driver, so
+    // the statement re-run the error asks for lands without an evict
+    useCatalog()
+    spark.conf.set("spark.sql.catalog.graftdur2",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftdur2.warehouse", wh)
+    val t1 = "graftdur.dur_stale_ow"
+    val t2 = "graftdur2.dur_stale_ow"
+    spark.sql(s"DROP TABLE IF EXISTS $t1")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT)")
+    spark.range(0, 10).selectExpr("id AS k").coalesce(1)
+      .writeTo(t1).append() // v1 via driver 1
+    assert(spark.table(t2).count() == 10) // driver 2 reopens at v1
+    spark.range(10, 20).selectExpr("id AS k").coalesce(1)
+      .writeTo(t2).append() // v2 via driver 2; driver 1 is stale
+    val overwrite =
+      s"INSERT OVERWRITE $t1 SELECT id AS k FROM range(100, 105)"
+    val e = intercept[Exception](spark.sql(overwrite))
+    assert(causeMessages(e).contains("write conflict"),
+      s"a stale overwrite must fail loudly: $e")
+    graft.sources.GraftLakeCatalog.evict("graftdur2", "dur_stale_ow")
+    assert(spark.table(t2).count() == 20,
+      "the refused overwrite changed nothing on disk")
+    spark.sql(overwrite)
+    assert(spark.table(t1).orderBy("k").collect().map(_.getLong(0)).toSeq ==
+      (100L until 105L), "the re-run replaces the winner's state")
+    graft.sources.GraftLakeCatalog.evict("graftdur", "dur_stale_ow")
+    graft.sources.GraftLakeCatalog.evict("graftdur2", "dur_stale_ow")
+    assert(spark.table(t2).count() == 5, "both drivers converge")
+    val versions = spark.table(s"$t1.history")
+      .orderBy("version").collect().map(_.getInt(0)).toSeq
+    assert(versions == (0 to 3),
+      s"create, two appends, one overwrite — linear history: $versions")
+    spark.sql(s"DROP TABLE IF EXISTS $t1")
+  }
+
   test("atomic CTAS/RTAS: staged publish, failures leave nothing, REPLACE flips atomically") {
     // StagingTableCatalog: CTAS stages the WHOLE table (log + data) in
     // a hidden sibling dir and publishes with one atomic rename — a

@@ -278,8 +278,8 @@ class LakehouseSpec extends SparkTestBase {
     val staleDelta = opM.newWriteBuilder(writeInfo(spark.table(tm).schema))
       .build().toBatch
     val exM = intercept[IllegalStateException] {
-      staleDelta.commit(Array(graft.sources.GraftLakeDeltaCommit(
-        Vector((f1, 1L)), Vector.empty)))
+      staleDelta.commit(Array(graft.sources.GraftLakeFilesCommit(
+        Vector.empty, deleted = Vector((f1, 1L)))))
     }
     assert(exM.getMessage.contains("write conflict"))
     assert(spark.table(tm).count() == 9, "compacted state intact")
@@ -2828,6 +2828,50 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
+  test("INSERT OVERWRITE replaces a lake table in one data-change commit; the feed shows the churn") {
+    spark.conf.set("spark.sql.catalog.graftlake",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    val t = "graftlake.spec_overwrite"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
+    for (b <- 0 until 2)
+      spark.range(b * 10L, (b + 1) * 10L)
+        .selectExpr("id AS k", "concat('old', id) AS s")
+        .coalesce(1).writeTo(t).append()
+    spark.sql(s"DELETE FROM $t WHERE k = 3") // a DV the overwrite drops
+    val table = graft.sources.GraftLakeCatalog
+      .tableFor("graftlake", "spec_overwrite").get
+    assert(table.deletionVectors.nonEmpty, "precondition: a live DV")
+    val v0 = table.currentVersion
+    spark.sql(s"INSERT OVERWRITE $t " +
+      "SELECT id AS k, concat('new', id) AS s FROM range(100, 105)")
+    assert(table.currentVersion == v0 + 1,
+      "the overwrite lands as exactly one commit")
+    assert(spark.table(t).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      (100L until 105L).map(i => (i, s"new$i")),
+      "only the overwriting rows remain")
+    assert(table.deletionVectors.isEmpty,
+      "the replaced files' deletion vectors go with them")
+    val last = spark.table(s"$t.history")
+      .where(s"version = ${v0 + 1}").collect().head
+    assert(last.getAs[Boolean]("data_change") &&
+      last.getAs[Long]("n_rows") == 5L)
+    // the change feed over the overwrite: every live old row as a
+    // delete (the DV'd k = 3 was already gone), every new row an insert
+    val feed = spark.read
+      .option("graft.changes.from", v0.toString)
+      .option("graft.changes.to", (v0 + 1).toString)
+      .table(t).select("_change_type", "k").collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    assert(feed.filter(_._1 == "delete").map(_._2).sorted.toSeq ==
+      (0L until 20L).filterNot(_ == 3L))
+    assert(feed.filter(_._1 == "insert").map(_._2).sorted.toSeq ==
+      (100L until 105L))
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
   test("spark.wap.branch routes SQL INSERT to the branch, refuses row-level") {
     spark.conf.set("spark.sql.catalog.graftlake",
       classOf[graft.sources.GraftLakeCatalog].getName)
@@ -3983,13 +4027,13 @@ class LakehouseSpec extends SparkTestBase {
       fw).createWriter(0, 0)
     w.insert(new GenericInternalRow(
       Array[Any](9L, UTF8String.fromString("z"))))
-    val m = w.commit().asInstanceOf[graft.sources.GraftLakeDeltaCommit]
-    assert(m.insertedFiles.length == 1,
+    val m = w.commit().asInstanceOf[graft.sources.GraftLakeFilesCommit]
+    assert(m.files.length == 1,
       "insert rows left the task as a FILE, not as driver-bound rows")
-    assert(m.insertedFiles.head.nRows == 1 &&
-      m.insertedFiles.head.stats.nonEmpty,
+    assert(m.files.head.nRows == 1 &&
+      m.files.head.stats.nonEmpty,
       "the delta insert file ships its task-collected stats block")
-    new java.io.File(m.insertedFiles.head.tmpPath).delete()
+    new java.io.File(m.files.head.tmpPath).delete()
     // end-to-end: a MERGE through SQL adopts everything, no temp residue
     spark.sql(s"MERGE INTO $t USING (SELECT 2 AS k, 'B' AS s UNION ALL " +
       s"SELECT 3, 'c') src ON $t.k = src.k " +
@@ -4063,7 +4107,7 @@ class LakehouseSpec extends SparkTestBase {
     assert(spark.table(t).count() == 120 && table.currentVersion == v,
       "an idle re-drain must not duplicate or commit")
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    graft.streaming.StreamingOps.deleteRecursively(tmp)
+    graft.sources.GraftParquetIO.deleteRecursively(tmp)
   }
 
   test("parquet change-feed planning ships paths, not rows (task-side decode)") {

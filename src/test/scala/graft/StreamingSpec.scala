@@ -508,7 +508,7 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
     val landed = spark.read.parquet(sink.getAbsolutePath)
     assert(landed.count() == n && landed.select("event_id").distinct()
       .count() == n, "each log record written exactly once across restart")
-    StreamingOps.deleteRecursively(tmp)
+    graft.sources.GraftParquetIO.deleteRecursively(tmp)
   }
 
   test("a silent zero-row streaming run fails loudly (checkpoint-resume guard)") {
@@ -533,7 +533,7 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
     }
     assert(e.getMessage.contains("ZERO"),
       s"guard must name the zero-row condition, got: ${e.getMessage}")
-    StreamingOps.deleteRecursively(tmp)
+    graft.sources.GraftParquetIO.deleteRecursively(tmp)
   }
 
   test("a stream-stream join drain runs on the HDFS store and unloads it") {
@@ -601,6 +601,62 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
       "batch 0 must have committed state before batch 1 failed")
     val left = RunStateStores.loaded(q.runId)
     assert(left.isEmpty, s"the failed drain left $left loaded")
-    StreamingOps.deleteRecursively(h.root)
+    graft.sources.GraftParquetIO.deleteRecursively(h.root)
+  }
+
+  test("a Complete-mode aggregation replaces its lake sink each epoch; a replayed epoch is a no-op") {
+    spark.conf.set("spark.sql.catalog.graftlake",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    val t = "graftlake.spec_stream_complete"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (g BIGINT, n BIGINT)")
+    val table = graft.sources.GraftLakeCatalog
+      .tableFor("graftlake", "spec_stream_complete").get
+    val tmp = java.nio.file.Files.createTempDirectory("graft_complete_").toFile
+    val land = new java.io.File(tmp, "land")
+    val chk = new java.io.File(tmp, "chk")
+    // three landing files of 30 rows → three epochs of 10 rows per group
+    for (b <- 0 until 3)
+      spark.range(b * 30L, (b + 1) * 30L).selectExpr("id % 3 AS g")
+        .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
+    val schema = spark.read.parquet(land.getAbsolutePath).schema
+    def drain(): Unit = {
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(land.getAbsolutePath)
+        .groupBy("g").agg(count(lit(1)).as("n"))
+        .writeStream.outputMode("complete")
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(t)
+      graft.streaming.StreamingOps.awaitDrained(q)
+    }
+    def rowsAt(v: Int): Seq[(Long, Long)] =
+      spark.read.option("graft.snapshot-version", v.toString).table(t)
+        .orderBy("g").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    try {
+      val v0 = table.currentVersion
+      drain()
+      assert(table.currentVersion == v0 + 3, "one commit per epoch")
+      // each epoch REPLACED the table with the running aggregate
+      (1 to 3).foreach(i =>
+        assert(rowsAt(v0 + i) == (0L until 3L).map(g => (g, 10L * i)),
+          s"version ${v0 + i} holds exactly epoch ${i - 1}'s result"))
+      // a crash after the sink commit but before the checkpoint's commit
+      // log advanced: the restart re-runs the last epoch
+      val commits = new java.io.File(chk, "commits")
+      commits.listFiles().filter(f =>
+        f.getName == "2" || f.getName == ".2.crc").foreach(_.delete())
+      drain()
+      assert(table.currentVersion == v0 + 3,
+        "the replayed epoch commits nothing")
+      assert(rowsAt(v0 + 3) == (0L until 3L).map(g => (g, 30L)))
+      assert(!new java.io.File(table.filePaths.values.head).getParentFile
+        .listFiles().exists(_.getName.startsWith("tmp_")),
+        "the replayed epoch's task temps are unlinked")
+    } finally {
+      graft.sources.GraftParquetIO.deleteRecursively(tmp)
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 }
