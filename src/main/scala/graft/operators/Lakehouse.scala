@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.io.File
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 

@@ -1601,8 +1601,6 @@ object Relational {
     */
   def temporalPitJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables(spark, sfDir, "events")
-    val byStart = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
     val hist = ev.filter(col("event_type") === "signup")
       .select(col("user_id").as("h_user"), col("event_id").as("version_id"),
         col("ts").as("valid_from"))

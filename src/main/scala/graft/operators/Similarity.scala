@@ -50,9 +50,6 @@ object Similarity {
     Seq.fill(NumPlanes)(Seq.fill(Dim)(rnd.nextGaussian()))
   }
 
-  private def dot(x: Column, y: Column): Column =
-    aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
-
   private def asDouble(c: Column): Column = transform(c, x => x.cast(DoubleType))
 
   /** Exact brute-force cosine top-10 neighbors of probe vec_id=0. */

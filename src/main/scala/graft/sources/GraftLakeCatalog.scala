@@ -298,7 +298,7 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog
             s"bucket($n, $ref) needs an INT/BIGINT/STRING/DATE column, " +
               s"got ${srcType(ref).sql}")
           BucketPart(n, ref)
-        case other => throw new UnsupportedOperationException(
+        case _ => throw new UnsupportedOperationException(
           s"unsupported partition transform ${t.describe()}")
       }
     }
@@ -2539,14 +2539,16 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private def commit(admit: => Boolean, dataChange: Boolean,
       txn: Option[(String, Long)] = None)(apply: => Unit): Unit =
     retryCas() {
-      val replayed = txn.exists { case (q, e) =>
-        streamEpochs.get(q).exists(_ >= e) }
-      if (!replayed && admit) {
+      if (!replayed(txn) && admit) {
         apply
         recordCommit(dataChange, txn)
         txn.foreach(streamEpochs += _)
       }
     }
+
+  /** The table already recorded this streaming epoch. */
+  private def replayed(txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (q, e) => streamEpochs.get(q).exists(_ >= e) }
 
   /** Admission of a BLIND replacement (INSERT OVERWRITE, a Complete-mode
     * epoch, rollback, publish): its outcome depends on commit order, so
@@ -2620,14 +2622,23 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * Temps mint ONE at a time, once each: a claim lost to another
     * writer leaves the temp in place, refreshes from the log and
     * re-claims the next free number; only a successful fill consumes a
-    * temp. On a final failure the temps not yet adopted are unlinked
-    * (already-minted files stay — unreferenced claimed objects,
-    * remove_orphan_files' concern). */
+    * temp. `admit`, the admission of the commit the files are minted
+    * for, runs before the first claim and again after every refresh,
+    * so a commit the refreshed state refuses throws before it adopts
+    * another temp. On a final failure the temps not yet adopted are
+    * unlinked (already-minted files stay — unreferenced claimed
+    * objects, remove_orphan_files' concern). */
   private def mint(metas: Vector[GraftLakeFileMeta],
-      kind: GraftLakeTable.Mint): Vector[GraftLakeFile] =
+      kind: GraftLakeTable.Mint,
+      admit: => Boolean = true): Vector[GraftLakeFile] = {
+    var admittedAt = -1L
     metas.indices.toVector.map { i =>
       val m = metas(i)
       retryCas(cleanup = GraftLakeTaskFiles.unlink(metas.drop(i))) {
+        if (admittedAt != rebases) {
+          admit
+          admittedAt = rebases
+        }
         // the concurrent-ALTER guard: a write pinned its field ids when
         // it was built; rewrites keep their source generation's layout
         if (kind.current && m.cols != colIds)
@@ -2669,6 +2680,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         gf
       }
     }
+  }
 
   /** The (schema, field ids, exists-defaults) a RETAINED version was
     * committed under — what a pinned read resolves through. */
@@ -3132,9 +3144,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           s"$what — retry against the current state")
       true
     }
-    try admits
-    catch { case e: Throwable => GraftLakeTaskFiles.unlink(metas); throw e }
-    val minted = mint(metas, GraftLakeTable.Rewrites)
+    val minted = mint(metas, GraftLakeTable.Rewrites, admits)
     commit(admits, dataChange = false) {
       files = swap(minted)
       dvs = dvs.filterNot { case (id, _) => gone.contains(id) }
@@ -3556,8 +3566,9 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private def appendFiles(pendings: Vector[GraftLakeFileMeta],
       plannedChecks: Set[(String, String)]): Unit =
     synchronized {
-      val minted = mint(pendings, GraftLakeTable.DataFiles)
-      commit(admitsChecks(plannedChecks), dataChange = true) {
+      def admits = admitsChecks(plannedChecks)
+      val minted = mint(pendings, GraftLakeTable.DataFiles, admits)
+      commit(admits, dataChange = true) {
         files = files ++ minted
       }
     }
@@ -3570,9 +3581,11 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       txn: Option[(String, Long)] = None): Unit =
     synchronized {
       val v0 = currentVersion
-      val minted = mint(pendings, GraftLakeTable.DataFiles)
-      commit(admitsAt(v0, "an overwrite") && admitsChecks(plannedChecks),
-          dataChange = true, txn) {
+      // a replayed epoch is no refusal: its commit is a no-op
+      def admits = replayed(txn) ||
+        admitsAt(v0, "an overwrite") && admitsChecks(plannedChecks)
+      val minted = mint(pendings, GraftLakeTable.DataFiles, admits)
+      commit(admits, dataChange = true, txn) {
         files = minted
         dvs = Map.empty
       }
@@ -3620,12 +3633,6 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             s"schema (${schemaNow.fieldNames.mkString(", ")})")
           (colIds(ki), schemaNow.fields(ki).dataType)
         }
-        val newFiles = mint(pendings, GraftLakeTable.DataFiles)
-        val ownIds = newFiles.map(_.id).toSet
-        val newEqs = key.toVector.flatMap { case (keyId, keyType) =>
-          mint(keyMetas, GraftLakeTable.KeysFiles).map(k =>
-            GraftEqDelete(keyId, k.path, k.pnames.head, belowSeq, keyType))
-        }
         // SEQUENCE GUARD: the epoch's keys delete files with seq ≤
         // belowSeq, captured pre-mint. A rebase winner that MINTED files
         // (append, compaction rewrite) put rows ABOVE that threshold
@@ -3635,10 +3642,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         // file-number sequence is fixed at mint). Refuse loudly: the
         // streaming query fails, the restart replays the epoch from the
         // checkpoint with a fresh belowSeq — self-healing. Winners that
-        // only touched DVs or removed files rebase fine.
+        // only touched DVs or removed files rebase fine. The epoch's own
+        // files are never in `files` here: every admission runs on a
+        // durable state this epoch has not committed to.
         def admitsSequence: Boolean = upsertKey.isEmpty || {
-          val foreign = files.filter(f => !ownIds.contains(f.id) &&
-            GraftEqDelete.seqOf(f.id) > belowSeq)
+          val foreign =
+            files.filter(f => GraftEqDelete.seqOf(f.id) > belowSeq)
           if (foreign.nonEmpty) throw new IllegalStateException(
             s"write conflict on $tableName: concurrent commit(s) added " +
               s"${foreign.map(_.id).mkString(", ")} above this upsert " +
@@ -3647,8 +3656,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
               "the checkpoint)")
           true
         }
-        commit(admitsSequence && admitsChecks(plannedChecks),
-            dataChange = true, txn) {
+        def admits = replayed(txn) ||
+          admitsSequence && admitsChecks(plannedChecks)
+        val newFiles = mint(pendings, GraftLakeTable.DataFiles, admits)
+        val newEqs = key.toVector.flatMap { case (keyId, keyType) =>
+          mint(keyMetas, GraftLakeTable.KeysFiles, admits).map(k =>
+            GraftEqDelete(keyId, k.path, k.pnames.head, belowSeq, keyType))
+        }
+        commit(admits, dataChange = true, txn) {
           eqs = eqs ++ newEqs
           files = files ++ newFiles
         }
@@ -3725,7 +3740,6 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       plannedChecks: Set[(String, String)]): Unit = {
     commitHook()
     synchronized {
-      val minted = mint(pendings, GraftLakeTable.DataFiles)
       // every admission rule re-runs on every rebase: a cross-writer
       // APPEND leaves the scanned groups intact and the rewrite lands
       // on the refreshed state; a cross-writer replace of a scanned
@@ -3740,8 +3754,10 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             "snapshot — retry the statement against the current state")
         true
       }
-      commit(admitsGroups && admitsEqEpochs(eqs0) &&
-          admitsChecks(plannedChecks), dataChange = true) {
+      def admits = admitsGroups && admitsEqEpochs(eqs0) &&
+        admitsChecks(plannedChecks)
+      val minted = mint(pendings, GraftLakeTable.DataFiles, admits)
+      commit(admits, dataChange = true) {
         files = files.filterNot(f => removed.contains(f.id)) ++ minted
         dvs = dvs.filterNot { case (id, _) => removed.contains(id) }
       }
@@ -3763,7 +3779,6 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       pendings: Vector[GraftLakeFileMeta]): Unit = {
     commitHook()
     synchronized {
-      val minted = mint(pendings, GraftLakeTable.DataFiles)
       // every validation re-runs on every rebase against the refreshed
       // state — a winner that only appended passes them and this delta
       // lands rebased; a winner that compacted a target file or grew
@@ -3786,8 +3801,10 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             "file(s); retry the statement against the current state")
         true
       }
-      commit(admitsDeletes && admitsEqEpochs(eqs0) &&
-          admitsChecks(plannedChecks), dataChange = true) {
+      def admits = admitsDeletes && admitsEqEpochs(eqs0) &&
+        admitsChecks(plannedChecks)
+      val minted = mint(pendings, GraftLakeTable.DataFiles, admits)
+      commit(admits, dataChange = true) {
         dvs = (dvs.keySet ++ deleted.keySet).map(id =>
           id -> (dvs.getOrElse(id, Set.empty) ++
             deleted.getOrElse(id, Set.empty))).toMap
@@ -4852,7 +4869,6 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
       val usable = predicates.filter(p =>
         p.name() != "IN" || p.children().length <= 1001)
       val nameToId = idToName.map(_.swap)
-      val before = active.length
       if (usable.nonEmpty)
         active = active.filter(f =>
           GraftLakeStats.mayMatch(f, usable.toSeq, nameToId, colDefaults))
@@ -5567,7 +5583,7 @@ private[sources] object GraftLakeChanges {
     // rows).
     def emit(f: GraftLakeFile, ct: String, v: Long, drop: Set[Long],
         keepOnly: Option[Set[Long]],
-        eqDrop: Seq[(Int, GraftEqDelete)] = Nil,
+        eqDrop: Seq[(Int, GraftEqDelete)],
         eqKeep: Option[(Int, GraftEqDelete)] = None): Unit = {
       val n = keepOnly.map(_.size.toLong).getOrElse(f.numRows - drop.size)
       if (n > 0)

@@ -4,8 +4,6 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardCopyOption}
 
-import scala.jdk.CollectionConverters._
-
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -384,7 +382,6 @@ private[sources] class GraftLakeLog(root: File) {
     * enforced, rely, validation status) per constraint. */
   def writeConstraints(
       cs: Seq[(String, String, Boolean, Boolean, String)]): Unit = {
-    import GraftLakeLog._
     writeAtomic("constraints.json", JsonMethods.compact(JArray(
       cs.toList.map { case (name, sql, enforced, rely, status) => JObject(
         "name" -> JString(name),

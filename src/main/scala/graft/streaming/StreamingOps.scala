@@ -613,30 +613,38 @@ object StreamingOps {
       val ev = Tables(spark, sfDir, "events")
       ev.repartitionByRange(4, col("ts"), col("event_id"))
         .write.mode("overwrite").parquet(d.getAbsolutePath)
-      Seq(("2", "z1"), ("4", "z2")).foreach { case (hours, tag) =>
-        val tmp = new java.io.File(d, "_sentinel_tmp")
-        ev.agg(max(col("ts")).as("m")).coalesce(1)
-          .select(
-            lit(-1L).as("event_id"),
-            (col("m") + expr(s"INTERVAL '$hours' HOUR")).as("ts"),
-            lit(-1L).as("user_id"),
-            lit("sentinel").as("event_type"),
-            lit(0.0).as("value"),
-            lit("{}").as("props"))
-          .write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        val part = Option(tmp.listFiles()).getOrElse(Array.empty)
+      // one job: a single scan for the corpus maximum places both
+      // sentinels, each written to its own tag= directory
+      val tmp = new java.io.File(d, "_sentinel_tmp")
+      ev.agg(max(col("ts")).as("m"))
+        .select(col("m"), explode(array(
+          struct(expr("INTERVAL '2' HOUR").as("after"), lit("z1").as("tag")),
+          struct(expr("INTERVAL '4' HOUR").as("after"), lit("z2").as("tag"))))
+          .as("s"))
+        .coalesce(1)
+        .select(
+          lit(-1L).as("event_id"),
+          (col("m") + col("s.after")).as("ts"),
+          lit(-1L).as("user_id"),
+          lit("sentinel").as("event_type"),
+          lit(0.0).as("value"),
+          lit("{}").as("props"),
+          col("s.tag").as("tag"))
+        .write.partitionBy("tag").mode("overwrite")
+        .parquet(tmp.getAbsolutePath)
+      Seq("z1", "z2").foreach { tag =>
+        val part = Option(new java.io.File(tmp, s"tag=$tag").listFiles())
+          .getOrElse(Array.empty)
           .find(f => f.getName.startsWith("part-")
             && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error("sentinel part file missing"))
+          .getOrElse(sys.error(s"sentinel $tag part file missing"))
         // "part-z..." sorts after part-0000N, so the mtime sequencing
         // below puts the sentinels LAST in arrival order
         java.nio.file.Files.move(part.toPath,
           new java.io.File(d, s"part-$tag-sentinel.parquet").toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        Option(tmp.listFiles()).getOrElse(Array.empty)
-          .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
-        java.nio.file.Files.deleteIfExists(tmp.toPath)
       }
+      graft.sources.GraftParquetIO.deleteRecursively(tmp)
       Option(d.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("part-")).sortBy(_.getName)
         .zipWithIndex.foreach { case (f, i) =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Durable catalog metadata: a lake table's COMMIT LOG lives as files
   * under `<root>/_graft_log` (table.json + per-file manifests + one
   * manifest-list JSON per commit + refs.json), so the in-memory registry
@@ -228,6 +226,16 @@ class DurableCatalogSpec extends SparkTestBase {
     assert(spark.table(t).where("v = 1").count() == 100 &&
       spark.table(t).count() == 350,
       "the reopened log must replay the same linear history")
+  }
+
+  /** Every file under a table's root, `_graft_log` included. */
+  private def tableFiles(name: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File(wh, name).toPath
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(root.relativize(_).toString).toSet
+    finally walk.close()
   }
 
   /** The cross-writer commit contract through the POSIX arbiter
@@ -607,9 +615,12 @@ class DurableCatalogSpec extends SparkTestBase {
       .writeTo(t2).append() // v2 via driver 2; driver 1 is stale
     val overwrite =
       s"INSERT OVERWRITE $t1 SELECT id AS k FROM range(100, 105)"
+    val before = tableFiles("dur_stale_ow")
     val e = intercept[Exception](spark.sql(overwrite))
     assert(causeMessages(e).contains("write conflict"),
       s"a stale overwrite must fail loudly: $e")
+    assert(tableFiles("dur_stale_ow") == before,
+      "the refused overwrite adopts no file and journals no manifest")
     graft.sources.GraftLakeCatalog.evict("graftdur2", "dur_stale_ow")
     assert(spark.table(t2).count() == 20,
       "the refused overwrite changed nothing on disk")
@@ -623,6 +634,48 @@ class DurableCatalogSpec extends SparkTestBase {
       .orderBy("version").collect().map(_.getInt(0)).toSeq
     assert(versions == (0 to 3),
       s"create, two appends, one overwrite — linear history: $versions")
+    spark.sql(s"DROP TABLE IF EXISTS $t1")
+  }
+
+  test("a stale driver's refused rewrite or MoR delta leaves no file behind") {
+    // the winner minted a file, so the stale driver learns of it at its
+    // first claim; the refreshed state refuses its commit before it
+    // adopts any temp
+    useCatalog()
+    spark.conf.set("spark.sql.catalog.graftdur2",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftdur2.warehouse", wh)
+    val t1 = "graftdur.dur_refused"
+    val t2 = "graftdur2.dur_refused"
+    spark.sql(s"DROP TABLE IF EXISTS $t1")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
+    spark.range(0, 10).selectExpr("id AS k").coalesce(1)
+      .writeTo(t1).append() // v1 via driver 1
+    spark.range(10, 20).selectExpr("id AS k").coalesce(1)
+      .writeTo(t1).append() // v2 via driver 1
+    assert(spark.table(t2).count() == 20) // driver 2 reopens at v2
+    def refused(stmt: String, what: String): Unit = {
+      val before = tableFiles("dur_refused")
+      val e = intercept[Exception](spark.sql(stmt))
+      assert(causeMessages(e).contains("write conflict"),
+        s"the stale $what must fail loudly: $e")
+      assert(tableFiles("dur_refused") == before,
+        s"the refused $what adopts no file and journals no manifest")
+    }
+    // driver 2 grows f1's deletion vector and mints the updated row
+    spark.sql(s"UPDATE $t2 SET k = k + 100 WHERE k = 3")
+    refused("CALL graftdur.system.compact_files('dur_refused', 100)",
+      "rewrite")
+    spark.sql(s"UPDATE $t2 SET k = k + 100 WHERE k = 4")
+    refused(s"UPDATE $t1 SET k = k + 100 WHERE k = 5", "MoR delta")
+    // each loss refreshed driver 1: the re-runs land
+    spark.sql(s"UPDATE $t1 SET k = k + 100 WHERE k = 5")
+    spark.sql("CALL graftdur.system.compact_files('dur_refused', 100)")
+    graft.sources.GraftLakeCatalog.evict("graftdur2", "dur_refused")
+    assert(spark.table(t2).orderBy("k").collect().map(_.getLong(0)).toSeq ==
+      ((0L until 20L).filterNot(Set(3L, 4L, 5L)) ++ Seq(103L, 104L, 105L)))
+    graft.sources.GraftLakeCatalog.evict("graftdur", "dur_refused")
     spark.sql(s"DROP TABLE IF EXISTS $t1")
   }
 

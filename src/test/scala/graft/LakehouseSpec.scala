@@ -403,7 +403,7 @@ class LakehouseSpec extends SparkTestBase {
     // SQL surface cannot interleave a commit between the two snapshots.
     import org.apache.spark.sql.connector.expressions.Expressions
     import org.apache.spark.sql.connector.expressions.filter.Predicate
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import org.apache.spark.unsafe.types.UTF8String
     import graft.sources.{GraftLakeFile, GraftLakeScan, GraftLakeSnapshot, GroupScanState}
     val schema = StructType(Seq(StructField("k", LongType)))

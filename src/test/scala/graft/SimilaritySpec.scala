@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 class SimilaritySpec extends SparkTestBase {
 
   test("brute-force top-10 is sorted and correctly sized") {

@@ -356,11 +356,92 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
     val key = Session.CheckpointManagerKey
     assert(spark.conf.getOption(key).isEmpty)
     val inside = Session.withLeanDrain(spark)(spark.conf.get(key))
-    assert(inside ==
-      "org.apache.spark.sql.execution.streaming.checkpointing." +
-        "FileSystemBasedCheckpointFileManager")
+    assert(inside == "graft.streaming.LocalCheckpointFileManager")
     assert(spark.conf.getOption(key).isEmpty,
       "the manager pin must not outlive the drain")
+  }
+
+  test("the local checkpoint manager's atomic writes survive a killed writer") {
+    import java.nio.file.Files
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{
+      CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    import graft.streaming.LocalCheckpointFileManager
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = Files.createTempDirectory("graft_ckpt_fm")
+    def root(sub: String) = new Path(dir.resolve(sub).toUri)
+    val local = new LocalCheckpointFileManager(root("local"), conf)
+    val spark0 = new FileSystemBasedCheckpointFileManager(root("spark"), conf)
+    def write(fm: CheckpointFileManager, f: Path, text: String,
+        overwrite: Boolean) = {
+      val out = fm.createAtomic(f, overwrite)
+      out.write(text.getBytes("UTF-8"))
+      out
+    }
+    def read(fm: CheckpointFileManager, f: Path): String = {
+      val in = fm.open(f)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    def names(sub: String): Set[String] = dir.resolve(sub).toFile.list().toSet
+    val file = new Path(root("local"), "offsets/0")
+    local.mkdirs(file.getParent)
+    write(local, file, "v1", overwrite = false).close()
+    // a killed writer: the stream is cancelled before its rename
+    val killed = write(local, file, "v2", overwrite = true)
+    killed.cancel()
+    assert(read(local, file) == "v1", "the previous version stays readable")
+    assert(names("local/offsets") == Set("0", ".0.crc"),
+      "a cancelled write leaves no temp file; the .crc sidecar is written")
+    intercept[FileAlreadyExistsException](
+      write(local, file, "v3", overwrite = false).close())
+    assert(read(local, file) == "v1")
+    // Spark's default manager reads the file back, its checksum verified
+    val default = CheckpointFileManager.create(file.getParent,
+      new org.apache.hadoop.conf.Configuration(conf))
+    assert(!default.isInstanceOf[LocalCheckpointFileManager])
+    assert(read(default, file) == "v1")
+    // the modes match the ones Spark's own manager sets through chmod
+    val other = new Path(root("spark"), "offsets/0")
+    spark0.mkdirs(other.getParent)
+    write(spark0, other, "v1", overwrite = false).close()
+    for (rel <- Seq("offsets", "offsets/0", "offsets/.0.crc"))
+      assert(Files.getPosixFilePermissions(dir.resolve(s"local/$rel")) ==
+        Files.getPosixFilePermissions(dir.resolve(s"spark/$rel")), rel)
+    graft.sources.GraftParquetIO.deleteRecursively(dir.toFile)
+  }
+
+  test("a lean drain starts no process for its checkpoint files") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try {
+      run("stream_stream_semi").count()
+      // the recording's own control: one process this test starts
+      new ProcessBuilder("true").start().waitFor()
+    } finally rec.stop()
+    val jfr = Files.createTempFile("graft_drain", ".jfr")
+    try {
+      rec.dump(jfr)
+      val starts = RecordingFile.readAllEvents(jfr).asScala.toSeq
+      def frames(e: jdk.jfr.consumer.RecordedEvent): Seq[String] =
+        Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+          .map(f => f.getMethod.getType.getName + "." + f.getMethod.getName)
+      assert(starts.exists(frames(_).exists(_.contains("StreamingSpec"))),
+        "the recording must see the control process start")
+      val fromCheckpoints = starts.filter(
+        frames(_).exists(_.contains("CheckpointFileManager")))
+      assert(fromCheckpoints.size == 0,
+        s"${fromCheckpoints.size} process starts from checkpoint files: " +
+          fromCheckpoints.headOption.map(e =>
+            frames(e).take(12).mkString("\n  ")).getOrElse(""))
+    } finally {
+      rec.close()
+      Files.deleteIfExists(jfr)
+    }
   }
 
   test("a registry drain leaves the Hadoop conf without property sources") {

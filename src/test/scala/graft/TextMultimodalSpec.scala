@@ -25,7 +25,6 @@ class TextMultimodalSpec extends SparkTestBase {
   }
 
   test("RollingHash interpreted and codegen paths agree") {
-    import spark.implicits._
     val df = spark.read.parquet(s"$Sf/documents.parquet").select(col("text"))
     val viaPlan = df.select(RollingHash(col("text")).as("h"))
       .collect().map(_.getLong(0))
