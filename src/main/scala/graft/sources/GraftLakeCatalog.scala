@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
@@ -740,7 +740,9 @@ object GraftLakeCatalog {
   * name-keyed manifests would wrongly null-fill a renamed column.
   * `path` is the file's parquet data on disk; the driver keeps only
   * this manifest — never rows — and `numRows` is recorded at write
-  * time. */
+  * time. A write task builds the record while it writes the file
+  * ([[GraftLakeFileWriter]]) and ships it with an empty `id` and its
+  * temp file as `path`; the commit's `mint` assigns both. */
 final case class GraftLakeFile(id: String, cols: Seq[Int], path: String,
     types: Seq[DataType] = Nil, bytes: Long = 0L,
     stats: Map[Int, (Any, Any)] = Map.empty,
@@ -762,7 +764,7 @@ final case class GraftLakeFile(id: String, cols: Seq[Int], path: String,
     nnulls: Map[(Int, String), Long] = Map.empty,
     // per-column Bloom filters over the file's non-null values (field
     // id → bit words): equality-probe skipping where min/max can't
-    // decide — see GraftLakeStats.bloomCollect
+    // decide — see GraftLakeStats.Collector
     blooms: Map[Int, Array[Long]] = Map.empty,
     // PARTITION PURITY: the single partition-key tuple every row of
     // this file evaluates to (fanout write splits files per key), or
@@ -785,7 +787,8 @@ final case class GraftLakeFile(id: String, cols: Seq[Int], path: String,
     // time into the distinctCount CBO reads — see GraftLakeStats.ndv*
     ndv: Map[Int, Array[Byte]] = Map.empty)
 
-/** Per-file MIN/MAX column statistics and the predicate evaluator that
+/** Per-file column statistics — built by [[GraftLakeStats.Collector]] in
+  * the pass that writes the file — and the predicate evaluator that
   * prunes files against them — the Iceberg manifest-stats contract at
   * the DSv2 layer: a range/equality predicate excludes whole file groups
   * DRIVER-SIDE before any partition is planned. Pruning is strictly
@@ -832,95 +835,176 @@ private[graft] object GraftLakeStats {
     case other => other
   }
 
-  /** Min/max of non-null values per supported column; a supported column
-    * with only nulls records (null, null) — provably unmatched by any
-    * null-rejecting comparison. Unsupported types record nothing (and
-    * are never pruned on). */
-  def collect(rows: Vector[InternalRow], colIds: Seq[Int],
-      types: Seq[DataType]): Map[Int, (Any, Any)] =
-    colIds.zipWithIndex.flatMap { case (id, i) =>
-      val dt = types(i)
-      if (!statsSupported(dt)) None
-      else {
-        var mn: Any = null
-        var mx: Any = null
-        rows.foreach { r =>
-          if (!r.isNullAt(i)) {
-            val v = r.get(i, dt)
-            if (mn == null || cmp(v, mn) < 0) mn = v
-            if (mx == null || cmp(v, mx) > 0) mx = v
-          }
-        }
-        Some(id -> ((mn, mx)))
-      }
-    }.toMap
+  /** A value kept past the row it came from: rows reach the writer as
+    * reused buffers, whose strings and decimals are views into them. */
+  def keep(v: Any): Any = v match {
+    case u: UTF8String => u.clone()
+    case d: org.apache.spark.sql.types.Decimal => d.clone()
+    case other => other
+  }
 
-  /** Min/max + null counts for STRUCT LEAF fields of primitive type at
-    * ANY struct-in-struct depth, keyed (struct column id, dotted leaf
-    * path). A null struct anywhere on the path counts as a null leaf
-    * (SQL: `a.b.c` of a null link IS NULL), so the null count is usable
-    * for IS [NOT] NULL pruning directly. */
-  def collectNested(rows: Vector[InternalRow], colIds: Seq[Int],
-      types: Seq[DataType])
-      : (Map[(Int, String), (Any, Any)], Map[(Int, String), Long]) = {
-    val st = Map.newBuilder[(Int, String), (Any, Any)]
-    val nu = Map.newBuilder[(Int, String), Long]
-    // every primitive leaf reachable through structs only:
-    // (dotted path, leaf type, field-index chain)
-    def leaves(s: StructType, path: Seq[(String, Int)])
-        : Seq[(String, DataType, Seq[Int])] =
-      s.fields.zipWithIndex.flatMap { case (f, j) =>
+  /** One file's manifest stats, built row by row in the pass that writes
+    * the file (Iceberg writers collect their metrics the same way):
+    *  - min/max of every [[statsSupported]] column; an all-null one
+    *    records (null, null), provably unmatched by any null-rejecting
+    *    comparison, and other types record nothing (never pruned on);
+    *  - null counts of EVERY column: the IS [NOT] NULL pruning input and
+    *    the COUNT(col) pushdown's subtrahend;
+    *  - per-file SUMs of integral columns, overflow-checked: integer sums
+    *    are exact and ADDITION-ORDER-FREE (unlike doubles, whose
+    *    scan-order-dependent rounding makes a manifest sum unfaithful),
+    *    so `SUM(bigint_col)` answers from manifests; a column whose sum
+    *    overflows a Long records NO entry (the pushdown then refuses);
+    *  - SUMs of DECIMAL columns as UNBOUNDED BigDecimal — exact and
+    *    order-free, never overflowing here; the PUSHDOWN checks the
+    *    result fits Spark's `decimal(p+10, s)` sum type;
+    *  - min/max + null counts of STRUCT LEAF fields of supported type at
+    *    ANY struct-in-struct depth, keyed (struct column id, dotted leaf
+    *    path); a null struct anywhere on the path counts as a null leaf
+    *    (SQL: `a.b.c` of a null link IS NULL);
+    *  - bloom bits and HLL registers (see the sections below).
+    * Rows may be reused buffers: the only values kept past [[add]] are
+    * new extremes, copied by [[keep]]. A bloom is sized by the file's
+    * row count, so its columns buffer one 64-bit hash per non-null value
+    * and set the bits in [[file]]. */
+  final class Collector(colIds: Seq[Int], types: Seq[DataType]) {
+    private val n = types.length
+    private val ts = types.toArray // a restored manifest's types are a List
+    private var rows = 0L
+    private val nulls = new Array[Long](n)
+    private val lo = new Array[Any](n)
+    private val hi = new Array[Any](n)
+    private val minMax = types.map(statsSupported).toArray
+    private val integral = types.map {
+      case LongType | org.apache.spark.sql.types.IntegerType => true
+      case _ => false
+    }.toArray
+    private val isum = new Array[Long](n)
+    private val overflowed = new Array[Boolean](n)
+    private val dsum = types.map {
+      case _: org.apache.spark.sql.types.DecimalType =>
+        java.math.BigDecimal.ZERO
+      case _ => null
+    }.toArray
+    private val hashes = types.map(dt =>
+      if (bloomSupported(dt)) new scala.collection.mutable.ArrayBuilder.ofLong
+      else null).toArray
+    private val regs = types.map(dt =>
+      if (ndvCapable(dt)) new Array[Byte](NdvM) else null).toArray
+    private val leaves = types.map {
+      case s: StructType => leavesOf(s)
+      case _ => Array.empty[Leaf]
+    }.toArray
+
+    def add(r: InternalRow): Unit = {
+      rows += 1
+      var i = 0
+      while (i < n) {
+        if (r.isNullAt(i)) {
+          nulls(i) += 1
+          leaves(i).foreach(_.nulls += 1)
+        } else if (leaves(i).nonEmpty) {
+          val s = r.getStruct(i, ts(i).asInstanceOf[StructType].length)
+          leaves(i).foreach(_.add(s))
+        } else if (minMax(i) || hashes(i) != null || regs(i) != null) {
+          val v = r.get(i, ts(i))
+          if (minMax(i)) {
+            if (lo(i) == null || cmp(v, lo(i)) < 0) lo(i) = keep(v)
+            if (hi(i) == null || cmp(v, hi(i)) > 0) hi(i) = keep(v)
+          }
+          if (integral(i) && !overflowed(i)) {
+            try isum(i) = Math.addExact(isum(i), v match {
+              case l: java.lang.Long => l.longValue()
+              case x => x.asInstanceOf[java.lang.Integer].longValue()
+            })
+            catch { case _: ArithmeticException => overflowed(i) = true }
+          }
+          if (dsum(i) != null) dsum(i) = dsum(i).add(
+            v.asInstanceOf[org.apache.spark.sql.types.Decimal]
+              .toJavaBigDecimal)
+          if (hashes(i) != null) hashes(i) += bloomHash(v)
+          if (regs(i) != null) ndvAdd(regs(i), ndvHash(v))
+        }
+        i += 1
+      }
+    }
+
+    /** The file's record: `id` empty until the commit's mint names it. */
+    def file(path: String, bytes: Long, pnames: Seq[String],
+        pkey: Option[Vector[Any]], pspecId: Int): GraftLakeFile = {
+      def byId[T](pick: Int => Option[T]): Map[Int, T] =
+        colIds.indices.flatMap(i => pick(i).map(colIds(i) -> _)).toMap
+      val nested = colIds.indices.flatMap(i =>
+        leaves(i).map(l => (colIds(i), l.path) -> l))
+      GraftLakeFile("", colIds, path, types, bytes,
+        stats = byId(i => Option.when(minMax(i))((lo(i), hi(i)))),
+        numRows = rows,
+        nulls = byId(i => Some(nulls(i))),
+        sums = byId(i => Option.when(integral(i) && !overflowed(i))(isum(i))),
+        dsums = byId(i => Option(dsum(i))),
+        nstats = nested.map { case (k, l) => k -> ((l.lo, l.hi)) }.toMap,
+        nnulls = nested.map { case (k, l) => k -> l.nulls }.toMap,
+        blooms = byId(i => Option(hashes(i)).map(h => bloomWords(h.result()))),
+        pkey = pkey, pnames = pnames, pspecId = pspecId,
+        ndv = byId(i => Option(regs(i))))
+    }
+
+    // bits MUST be the exact word capacity (a probe reconstructs it as
+    // words.length * 64 — any slack would shift positions and fabricate
+    // false negatives, which here are wrong answers)
+    private def bloomWords(hs: Array[Long]): Array[Long] = {
+      val raw = math.min(BloomMaxBits, math.max(BloomMinBits,
+        rows * BloomBitsPerRow))
+      val bits = (((raw + 63) / 64) * 64).toInt
+      val words = new Array[Long](bits / 64)
+      hs.foreach(h => bloomPositions(h, bits)
+        .foreach(p => words(p >> 6) |= 1L << (p & 63)))
+      words
+    }
+  }
+
+  /** One struct leaf's min/max and null count, reached from the struct
+    * column by a field-index `chain` (with each struct's width). */
+  private final class Leaf(val path: String, dt: DataType,
+      chain: Array[Int], widths: Array[Int]) {
+    var lo: Any = null
+    var hi: Any = null
+    var nulls = 0L
+    def add(top: InternalRow): Unit = {
+      // walk the struct chain; any null link nulls the leaf
+      var cur = top
+      var d = 0
+      while (d < chain.length - 1 && cur != null) {
+        cur =
+          if (cur.isNullAt(chain(d))) null
+          else cur.getStruct(chain(d), widths(d + 1))
+        d += 1
+      }
+      if (cur == null || cur.isNullAt(chain.last)) nulls += 1
+      else {
+        val v = cur.get(chain.last, dt)
+        if (lo == null || cmp(v, lo) < 0) lo = keep(v)
+        if (hi == null || cmp(v, hi) > 0) hi = keep(v)
+      }
+    }
+  }
+
+  /** Every supported leaf reachable through structs only, in field
+    * order. */
+  private def leavesOf(s: StructType): Array[Leaf] = {
+    def walk(st: StructType, path: Seq[(String, Int)],
+        widths: Seq[Int]): Seq[Leaf] =
+      st.fields.toSeq.zipWithIndex.flatMap { case (f, j) =>
         f.dataType match {
           case inner: StructType =>
-            leaves(inner, path :+ (f.name, j))
+            walk(inner, path :+ (f.name, j), widths :+ inner.length)
           case dt if statsSupported(dt) =>
-            Seq(((path.map(_._1) :+ f.name).mkString("."), dt,
-              path.map(_._2) :+ j))
+            Seq(new Leaf((path.map(_._1) :+ f.name).mkString("."), dt,
+              (path.map(_._2) :+ j).toArray, widths.toArray))
           case _ => Nil
         }
       }
-    // sizes of each struct along a chain, for getStruct(ordinal, n)
-    def widths(s: StructType, chain: Seq[Int]): Seq[Int] =
-      if (chain.isEmpty) Nil
-      else s.length +: (s.fields(chain.head).dataType match {
-        case inner: StructType => widths(inner, chain.tail)
-        case _ => Nil
-      })
-    colIds.zipWithIndex.foreach { case (id, i) =>
-      types(i) match {
-        case s: StructType =>
-          leaves(s, Nil).foreach { case (path, leafType, chain) =>
-            val w = widths(s, chain)
-            var mn: Any = null
-            var mx: Any = null
-            var nulls = 0L
-            rows.foreach { r =>
-              if (r.isNullAt(i)) nulls += 1
-              else {
-                // walk the struct chain; any null link nulls the leaf
-                var cur: InternalRow = r.getStruct(i, w.head)
-                var d = 0
-                while (d < chain.length - 1 && cur != null) {
-                  cur =
-                    if (cur.isNullAt(chain(d))) null
-                    else cur.getStruct(chain(d), w(d + 1))
-                  d += 1
-                }
-                if (cur == null || cur.isNullAt(chain.last)) nulls += 1
-                else {
-                  val v = cur.get(chain.last, leafType)
-                  if (mn == null || cmp(v, mn) < 0) mn = v
-                  if (mx == null || cmp(v, mx) > 0) mx = v
-                }
-              }
-            }
-            st += (id, path) -> ((mn, mx))
-            nu += (id, path) -> nulls
-          }
-        case _ => ()
-      }
-    }
-    (st.result(), nu.result())
+    walk(s, Nil, Seq(s.length)).toArray
   }
 
   /** Effective stats view of column `id` in file `f`: (min/max entry,
@@ -937,52 +1021,6 @@ private[graft] object GraftLakeStats {
       case Some(d) if d != null => (Some((d, d)), Some(0L))
       case _ => (Some((null, null)), Some(f.numRows))
     }
-
-  /** Per-file SUMs of integral columns (Int/Long), overflow-checked:
-    * integer sums are exact and ADDITION-ORDER-FREE — unlike doubles,
-    * whose scan-order-dependent rounding makes a manifest sum
-    * unfaithful — so `SUM(bigint_col)` can answer from manifests. A
-    * column whose in-file sum overflows a Long records NO entry (the
-    * pushdown then refuses and the scan answers; all-null columns
-    * record 0 and the null count disambiguates SQL's NULL). */
-  def intSums(rows: Vector[InternalRow], colIds: Seq[Int],
-      types: Seq[DataType]): Map[Int, Long] =
-    colIds.zipWithIndex.flatMap { case (id, i) =>
-      types(i) match {
-        case LongType | org.apache.spark.sql.types.IntegerType =>
-          try {
-            var acc = 0L
-            rows.foreach { r =>
-              if (!r.isNullAt(i)) acc = Math.addExact(acc,
-                if (types(i) == LongType) r.getLong(i)
-                else r.getInt(i).toLong)
-            }
-            Some(id -> acc)
-          } catch { case _: ArithmeticException => None }
-        case _ => None
-      }
-    }.toMap
-
-  /** Per-file SUMs of DECIMAL columns as UNBOUNDED BigDecimal — decimal
-    * addition is exact and order-free (unlike doubles), so
-    * `SUM(decimal_col)` can answer from manifests; collection never
-    * overflows (unbounded precision), the PUSHDOWN checks the result
-    * fits Spark's `decimal(p+10, s)` sum type and refuses otherwise. */
-  def decSums(rows: Vector[InternalRow], colIds: Seq[Int],
-      types: Seq[DataType]): Map[Int, java.math.BigDecimal] =
-    colIds.zipWithIndex.flatMap { case (id, i) =>
-      types(i) match {
-        case d: org.apache.spark.sql.types.DecimalType =>
-          var acc = java.math.BigDecimal.ZERO
-          rows.foreach { r =>
-            if (!r.isNullAt(i))
-              acc = acc.add(
-                r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal)
-          }
-          Some(id -> acc)
-        case _ => None
-      }
-    }.toMap
 
   // ---- per-file BLOOM stats ---------------------------
   // Min/max can't prune a point lookup on a high-cardinality key whose
@@ -1051,28 +1089,6 @@ private[graft] object GraftLakeStats {
     Iterator.tabulate(BloomK)(i => math.floorMod(h1 + i * h2, bits))
   }
 
-  /** Per-column blooms over the file's non-null values. */
-  def bloomCollect(rows: Vector[InternalRow], colIds: Seq[Int],
-      types: Seq[DataType]): Map[Int, Array[Long]] =
-    colIds.zipWithIndex.flatMap { case (id, i) =>
-      if (!bloomSupported(types(i))) None
-      else {
-        // bits MUST be the exact word capacity (a probe reconstructs it
-        // as words.length * 64 — any slack would shift positions and
-        // fabricate false negatives, which here are wrong answers)
-        val raw = math.min(BloomMaxBits, math.max(BloomMinBits,
-          rows.length.toLong * BloomBitsPerRow))
-        val bits = (((raw + 63) / 64) * 64).toInt
-        val words = new Array[Long](bits / 64)
-        rows.foreach { r =>
-          if (!r.isNullAt(i))
-            bloomPositions(bloomHash(r.get(i, types(i))), bits)
-              .foreach(p => words(p >> 6) |= 1L << (p & 63))
-        }
-        Some(id -> words)
-      }
-    }.toMap
-
   /** Can `f` contain a row with column `id` = `lit`? False IS proof
     * (prune); files without a bloom for the id (pre-bloom manifests,
     * unsupported types, absent columns) stay conservative. */
@@ -1128,26 +1144,14 @@ private[graft] object GraftLakeStats {
       s"un-sketchable value ${other.getClass}")
   }
 
-  /** Per-column HLL registers over the file's non-null values. */
-  def ndvCollect(rows: Vector[InternalRow], colIds: Seq[Int],
-      types: Seq[DataType]): Map[Int, Array[Byte]] =
-    colIds.zipWithIndex.flatMap { case (id, i) =>
-      if (!ndvCapable(types(i))) None
-      else {
-        val regs = new Array[Byte](NdvM)
-        rows.foreach { r =>
-          if (!r.isNullAt(i)) {
-            val h = ndvHash(r.get(i, types(i)))
-            val idx = (h >>> (64 - NdvP)).toInt
-            val w = h << NdvP
-            val rank = (if (w == 0L) 64 - NdvP
-              else java.lang.Long.numberOfLeadingZeros(w)) + 1
-            if (rank > regs(idx)) regs(idx) = rank.toByte
-          }
-        }
-        Some(id -> regs)
-      }
-    }.toMap
+  /** Fold one value's hash into HLL registers. */
+  private def ndvAdd(regs: Array[Byte], h: Long): Unit = {
+    val idx = (h >>> (64 - NdvP)).toInt
+    val w = h << NdvP
+    val rank = (if (w == 0L) 64 - NdvP
+      else java.lang.Long.numberOfLeadingZeros(w)) + 1
+    if (rank > regs(idx)) regs(idx) = rank.toByte
+  }
 
   /** Register-wise max — the associative HLL union. */
   def ndvMerge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
@@ -1174,15 +1178,6 @@ private[graft] object GraftLakeStats {
       if (e <= 2.5 * m && zeros > 0) m * math.log(m / zeros) else e
     math.max(1L, math.round(est))
   }
-
-  /** Per-column null counts over EVERY column (type-independent): the
-    * IS [NOT] NULL pruning input and the COUNT(col) pushdown's
-    * subtrahend. Recorded at write time like min/max. */
-  def nullCounts(rows: Vector[InternalRow],
-      colIds: Seq[Int]): Map[Int, Long] =
-    colIds.zipWithIndex.map { case (id, i) =>
-      id -> rows.count(_.isNullAt(i)).toLong
-    }.toMap
 
   /** a < b for stats values of the same runtime type (aggregate
     * pushdown's reducer). */
@@ -2507,7 +2502,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * bounded by [[GraftLakeTable.MaxCommitRebases]]. Any FINAL failure
     * — a non-CAS error, or an exhausted retry budget — runs `cleanup`
     * once before propagating. Only [[mint]] and [[commit]] call it. */
-  private def retryCas[T](cleanup: => Unit = ())(body: => T): T = {
+  private def retryCas[T](cleanup: => Unit)(body: => T): T = {
     var tries = 0
     while (true) {
       try return body
@@ -2535,10 +2530,18 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * table already recorded — this driver's replay, or a zombie
     * driver's epoch another driver landed first — commits nothing.
     * Neither `admit` nor `apply` mints: minted artifacts come from
-    * [[mint]] once and are re-applied verbatim on every attempt. */
+    * [[mint]] once and are re-applied verbatim on every attempt. A
+    * commit that finally fails unlinks `minted`, the files minted for
+    * it, and their manifests: a stale writer whose claims all
+    * succeeded (the winner minted nothing, e.g. a DV-only delete)
+    * first learns it is stale at the version CAS, after adopting. */
   private def commit(admit: => Boolean, dataChange: Boolean,
-      txn: Option[(String, Long)] = None)(apply: => Unit): Unit =
-    retryCas() {
+      txn: Option[(String, Long)] = None,
+      minted: Seq[GraftLakeFile] = Nil)(apply: => Unit): Unit =
+    retryCas(cleanup = minted.foreach { f =>
+      new java.io.File(f.path).delete()
+      log.dropFileManifest(f)
+    }) {
       if (!replayed(txn) && admit) {
         apply
         recordCommit(dataChange, txn)
@@ -2614,10 +2617,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     true
   }
 
-  /** THE adoption: turn each task temp into a claimed, durable file —
-    * claim the next file number through the commit arbiter (O_EXCL on
-    * POSIX, conditional PUT on object stores — GraftCommitArbiter), fill
-    * the claim from the temp, and for data files journal the manifest.
+  /** THE adoption: turn each task temp (a record whose `path` is the
+    * temp and whose `id` is empty) into a claimed, durable file — claim
+    * the next file number through the commit arbiter (O_EXCL on POSIX,
+    * conditional PUT on object stores — GraftCommitArbiter), fill the
+    * claim from the temp, and for data files journal the manifest. The
+    * one place a file record gets its `id` and final `path`.
     * `kind` says what the temps become (see [[GraftLakeTable.Mint]]).
     * Temps mint ONE at a time, once each: a claim lost to another
     * writer leaves the temp in place, refreshes from the log and
@@ -2626,15 +2631,16 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * for, runs before the first claim and again after every refresh,
     * so a commit the refreshed state refuses throws before it adopts
     * another temp. On a final failure the temps not yet adopted are
-    * unlinked (already-minted files stay — unreferenced claimed
-    * objects, remove_orphan_files' concern). */
-  private def mint(metas: Vector[GraftLakeFileMeta],
+    * unlinked (files this call already minted stay — unreferenced
+    * claimed objects, remove_orphan_files' concern); a commit refused
+    * after its mint unlinks them itself (see [[commit]]). */
+  private def mint(temps: Vector[GraftLakeFile],
       kind: GraftLakeTable.Mint,
       admit: => Boolean = true): Vector[GraftLakeFile] = {
     var admittedAt = -1L
-    metas.indices.toVector.map { i =>
-      val m = metas(i)
-      retryCas(cleanup = GraftLakeTaskFiles.unlink(metas.drop(i))) {
+    temps.indices.toVector.map { i =>
+      val m = temps(i)
+      retryCas(cleanup = GraftLakeFileWriter.unlink(temps.drop(i))) {
         if (admittedAt != rebases) {
           admit
           admittedAt = rebases
@@ -2661,7 +2667,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
                   "written by another writer — this writer's snapshot is " +
                   "stale; reopen the table and retry the statement", e)
           }
-        try arbiter.fill(target, token, new java.io.File(m.tmpPath))
+        try arbiter.fill(target, token, new java.io.File(m.path))
         catch {
           case e: GraftClaimConflict =>
             throw new IllegalStateException(
@@ -2672,10 +2678,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
             arbiter.release(target, token)
             throw e
         }
-        val gf = GraftLakeFile(s"$tableName#${kind.prefix}$fileSeq", m.cols,
-          target.getAbsolutePath, m.types, m.bytes, m.stats, m.nRows,
-          m.nulls, m.sums, m.dsums, m.sorted, m.nstats, m.nnulls, m.blooms,
-          m.pkey, m.pnames, m.pspecId, m.ndv)
+        val gf = m.copy(id = s"$tableName#${kind.prefix}$fileSeq",
+          path = target.getAbsolutePath)
         if (kind.manifest) log.writeFileManifest(gf)
         gf
       }
@@ -3034,7 +3038,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * to main until fast_forward. Files are minted eagerly but
     * referenced only by the branch. */
   private def appendToBranch(
-      name: String, pendings: Vector[GraftLakeFileMeta]): Unit =
+      name: String, pendings: Vector[GraftLakeFile]): Unit =
     synchronized {
       def branch = branchRefs.getOrElse(name, throw new
         IllegalArgumentException(s"no branch '$name' on $tableName — " +
@@ -3113,7 +3117,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     GraftLakeTable.RewritePin(currentVersion, dvs, eqs, colIds, specIdNow)
 
   /** THE maintenance commit the three rewrites (cluster, compact,
-    * compact_files) share: mint `metas` and `swap` them in for
+    * compact_files) share: mint `temps` and `swap` them in for
     * `sources`, whose deletion vectors go with them, as one
     * dataChange = false commit — the relation is unchanged, the change
     * feed stays silent. Admission is Iceberg's RewriteDataFiles rule: a
@@ -3127,7 +3131,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * it does not replace. A refused rewrite is loud and unlinks its
     * temps; `what` names the touched target in the message. */
   private def commitRewrite(pin: GraftLakeTable.RewritePin,
-      sources: Seq[GraftLakeFile], metas: Vector[GraftLakeFileMeta],
+      sources: Seq[GraftLakeFile], temps: Vector[GraftLakeFile],
       what: String)(
       swap: Vector[GraftLakeFile] => Vector[GraftLakeFile]): Unit = {
     val gone = sources.map(_.id).toSet
@@ -3144,8 +3148,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           s"$what — retry against the current state")
       true
     }
-    val minted = mint(metas, GraftLakeTable.Rewrites, admits)
-    commit(admits, dataChange = false) {
+    val minted = mint(temps, GraftLakeTable.Rewrites, admits)
+    commit(admits, dataChange = false, minted = minted) {
       files = swap(minted)
       dvs = dvs.filterNot { case (id, _) => gone.contains(id) }
     }
@@ -3251,26 +3255,28 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     val nChunks =
       math.min(targetFiles.toLong, math.max(1L, totalLive)).toInt
     val chunk = math.max(1L, math.ceil(totalLive.toDouble / nChunks).toLong)
-    val metas =
-      if (totalLive == 0L) Vector.empty[GraftLakeFileMeta]
+    val temps =
+      if (totalLive == 0L) Vector.empty[GraftLakeFile]
       else sortedDf.queryExecution.toRdd.zipWithIndex()
         .map { case (r, i) => (i, r.copy()) }
         .repartitionAndSortWithinPartitions(
           new GraftChunkPartitioner(nChunks, chunk))
         .mapPartitionsWithIndex { (pid, it) =>
-          val tf = new GraftLakeTaskFiles(fw)
-          it.foreach { case (_, r) => tf.add(r) }
-          Iterator((pid, tf.finish()))
+          val w = new GraftLakeFileWriter(fw)
+          try {
+            it.foreach { case (_, r) => w.write(r) }
+            Iterator((pid, w.finish()))
+          } catch { case e: Throwable => w.abort(); throw e }
         }
         .collect().sortBy(_._1).toVector
-        .flatMap(_._2).map(_.copy(sorted = sortIds))
+        .flatMap(_._2).map(_.copy(sortedBy = sortIds))
     commitHook()
     synchronized {
       // the rewrite read EVERY base file's live rows, so all of them
       // must be untouched since the pin; concurrent pure appends ride
       // through unclustered, after the clustered files
       val baseIds = baseFiles.map(_.id).toSet
-      commitRewrite(pin, baseFiles, metas,
+      commitRewrite(pin, baseFiles, temps,
           "the rewritten files while the cluster rewrite was running") {
         minted => minted ++ files.filterNot(f => baseIds.contains(f.id))
       }
@@ -3311,9 +3317,9 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     if (targets.isEmpty) return 0
     val specs = targets.zipWithIndex.map { case ((f, dv, eqProbes), i) =>
       rewriteSpecOf(i, f, dv, eqProbes, i2n) }
-    val metaByIdx = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tempByIdx = org.apache.spark.sql.SparkSession.active.sparkContext
       .parallelize(specs, specs.length)
-      .flatMap(GraftLakeTaskFiles.rewriteTask(dir))
+      .flatMap(GraftLakeFileWriter.rewriteTask(dir))
       .collect().toMap
     commitHook()
     synchronized {
@@ -3323,14 +3329,14 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       // rewrites loudly with their temps unlinked
       targets.indices.foreach { i =>
         val f = targets(i)._1
-        try commitRewrite(pin, Seq(f), metaByIdx.get(i).toVector,
+        try commitRewrite(pin, Seq(f), tempByIdx.get(i).toVector,
             s"${f.id} while CALL system.compact was rewriting") {
           minted => files.filterNot(_.id == f.id) ++ minted
         }
         catch {
           case e: Throwable =>
-            GraftLakeTaskFiles.unlink(
-              (i + 1 until targets.length).flatMap(metaByIdx.get))
+            GraftLakeFileWriter.unlink(
+              (i + 1 until targets.length).flatMap(tempByIdx.get))
             throw e
         }
       }
@@ -3344,10 +3350,10 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * the same field ids and physical types. */
   private def rewriteSpecOf(idx: Int, f: GraftLakeFile, dv: Set[Long],
       eqProbes: Seq[(Int, GraftEqDelete)], i2n: Map[Int, String])
-      : GraftLakeTaskFiles.RewriteSpec = {
+      : GraftLakeFileWriter.RewriteSpec = {
     val names = f.cols.map(cid => i2n.getOrElse(cid, s"_dropped_$cid"))
-    GraftLakeTaskFiles.RewriteSpec(idx, f.cols, f.types, names, f.pkey,
-      Vector(GraftLakeTaskFiles.RewriteSlice(
+    GraftLakeFileWriter.RewriteSpec(idx, f.cols, f.types, names, f.pkey,
+      Vector(GraftLakeFileWriter.RewriteSlice(
         GraftLakeFilePartition.of(f, dv, names, eqProbes),
         0, (f.numRows - dv.size).toInt)),
       pspecId = f.pspecId)
@@ -3404,7 +3410,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     def liveCount(f: GraftLakeFile): Long =
       eqLiveMap.getOrElse(f.id, f.numRows - dvOf(f).size)
     val packedIds = Set.newBuilder[String]
-    val specsB = Vector.newBuilder[GraftLakeTaskFiles.RewriteSpec]
+    val specsB = Vector.newBuilder[GraftLakeFileWriter.RewriteSpec]
     var idx = 0
     snapFiles.groupBy(f =>
       (f.cols, f.types, f.pkey, f.pspecId)).foreach {
@@ -3428,12 +3434,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
               val lo = math.max(start, offsets(i))
               val hi = math.min(end, offsets(i + 1))
               if (lo >= hi) None
-              else Some(GraftLakeTaskFiles.RewriteSlice(
+              else Some(GraftLakeFileWriter.RewriteSlice(
                 GraftLakeFilePartition.of(candidates(i),
                   dvOf(candidates(i)), names, probesOf(candidates(i))),
                 (lo - offsets(i)).toInt, (hi - offsets(i)).toInt))
             }
-            specsB += GraftLakeTaskFiles.RewriteSpec(idx, cols, types,
+            specsB += GraftLakeFileWriter.RewriteSpec(idx, cols, types,
               names, pkey, slices, pspecId = psid)
             idx += 1
             start = end
@@ -3444,18 +3450,18 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     val gone = packedIds.result()
     if (gone.isEmpty) return (before, before)
     // a bin set of only fully-deleted files packs into no output file
-    val metas =
-      if (specs.isEmpty) Vector.empty[GraftLakeFileMeta]
+    val temps =
+      if (specs.isEmpty) Vector.empty[GraftLakeFile]
       else spark.sparkContext
         .parallelize(specs, specs.length)
-        .flatMap(GraftLakeTaskFiles.rewriteTask(dir))
+        .flatMap(GraftLakeFileWriter.rewriteTask(dir))
         .collect().sortBy(_._1).toVector.map(_._2)
     commitHook()
     synchronized {
       // the bins sliced only the PACKED candidates' live rows, so only
       // those must be untouched since the pin — a concurrent append, or
       // a row-level delta on a file this pack never read, rides through
-      commitRewrite(pin, snapFiles.filter(f => gone.contains(f.id)), metas,
+      commitRewrite(pin, snapFiles.filter(f => gone.contains(f.id)), temps,
           "a packed file while CALL system.compact_files was rewriting") {
         minted => files.filterNot(f => gone.contains(f.id)) ++ minted
       }
@@ -3563,12 +3569,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * isolation a concurrent commit can never conflict with pure file
     * additions. A concurrent ADD CONSTRAINT is the one exception — the
     * rows were minted un-validated — and stays loud. */
-  private def appendFiles(pendings: Vector[GraftLakeFileMeta],
+  private def appendFiles(pendings: Vector[GraftLakeFile],
       plannedChecks: Set[(String, String)]): Unit =
     synchronized {
       def admits = admitsChecks(plannedChecks)
       val minted = mint(pendings, GraftLakeTable.DataFiles, admits)
-      commit(admits, dataChange = true) {
+      commit(admits, dataChange = true, minted = minted) {
         files = files ++ minted
       }
     }
@@ -3576,7 +3582,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   /** The BLIND replacement (INSERT OVERWRITE, a Complete-mode epoch):
     * the table becomes exactly `pendings`, admitted only at the version
     * this commit started from (see [[admitsAt]]). */
-  private def overwrite(pendings: Vector[GraftLakeFileMeta],
+  private def overwrite(pendings: Vector[GraftLakeFile],
       plannedChecks: Set[(String, String)],
       txn: Option[(String, Long)] = None): Unit =
     synchronized {
@@ -3585,7 +3591,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       def admits = replayed(txn) ||
         admitsAt(v0, "an overwrite") && admitsChecks(plannedChecks)
       val minted = mint(pendings, GraftLakeTable.DataFiles, admits)
-      commit(admits, dataChange = true, txn) {
+      commit(admits, dataChange = true, txn, minted) {
         files = minted
         dvs = Map.empty
       }
@@ -3604,8 +3610,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * conflicts with additions under snapshot isolation). */
   private def commitEpoch(queryId: String, truncate: Boolean,
       upsertKey: Option[String], plannedChecks: Set[(String, String)])(
-      epochId: Long, pendings: Vector[GraftLakeFileMeta],
-      keyMetas: Vector[GraftLakeFileMeta]): Unit =
+      epochId: Long, pendings: Vector[GraftLakeFile],
+      keyTemps: Vector[GraftLakeFile]): Unit =
     synchronized {
       // the builder refuses the combination at build time
       // (graft.upsert.key is append-mode only); assert it here too so
@@ -3616,7 +3622,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
           "truncate with graft.upsert.key")
       val txn = Some(queryId -> epochId)
       if (streamEpochs.get(queryId).exists(_ >= epochId))
-        GraftLakeTaskFiles.unlink(pendings ++ keyMetas)
+        GraftLakeFileWriter.unlink(pendings ++ keyTemps)
       else if (truncate) overwrite(pendings, plannedChecks, txn)
       else {
         // STREAMING UPSERT via EQUALITY DELETES: the epoch's keys
@@ -3659,11 +3665,15 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
         def admits = replayed(txn) ||
           admitsSequence && admitsChecks(plannedChecks)
         val newFiles = mint(pendings, GraftLakeTable.DataFiles, admits)
+        val newKeys =
+          if (key.isEmpty) Vector.empty
+          else mint(keyTemps, GraftLakeTable.KeysFiles, admits)
         val newEqs = key.toVector.flatMap { case (keyId, keyType) =>
-          mint(keyMetas, GraftLakeTable.KeysFiles, admits).map(k =>
+          newKeys.map(k =>
             GraftEqDelete(keyId, k.path, k.pnames.head, belowSeq, keyType))
         }
-        commit(admits, dataChange = true, txn) {
+        commit(admits, dataChange = true, txn,
+            newFiles ++ newKeys) {
           eqs = eqs ++ newEqs
           files = files ++ newFiles
         }
@@ -3735,7 +3745,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * this write re-derives from its snapshot — the classic lost update.
     * Abort loudly instead (Iceberg's validateDataFilesExist contract). */
   private def replaceGroups(removed: Set[String],
-      pendings: Vector[GraftLakeFileMeta],
+      pendings: Vector[GraftLakeFile],
       eqs0: Vector[GraftEqDelete],
       plannedChecks: Set[(String, String)]): Unit = {
     commitHook()
@@ -3757,7 +3767,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       def admits = admitsGroups && admitsEqEpochs(eqs0) &&
         admitsChecks(plannedChecks)
       val minted = mint(pendings, GraftLakeTable.DataFiles, admits)
-      commit(admits, dataChange = true) {
+      commit(admits, dataChange = true, minted = minted) {
         files = files.filterNot(f => removed.contains(f.id)) ++ minted
         dvs = dvs.filterNot { case (id, _) => removed.contains(id) }
       }
@@ -3776,7 +3786,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   private def applyDelta(expected: Map[String, Set[Long]],
       eqs0: Vector[GraftEqDelete], plannedChecks: Set[(String, String)])(
       deleted: Map[String, Set[Long]],
-      pendings: Vector[GraftLakeFileMeta]): Unit = {
+      pendings: Vector[GraftLakeFile]): Unit = {
     commitHook()
     synchronized {
       // every validation re-runs on every rebase against the refreshed
@@ -3804,7 +3814,7 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       def admits = admitsDeletes && admitsEqEpochs(eqs0) &&
         admitsChecks(plannedChecks)
       val minted = mint(pendings, GraftLakeTable.DataFiles, admits)
-      commit(admits, dataChange = true) {
+      commit(admits, dataChange = true, minted = minted) {
         dvs = (dvs.keySet ++ deleted.keySet).map(id =>
           id -> (dvs.getOrElse(id, Set.empty) ++
             deleted.getOrElse(id, Set.empty))).toMap
@@ -5723,26 +5733,6 @@ class GraftLakeReaderFactory(requiredSchema: StructType,
       "lake reads are columnar: Spark plans ColumnarToRow above the scan")
 }
 
-/** What a committed write hands the table: a task-written parquet file
-  * awaiting adoption — the commit only renames and registers it, so the
-  * DATA PLANE never passes through the driver. Carries the temp path, the
-  * WRITE-TIME schema identity (field ids + physical types + parquet
-  * labels, pinned when the write was built — the driver validates ids
-  * against the current schema at commit, the concurrent-ALTER guard),
-  * the partition-key tuple (fanout split runs task-side), and the full
-  * stats block the manifest records. */
-final case class GraftLakeFileMeta(tmpPath: String, cols: Seq[Int],
-    types: Seq[DataType], pnames: Seq[String],
-    pkey: Option[Vector[Any]], nRows: Long, bytes: Long,
-    stats: Map[Int, (Any, Any)], nulls: Map[Int, Long],
-    sums: Map[Int, Long], dsums: Map[Int, java.math.BigDecimal],
-    nstats: Map[(Int, String), (Any, Any)],
-    nnulls: Map[(Int, String), Long],
-    blooms: Map[Int, Array[Long]],
-    sorted: Seq[Int] = Nil,
-    pspecId: Int = 0,
-    ndv: Map[Int, Array[Byte]] = Map.empty)
-
 /** Everything a task needs to WRITE REAL FILES itself: the table dir
   * (shared storage), the build-time schema identity, and the partition
   * transforms for the task-side fanout split. */
@@ -5756,7 +5746,7 @@ final case class GraftLakeFileWriteInfo(dir: String, names: Seq[String],
   * row-level mode: rows arrive as [__row_operation, data...,
   * metadata...] — DELETEs are dropped, writes keep the data slice. */
 class GraftLakeBatchWrite(
-    apply: Vector[GraftLakeFileMeta] => Unit,
+    apply: Vector[GraftLakeFile] => Unit,
     fileWrite: GraftLakeFileWriteInfo,
     rowLevel: Option[Array[DataType]] = None,
     onDone: () => Unit = () => ())
@@ -5773,101 +5763,69 @@ class GraftLakeBatchWrite(
     try GraftLakeFilesCommit.unlink(messages) finally onDone()
 }
 
-/** Row-level slice of the task-side writer: under `rowLevel`, rows
-  * arrive [__row_operation, data(0..n-1), metadata...] — DELETEs drop,
-  * writes keep the copied data slice (typed extract from the copied
-  * row's buffer keeps UTF8String memory alive — GC-safe). Rows are
-  * reused buffers, so every kept row is a copy. */
-private[sources] object GraftLakeRowSlice {
-  def apply(rowLevel: Option[Array[DataType]],
-      row: InternalRow): Option[InternalRow] = rowLevel match {
-    case Some(types) if row.numFields > types.length =>
-      if (row.getInt(0) != 1) { // 1 = DELETE_OPERATION
-        val r = row.copy()
-        Some(new GenericInternalRow(
-          Array.tabulate[Any](types.length)(i => r.get(i + 1, types(i)))))
-      } else None
-    case _ => Some(row.copy())
-  }
-}
-
-/** The shared task-side file buffer: groups ALREADY-COPIED rows by
-  * their evaluated partition-key tuple (the fanout split, run where the
-  * rows are), then at task commit writes one temp parquet per key into
-  * the table dir and collects the full manifest stats block right
-  * there, shipping METADATA ONLY. Used by both the append/CoW writer
-  * and the MoR delta writer's insert side. The driver's commit adopts
-  * each temp file by rename — write bandwidth scales with executors,
-  * not with one driver heap. */
-private[sources] final class GraftLakeTaskFiles(fw: GraftLakeFileWriteInfo) {
-  private val groups = scala.collection.mutable.LinkedHashMap
-    .empty[Option[Vector[Any]],
-      scala.collection.mutable.Builder[InternalRow, Vector[InternalRow]]]
+/** THE task-side lake file writer every write and rewrite task uses.
+  * Each row streams straight into the temp parquet of its partition-key
+  * tuple (the fanout split, evaluated where the rows are; a key's writer
+  * opens the first time the task sees it) and into that file's
+  * [[GraftLakeStats.Collector]], so the manifest stats are built in the
+  * same pass and the task never holds its output rows. Rows may be
+  * reused buffers: only the key values and the collectors' extremes are
+  * copied. [[finish]] closes the files in first-seen key order and
+  * returns their records (empty `id`, `path` the temp) — METADATA ONLY;
+  * the driver's commit adopts each temp by rename, so write bandwidth
+  * scales with executors, not with one driver heap. */
+private[sources] final class GraftLakeFileWriter(fw: GraftLakeFileWriteInfo) {
+  private final class Open(val tmp: java.io.File,
+      val out: org.apache.parquet.hadoop.ParquetWriter[InternalRow],
+      val stats: GraftLakeStats.Collector)
+  private val open = scala.collection.mutable.LinkedHashMap
+    .empty[Option[Vector[Any]], Open]
   private val partIdx = fw.partSpec.map(t => fw.names.indexOf(t.srcCol))
-  private val written = scala.collection.mutable.Buffer.empty[String]
-  def add(r: InternalRow): Unit = {
+
+  def write(r: InternalRow): Unit = {
     val key =
       if (fw.partSpec.isEmpty) None
       else Some(Vector.tabulate(fw.partSpec.length) { i =>
         fw.partSpec(i).eval(
           r.get(partIdx(i), fw.types(partIdx(i))), fw.types(partIdx(i)))
       })
-    groups.getOrElseUpdate(key, Vector.newBuilder[InternalRow]) += r
+    val o = open.getOrElse(key, openFor(key, r))
+    o.out.write(r)
+    o.stats.add(r)
   }
-  def finish(): Vector[GraftLakeFileMeta] =
-    groups.toVector.flatMap { case (key, b) =>
-      val rows = b.result()
-      if (rows.isEmpty) None
-      else {
-        require(rows.head.numFields == fw.colIds.length,
-          s"write carries ${rows.head.numFields} columns but the " +
-            s"write schema has ${fw.colIds.length}")
-        val m = GraftLakeTaskFiles.writeOne(fw.dir, fw.names, fw.types,
-          fw.colIds, key, rows, fw.pspecId)
-        written += m.tmpPath
-        Some(m)
-      }
+
+  private def openFor(key: Option[Vector[Any]], r: InternalRow): Open = {
+    require(r.numFields == fw.colIds.length,
+      s"write carries ${r.numFields} columns but the write schema has " +
+        s"${fw.colIds.length}")
+    val tmp = new java.io.File(fw.dir,
+      s"tmp_${java.util.UUID.randomUUID()}.parquet")
+    val o = new Open(tmp,
+      GraftParquetIO.writer(tmp.getAbsolutePath, fw.names, fw.types),
+      new GraftLakeStats.Collector(fw.colIds, fw.types))
+    open += key.map(_.map(GraftLakeStats.keep)) -> o
+    o
+  }
+
+  def finish(): Vector[GraftLakeFile] =
+    open.toVector.map { case (key, o) =>
+      o.out.close()
+      o.stats.file(o.tmp.getAbsolutePath,
+        java.nio.file.Files.size(o.tmp.toPath), fw.names, key, fw.pspecId)
     }
+
+  /** Close every open writer, then unlink every temp this task made. */
   def abort(): Unit =
-    written.foreach(p => new java.io.File(p).delete())
+    open.values.foreach { o =>
+      try o.out.close() catch { case scala.util.control.NonFatal(_) => () }
+      o.tmp.delete()
+    }
 }
 
-private[sources] object GraftLakeTaskFiles {
+private[sources] object GraftLakeFileWriter {
   /** Unlink task temps that were never adopted. */
-  def unlink(ms: Iterable[GraftLakeFileMeta]): Unit =
-    ms.foreach(m => new java.io.File(m.tmpPath).delete())
-
-  /** Write ONE temp parquet into `dir` and collect its full manifest
-    * stats block — the task-side unit every distributed write and
-    * rewrite shares. `cols`/`types`/`names` are the rows' WRITE-TIME
-    * layout (the current schema for writes, the file's own generation
-    * for compaction rewrites). */
-  def writeOne(dir: String, names: Seq[String], types: Seq[DataType],
-      cols: Seq[Int], pkey: Option[Vector[Any]],
-      rows: Vector[InternalRow], pspecId: Int = 0,
-      // equality-delete KEYS files get no manifest, so their stats
-      // block would be discarded — skip the collection pass entirely
-      collectStats: Boolean = true): GraftLakeFileMeta = {
-    val tmp = new java.io.File(dir,
-      s"tmp_${java.util.UUID.randomUUID()}.parquet")
-    val bytes = GraftParquetIO.write(tmp.getAbsolutePath, names, types,
-      rows)
-    if (!collectStats)
-      return GraftLakeFileMeta(tmp.getAbsolutePath, cols, types, names,
-        pkey, rows.length.toLong, bytes, Map.empty, Map.empty, Map.empty,
-        Map.empty, Map.empty, Map.empty, Map.empty, pspecId = pspecId)
-    val (nstats, nnulls) = GraftLakeStats.collectNested(rows, cols, types)
-    GraftLakeFileMeta(tmp.getAbsolutePath, cols, types, names, pkey,
-      rows.length.toLong, bytes,
-      GraftLakeStats.collect(rows, cols, types),
-      GraftLakeStats.nullCounts(rows, cols),
-      GraftLakeStats.intSums(rows, cols, types),
-      GraftLakeStats.decSums(rows, cols, types),
-      nstats, nnulls,
-      GraftLakeStats.bloomCollect(rows, cols, types),
-      pspecId = pspecId,
-      ndv = GraftLakeStats.ndvCollect(rows, cols, types))
-  }
+  def unlink(fs: Iterable[GraftLakeFile]): Unit =
+    fs.foreach(f => new java.io.File(f.path).delete())
 
   /** A compaction rewrite's task-side READ unit: one source file's
     * LIVE rows (deletion-vector positions dropped, equality-delete
@@ -5888,30 +5846,46 @@ private[sources] object GraftLakeTaskFiles {
       pspecId: Int = 0)
 
   /** Task body of a distributed rewrite: stream the slices' live rows
-    * in order, write one temp parquet with the GENERATION's layout,
-    * ship metadata. None for an all-dead output (fully deleted file). */
+    * in order into one temp parquet with the GENERATION's layout, ship
+    * its record. None for an all-dead output (fully deleted file). */
   def rewriteTask(dir: String)(
-      spec: RewriteSpec): Option[(Int, GraftLakeFileMeta)] = {
-    val rows = spec.slices.flatMap(s =>
-      GraftLakeColumnar.liveRows(s.file)(_.slice(s.from, s.until).toVector))
-    if (rows.isEmpty) None
-    else Some((spec.idx, writeOne(dir, spec.names, spec.types, spec.cols,
-      spec.pkey, rows, spec.pspecId)))
+      spec: RewriteSpec): Option[(Int, GraftLakeFile)] = {
+    val w = new GraftLakeFileWriter(GraftLakeFileWriteInfo(dir, spec.names,
+      spec.types, spec.cols, Nil, spec.pspecId))
+    try {
+      spec.slices.foreach(s => GraftLakeColumnar.liveRows(s.file)(
+        _.slice(s.from, s.until).foreach(w.write)))
+      w.finish().headOption.map(f => (spec.idx, f.copy(pkey = spec.pkey)))
+    } catch { case e: Throwable => w.abort(); throw e }
   }
+
+  /** The data columns of a row-level write's rows, which arrive as
+    * [__row_operation, data(0..n-1), metadata...]: a view, not a copy. */
+  def dataSlice(types: Array[DataType]): ProjectingInternalRow =
+    ProjectingInternalRow(StructType(types.toSeq.zipWithIndex.map {
+      case (t, i) => StructField(s"c$i", t) }), 1 to types.length)
 }
 
+/** Under `rowLevel`, DELETEs drop and writes keep the data slice. */
 class GraftLakeFileWriterFactory(fw: GraftLakeFileWriteInfo,
     rowLevel: Option[Array[DataType]])
     extends DataWriterFactory {
   override def createWriter(
       partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val tf = new GraftLakeTaskFiles(fw)
-      override def write(row: InternalRow): Unit =
-        GraftLakeRowSlice(rowLevel, row).foreach(tf.add)
+      private val w = new GraftLakeFileWriter(fw)
+      private val slice = rowLevel.map(GraftLakeFileWriter.dataSlice)
+      override def write(row: InternalRow): Unit = (rowLevel, slice) match {
+        case (Some(types), Some(s)) if row.numFields > types.length =>
+          if (row.getInt(0) != 1) { // 1 = DELETE_OPERATION
+            s.project(row)
+            w.write(s)
+          }
+        case _ => w.write(row)
+      }
       override def commit(): WriterCommitMessage =
-        GraftLakeFilesCommit(tf.finish())
-      override def abort(): Unit = tf.abort()
+        GraftLakeFilesCommit(w.finish())
+      override def abort(): Unit = w.abort()
       override def close(): Unit = ()
     }
 }
@@ -5922,8 +5896,8 @@ class GraftLakeFileWriterFactory(fw: GraftLakeFileWriteInfo,
   * replayed epoch after a restart is dropped by the table's watermark
   * (see GraftLakeTable.commitEpoch). */
 class GraftLakeStreamingWrite(
-    applyEpoch: (Long, Vector[GraftLakeFileMeta],
-      Vector[GraftLakeFileMeta]) => Unit,
+    applyEpoch: (Long, Vector[GraftLakeFile],
+      Vector[GraftLakeFile]) => Unit,
     fileWrite: GraftLakeFileWriteInfo,
     upsert: Option[GraftUpsertInfo] = None)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -5962,8 +5936,11 @@ class GraftLakeStreamingWriterFactory(fw: GraftLakeFileWriteInfo,
       epochId: Long): DataWriter[InternalRow] = upsert match {
     case Some(u) =>
       new DataWriter[InternalRow] {
-        private val tf = new GraftLakeTaskFiles(fw)
-        private val keys = Vector.newBuilder[InternalRow]
+        private val w = new GraftLakeFileWriter(fw)
+        private val keys = new GraftLakeFileWriter(GraftLakeFileWriteInfo(
+          fw.dir, Seq(u.keyName), Seq(u.keyType), Seq(u.keyId), Nil))
+        private val key = ProjectingInternalRow(
+          StructType(Seq(StructField(u.keyName, u.keyType))), Seq(u.keyIdx))
         // complete across the epoch, not just this task: the upsert
         // Write clusters its input by key (requiredDistribution), so
         // every copy of a key arrives HERE
@@ -5971,29 +5948,23 @@ class GraftLakeStreamingWriterFactory(fw: GraftLakeFileWriteInfo,
         override def write(row: InternalRow): Unit = {
           require(!row.isNullAt(u.keyIdx),
             s"upsert key ${u.keyName} must be non-null")
-          val r = row.copy() // one materialization, like the plain path
-          val k = GraftEqDelete.canon(r.get(u.keyIdx, u.keyType))
+          val k = GraftEqDelete.canon(row.get(u.keyIdx, u.keyType))
           // shuffling destroys the batch's row order, so "last wins"
           // is undefined here — a key-unique epoch is the contract
           // (Flink's upsert writers get per-key order from keyed
           // streams; an upstream dedup-by-sequence provides the same)
-          require(seen.add(k),
+          require(!seen.contains(k),
             s"duplicate upsert key $k within one epoch — " +
               "equality-delete upsert requires key-unique micro-batches" +
               " (dedup upstream, e.g. last-by-sequence, before the sink)")
-          keys += new GenericInternalRow(Array[Any](r.get(u.keyIdx,
-            u.keyType)))
-          tf.add(r)
+          seen += GraftLakeStats.keep(k)
+          key.project(row)
+          keys.write(key)
+          w.write(row)
         }
-        override def commit(): WriterCommitMessage = {
-          val ks = keys.result()
-          GraftLakeFilesCommit(tf.finish(),
-            if (ks.isEmpty) Vector.empty
-            else Vector(GraftLakeTaskFiles.writeOne(fw.dir,
-              Seq(u.keyName), Seq(u.keyType), Seq(u.keyId), None, ks,
-              collectStats = false)))
-        }
-        override def abort(): Unit = tf.abort()
+        override def commit(): WriterCommitMessage =
+          GraftLakeFilesCommit(w.finish(), keys.finish())
+        override def abort(): Unit = { w.abort(); keys.abort() }
         override def close(): Unit = ()
       }
     case None =>
@@ -6016,8 +5987,8 @@ private[sources] class GraftChunkPartitioner(n: Int, chunk: Long)
   * task wrote, the equality-delete KEYS files of an upsert epoch, and
   * the (file, position) deletes of a merge-on-read delta — all
   * metadata; the rows stay in the task-written temps. */
-final case class GraftLakeFilesCommit(files: Vector[GraftLakeFileMeta],
-    keys: Vector[GraftLakeFileMeta] = Vector.empty,
+final case class GraftLakeFilesCommit(files: Vector[GraftLakeFile],
+    keys: Vector[GraftLakeFile] = Vector.empty,
     deleted: Vector[(String, Long)] = Vector.empty)
     extends WriterCommitMessage
 
@@ -6033,7 +6004,7 @@ object GraftLakeFilesCommit {
   def unlink(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case c: GraftLakeFilesCommit =>
-        GraftLakeTaskFiles.unlink(c.files ++ c.keys)
+        GraftLakeFileWriter.unlink(c.files ++ c.keys)
       case _ => ()
     }
 }
@@ -6045,7 +6016,7 @@ object GraftLakeFilesCommit {
   * temp parquet and ship metadata, the same no-driver data plane as
   * [[GraftLakeBatchWrite]]. */
 class GraftLakeDeltaBatchWrite(
-    apply: (Map[String, Set[Long]], Vector[GraftLakeFileMeta]) => Unit,
+    apply: (Map[String, Set[Long]], Vector[GraftLakeFile]) => Unit,
     fileWrite: GraftLakeFileWriteInfo,
     types: Array[DataType],
     onDone: () => Unit = () => ())
@@ -6071,7 +6042,7 @@ class GraftLakeDeltaWriterFactory(types: Array[DataType],
       partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
       private val dels = Vector.newBuilder[(String, Long)]
-      private val tf = new GraftLakeTaskFiles(fileWrite)
+      private val w = new GraftLakeFileWriter(fileWrite)
       // `id` is the rowId projection in declared order: (_file, _pos)
       override def delete(meta: InternalRow, id: InternalRow): Unit =
         dels += ((id.getUTF8String(0).toString, id.getLong(1)))
@@ -6085,13 +6056,11 @@ class GraftLakeDeltaWriterFactory(types: Array[DataType],
         require(row.numFields == types.length,
           s"insert row has ${row.numFields} fields, expected " +
             s"${types.length} data columns")
-        val r = row.copy()
-        tf.add(new GenericInternalRow(
-          Array.tabulate[Any](types.length)(i => r.get(i, types(i)))))
+        w.write(row)
       }
       override def commit(): WriterCommitMessage =
-        GraftLakeFilesCommit(tf.finish(), deleted = dels.result())
-      override def abort(): Unit = tf.abort()
+        GraftLakeFilesCommit(w.finish(), deleted = dels.result())
+      override def abort(): Unit = w.abort()
       override def close(): Unit = ()
     }
 }

@@ -345,20 +345,20 @@ object GraftLakeColumnar {
   }
 
   /** The LIVE rows of one file in read order, every column at its
-    * physical type in the file's own layout, each row an independent
-    * copy — streamed batch by batch, so `body` sees an iterator over the
-    * open file and holds only what it keeps. The file closes when
-    * `body` returns. */
+    * physical type in the file's own layout — streamed batch by batch,
+    * so `body` sees an iterator over the open file. Each row is the one
+    * reused projection buffer: `body` copies what it keeps. The file
+    * closes when `body` returns. */
   def liveRows[T](fp: GraftLakeFilePartition)(
       body: Iterator[InternalRow] => T): T = {
     val schema = StructType(fp.cols.zip(fp.types).map { case (n, t) =>
       StructField(n, t) })
     val r = reader(fp, schema, Map.empty)
     try {
-      val copy = UnsafeProjection.create(schema)
+      val toUnsafe = UnsafeProjection.create(schema)
       body(Iterator.continually(r.next()).takeWhile(identity)
         .flatMap(_ => r.get().rowIterator().asScala)
-        .map(row => copy(row).copy()))
+        .map(toUnsafe))
     } finally r.close()
   }
 

@@ -293,6 +293,12 @@ private[sources] class GraftLakeLog(root: File) {
       }))))
   }
 
+  /** Unlink the loose manifest of a minted file no commit adopted. */
+  def dropFileManifest(f: GraftLakeFile): Unit =
+    new File(dir,
+      s"${new File(f.path).getName.stripSuffix(".parquet")}.manifest.json")
+      .delete()
+
   def writeCommit(version: Int, snap: GraftLakeSnapshot,
       dataChange: Boolean, timeMillis: Long, schema: StructType,
       colIds: Seq[Int], defaults: Map[Int, Any], fileSeq: Int,

@@ -86,25 +86,23 @@ object GraftParquetIO {
   /** A private copy of [[confTemplate]] for one write or one open. */
   private[sources] def conf(): Configuration = new Configuration(confTemplate)
 
-  /** Write one file group to a NEW local file; returns its size in
-    * bytes (the currency of the write-amplification assertions).
-    * Spark's own [[org.apache.spark.sql.execution.datasources.parquet
-    * .ParquetWriteSupport]] streams InternalRows straight into parquet
-    * column writers through a RecordConsumer, with no per-row object
-    * tree. Encodings are the standard modern shapes (3-level LIST/MAP,
+  /** Open a writer onto a NEW local file for one file group; the caller
+    * writes its rows and closes it. Spark's own
+    * [[org.apache.spark.sql.execution.datasources.parquet
+    * .ParquetWriteSupport]] streams each InternalRow straight into
+    * parquet column writers through a RecordConsumer as it is written,
+    * with no per-row object tree, so a reused row buffer is safe to pass.
+    * Encodings are the standard modern shapes (3-level LIST/MAP,
     * INT64-micros timestamps, DECIMAL(<=9) as INT32 and DECIMAL(10-18) as
     * INT64), which the vectorized batch reader serves. */
-  def write(path: String, names: Seq[String],
-      types: Seq[DataType], rows: Vector[InternalRow]): Long = {
+  def writer(path: String, names: Seq[String], types: Seq[DataType])
+      : org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
     val conf = this.conf()
     ParquetWriteSupport.setSchema(StructType(names.zip(types).map {
       case (n, t) => StructField(n, t) }), conf)
-    val file = java.nio.file.Paths.get(path)
-    val writer = new RowWriterBuilder(
-      new org.apache.parquet.io.LocalOutputFile(file)).withConf(conf).build()
-    try rows.foreach(writer.write) finally writer.close()
-    java.nio.file.Files.size(file)
+    new RowWriterBuilder(new org.apache.parquet.io.LocalOutputFile(
+      java.nio.file.Paths.get(path))).withConf(conf).build()
   }
 
   private class RowWriterBuilder(file: org.apache.parquet.io.OutputFile)

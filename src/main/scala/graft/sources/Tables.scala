@@ -26,7 +26,7 @@ object Tables {
   /** Footer SCHEMAS cached per (path, nanos-flag) — the catalog role a
     * metastore plays in production (Iceberg/HMS serve schemas; no engine
     * re-infers from footers on every statement). Re-inference measured
-    * 80 ms per read call at sf0.1 (DevMicro: 88 ms construct vs 8 ms
+    * 80 ms per read call at sf0.1 (88 ms construct vs 8 ms
     * pre-schemed) and the registry constructs these tables hundreds of
     * times per bench run. METADATA only — rows are always re-read from
     * parquet; nothing about results is memoized. The testdata tables are

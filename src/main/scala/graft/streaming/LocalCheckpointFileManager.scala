@@ -5,7 +5,7 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
@@ -32,6 +32,19 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
       local
     case other => other
   }
+
+  /** A no-overwrite atomic write whose target already exists fails at
+    * `close`, and Spark's stream then leaves its `.<name>.<uuid>.tmp`
+    * and that temp's `.crc` behind; unlink both before the refusal
+    * propagates. */
+  override def renameTempFile(srcPath: Path, dstPath: Path,
+      overwriteIfPossible: Boolean): Unit =
+    try super.renameTempFile(srcPath, dstPath, overwriteIfPossible)
+    catch {
+      case e: FileAlreadyExistsException =>
+        fs.delete(srcPath, false) // a checksum file system: the .crc too
+        throw e
+    }
 }
 
 object LocalCheckpointFileManager {

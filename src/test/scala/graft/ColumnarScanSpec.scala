@@ -342,9 +342,10 @@ class ColumnarScanSpec extends SparkTestBase {
     val file = java.io.File.createTempFile("graft_rowreader", ".parquet")
     file.delete()
     try {
-      GraftParquetIO.write(file.getPath, schema.fieldNames.toSeq,
-        schema.fields.map(_.dataType).toSeq,
-        want.map(r => toCatalyst(r).asInstanceOf[InternalRow]).toVector)
+      val w = GraftParquetIO.writer(file.getPath, schema.fieldNames.toSeq,
+        schema.fields.map(_.dataType).toSeq)
+      try want.foreach(r => w.write(toCatalyst(r).asInstanceOf[InternalRow]))
+      finally w.close()
       val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(file.getPath),
@@ -519,7 +520,6 @@ class ColumnarScanSpec extends SparkTestBase {
   }
 
   test("a label absent from the file's footer fails the read instead of null-filling") {
-    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.types._
     import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition,
@@ -527,9 +527,11 @@ class ColumnarScanSpec extends SparkTestBase {
     val file = java.io.File.createTempFile("graft_labels", ".parquet")
     file.delete()
     try {
-      GraftParquetIO.write(file.getPath, Seq("k", "v"),
-        Seq(LongType, LongType), Vector.tabulate(5)(i =>
-          new GenericInternalRow(Array[Any](i.toLong, i * 2L)): InternalRow))
+      val w = GraftParquetIO.writer(file.getPath, Seq("k", "v"),
+        Seq(LongType, LongType))
+      try (0 until 5).foreach(i =>
+        w.write(new GenericInternalRow(Array[Any](i.toLong, i * 2L))))
+      finally w.close()
       val required = StructType(Seq(StructField("k", LongType),
         StructField("v", LongType)))
       def read(labels: Seq[String]): Long = {

@@ -679,6 +679,41 @@ class DurableCatalogSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t1")
   }
 
+  test("a stale driver refused at the version CAS unlinks the files it minted") {
+    // the winner minted no file (a DV-only MoR DELETE), so every claim of
+    // the stale driver succeeds: it learns it is stale only when its
+    // version CAS loses, after adopting its temp; the refreshed state
+    // refuses the commit, which must take the minted file and its
+    // manifest with it
+    useCatalog()
+    spark.conf.set("spark.sql.catalog.graftdur2",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftdur2.warehouse", wh)
+    val t1 = "graftdur.dur_cas_refused"
+    val t2 = "graftdur2.dur_cas_refused"
+    spark.sql(s"DROP TABLE IF EXISTS $t1")
+    spark.sql(s"CREATE TABLE $t1 (k BIGINT) " +
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
+    spark.range(0, 10).selectExpr("id AS k").coalesce(1)
+      .writeTo(t1).append() // v1 via driver 1
+    assert(spark.table(t2).count() == 10) // driver 2 opens at v1
+    spark.sql(s"DELETE FROM $t2 WHERE k = 3") // a DV, no file
+    val before = tableFiles("dur_cas_refused")
+    val e = intercept[Exception](
+      spark.sql(s"UPDATE $t1 SET k = k + 100 WHERE k = 5"))
+    assert(causeMessages(e).contains("write conflict"),
+      s"the stale MoR delta must fail loudly: $e")
+    assert(tableFiles("dur_cas_refused") == before,
+      "the refused delta leaves no data file and no manifest behind")
+    // the loss refreshed driver 1: the re-run lands
+    spark.sql(s"UPDATE $t1 SET k = k + 100 WHERE k = 5")
+    graft.sources.GraftLakeCatalog.evict("graftdur2", "dur_cas_refused")
+    assert(spark.table(t2).orderBy("k").collect().map(_.getLong(0)).toSeq ==
+      ((0L until 10L).filterNot(Set(3L, 5L)) :+ 105L))
+    graft.sources.GraftLakeCatalog.evict("graftdur", "dur_cas_refused")
+    spark.sql(s"DROP TABLE IF EXISTS $t1")
+  }
+
   test("atomic CTAS/RTAS: staged publish, failures leave nothing, REPLACE flips atomically") {
     // StagingTableCatalog: CTAS stages the WHOLE table (log + data) in
     // a hidden sibling dir and publishes with one atomic rename — a

@@ -3022,14 +3022,14 @@ class LakehouseSpec extends SparkTestBase {
     val fc = m1.asInstanceOf[graft.sources.GraftLakeFilesCommit]
     assert(fc.files.length == 1, "one temp file per task (unpartitioned)")
     val meta = fc.files.head
-    assert(new java.io.File(meta.tmpPath).isFile &&
-      meta.tmpPath.contains("tmp_"),
+    assert(new java.io.File(meta.path).isFile &&
+      meta.path.contains("tmp_"),
       "the task wrote a real temp parquet before the driver saw anything")
-    assert(meta.nRows == 50 && meta.bytes > 0 &&
+    assert(meta.numRows == 50 && meta.bytes > 0 &&
       meta.stats.nonEmpty && meta.blooms.nonEmpty,
       "the manifest stats block is task-collected")
     bw1.commit(Array(m1))
-    assert(!new java.io.File(meta.tmpPath).exists(),
+    assert(!new java.io.File(meta.path).exists(),
       "adoption renames the temp file away")
     assert(spark.table(t).count() == 50)
     assert(table.filePaths.values.forall(p =>
@@ -3038,7 +3038,7 @@ class LakehouseSpec extends SparkTestBase {
     val bw2 = table.newWriteBuilder(winfo).build().toBatch
     val m2 = oneTask(bw2, 50, 60)
     val tmp2 = m2.asInstanceOf[graft.sources.GraftLakeFilesCommit]
-      .files.head.tmpPath
+      .files.head.path
     assert(new java.io.File(tmp2).isFile)
     bw2.abort(Array(m2))
     assert(!new java.io.File(tmp2).exists(), "abort unlinks task temps")
@@ -4030,10 +4030,10 @@ class LakehouseSpec extends SparkTestBase {
     val m = w.commit().asInstanceOf[graft.sources.GraftLakeFilesCommit]
     assert(m.files.length == 1,
       "insert rows left the task as a FILE, not as driver-bound rows")
-    assert(m.files.head.nRows == 1 &&
+    assert(m.files.head.numRows == 1 &&
       m.files.head.stats.nonEmpty,
       "the delta insert file ships its task-collected stats block")
-    new java.io.File(m.files.head.tmpPath).delete()
+    new java.io.File(m.files.head.path).delete()
     // end-to-end: a MERGE through SQL adopts everything, no temp residue
     spark.sql(s"MERGE INTO $t USING (SELECT 2 AS k, 'B' AS s UNION ALL " +
       s"SELECT 3, 'c') src ON $t.k = src.k " +

@@ -224,6 +224,15 @@ object PropertySpec extends Properties("graft.kernels") {
       Array[Any](i.toLong))
       : org.apache.spark.sql.catalyst.InternalRow)
 
+  /** Write `rows` to a NEW parquet file; its size in bytes. */
+  private def writeParquet(path: String, names: Seq[String],
+      types: Seq[org.apache.spark.sql.types.DataType],
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Long = {
+    val w = graft.sources.GraftParquetIO.writer(path, names, types)
+    try rows.foreach(w.write) finally w.close()
+    java.nio.file.Files.size(java.nio.file.Paths.get(path))
+  }
+
   /** Rows `0 until n` read back through a one-column (`k BIGINT`) lake
     * file's reader, with `dead` as the file's deletion vector. */
   private def dvRead(n: Int, dead: Set[Int],
@@ -231,13 +240,11 @@ object PropertySpec extends Properties("graft.kernels") {
       : List[org.apache.spark.sql.catalyst.InternalRow] = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.LongType
-    import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition,
-      GraftParquetIO}
+    import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition}
     val f = java.io.File.createTempFile("graft_dv_prop", ".parquet")
     f.delete() // the writer creates a NEW file
     try {
-      GraftParquetIO.write(f.getAbsolutePath, Seq("k"), Seq(LongType),
-        lakeRows(n))
+      writeParquet(f.getAbsolutePath, Seq("k"), Seq(LongType), lakeRows(n))
       val reader = GraftLakeColumnar.reader(GraftLakeFilePartition("f",
         dead.map(_.toLong).toArray.sorted, Seq("k"), f.getAbsolutePath,
         Seq(LongType), Seq("k")), req, Map.empty)
@@ -256,15 +263,14 @@ object PropertySpec extends Properties("graft.kernels") {
       types: Seq[org.apache.spark.sql.types.DataType],
       rows: Vector[org.apache.spark.sql.catalyst.InternalRow])
       : (Long, List[org.apache.spark.sql.catalyst.InternalRow]) = {
-    import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition,
-      GraftParquetIO}
+    import graft.sources.{GraftLakeColumnar, GraftLakeFilePartition}
     val f = java.io.File.createTempFile("graft_pq_prop", ".parquet")
     f.delete() // parquet-mr refuses to overwrite an existing file
     try {
-      val bytes = GraftParquetIO.write(f.getAbsolutePath, names, types,
-        rows)
+      val bytes = writeParquet(f.getAbsolutePath, names, types, rows)
       (bytes, GraftLakeColumnar.liveRows(GraftLakeFilePartition("f",
-        Array.empty, names, f.getAbsolutePath, types, names))(_.toList))
+        Array.empty, names, f.getAbsolutePath, types, names))(
+        _.map(_.copy()).toList))
     } finally { f.delete(); () }
   }
 
@@ -422,6 +428,74 @@ object PropertySpec extends Properties("graft.kernels") {
       back.length == rows.length && back.map(norm) == rows.map(norm)
     }
 
+  // ---- one-pass file stats: the collector the lake writer feeds ----------
+
+  /** `rows` through one file's stats collector — the writer's pass. */
+  private def statsOf(rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      ids: Seq[Int], types: Seq[org.apache.spark.sql.types.DataType])
+      : graft.sources.GraftLakeFile = {
+    val c = new graft.sources.GraftLakeStats.Collector(ids, types)
+    rows.foreach(c.add)
+    c.file("f.parquet", 0L, ids.map(i => s"c$i"), None, 0)
+  }
+
+  private val statsRows
+      : Gen[List[(Option[Long], Option[String], Option[BigDecimal])]] =
+    Gen.choose(0, 30).flatMap(n => Gen.listOfN(n, for {
+      k <- Gen.option(Gen.choose(-1000000000000000L, 1000000000000000L))
+      s <- Gen.option(Gen.listOf(Gen.oneOf("a", "b", "z", "\u00e9", "\u4e2d"))
+        .map(_.mkString))
+      d <- Gen.option(Gen.choose(-10000000000L, 10000000000L)
+        .map(u => BigDecimal(u, 2)))
+    } yield (k, s, d)))
+
+  property("the collector's min/max/nulls/sums equal Spark's aggregates") =
+    Prop.forAll(statsRows) { vals =>
+      import org.apache.spark.sql.{functions => F, Row}
+      import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      import org.apache.spark.sql.types._
+      val schema = StructType(Seq(StructField("k", LongType),
+        StructField("s", StringType), StructField("d", DecimalType(12, 2))))
+      val rows = vals.map { case (k, s, d) =>
+        Row(k.orNull, s.orNull, d.map(_.bigDecimal).orNull) }
+      // the writer's input is a reused buffer: every row below is the
+      // same UnsafeRow, overwritten by the next projection
+      val toCatalyst =
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(schema)
+      val unsafe = UnsafeProjection.create(schema)
+      val c = new graft.sources.GraftLakeStats.Collector(Seq(1, 2, 3),
+        schema.fields.map(_.dataType).toSeq)
+      rows.foreach(r => c.add(unsafe(
+        toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])))
+      val f = c.file("f.parquet", 0L, schema.fieldNames.toSeq, None, 0)
+      val spark = Session.local(4)
+      val agg = spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), schema)
+        .agg(F.min("k"), F.max("k"), F.count("k"), F.sum("k"),
+          F.min("s"), F.max("s"), F.count("s"),
+          F.min("d"), F.max("d"), F.count("d"), F.sum("d"), F.count("*"))
+        .head()
+      def internal(v: Any): Any = v match {
+        case s: String => UTF8String.fromString(s)
+        case d: java.math.BigDecimal => Decimal(d, 12, 2)
+        case other => other
+      }
+      def minMax(id: Int, at: Int) =
+        f.stats(id) == ((internal(agg.get(at)), internal(agg.get(at + 1))))
+      val n = agg.getLong(11)
+      def sumOr0(at: Int, zero: Any): Any =
+        if (agg.isNullAt(at)) zero else agg.get(at)
+      f.numRows == n &&
+        minMax(1, 0) && minMax(2, 4) && minMax(3, 7) &&
+        f.nulls == Map(1 -> (n - agg.getLong(2)), 2 -> (n - agg.getLong(6)),
+          3 -> (n - agg.getLong(9))) &&
+        f.sums == Map(1 -> sumOr0(3, 0L)) &&
+        f.dsums(3).compareTo(
+          sumOr0(10, java.math.BigDecimal.ZERO)
+            .asInstanceOf[java.math.BigDecimal]) == 0
+    }
+
   // ---- min/max file-skipping soundness ------------------------------------
 
   private val statsCase: Gen[(List[Option[Long]], String, Long)] = for {
@@ -439,8 +513,7 @@ object PropertySpec extends Properties("graft.kernels") {
       import org.apache.spark.sql.types.LongType
       val rows = vals.map(v => new GenericInternalRow(
         Array[Any](v.map(Long.box).orNull)): InternalRow).toVector
-      val stats = graft.sources.GraftLakeStats.collect(
-        rows, Seq(7), Seq(LongType))
+      val stats = statsOf(rows, Seq(7), Seq(LongType)).stats
       val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
         pnames = Seq("k"),
         numRows = rows.length, stats = stats)
@@ -489,8 +562,10 @@ object PropertySpec extends Properties("graft.kernels") {
         v.map(leaf => new GenericInternalRow(
           Array[Any](leaf.map(Long.box).orNull))).orNull)): InternalRow)
         .toVector
-      val (nstats, nnulls) = graft.sources.GraftLakeStats.collectNested(
-        rows, Seq(7), Seq(stT))
+      val (nstats, nnulls) = {
+        val s = statsOf(rows, Seq(7), Seq(stT))
+        (s.nstats, s.nnulls)
+      }
       val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
         pnames = Seq("s"),
         numRows = rows.length,
@@ -546,9 +621,8 @@ object PropertySpec extends Properties("graft.kernels") {
       import org.apache.spark.sql.types.DoubleType
       val rows = vals.map(v => new GenericInternalRow(
         Array[Any](v.map(Double.box).orNull)): InternalRow).toVector
-      val stats = graft.sources.GraftLakeStats.collect(
-        rows, Seq(7), Seq(DoubleType))
-      val nulls = graft.sources.GraftLakeStats.nullCounts(rows, Seq(7))
+      val s = statsOf(rows, Seq(7), Seq(DoubleType))
+      val (stats, nulls) = (s.stats, s.nulls)
       val f = graft.sources.GraftLakeFile("f", Seq(7), "f.parquet",
         pnames = Seq("k"),
         numRows = rows.length,
@@ -618,9 +692,8 @@ object PropertySpec extends Properties("graft.kernels") {
       val rows = vals.map(v => new GenericInternalRow(
         Array[Any](v.map(UTF8String.fromString).orNull)): InternalRow)
         .toVector
-      val stats = graft.sources.GraftLakeStats.collect(
-        rows, Seq(3), Seq(StringType))
-      val nulls = graft.sources.GraftLakeStats.nullCounts(rows, Seq(3))
+      val s = statsOf(rows, Seq(3), Seq(StringType))
+      val (stats, nulls) = (s.stats, s.nulls)
       val f = graft.sources.GraftLakeFile("f", Seq(3), "f.parquet",
         pnames = Seq("s"),
         numRows = rows.length,
@@ -690,8 +763,7 @@ object PropertySpec extends Properties("graft.kernels") {
       import org.apache.spark.sql.types.LongType
       val rows = vals.map(v => new GenericInternalRow(
         Array[Any](v.map(Long.box).orNull)): InternalRow).toVector
-      val got = graft.sources.GraftLakeStats
-        .intSums(rows, Seq(4), Seq(LongType)).get(4)
+      val got = statsOf(rows, Seq(4), Seq(LongType)).sums.get(4)
       // reference: running sum in arbitrary precision, overflow = any
       // PREFIX leaving the Long range (addExact is sequential)
       var acc = BigInt(0)
@@ -721,8 +793,7 @@ object PropertySpec extends Properties("graft.kernels") {
       val rows = vals.map(v => new GenericInternalRow(
         Array[Any](v.map(u => Decimal(u, 12, 2)).orNull)): InternalRow)
         .toVector
-      val got = graft.sources.GraftLakeStats
-        .decSums(rows, Seq(4), Seq(dt)).get(4)
+      val got = statsOf(rows, Seq(4), Seq(dt)).dsums.get(4)
       val ref = vals.flatten
         .map(u => java.math.BigDecimal.valueOf(u, 2))
         .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
@@ -827,12 +898,13 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](v))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
+      val s = statsOf(rows, Seq(0), Seq(LongType))
       val f = GraftLakeFile("f", Seq(0), "f.parquet",
         pnames = Seq("c"),
         numRows = rows.length, types = Seq(LongType),
-        stats = GraftLakeStats.collect(rows, Seq(0), Seq(LongType)),
+        stats = s.stats,
         nulls = Map(0 -> 0L),
-        blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(LongType)))
+        blooms = s.blooms)
       vs.forall(v => GraftLakeStats.mayMatch(f,
         Seq(eqPred("c", v, LongType)), Map("c" -> 0)))
     }
@@ -845,12 +917,13 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](UTF8String.fromString(v)))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
+      val s = statsOf(rows, Seq(0), Seq(StringType))
       val f = GraftLakeFile("f", Seq(0), "f.parquet",
         pnames = Seq("c"),
         numRows = rows.length, types = Seq(StringType),
-        stats = GraftLakeStats.collect(rows, Seq(0), Seq(StringType)),
+        stats = s.stats,
         nulls = Map(0 -> 0L),
-        blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(StringType)))
+        blooms = s.blooms)
       vs.forall(v => GraftLakeStats.mayMatch(f,
         Seq(eqPred("c", UTF8String.fromString(v), StringType)),
         Map("c" -> 0)))
@@ -865,12 +938,13 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](v))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
+      val s = statsOf(rows, Seq(0), Seq(IntegerType))
       val f = GraftLakeFile("f", Seq(0), "f.parquet",
         pnames = Seq("c"),
         numRows = rows.length, types = Seq(IntegerType),
-        stats = GraftLakeStats.collect(rows, Seq(0), Seq(IntegerType)),
+        stats = s.stats,
         nulls = Map(0 -> 0L),
-        blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(IntegerType)))
+        blooms = s.blooms)
       vs.forall(v => GraftLakeStats.mayMatch(f,
         Seq(eqPred("c", v.toLong, LongType)), Map("c" -> 0)))
     }

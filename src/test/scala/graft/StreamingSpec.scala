@@ -395,6 +395,8 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
     intercept[FileAlreadyExistsException](
       write(local, file, "v3", overwrite = false).close())
     assert(read(local, file) == "v1")
+    assert(names("local/offsets") == Set("0", ".0.crc"),
+      "a refused write leaves no temp file and no temp .crc")
     // Spark's default manager reads the file back, its checksum verified
     val default = CheckpointFileManager.create(file.getParent,
       new org.apache.hadoop.conf.Configuration(conf))
