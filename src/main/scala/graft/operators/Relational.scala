@@ -82,13 +82,13 @@ object Relational {
 
   /** HLL-sketch distinct (approx_count_distinct). The PRODUCTION shape —
     * the sketch alone — is the 100 TB path: one pass, constant memory, no
-    * distinct shuffle. ORACLE-GATED VIA ERROR BAND (VERDICT r17 task 6):
+    * distinct shuffle. ORACLE-GATED VIA ERROR BAND:
     * sketch values are engine-specific, so the row carries the EXACT
     * count (DuckDB re-derives it) plus a boolean — |approx − exact|
     * within the configured band — that the oracle pins TRUE. NOTE the
     * exact countDistinct leg (a distinct shuffle) rides this query ONLY
     * for oracle gating, so the bench timing here measures sketch + gate,
-    * not the sketch path's standalone cost profile (advice r18).
+    * not the sketch path's standalone cost profile.
     */
   def approxDistinctUsers(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "events")
@@ -97,7 +97,7 @@ object Relational {
         approx_count_distinct(col("user_id"), 0.02).as("approx_users"),
         countDistinct(col("user_id")).as("n_exact"))
       // 2% rsd ⇒ 10% is a generous >3-sigma band (same bound the spec
-      // has gated since round 1); the sketch is deterministic per input
+      // has always gated); the sketch is deterministic per input
       .select(col("event_type"), col("n_exact"),
         (abs(col("approx_users") - col("n_exact")) <=
           col("n_exact") * 0.10).as("within_band"))
@@ -116,8 +116,8 @@ object Relational {
     * (`hll_union_agg`) — never from rescanning the facts. This is the only
     * way distinct counts stay incremental at 100 TB: exact distinct state
     * is as large as the data, while a sketch is ~KB per group and unions
-    * associatively like a sum. ORACLE-GATED VIA ERROR BAND (VERDICT r18
-    * task 3, same pattern as `agg_approx_distinct`): sketch bytes are
+    * associatively like a sum. ORACLE-GATED VIA ERROR BAND (the
+    * pattern of `agg_approx_distinct`): sketch bytes are
     * library-specific, so the row carries the EXACT per-month distinct
     * (DuckDB re-derives it) plus a within-band boolean the oracle pins
     * TRUE. NOTE the exact leg (a distinct shuffle) rides ONLY for oracle
@@ -409,11 +409,11 @@ object Relational {
     * Salt count is a genuine TRADE: more salts spread the hot key wider
     * but replicate the small side proportionally (the explode below), and
     * at harness scale the replication dominates — an interleaved ABAB A/B
-    * (round 6, single-query runs, sf0.1) read 3.44/3.45/3.38 s at 8 salts
-    * vs 2.76/2.78/2.99 s at 4, so 4 it is. The round-5 bench's 2.72 s
-    * reading (vs r4's 1.70) reproduced at ~2.2-2.8 s across 6 same-window
-    * runs of unchanged code, i.e. the "regression" was r4 reading low,
-    * not r5 reading high; the replication cost is the real, steady term.
+    * (single-query runs, sf0.1) read 3.44/3.45/3.38 s at 8 salts vs
+    * 2.76/2.78/2.99 s at 4, so 4 it is. One bench's 2.72 s reading (vs
+    * an earlier 1.70) reproduced at ~2.2-2.8 s across 6 same-window runs
+    * of unchanged code, i.e. the "regression" was the earlier run reading
+    * low; the replication cost is the real, steady term.
     * At 100 TB pick salts ≈ ceil(hot-key rows / healthy-partition rows),
     * never more — and prefer AQE's runtime skew split (PlanSpec) when the
     * skew isn't known up front.
@@ -2215,14 +2215,16 @@ object Relational {
     * shape — the digest alone — is the 100 TB path for
     * unbounded-cardinality columns: one pass, bounded memory, no
     * per-group sort, mirroring the `agg_approx_distinct` ⟷
-    * `agg_distinct_users` pairing. ORACLE-GATED VIA RANK BAND (VERDICT
-    * r17 task 6): the digest guarantees rank error ≤ 1/accuracy, so each
-    * approx value must land between the EXACT interpolated percentiles
-    * at q ± 0.005 (5× the 1/1000 guarantee) — a boolean the oracle pins
-    * TRUE, alongside the exact medians DuckDB re-derives itself. NOTE
-    * the exact `percentile` legs (per-group sorts) ride this query ONLY
-    * for oracle gating, so the bench timing here measures digest + gate,
-    * not the digest path's standalone cost profile (advice r18).
+    * `agg_distinct_users` pairing. ORACLE-GATED VIA RANK BAND: the
+    * digest guarantees rank error ≤ 1/accuracy, so each approx value
+    * must land between the EXACT interpolated percentiles at q ± 0.005
+    * (5× the 1/1000 guarantee) — a boolean the oracle pins TRUE,
+    * alongside the exact medians DuckDB re-derives itself. NOTE the
+    * exact `percentile` legs ride this query ONLY for oracle gating, so
+    * the bench timing here measures digest + gate, not the digest path's
+    * standalone cost profile. [[graft.plans.MergePercentileAggregates]]
+    * folds the nine exact legs into one count map per group and the three
+    * digests into one, so the gate costs one extra buffer, not nine.
     */
   def approxPercentiles(spark: SparkSession, sfDir: String): DataFrame = {
     def band(q: Double, name: String) = Seq(
@@ -2657,7 +2659,7 @@ object Relational {
     * only safe way to emit collection aggregates at scale. The set is
     * emitted `|`-joined as a STRING (not ARRAY): scalar columns survive
     * every downstream comparator/sink, where array cells routinely don't
-    * (the round-1 driver comparator could not hash an ARRAY column).
+    * (a hash comparator of result rows could not hash an ARRAY column).
     */
   def collectSorted(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = Tables(spark, sfDir, "customer")
@@ -2710,7 +2712,7 @@ object Relational {
     def corr(a: String, b: String): Column = {
       // centered moments formed in DECIMAL (exact integers — same
       // discipline as groupRegression/Fit), then ONE cast to double.
-      // Double-combining the cast sums instead (the pre-round-9 shape)
+      // Double-combining the cast sums instead (an earlier shape)
       // makes the cancellation n·Σxx − Σx² pure rounding noise once
       // moments pass 2^53 — at sf1 a constant high-cent column gave
       // v = 0.0 on Spark but +2.75e11 on DuckDB, so even the degeneracy
