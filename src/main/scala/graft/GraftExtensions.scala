@@ -11,9 +11,7 @@ import graft.functions.{BoundedTopK, DotProduct, MisraGries, RollingHash}
 
 /** Session extension registering the engine's native expressions for SQL
   * use (`SELECT rolling_hash(text), dot_product(a, b) ...`) and its
-  * optimizer rules ([[graft.plans.ThresholdLevenshteinRule]], which bounds
-  * thresholded edit distances, and [[graft.plans.MergePercentileAggregates]],
-  * which computes every percentile of one input from one buffer). Enable with
+  * optimizer rules ([[graft.plans.ThresholdLevenshteinRule]]). Enable with
   * `spark.sql.extensions=graft.GraftExtensions` — the harness mains
   * (Verify/Bench) and the test base do. This is the standard injection
   * point for custom Catalyst pieces; if a whole-operator extension ever
@@ -24,7 +22,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(extensions: SparkSessionExtensions): Unit = {
     extensions.injectOptimizerRule(_ => graft.plans.ThresholdLevenshteinRule)
-    extensions.injectOptimizerRule(_ => graft.plans.MergePercentileAggregates)
     // physical: global-sort elision over manifest-certified ordered
     // lake scans (runs post-EnsureRequirements in AQE preparation)
     extensions.injectQueryStagePrepRule(_ =>

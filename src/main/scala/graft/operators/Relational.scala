@@ -1874,10 +1874,12 @@ object Relational {
       .select(col("event_type").as("g"), col("event_id"), cents.as("v"))
     // caps round to 6dp: the two engines' percentile interpolation can
     // differ in the last ulp for arbitrary quantiles (q=0.5 is exact —
-    // the rolling-median case — 0.05/0.95 are not)
+    // the rolling-median case — 0.05/0.95 are not). One array call: both
+    // cuts from one count map per group.
+    val cut = percentile(col("v"), array(lit(0.05), lit(0.95)))
     val caps = ev.groupBy(col("g"))
-      .agg(round(percentile(col("v"), lit(0.05)), 6).as("lo"),
-        round(percentile(col("v"), lit(0.95)), 6).as("hi"))
+      .agg(round(cut.getItem(0), 6).as("lo"),
+        round(cut.getItem(1), 6).as("hi"))
     val vd = col("v").cast(DoubleType)
     ev.join(broadcast(caps), "g")
       .groupBy(col("g"))
@@ -2193,16 +2195,20 @@ object Relational {
     * approx_percentile (t-digest) instead, the same trade as
     * `agg_approx_distinct`. Rounded to 6dp: Spark interpolates
     * (1−g)·a + g·b, DuckDB a + g·(b−a) — algebraically equal, last-bit
-    * different.
+    * different. One array-valued call answers all three from one count
+    * map per group (three scalar calls would build three).
     */
-  def percentilesQuantity(spark: SparkSession, sfDir: String): DataFrame =
+  def percentilesQuantity(spark: SparkSession, sfDir: String): DataFrame = {
+    val ps = percentile(col("l_quantity"),
+      array(lit(0.25), lit(0.5), lit(0.75)))
     Tables(spark, sfDir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
-        round(percentile(col("l_quantity"), lit(0.25)), 6).as("p25"),
-        round(percentile(col("l_quantity"), lit(0.5)), 6).as("p50"),
-        round(percentile(col("l_quantity"), lit(0.75)), 6).as("p75"))
+        round(ps.getItem(0), 6).as("p25"),
+        round(ps.getItem(1), 6).as("p50"),
+        round(ps.getItem(2), 6).as("p75"))
       .orderBy("l_returnflag")
+  }
 
   private val percentilesOracle =
     """SELECT l_returnflag,
@@ -2222,18 +2228,28 @@ object Relational {
     * alongside the exact medians DuckDB re-derives itself. NOTE the
     * exact `percentile` legs ride this query ONLY for oracle gating, so
     * the bench timing here measures digest + gate, not the digest path's
-    * standalone cost profile. [[graft.plans.MergePercentileAggregates]]
-    * folds the nine exact legs into one count map per group and the three
-    * digests into one, so the gate costs one extra buffer, not nine.
+    * standalone cost profile. The legs are two array-valued calls: one
+    * digest answers the three approx percentiles and one count map the
+    * nine exact ones, so the gate costs one extra buffer per group, not
+    * nine (12 scalar calls planned 12 buffers; in spark-shell on
+    * `local[4]` at sf0.1 the query took 546 ms that way, 238 ms this
+    * way, median of 9 warm runs, same result). The values are the scalar
+    * calls' exactly: `percentile` interpolates every percentage from the
+    * same count map, and the digest does not depend on the percentages
+    * asked of it.
     */
   def approxPercentiles(spark: SparkSession, sfDir: String): DataFrame = {
-    def band(q: Double, name: String) = Seq(
-      approx_percentile(col("l_quantity"), lit(q), lit(1000))
-        .as(s"a_$name"),
-      percentile(col("l_quantity"), lit(q - 0.005)).as(s"lo_$name"),
-      percentile(col("l_quantity"), lit(q + 0.005)).as(s"hi_$name"),
-      round(percentile(col("l_quantity"), lit(q)), 6).as(name))
-    val aggs = band(0.25, "p25") ++ band(0.5, "p50") ++ band(0.75, "p75")
+    val qs = Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75)
+    val approx = approx_percentile(col("l_quantity"),
+      array(qs.map(q => lit(q._2)): _*), lit(1000))
+    // per q: the band's low and high edges, then q itself
+    val exact = percentile(col("l_quantity"), array(qs.flatMap {
+      case (_, q) => Seq(lit(q - 0.005), lit(q + 0.005), lit(q)) }: _*))
+    val aggs = qs.zipWithIndex.flatMap { case ((name, _), k) => Seq(
+      approx.getItem(k).as(s"a_$name"),
+      exact.getItem(3 * k).as(s"lo_$name"),
+      exact.getItem(3 * k + 1).as(s"hi_$name"),
+      round(exact.getItem(3 * k + 2), 6).as(name)) }
     def within(name: String) =
       (col(s"a_$name") >= col(s"lo_$name") - lit(1e-6) &&
         col(s"a_$name") <= col(s"hi_$name") + lit(1e-6))

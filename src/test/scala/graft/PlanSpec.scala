@@ -1,15 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Add, Literal, Rand}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, ApproximatePercentile, Percentile}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
-
-import graft.plans.MergePercentileAggregates
 
 /** Physical-plan assertions: the properties that make these plans survive a
   * 100 TB scale-up are pinned here so a refactor can't silently lose them —
@@ -875,19 +871,10 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
           ae.resultId -> f.getClass.getSimpleName
       }.distinct.groupBy(_._2).map { case (f, ids) => f -> ids.size }
 
-  /** Percentile-family calls of a logical plan's aggregates (a merged
-    * call is one call, however many elements of it are used). */
-  private def pctCalls(plan: LogicalPlan): Int =
-    plan.collect { case a: Aggregate => a.aggregateExpressions }.flatten
-      .flatMap(_.collect {
-        case ae @ AggregateExpression(
-          _: Percentile | _: ApproximatePercentile, _, _, _, _) => ae.resultId })
-      .distinct.size
-
-  test("percentiles over one input fold into one array-valued call each") {
+  test("percentiles over one input are one array-valued call each") {
     val approx = run("agg_approx_percentiles")
     approx.collect()
-    // 3 approx_percentile and 9 percentile calls over l_quantity
+    // 3 approx and 9 exact percentiles over l_quantity: two buffers
     assert(executedPctCalls(approx) ==
       Map("Percentile" -> 1, "ApproximatePercentile" -> 1),
       s"expected one buffer per function:\n${approx.queryExecution.executedPlan}")
@@ -897,63 +884,5 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(executedPctCalls(df) == Map("Percentile" -> 1),
         s"$q: expected one percentile call:\n${df.queryExecution.executedPlan}")
     }
-  }
-
-  test("percentile calls that differ in key, DISTINCT or determinism stay apart") {
-    spark.range(0, 200).selectExpr("id % 5 AS g", "id AS x",
-      "id % 3 + 1 AS f1", "id % 2 + 1 AS f2").createOrReplaceTempView("pl_pct")
-    val cases = Seq(
-      "percentile(DISTINCT x, 0.25), percentile(DISTINCT x, 0.75)",
-      "approx_percentile(x, 0.25, 100), approx_percentile(x, 0.75, 1000)",
-      "percentile(x, 0.25, f1), percentile(x, 0.75, f2)")
-    for (c <- cases) {
-      val df = spark.sql(s"SELECT g, $c FROM pl_pct GROUP BY g")
-      assert(pctCalls(df.queryExecution.optimizedPlan) == 2,
-        s"$c must stay two calls:\n${df.queryExecution.optimizedPlan}")
-      assert(df.collect().length == 5)
-    }
-    // the control: the same pair, one key, merges
-    val pair = spark.sql(
-      "SELECT g, percentile(x, 0.25), percentile(x, 0.75) FROM pl_pct GROUP BY g")
-    assert(pctCalls(pair.queryExecution.optimizedPlan) == 1)
-    // analysis refuses a non-deterministic percentile input, so the
-    // rule is handed one directly: `x + rand(7)` in both calls
-    val random = pair.queryExecution.analyzed.transformAllExpressions {
-      case p: Percentile => p.copy(child = Add(p.child, Rand(Literal(7L))))
-    }
-    assert(pctCalls(MergePercentileAggregates(random)) == 2,
-      "calls over a non-deterministic input must stay apart")
-  }
-
-  test("a streaming aggregate keeps its percentile calls (state schema)") {
-    import org.apache.spark.sql.execution.streaming.runtime.{
-      MemoryStream, StreamingQueryWrapper}
-    implicit val sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Long]
-    val q = in.toDF().select((col("value") % 3).as("g"), col("value").as("x"))
-      .groupBy("g").agg(percentile(col("x"), lit(0.25)).as("p25"),
-        percentile(col("x"), lit(0.75)).as("p75"))
-      .writeStream.format("memory").queryName("pl_stream_pct")
-      .outputMode("complete").start()
-    try {
-      in.addData(0L until 30L)
-      q.processAllAvailable()
-      val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-        .lastExecution
-      assert(pctCalls(exec.optimizedPlan) == 2,
-        s"a stateful aggregate must not merge:\n${exec.optimizedPlan}")
-      assert(spark.table("pl_stream_pct").orderBy("g").as[(Long, Double, Double)]
-        .collect().toSeq == Seq((0L, 6.75, 20.25), (1L, 7.75, 21.25),
-          (2L, 8.75, 22.25)))
-    } finally q.stop()
-  }
-
-  test("the percentile merge rule is idempotent") {
-    val analyzed = run("agg_approx_percentiles").queryExecution.analyzed
-    val once = MergePercentileAggregates(analyzed)
-    assert(pctCalls(analyzed) == 12 && pctCalls(once) == 2)
-    assert(MergePercentileAggregates(once) fastEquals once,
-      "a second run over the merged plan must change nothing")
   }
 }

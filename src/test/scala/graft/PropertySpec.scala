@@ -948,87 +948,4 @@ object PropertySpec extends Properties("graft.kernels") {
       vs.forall(v => GraftLakeStats.mayMatch(f,
         Seq(eqPred("c", v.toLong, LongType)), Map("c" -> 0)))
     }
-
-  // ---- MergePercentileAggregates: merged calls answer like single calls ----
-
-  /** Rows (g, i, d, c, f, b) drawn from small domains, so groups hold
-    * nulls and duplicates. */
-  private val pctRows: Gen[List[(Int, Option[Int], Option[Double],
-      Option[BigDecimal], Int, Boolean)]] =
-    Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, for {
-      g <- Gen.choose(0, 2)
-      i <- Gen.option(Gen.choose(-3, 3))
-      d <- Gen.option(Gen.oneOf(-1.5, 0.0, 0.1, 2.25, 7.0, 1e9))
-      c <- Gen.option(Gen.choose(-500, 500).map(u => BigDecimal(u, 2)))
-      f <- Gen.choose(1, 3)
-      b <- Gen.oneOf(true, false)
-    } yield (g, i, d, c, f, b)))
-
-  /** Percentile calls over INT, DOUBLE and DECIMAL children; in one
-    * aggregate they fold into 7 calls (the HAVING call joins the
-    * `percentile(i, …)` group). */
-  private val pctCalls = Seq(
-    "percentile(i, 0.1)", "percentile(i, 0.5)", "percentile(i, 0.9)",
-    "percentile_cont(0.3) WITHIN GROUP (ORDER BY d DESC)",
-    "percentile_cont(0.8) WITHIN GROUP (ORDER BY d DESC)",
-    "median(d)", "percentile(d, 0.25)",
-    "percentile(c, 0.2, f)", "percentile(c, 0.7, f)",
-    "approx_percentile(c, 0.25, 100)", "approx_percentile(c, 0.75, 100)",
-    "percentile(i, 0.4) FILTER (WHERE b)",
-    "percentile(i, 0.6) FILTER (WHERE b)",
-    "approx_percentile(d, 0.5) FILTER (WHERE b)",
-    "approx_percentile(d, 0.9) FILTER (WHERE b)")
-  private val pctHaving = "coalesce(percentile(i, 0.75), 0) > 0"
-
-  /** Percentile-family calls of a plan's aggregates, a merged call
-    * counted once. */
-  private def pctFunctions(plan: org.apache.spark.sql.catalyst.plans.logical
-      .LogicalPlan): Int = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate._
-    plan.collect { case a: org.apache.spark.sql.catalyst.plans.logical
-        .Aggregate => a.aggregateExpressions }.flatten
-      .flatMap(_.collect {
-        case ae @ AggregateExpression(
-          _: Percentile | _: ApproximatePercentile, _, _, _, _) => ae.resultId })
-      .distinct.size
-  }
-
-  property("merged percentile calls equal the same calls aggregated alone") =
-    Prop.forAll(pctRows) { rows =>
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types._
-      val spark = Session.local(4)
-      val schema = StructType(Seq(StructField("g", IntegerType),
-        StructField("i", IntegerType), StructField("d", DoubleType),
-        StructField("c", DecimalType(6, 2)), StructField("f", IntegerType),
-        StructField("b", BooleanType)))
-      // one partition: every aggregate plans without an exchange
-      spark.createDataFrame(java.util.Arrays.asList(rows.map {
-        case (g, i, d, c, f, b) => Row(g, i.map(Int.box).orNull,
-          d.map(Double.box).orNull,
-          c.map(_.bigDecimal).orNull, f, b) }: _*), schema)
-        .coalesce(1).createOrReplaceTempView("prop_pct")
-      val merged = spark.sql(
-        s"""SELECT g, ${pctCalls.zipWithIndex.map { case (e, k) =>
-              s"CAST($e AS STRING) AS c$k" }.mkString(", ")}
-           |FROM prop_pct GROUP BY g HAVING $pctHaving""".stripMargin)
-      // each call (and the HAVING call) in an aggregate of its own
-      val alone = spark.sql((pctCalls :+ pctHaving).zipWithIndex.map {
-        case (e, k) => s"SELECT g, $k AS k, CAST($e AS STRING) AS v " +
-          "FROM prop_pct GROUP BY g" }.mkString(" UNION ALL "))
-      val got = merged.collect().flatMap(r => pctCalls.indices.map(k =>
-        (r.getInt(0), k) -> r.getString(k + 1))).toMap
-      val single = alone.collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getString(2)).toMap
-      val kept = single.collect {
-        case ((g, k), "true") if k == pctCalls.size => g }.toSet
-      val want = single.filter { case ((g, k), _) =>
-        kept(g) && k < pctCalls.size }
-      import Prop.propBoolean
-      (pctFunctions(merged.queryExecution.optimizedPlan) == 7) :|
-        "the merged aggregate holds 7 calls" &&
-        (pctFunctions(alone.queryExecution.optimizedPlan) ==
-          pctCalls.size + 1) :| "every single-call aggregate stays one call" &&
-        (got == want) :| s"merged ${got.toSeq.sorted}\nalone ${want.toSeq.sorted}"
-    }
 }
