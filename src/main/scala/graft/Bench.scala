@@ -17,7 +17,7 @@ object Bench {
     // absorb one-time session costs (task dispatch JIT, parquet reader +
     // codegen framework init) so per-query numbers measure the queries,
     // not the first query's luck of position
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    Session.consume(spark.range(1000000).selectExpr("sum(id)"))
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // absorb the DSv2 lake-catalog cold path too (class init + codegen
     // of the write / row-level / change-feed machinery): the catalog is
@@ -140,7 +140,7 @@ object Bench {
       currentQuery.set(name)
       val gc0 = driverGcMs()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
+      try Session.consume(fn(spark, sfDir)) catch {
         case e: Throwable =>
           // whitelist printable ASCII (\b, \f, \u0000 etc.
           // would still break the JSON line), then drop the two printable

@@ -71,7 +71,7 @@ object DevDiag {
       sampler.setDaemon(true)
       val t0 = System.nanoTime()
       sampler.start()
-      fn(spark, sfDir).count()
+      Session.consume(fn(spark, sfDir))
       sampling = false
       val wall = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()

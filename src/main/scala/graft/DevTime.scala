@@ -12,7 +12,7 @@ object DevTime {
       val fn = SparkEntry.queries(name)
       (1 to 2).foreach { i =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        Session.consume(fn(spark, sfDir))
         spark.catalog.clearCache()
         println(f"[devtime] $name run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }

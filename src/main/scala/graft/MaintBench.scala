@@ -5,7 +5,7 @@ package graft
   * loads orders×8 into a lake table (the
   * 12M-row ingest itself exercises the task-side write plane that the
   * old driver-resident shape could not survive), then times
-  * `CALL system.cluster` (range-shuffle sort rewrite),
+  * `CALL system.cluster` (one range sort, exact chunks read in place),
   * `CALL system.cluster_zorder`, a fragmenting DELETE, and
   * `CALL system.compact` (distributed DV-clearing rewrite). Prints one
   * JSON line per step. Not part of the driver contract —

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.streaming.LocalCheckpointFileManager
 
@@ -31,6 +31,13 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `df` to completion through a `noop` write, the one action the
+    * dev timers (Bench, DevTime, DevDiag) time. The write reads every
+    * output column, so Catalyst prunes no projection or aggregate the
+    * query computes; `count()` would let it drop them all. */
+  def consume(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   /** Core count from `SPARK_GRAFT_CPUS`, else `default`. */
   def cpus(default: Int): Int =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Query
+import graft.{GlobalOrder, Query}
 import graft.sources.Tables
 
 /** Corpus-curation operators a training-data pipeline runs AFTER the
@@ -443,24 +443,19 @@ object Curation {
     * (the A-ES exponential-keys alternative needs pow/log, which
     * ARCHITECTURE.md's determinism traps rule out cross-engine).
     *
-    * Scale note: the global-ordered cumsum here is the oracle-scale
-    * spelling; at 100 TB it becomes the standard two-pass distributed
-    * prefix sum (per-shard totals broadcast as offsets — exactly
-    * [[packSequences]]'s per-shard discipline) with K apportioned to
-    * shards by weight share.
+    * The running sum and the total come from [[graft.GlobalOrder]]: a
+    * range sort on doc_id, one job for each sorted partition's weight
+    * sum, then a narrow pass adding each document's prefix — no
+    * single-partition window.
     */
   def ppsSample(spark: SparkSession, sfDir: String): DataFrame = {
     val K = 50
     val docs = Tables(spark, sfDir, "documents").select("doc_id", "n_chars")
-    val before = Window.orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val total = docs.agg(sum(col("n_chars")).as("total"))
-    docs
-      .withColumn("cum_before",
-        coalesce(sum(col("n_chars")).over(before), lit(0L)))
-      .crossJoin(broadcast(total))
-      .filter(expr(s"(cum_before * $K) div total")
-        < expr(s"((cum_before + n_chars) * $K) div total"))
+    val order = GlobalOrder(docs, Seq(col("doc_id")), Some("n_chars"))
+    val total = order.weightTotal
+    order.indexed("_i", "cum_before")
+      .filter(expr(s"(cum_before * $K) div $total")
+        < expr(s"((cum_before + n_chars) * $K) div $total"))
       .select(col("doc_id"), col("n_chars"))
       .orderBy("doc_id")
   }

@@ -3170,17 +3170,18 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * The rewrite is DISTRIBUTED: the table (`qual`, its catalog-
     * qualified name) is re-read through its own DSv2 scan
     * (executor-side columnar decode; current-schema normalization and
-    * DV filtering come with the scan), globally sorted by the cluster
-    * key through a range shuffle, EXACT-chunked into
-    * ceil(live/target)-row files by global row index (`zipWithIndex` +
-    * a chunk partitioner), and written by the task-side file writer —
-    * the driver never holds a row. This is Iceberg's rewrite_data_files
+    * DV filtering come with the scan), range-sorted by the cluster key
+    * and cut into ceil(live/target)-row files by [[graft.GlobalOrder]]:
+    * one count job over the sorted partitions, then each write task
+    * reads the slices of the sorted partitions its chunk spans. Each row
+    * is shuffled once by the sort, and not at all when the scan's
+    * reported order elides it (re-clustering a clustered table); the
+    * driver never holds a row. This is Iceberg's rewrite_data_files
     * shape: an optimistic Spark action whose commit re-validates the
     * pinned version; a concurrent commit aborts it loudly and the temps
-    * are unlinked. Z-order rank codes are computed distributed too:
-    * dense-rank over each column's DISTINCT values joined back (at true
-    * cluster scale the rank map becomes range-sampled boundaries — same
-    * code space, sampled edges). */
+    * are unlinked. A z-order rank code is a column value's global index
+    * among the column's sorted DISTINCT values (its dense rank, from the
+    * same primitive), joined back on the value. */
   private[sources] def clusterBy(colNames: Seq[String], targetFiles: Int,
       strategy: String, qual: String): (Int, Int) = {
     require(targetFiles >= 1, s"target_files must be >= 1, got $targetFiles")
@@ -3188,15 +3189,12 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
       s"unknown cluster strategy '$strategy' (sort, zorder)")
     import org.apache.spark.sql.{functions => F}
     val spark = org.apache.spark.sql.SparkSession.active
-    val (v0, before, totalLive, fw, sortIds, baseFiles, pin) =
+    val (v0, before, fw, sortIds, baseFiles, pin) =
       synchronized {
         val names = schemaNow.fieldNames.toSeq
         colNames.foreach(n => require(names.contains(n),
           s"unknown cluster column $n; table has ${names.mkString(", ")}"))
-        (currentVersion, files.length,
-          files.map(f =>
-            f.numRows - dvs.getOrElse(f.id, Set.empty).size).sum,
-          fileWriteInfo,
+        (currentVersion, files.length, fileWriteInfo,
           if (strategy == "sort")
             colNames.map(c => colIds(names.indexOf(c)))
           else Nil,
@@ -3211,35 +3209,26 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     // which is exactly the normalization the rewrite wants.
     val df0 = spark.read.option("graft.snapshot-version", v0.toString)
       .table(qual)
-    val sortedDf = strategy match {
-      case "sort" => df0.orderBy(colNames.map(F.col): _*)
+    val sorted = strategy match {
+      case "sort" => graft.GlobalOrder(df0, colNames.map(F.col))
       case "zorder" =>
         require(colNames.length >= 2 && colNames.length <= 4,
           s"zorder interleaves 2-4 columns, got ${colNames.length}")
         val k = colNames.length
-        var g = df0
-        colNames.zipWithIndex.foreach { case (c, ci) =>
-          val distinct = df0.select(F.col(c).as(s"_zv$ci")).distinct()
-          val nd = distinct.count()
-          // exact DISTRIBUTED dense rank: the values are distinct, so a
-          // range-shuffled sort + zipWithIndex IS the rank — no
-          // single-partition window anywhere (dense_rank over an
-          // unpartitioned window would serialize the rank stage)
-          val vdt = distinct.schema.head.dataType
-          val rankedRdd = distinct.orderBy(s"_zv$ci").rdd.zipWithIndex()
-            .map { case (r, i) =>
-              org.apache.spark.sql.Row(r.get(0), i) }
-          val ranked = spark.createDataFrame(rankedRdd, StructType(Seq(
-            StructField(s"_zv$ci", vdt), StructField("_zr", LongType))))
-            // 16-bit RANK code: r * 65535 / (n-1), integer division
-            // (floor of positives)
-            .withColumn(s"_zc$ci",
-              if (nd <= 1L) F.lit(0L)
-              else F.floor(F.col("_zr") * F.lit(65535L) /
-                F.lit(nd - 1L)).cast("long"))
+        val g = colNames.zipWithIndex.foldLeft(df0) { case (g, (c, ci)) =>
+          // NULL is a rankable distinct value (first, as in the sort)
+          val ranks = graft.GlobalOrder(
+            df0.select(F.col(c).as(s"_zv$ci")).distinct(),
+            Seq(F.col(s"_zv$ci")))
+          val nd = ranks.total
+          // 16-bit RANK code: r * 65535 / (n-1), integer division
+          // (floor of positives)
+          val coded = ranks.indexed("_zr").withColumn(s"_zc$ci",
+            if (nd <= 1L) F.lit(0L)
+            else F.floor(F.col("_zr") * F.lit(65535L) /
+              F.lit(nd - 1L)).cast("long"))
             .drop("_zr")
-          // null-safe join key: NULL is a rankable distinct value
-          g = g.join(ranked, g(c) <=> ranked(s"_zv$ci"), "inner")
+          g.join(coded, g(c) <=> coded(s"_zv$ci"), "inner")
             .drop(s"_zv$ci")
         }
         val zkey = (0 until k).flatMap { c =>
@@ -3249,27 +3238,20 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
               b * k + c)
           }
         }.reduce(_.bitwiseOR(_))
-        g.withColumn("_zkey", zkey).orderBy("_zkey")
-          .select(fw.names.map(F.col): _*)
+        graft.GlobalOrder(g.select(fw.names.map(F.col): _*), Seq(zkey))
     }
     val nChunks =
-      math.min(targetFiles.toLong, math.max(1L, totalLive)).toInt
-    val chunk = math.max(1L, math.ceil(totalLive.toDouble / nChunks).toLong)
-    val temps =
-      if (totalLive == 0L) Vector.empty[GraftLakeFile]
-      else sortedDf.queryExecution.toRdd.zipWithIndex()
-        .map { case (r, i) => (i, r.copy()) }
-        .repartitionAndSortWithinPartitions(
-          new GraftChunkPartitioner(nChunks, chunk))
-        .mapPartitionsWithIndex { (pid, it) =>
-          val w = new GraftLakeFileWriter(fw)
-          try {
-            it.foreach { case (_, r) => w.write(r) }
-            Iterator((pid, w.finish()))
-          } catch { case e: Throwable => w.abort(); throw e }
-        }
-        .collect().sortBy(_._1).toVector
-        .flatMap(_._2).map(_.copy(sortedBy = sortIds))
+      math.min(targetFiles.toLong, math.max(1L, sorted.total)).toInt
+    val temps = sorted.chunks(nChunks)
+      .mapPartitionsWithIndex { (pid, it) =>
+        val w = new GraftLakeFileWriter(fw)
+        try {
+          it.foreach(w.write)
+          Iterator((pid, w.finish()))
+        } catch { case e: Throwable => w.abort(); throw e }
+      }
+      .collect().sortBy(_._1).toVector
+      .flatMap(_._2).map(_.copy(sortedBy = sortIds))
     commitHook()
     synchronized {
       // the rewrite read EVERY base file's live rows, so all of them
@@ -5971,16 +5953,6 @@ class GraftLakeStreamingWriterFactory(fw: GraftLakeFileWriteInfo,
       new GraftLakeFileWriterFactory(fw, None)
         .createWriter(partitionId, taskId)
   }
-}
-
-/** Exact-chunk partitioner for maintenance rewrites: global row index
-  * `idx` lands in output file `idx / chunk` — `grouped(chunk)` over a
-  * distributed, globally sorted relation. */
-private[sources] class GraftChunkPartitioner(n: Int, chunk: Long)
-    extends org.apache.spark.Partitioner {
-  override def numPartitions: Int = n
-  override def getPartition(key: Any): Int =
-    math.min(n - 1L, key.asInstanceOf[Long] / chunk).toInt
 }
 
 /** THE task commit message every lake write ships: the data files the

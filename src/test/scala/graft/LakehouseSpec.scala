@@ -3171,6 +3171,74 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
+  test("cluster shuffles each row once: one range sort's bytes, none when clustered, exact chunks") {
+    // the rewrite's only shuffle is the range sort; the exact chunks are
+    // read as slices of the sorted partitions, not re-shuffled
+    spark.conf.set("spark.sql.catalog.graftlake",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    val t = "graftlake.spec_cluster_once"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING, x DOUBLE)")
+    val n = 40000L
+    for (b <- 0 until 4) // k = id * 7919 mod n: every file spans all of k
+      spark.range(0, n).filter(s"id % 4 = $b")
+        .selectExpr(s"(id * 7919) % $n AS k", "concat('v', id) AS v",
+          "CAST(id AS DOUBLE) / 7 AS x")
+        .coalesce(1).writeTo(t).append()
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          written.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    // LiveListenerBus.waitUntilEmpty is private[spark]; bytecode-public
+    val drain: () => Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get
+        .invoke(sc)
+      val wait = bus.getClass.getMethods.find(m =>
+        m.getName == "waitUntilEmpty" && m.getParameterCount == 1).get
+      () => { wait.invoke(bus, java.lang.Long.valueOf(10000L)); () }
+    }
+    def shuffled(body: => Unit): Long = {
+      drain()
+      written.set(0L)
+      body
+      drain()
+      written.get
+    }
+    def fileRows(): Seq[Long] = spark.table(t).groupBy("_file").count()
+      .collect().map(_.getLong(1)).toSeq.sorted
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val sortOnce = shuffled {
+        spark.table(t).repartitionByRange(6, col("k")).sortWithinPartitions("k")
+          .write.format("noop").mode("overwrite").save()
+      }
+      assert(sortOnce > 0L)
+      val cluster = shuffled {
+        spark.sql(s"CALL graftlake.system.cluster('spec_cluster_once', 'k', 6)")
+          .collect()
+      }
+      assert(cluster <= sortOnce * 1.1,
+        s"cluster shuffled $cluster B against $sortOnce B for one range sort")
+      // ceil(40000 / 6) = 6667: five full chunks and a 6665-row tail
+      assert(fileRows() == Seq(6665L, 6667L, 6667L, 6667L, 6667L, 6667L))
+      val again = shuffled {
+        spark.sql(s"CALL graftlake.system.cluster('spec_cluster_once', 'k', 6)")
+          .collect()
+      }
+      assert(again == 0L,
+        s"re-clustering a clustered table shuffled $again B; its sort is elided")
+      assert(fileRows() == Seq(6665L, 6667L, 6667L, 6667L, 6667L, 6667L))
+      assert(spark.table(t).agg(count(lit(1)), sum("k"), countDistinct("v"))
+        .head().toSeq == Seq(n, n * (n - 1) / 2, n),
+        "clustering must not change the relation")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
   test("CHECK constraints: declared, persisted, enforced on every write path") {
     // SUPPORT_TABLE_CONSTRAINT: the engine owns declaration (CREATE /
     // ALTER ADD/DROP CONSTRAINT — CHECK only; PK/UNIQUE/FK are refused

@@ -467,6 +467,26 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(joined("merge").contains("SortMergeJoin"))
   }
 
+  test("PPS sample and equi-depth histogram plan no single-partition window or exchange") {
+    // their global running sum and row index come from GlobalOrder's
+    // range sort + count job, not an unpartitioned window
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    for (name <- Seq("curation_pps_sample", "agg_histogram_equidepth")) {
+      val df = run(name)
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(collect(p) {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
+      }.isEmpty, s"$name plans an unpartitioned window:\n$p")
+      assert(collect(p) {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning == SinglePartition => e
+      }.isEmpty, s"$name plans a SinglePartition exchange:\n$p")
+    }
+  }
+
   test("range-partitioned sort write yields disjoint, ordered files") {
     // the global-sort write pattern: repartitionByRange samples the key to
     // build range bounds, sortWithinPartitions orders inside each file —

@@ -948,4 +948,63 @@ object PropertySpec extends Properties("graft.kernels") {
       vs.forall(v => GraftLakeStats.mayMatch(f,
         Seq(eqPred("c", v.toLong, LongType)), Map("c" -> 0)))
     }
+
+  /** A GlobalOrder case: rows `(u, k, w)` — `u` unique (the tiebreak),
+    * `k` a sort key with duplicates and nulls, `w` a weight that is null,
+    * zero, small or large — plus shuffle partitions (more than rows or
+    * distinct keys leaves range partitions empty) and a chunk count. */
+  private val globalOrderCase: Gen[(List[(Option[Long], Option[Long])],
+      Int, Int)] = for {
+    n <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.choose(1, 5),
+      4 -> Gen.choose(6, 60))
+    rows <- Gen.listOfN(n, Gen.zip(
+      Gen.option(Gen.choose(0L, 6L)),
+      Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(0L)),
+        3 -> Gen.choose(1L, 100L).map(Some(_)),
+        1 -> Gen.choose(1L << 50, 1L << 52).map(Some(_)))))
+    parts <- Gen.choose(1, 8)
+    chunks <- Gen.choose(1, 9)
+  } yield (rows, parts, chunks)
+
+  property("GlobalOrder: index/prefix equal the window, chunks cut exactly") =
+    Prop.forAllNoShrink(globalOrderCase) { case (rows, parts, n) =>
+      import Prop.propBoolean
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions._
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      val spark = Session.local(4)
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.zipWithIndex.map {
+          case ((k, w), u) => Row(u.toLong, k.orNull, w.orNull) }, 3),
+        StructType(Seq(StructField("u", LongType, nullable = false),
+          StructField("k", LongType), StructField("w", LongType))))
+      Session.withConfs(spark, "spark.sql.shuffle.partitions" -> s"$parts",
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        val order = Seq(col("k"), col("u"))
+        val go = GlobalOrder(df, order, Some("w"))
+        val got = go.indexed("i", "b").select("u", "i", "b").collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+        val byOrder = Window.orderBy(order: _*)
+        val want = df.select(col("u"),
+            (row_number().over(byOrder) - 1).cast(LongType),
+            coalesce(sum("w").over(byOrder.rowsBetween(
+              Window.unboundedPreceding, -1)), lit(0L)))
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+        val sorted = want.sortBy(_._2._1).map(_._1).toSeq
+        val totals = df.agg(count(lit(1)), coalesce(sum("w"), lit(0L))).head()
+        // chunk j holds global rows [j*c, (j+1)*c), c = ceil(live / n)
+        val c = math.max(1L, (rows.length + n - 1L) / n)
+        val cut = go.chunks(n)
+          .mapPartitionsWithIndex((j, it) => it.map(r => (j, r.getLong(0))))
+          .collect().toSeq
+        (got == want.toMap) :| s"index/prefix $got vs $want" &&
+        (go.total == totals.getLong(0) &&
+          go.weightTotal == totals.getLong(1)) :|
+          s"totals ${go.total}/${go.weightTotal} vs $totals" &&
+        (cut.map(_._2) == sorted) :| s"chunk order $cut vs $sorted" &&
+        cut.zipWithIndex.forall { case ((j, _), i) =>
+          j == math.min(n - 1L, i / c) } :| s"chunk sizes $cut, c = $c"
+      }
+    }
 }
