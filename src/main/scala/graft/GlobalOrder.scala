@@ -5,7 +5,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  GenericInternalRow, JoinedRow, UnsafeProjection}
+  GenericInternalRow, JoinedRow, RowOrdering, UnsafeProjection}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.{struct, to_json}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -21,11 +24,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *  - [[chunks]]: `n` exact chunks of `c = ceil(total / n)` rows (row `i`
   *    in chunk `min(n - 1, i / c)`); chunk `j` reads only the slices of
   *    the sorted partitions that rows `[j·c, (j+1)·c)` span.
-  * The count job and the pass read one shuffle output. Ties are broken by
-  * the range shuffle: a reproducible index needs a unique tiebreak key. */
-final class GlobalOrder private (spark: SparkSession, rows: RDD[InternalRow],
-    schema: StructType, counts: Array[Long], sums: Array[Long],
-    weight: Int) {
+  * The count job and the pass read one shuffle output. [[indexed]] reads
+  * each sorted partition once, so tied rows get some order among
+  * themselves (a reproducible index needs a unique tiebreak key). A
+  * partition is read once per chunk it meets, so [[chunks]] needs every
+  * read to yield the same rows in the same order: build it through
+  * [[GlobalOrder.forChunks]], or over an order that is already total. */
+final class GlobalOrder private (spark: SparkSession,
+    private[graft] val sorted: DataFrame, rows: RDD[InternalRow],
+    counts: Array[Long], sums: Array[Long], weight: Int) {
 
   val total: Long = counts.sum
   /** Sum of the non-null weights (0 without a weight column). */
@@ -35,7 +42,7 @@ final class GlobalOrder private (spark: SparkSession, rows: RDD[InternalRow],
     * non-null weights of all earlier rows), both non-null BIGINT. */
   def indexed(index: String, before: String = "_before"): DataFrame = {
     val extra = if (weight >= 0) Seq(index, before) else Seq(index)
-    val out = StructType(schema.fields ++
+    val out = StructType(sorted.schema.fields ++
       extra.map(StructField(_, LongType, nullable = false)))
     val types = out.fields.map(_.dataType)
     val (offsets, prefixes, w) = (exclusive(counts), exclusive(sums), weight)
@@ -74,13 +81,44 @@ final class GlobalOrder private (spark: SparkSession, rows: RDD[InternalRow],
   private def exclusive(xs: Array[Long]): Array[Long] = xs.scanLeft(0L)(_ + _)
 }
 
-object GlobalOrder {
+object GlobalOrder extends AdaptiveSparkPlanHelper {
 
   /** Range-sort `df` by `order`; count each sorted partition and sum its
     * `weight` (a BIGINT column of `df`) in one job. */
   def apply(df: DataFrame, order: Seq[Column],
-      weight: Option[String] = None): GlobalOrder = {
-    val sorted = df.orderBy(order: _*)
+      weight: Option[String] = None): GlobalOrder =
+    counted(df.orderBy(order: _*), weight)
+
+  /** The `output` columns of `df` sorted by `order`, for [[chunks]] of up
+    * to `n` chunks. Where the planner elides the sort (a lake scan that
+    * already arrives in `order`), the scan's own row order is fixed.
+    * Otherwise ties are broken by every `output` column, so rows tied
+    * under the whole order hold the same values (up to the sign of a
+    * floating zero, which SQL comparison ignores too) and every read of a
+    * sorted partition yields one sequence, whatever order the shuffle
+    * delivers its blocks in. Columns with no SQL order (maps, variants)
+    * are compared as JSON. That sort cuts `4n` range partitions: each
+    * chunk boundary re-reads at most one partition, about a quarter of a
+    * chunk, where a few large partitions would each be re-read by every
+    * chunk they meet. */
+  def forChunks(df: DataFrame, order: Seq[Column], output: Seq[String],
+      n: Int): GlobalOrder = {
+    val cols = output.map(df.col)
+    val plain = df.orderBy(order: _*).select(cols: _*)
+    if (find(plain.queryExecution.executedPlan)(_.isInstanceOf[Exchange])
+        .isEmpty) counted(plain, None)
+    else {
+      val total = order ++ output.map { c =>
+        if (RowOrdering.isOrderable(df.schema(c).dataType)) df.col(c)
+        else to_json(struct(df.col(c)))
+      }
+      counted(df.repartitionByRange(4 * n, total: _*)
+        .sortWithinPartitions(total: _*).select(cols: _*), None)
+    }
+  }
+
+  private def counted(sorted: DataFrame, weight: Option[String])
+      : GlobalOrder = {
     val w = weight.fold(-1) { c =>
       val i = sorted.schema.fieldIndex(c)
       require(sorted.schema(i).dataType == LongType, s"weight $c not BIGINT")
@@ -95,7 +133,7 @@ object GlobalOrder {
       }
       Iterator((n, s))
     }.collect()
-    new GlobalOrder(df.sparkSession, rows, sorted.schema, stats.map(_._1),
+    new GlobalOrder(sorted.sparkSession, sorted, rows, stats.map(_._1),
       stats.map(_._2), w)
   }
 }
@@ -105,7 +143,8 @@ private final case class Slices(index: Int,
     slices: Array[(Partition, Long, Long)]) extends Partition
 
 /** Reads each chunk's slices of the sorted partitions (a narrow,
-  * `CoalescedRDD`-like dependency). */
+  * `CoalescedRDD`-like dependency). A partition that runs out before its
+  * slice ends fails the task: the counts and the read disagree. */
 private final class SliceRDD(prev: RDD[InternalRow], parts: Array[Slices])
     extends RDD[InternalRow](prev.context, Seq(new NarrowDependency(prev) {
       override def getParents(j: Int): Seq[Int] =
@@ -119,7 +158,9 @@ private final class SliceRDD(prev: RDD[InternalRow], parts: Array[Slices])
       var (skip, left) = (from, until - from)
       while (skip > 0 && it.hasNext) { it.next(); skip -= 1 }
       new Iterator[InternalRow] {
-        override def hasNext: Boolean = left > 0 && it.hasNext
+        override def hasNext: Boolean = left > 0 && (it.hasNext ||
+          (throw new IllegalStateException(s"sorted partition ${p.index} " +
+            s"ended $left rows short of its counted slice [$from, $until)")))
         override def next(): InternalRow = { left -= 1; it.next() }
       }
     }

@@ -10,6 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * based LSH signatures, streaming, approx sketches — which get a weaker
   * rows-only check per the driver contract).
   *
+  * One exception to lazy: a query built on [[GlobalOrder]]
+  * (`curation_pps_sample`) runs its sort and count jobs when `fn` is
+  * called, and its plan carries the totals as literals.
+  *
   * Determinism rules (SURVEY.md §7.4): no current_date(); every double
   * aggregation routes through DECIMAL (exact, order-independent) and is cast
   * back to DOUBLE at the end so Spark and DuckDB agree bitwise; every LIMIT

@@ -446,7 +446,9 @@ object Curation {
     * The running sum and the total come from [[graft.GlobalOrder]]: a
     * range sort on doc_id, one job for each sorted partition's weight
     * sum, then a narrow pass adding each document's prefix — no
-    * single-partition window.
+    * single-partition window. The sort and the count run when this is
+    * called; the weight total enters the plan as a literal, and a table
+    * with no weight (empty, or all zero) samples nothing.
     */
   def ppsSample(spark: SparkSession, sfDir: String): DataFrame = {
     val K = 50
@@ -454,8 +456,9 @@ object Curation {
     val order = GlobalOrder(docs, Seq(col("doc_id")), Some("n_chars"))
     val total = order.weightTotal
     order.indexed("_i", "cum_before")
-      .filter(expr(s"(cum_before * $K) div $total")
-        < expr(s"((cum_before + n_chars) * $K) div $total"))
+      .filter(if (total == 0L) lit(false)
+        else expr(s"(cum_before * $K) div $total")
+          < expr(s"((cum_before + n_chars) * $K) div $total"))
       .select(col("doc_id"), col("n_chars"))
       .orderBy("doc_id")
   }

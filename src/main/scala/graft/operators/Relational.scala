@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GlobalOrder, Query, Session}
+import graft.{Query, Session}
 import graft.functions.Exact._
 import graft.sources.Tables
 
@@ -1365,24 +1365,16 @@ object Relational {
 
   /** Equi-DEPTH histogram — [[histogram]]'s sibling and the shape range
     * partitioners and optimizer column stats actually need: 10 buckets
-    * holding equal ROW counts, each reporting its value span. The bucket
-    * is SQL `ntile(10)` over (o_totalprice, o_orderkey), computed from
-    * each row's global index `i` and the row count `n` that
-    * [[graft.GlobalOrder]] gives (a range sort plus one count job, no
-    * single-partition window): the first `n % 10` buckets hold
-    * `n / 10 + 1` rows, the rest `n / 10`. Then a tiny aggregate. Bounds
-    * are min/max of exact doubles, counts exact — nothing to round.
+    * holding equal ROW counts, each reporting its value span. One ntile
+    * window (a single global sort at profile time — acceptable for a
+    * stats job, never for a data path) then a tiny aggregate. Bounds are
+    * min/max of exact doubles, counts exact — nothing to round.
     */
   def equiDepthHistogram(spark: SparkSession, sfDir: String): DataFrame = {
-    val order = GlobalOrder(Tables(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice")),
-      Seq(col("o_totalprice"), col("o_orderkey")))
-    val (q, r) = (order.total / 10, order.total % 10)
-    val padded = r * (q + 1) // rows in the n % 10 larger buckets
-    order.indexed("_i")
-      .withColumn("bucket", expr(s"CASE WHEN _i < $padded " +
-        s"THEN _i div ${q + 1} ELSE (_i - $padded) div ${math.max(q, 1L)} " +
-        s"+ $r END + 1"))
+    val byPrice = Window.orderBy(col("o_totalprice"), col("o_orderkey"))
+    Tables(spark, sfDir, "orders")
+      .select(col("o_orderkey"), col("o_totalprice"))
+      .withColumn("bucket", ntile(10).over(byPrice).cast(LongType))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"),
         min(col("o_totalprice")).as("lo"),

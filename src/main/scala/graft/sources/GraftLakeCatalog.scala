@@ -3173,10 +3173,11 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     * DV filtering come with the scan), range-sorted by the cluster key
     * and cut into ceil(live/target)-row files by [[graft.GlobalOrder]]:
     * one count job over the sorted partitions, then each write task
-    * reads the slices of the sorted partitions its chunk spans. Each row
-    * is shuffled once by the sort, and not at all when the scan's
-    * reported order elides it (re-clustering a clustered table); the
-    * driver never holds a row. This is Iceberg's rewrite_data_files
+    * reads the slices of the sorted partitions its chunk spans (ties on
+    * the key are broken by every written column, so each re-read of a
+    * partition yields the same rows). Each row is shuffled once by the
+    * sort, and not at all when the scan's reported order elides it
+    * (re-clustering a clustered table); the driver never holds a row. This is Iceberg's rewrite_data_files
     * shape: an optimistic Spark action whose commit re-validates the
     * pinned version; a concurrent commit aborts it loudly and the temps
     * are unlinked. A z-order rank code is a column value's global index
@@ -3210,7 +3211,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
     val df0 = spark.read.option("graft.snapshot-version", v0.toString)
       .table(qual)
     val sorted = strategy match {
-      case "sort" => graft.GlobalOrder(df0, colNames.map(F.col))
+      case "sort" => graft.GlobalOrder.forChunks(df0,
+        colNames.map(F.col), fw.names, targetFiles)
       case "zorder" =>
         require(colNames.length >= 2 && colNames.length <= 4,
           s"zorder interleaves 2-4 columns, got ${colNames.length}")
@@ -3238,7 +3240,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
               b * k + c)
           }
         }.reduce(_.bitwiseOR(_))
-        graft.GlobalOrder(g.select(fw.names.map(F.col): _*), Seq(zkey))
+        graft.GlobalOrder.forChunks(g.withColumn("_zkey", zkey),
+          Seq(F.col("_zkey")), fw.names, targetFiles)
     }
     val nChunks =
       math.min(targetFiles.toLong, math.max(1L, sorted.total)).toInt

@@ -187,4 +187,18 @@ class CurationSpec extends SparkTestBase {
         s"$src: selection must be longest-first")
     }
   }
+
+  test("PPS sample of a table with no weight samples nothing") {
+    // the weight total is a plan literal: 0 must not reach `div`
+    val docs = spark.read.parquet(s"$Sf/documents.parquet")
+    for ((name, rows) <- Seq("empty" -> docs.limit(0),
+        "zero" -> docs.withColumn("n_chars", col("n_chars") * 0))) {
+      val dir = java.nio.file.Files.createTempDirectory(s"pps_$name").toFile
+      try {
+        rows.write.parquet(s"$dir/documents.parquet")
+        assert(graft.operators.Curation.ppsSample(spark, dir.toString)
+          .count() == 0L, name)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
 }

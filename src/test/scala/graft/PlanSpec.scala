@@ -467,24 +467,42 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(joined("merge").contains("SortMergeJoin"))
   }
 
-  test("PPS sample and equi-depth histogram plan no single-partition window or exchange") {
-    // their global running sum and row index come from GlobalOrder's
-    // range sort + count job, not an unpartitioned window
+  test("PPS sample plans no single-partition window or exchange") {
+    // its global running sum comes from GlobalOrder's range sort + count
+    // job, not an unpartitioned window
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
-    for (name <- Seq("curation_pps_sample", "agg_histogram_equidepth")) {
-      val df = run(name)
-      df.collect()
-      val p = df.queryExecution.executedPlan
-      assert(collect(p) {
-        case w: WindowExec if w.partitionSpec.isEmpty => w
-      }.isEmpty, s"$name plans an unpartitioned window:\n$p")
-      assert(collect(p) {
-        case e: ShuffleExchangeExec
-          if e.outputPartitioning == SinglePartition => e
-      }.isEmpty, s"$name plans a SinglePartition exchange:\n$p")
+    val df = run("curation_pps_sample")
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    assert(collect(p) {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }.isEmpty, s"curation_pps_sample plans an unpartitioned window:\n$p")
+    assert(collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+    }.isEmpty, s"curation_pps_sample plans a SinglePartition exchange:\n$p")
+  }
+
+  test("GlobalOrder.forChunks sorts by every written column when it shuffles") {
+    // a chunk re-reads each sorted partition it meets; only a total order
+    // makes those reads agree when tied rows arrive in another order
+    import org.apache.spark.sql.execution.SortExec
+    val df = spark.range(0, 200).selectExpr("id % 3 AS k",
+      "map('m', id) AS m", "CAST(id AS STRING) AS v")
+    val go = GlobalOrder.forChunks(df, Seq(col("k")), Seq("v", "m"), 3)
+    assert(go.sorted.columns.toSeq == Seq("v", "m"))
+    val sorts = collect(go.sorted.queryExecution.executedPlan) {
+      case s: SortExec => s.sortOrder.map(_.child.sql)
     }
+    assert(sorts.length == 1 && sorts.head.length == 3, s"$sorts")
+    assert(sorts.head(1) == "v" && sorts.head(2).contains("StructsToJson"),
+      s"ties must be broken by v, then m as JSON: $sorts")
+    val rows = go.chunks(3).mapPartitionsWithIndex((j, it) =>
+      it.map(r => (j, r.getUTF8String(0).toString))).collect().toSeq
+    assert(rows.map(_._2).sorted == (0 until 200).map(_.toString).sorted)
+    assert(rows.groupBy(_._1).view.mapValues(_.length).toMap ==
+      Map(0 -> 67, 1 -> 67, 2 -> 66))
   }
 
   test("range-partitioned sort write yields disjoint, ordered files") {

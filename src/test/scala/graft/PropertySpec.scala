@@ -998,7 +998,17 @@ object PropertySpec extends Properties("graft.kernels") {
         val cut = go.chunks(n)
           .mapPartitionsWithIndex((j, it) => it.map(r => (j, r.getLong(0))))
           .collect().toSeq
+        // forChunks on the key alone (duplicates, nulls): each row once,
+        // in key order, in the same exact chunks
+        val byKey = GlobalOrder.forChunks(df, Seq(col("k")), Seq("u", "k"), n)
+          .chunks(n).mapPartitionsWithIndex((j, it) => it.map(r =>
+            (j, r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))))
+          .collect().toSeq
+        val keys = rows.map(_._1).sortBy(_.fold(Long.MinValue)(identity))
         (got == want.toMap) :| s"index/prefix $got vs $want" &&
+        (byKey.map(_._2).sorted == rows.indices.map(_.toLong) &&
+          byKey.map(_._3) == keys &&
+          byKey.map(_._1) == cut.map(_._1)) :| s"forChunks $byKey" &&
         (go.total == totals.getLong(0) &&
           go.weightTotal == totals.getLong(1)) :|
           s"totals ${go.total}/${go.weightTotal} vs $totals" &&
