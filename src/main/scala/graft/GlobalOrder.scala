@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   GenericInternalRow, JoinedRow, RowOrdering, UnsafeProjection}
@@ -30,9 +30,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * partition is read once per chunk it meets, so [[chunks]] needs every
   * read to yield the same rows in the same order: build it through
   * [[GlobalOrder.forChunks]], or over an order that is already total. */
-final class GlobalOrder private (spark: SparkSession,
-    private[graft] val sorted: DataFrame, rows: RDD[InternalRow],
-    counts: Array[Long], sums: Array[Long], weight: Int) {
+final class GlobalOrder private (private[graft] val sorted: DataFrame,
+    rows: RDD[InternalRow], counts: Array[Long], sums: Array[Long],
+    weight: Int) {
 
   val total: Long = counts.sum
   /** Sum of the non-null weights (0 without a weight column). */
@@ -46,7 +46,7 @@ final class GlobalOrder private (spark: SparkSession,
       extra.map(StructField(_, LongType, nullable = false)))
     val types = out.fields.map(_.dataType)
     val (offsets, prefixes, w) = (exclusive(counts), exclusive(sums), weight)
-    ColumnBridge.frame(spark, rows.mapPartitionsWithIndex { (p, it) =>
+    val withIndex = rows.mapPartitionsWithIndex[InternalRow] { (p, it) =>
       val proj = UnsafeProjection.create(types)
       val (tail, joined) = (new GenericInternalRow(extra.length), new JoinedRow)
       var (i, s) = (offsets(p), prefixes(p))
@@ -59,7 +59,8 @@ final class GlobalOrder private (spark: SparkSession,
         }
         proj(joined(r, tail))
       }
-    }, out)
+    }
+    ColumnBridge.frame(sorted.sparkSession, withIndex, out)
   }
 
   /** The sorted rows cut into `n` exact chunks; a chunk past the last row
@@ -133,8 +134,7 @@ object GlobalOrder extends AdaptiveSparkPlanHelper {
       }
       Iterator((n, s))
     }.collect()
-    new GlobalOrder(sorted.sparkSession, sorted, rows, stats.map(_._1),
-      stats.map(_._2), w)
+    new GlobalOrder(sorted, rows, stats.map(_._1), stats.map(_._2), w)
   }
 }
 
