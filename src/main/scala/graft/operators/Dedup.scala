@@ -108,7 +108,7 @@ object Dedup {
   /** (i, j, c) intersection counts over every ordered doc pair sharing
     * a shingle — THE exact all-pairs leg [[ngramJaccard]],
     * [[ngramContainment]] and [[simhashRecall]] all gate through (one
-    * definition, review r20b — three copies had grown). Single
+    * definition where three copies had grown). Single
     * shuffle-join on the shingle key + map-side-combined count: the
     * intersection sizes come straight off the self-join, no separate
     * candidate materialization (that 3-way shape only pays off when a
@@ -359,8 +359,8 @@ object Dedup {
       .orderBy("i", "j")
   }
 
-  /** The SimHash detector GATED by an exact leg (VERDICT r19 task 3,
-    * the r18 sketch-gating device): WHICH pairs hamming ≤ 3 flags is a
+  /** The SimHash detector GATED by an exact leg (the sketch-gating
+    * device): WHICH pairs hamming ≤ 3 flags is a
     * function of xxhash64, so no cross-engine oracle can name the pair
     * list itself — instead the registered query emits the EXACT
     * strong-pair leg (word-3-shingle Jaccard ≥ 0.9, row-for-row
@@ -382,7 +382,7 @@ object Dedup {
       .select(col("i"), col("j"), lit(1L).as("d"))
     // the strong-pair ⋈ detector relation feeds BOTH the recall
     // aggregate and the output rows — checkpoint it or the dominant
-    // shingle self-join and the whole detector run twice (review r20)
+    // shingle self-join and the whole detector run twice
     val joined = strong.join(detected, Seq("i", "j"), "left")
       .localCheckpoint(true)
     val recall = joined.agg(
@@ -721,9 +721,10 @@ object Dedup {
     // each round MUST cut lineage (localCheckpoint, not cache): round N's
     // logical plan references round N−1 twice, so without truncation the
     // plan doubles per round and Catalyst ANALYSIS time explodes
-    // exponentially even though execution hits the cache (measured: round 7
-    // took 111 s where rounds 1-5 took ~1 s). At 100 TB the same call
-    // becomes a reliable checkpoint to the cluster store.
+    // exponentially even though execution hits the cache (measured:
+    // propagation round 7 took 111 s where rounds 1-5 took ~1 s). At
+    // 100 TB the same call becomes a reliable checkpoint to the cluster
+    // store.
     var labels = nodes.select(col("id"), col("id").as("comp"))
       .localCheckpoint(true)
     var changed = 1L
@@ -974,7 +975,7 @@ object Dedup {
     * accumulated corpus.
     */
   def streamMinhashDedup(spark: SparkSession, sfDir: String): DataFrame =
-    // 4 waves per trigger (r21, the lever the contract comment names):
+    // 4 waves per trigger (the lever the contract comment names):
     // the arrival-ordered intra-batch self-join makes the verified
     // output independent of batch boundaries, so ONE trigger admits the
     // whole staged arrival sequence and the per-trigger fixed cost
@@ -1003,14 +1004,11 @@ object Dedup {
         val part = tmp.listFiles().filter(_.getName.startsWith("part-")).head
         val dst = new java.io.File(d, s"chunk-$g.parquet")
         java.nio.file.Files.move(part.toPath, dst.toPath)
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp.toPath).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sources.GraftParquetIO.deleteRecursively(tmp)
         // the ARRIVAL ORDER the admission stream sequences on — a
         // filesystem that cannot stamp distinct mtimes must fail the
         // staging loudly, not silently collapse waves into ties that
-        // the strict '<' intra-batch join would skip (review r20)
+        // the strict '<' intra-batch join would skip
         require(dst.setLastModified(base + g * 1000L),
           s"cannot stamp arrival mtime on $dst")
       }
@@ -1020,19 +1018,9 @@ object Dedup {
       sfDir: String, filesPerTrigger: Int): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val chunks = stagedAdmissionChunks(spark, sfDir)
-    // run-unique scratch (index + candidate results), reaped on JVM exit —
-    // same non-shared-path discipline as sim_index_stream_update's index
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_pid" + ProcessHandle.current().pid()
-    val scratch = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_dedup_stream_$tag")
-    def reap(): Unit = if (scratch.exists()) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(scratch.toPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    reap()
-    if (streamReapArmed.add(scratch.getAbsolutePath)) sys.addShutdownHook(reap())
+    // run-unique scratch (index + candidate results), reaped on JVM exit
+    val scratch =
+      graft.sources.GraftParquetIO.scratchDir("graft_dedup_stream", sfDir)
     val idx = new java.io.File(scratch, "band_index")
     val found = new java.io.File(scratch, "candidates")
     val schema = spark.read.parquet(chunks.getAbsolutePath).schema
@@ -1117,9 +1105,6 @@ object Dedup {
       .select(col("j").as("doc_id"), col("i").as("dup_of"), col("jaccard"))
       .orderBy("doc_id", "dup_of")
   }
-
-  private val streamReapArmed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private val streamMinhashDedupOracle =
     """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),

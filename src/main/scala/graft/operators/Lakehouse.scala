@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.{Query, Session}
 import graft.functions.Exact._
-import graft.sources.Tables
+import graft.sources.{GraftParquetIO, Tables}
 
 /** Lakehouse table semantics over RAW parquet + a manifest — the two
   * capabilities a table format adds that plain directory scans cannot
@@ -1192,12 +1192,8 @@ object Lakehouse {
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
       tblProps("graft.mode" -> "merge-on-read"))
-    val tmp = sys.props("java.io.tmpdir")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_pid" + ProcessHandle.current().pid()
-    val chk = new File(tmp, s"graft_scdf_chk_$tag")
-    val sink = new File(tmp, s"graft_scdf_sink_$tag")
-    Seq(chk, sink).foreach(graft.sources.GraftParquetIO.deleteRecursively)
+    val chk = GraftParquetIO.scratchDir("graft_scdf_chk", sfDir)
+    val sink = GraftParquetIO.scratchDir("graft_scdf_sink", sfDir)
     def drain(): Unit = Session.withLeanDrain(spark, chk.getAbsolutePath) {
       val q = spark.readStream
         .option("graft.stream.startingVersion", "0")
@@ -1306,12 +1302,8 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (event_id BIGINT, event_type STRING, " +
       "user_id BIGINT, value DOUBLE)")
-    val tmp = sys.props("java.io.tmpdir")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_pid" + ProcessHandle.current().pid()
-    val land = new File(tmp, s"graft_ssink_land_$tag")
-    val chk = new File(tmp, s"graft_ssink_chk_$tag")
-    Seq(land, chk).foreach(graft.sources.GraftParquetIO.deleteRecursively)
+    val land = GraftParquetIO.scratchDir("graft_ssink_land", sfDir)
+    val chk = GraftParquetIO.scratchDir("graft_ssink_chk", sfDir)
     val base = Tables(spark, sfDir, "events")
       .select(col("event_id"), col("event_type"), col("user_id"),
         col("value"))
@@ -1364,12 +1356,8 @@ object Lakehouse {
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     base.filter(col("o_orderkey") % 3 =!= 0).writeTo(t).append() // prev
-    val tmp = sys.props("java.io.tmpdir")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_pid" + ProcessHandle.current().pid()
-    val land = new File(tmp, s"graft_eqd_land_$tag")
-    val chk = new File(tmp, s"graft_eqd_chk_$tag")
-    Seq(land, chk).foreach(graft.sources.GraftParquetIO.deleteRecursively)
+    val land = GraftParquetIO.scratchDir("graft_eqd_land", sfDir)
+    val chk = GraftParquetIO.scratchDir("graft_eqd_chk", sfDir)
     // the upsert batch arrives as 3 landing files → 3 epochs, each
     // committing (data files + equality-delete keys file) atomically
     base.filter(col("o_orderkey") % 2 === 0)
@@ -1414,12 +1402,8 @@ object Lakehouse {
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftlake", "orders_eqdcf").get
     val loadedV = table.currentVersion
-    val tmp = sys.props("java.io.tmpdir")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_pid" + ProcessHandle.current().pid()
-    val land = new File(tmp, s"graft_eqdcf_land_$tag")
-    val chk = new File(tmp, s"graft_eqdcf_chk_$tag")
-    Seq(land, chk).foreach(graft.sources.GraftParquetIO.deleteRecursively)
+    val land = GraftParquetIO.scratchDir("graft_eqdcf_land", sfDir)
+    val chk = GraftParquetIO.scratchDir("graft_eqdcf_chk", sfDir)
     base.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
@@ -1594,11 +1578,7 @@ object Lakehouse {
     * schema-changing reload pattern (recompute a derivative table from
     * scratch, swap atomically) every warehouse pipeline runs daily. */
   def lakeCtasReplace(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_pid" + ProcessHandle.current().pid()
-    val wh = new File(tmp, s"graft_ctas_wh_$tag")
-    graft.sources.GraftParquetIO.deleteRecursively(wh)
+    val wh = GraftParquetIO.scratchDir("graft_ctas_wh", sfDir)
     spark.conf.set("spark.sql.catalog.gctas",
       classOf[graft.sources.GraftLakeCatalog].getName)
     spark.conf.set("spark.sql.catalog.gctas.warehouse", wh.getAbsolutePath)
@@ -1638,11 +1618,7 @@ object Lakehouse {
     * commit concurrently, and appends/compatible deltas must never need
     * a coordinator beyond the log's CAS. */
   def lakeConcurrentWriters(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir")
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_pid" + ProcessHandle.current().pid()
-    val wh = new File(tmp, s"graft_cw_wh_$tag")
-    graft.sources.GraftParquetIO.deleteRecursively(wh)
+    val wh = GraftParquetIO.scratchDir("graft_cw_wh", sfDir)
     Seq("gcw", "gcw2").foreach { c =>
       spark.conf.set(s"spark.sql.catalog.$c",
         classOf[graft.sources.GraftLakeCatalog].getName)

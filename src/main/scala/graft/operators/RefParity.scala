@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.io.{File, PrintWriter}
-import java.nio.file.Files
 import java.sql.Date
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -413,33 +412,13 @@ object RefParity {
     val bytes = in.inputFiles
       .map(f => new java.io.File(java.net.URI.create(f)).length()).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / CompactTargetBytes).toInt)
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     // per-process output path: the rewrite IS the measured workload so it
     // runs every call, but a concurrent sbt-test + Verify pair at the same
     // sfDir must not overwrite each other's in-flight output
-    val out = s"${sys.props("java.io.tmpdir")}/graft_compacted_${tag}_" +
-      ProcessHandle.current().pid()
-    registerTmpCleanup(out)
+    val out = graft.sources.GraftParquetIO
+      .scratchDir("graft_compacted", sfDir).getAbsolutePath
     in.repartition(nOut).write.mode("overwrite").parquet(out)
     (out, nOut)
-  }
-
-  // per-PID compaction outputs would otherwise accumulate in tmpdir across
-  // process runs; one JVM shutdown hook reaps everything this process made
-  private val tmpCleanupPaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val tmpCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpCleanupPaths.forEach { p =>
-        val root = new java.io.File(p).toPath
-        if (Files.exists(root)) {
-          Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.deleteIfExists(f))
-        }
-      }))
-  private def registerTmpCleanup(path: String): Unit = {
-    tmpCleanupHook
-    tmpCleanupPaths.add(path)
   }
 
   /** Small-file compaction — the lake-maintenance op no 100 TB deployment

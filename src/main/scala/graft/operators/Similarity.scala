@@ -31,12 +31,6 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  /** Index dirs with a reap shutdown hook already armed (one hook per
-    * unique path; [[indexStreamUpdate]] can run for several sfDirs in
-    * one JVM). */
-  private val indexReapArmed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private val Dim = 64
   // 8 planes ⇒ 256 buckets: sized to the 500-vector harness corpus so the
   // probe's multiprobe neighborhood holds ~10× the k it must return. At
@@ -78,9 +72,9 @@ object Similarity {
     * (multiprobe). Fully deterministic (seeded literal hyperplanes,
     * left-to-right dot-product fold identical to DuckDB's, 6dp rounding
     * before the ordering), so the same bucket-prune logic is a DuckDB
-    * oracle with the plane literals embedded in the SQL (VERDICT r18
-    * task 4 — the same device `sim_ann_lsh_multi` has used since it
-    * landed); SimilaritySpec additionally measures recall against
+    * oracle with the plane literals embedded in the SQL (the same
+    * device `sim_ann_lsh_multi` has used since it landed);
+    * SimilaritySpec additionally measures recall against
     * `sim_topk_bruteforce`.
     */
   def annLsh(spark: SparkSession, sfDir: String): DataFrame = {
@@ -632,24 +626,9 @@ object Similarity {
         .repartitionByRange(4, col("vec_id"))
         .write.mode("overwrite").parquet(d.getAbsolutePath)
     }
-    // the index path is unique per (sfDir, JVM): unlike Staging.stagedDir
-    // (fingerprint-locked, content-addressed) this dir is rebuilt on every
-    // run — a shared fixed path would let two concurrent harness processes
-    // interleave delete/append and read a corrupt or doubled index. The
-    // pid suffix removes the sharing; the shutdown hook reaps it (the
-    // returned DataFrame reads the dir lazily, so in-run deletion is not
-    // an option).
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_pid" + ProcessHandle.current().pid()
-    val idx = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_emb_index_$tag")
-    def reap(): Unit = if (idx.exists()) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(idx.toPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    reap()
-    if (indexReapArmed.add(idx.getAbsolutePath)) sys.addShutdownHook(reap())
+    // unlike Staging.stagedDir (fingerprint-locked, content-addressed)
+    // the index is rebuilt on every run, in this process's own dir
+    val idx = graft.sources.GraftParquetIO.scratchDir("graft_emb_index", sfDir)
     val signature = (0 until MultiPlanes).map(k =>
       when(DotProduct(col("e"), typedLit(multiPlanes(k))) > 0, lit(1L << k))
         .otherwise(lit(0L))).reduce(_ + _)

@@ -1222,90 +1222,190 @@ private[graft] object GraftLakeStats {
       s"incomparable stats values: ${x.getClass} vs ${y.getClass}")
   }
 
-  /** Can any row of `f` possibly satisfy ALL of `predicates`? False only
-    * when provably not: a comparison whose EFFECTIVE min/max range
-    * ([[colView]] — an absent column serves its exists-default, or NULL)
-    * excludes the literal; an IS NULL against a provably null-free
-    * view; an IS NOT NULL against an all-null one. Anything unparseable
-    * is conservatively a match. */
+  // ---- the file verdict ----------------------------------------------
+  // One walker answers every stats question about a predicate: the SET
+  // of SQL outcomes some row of a file may give it. A file is skipped
+  // when TRUE is not in the set, and kept whole (the filter needs no
+  // re-check) when the set is exactly {TRUE}; a superset is always
+  // sound, so whatever the stats cannot read yields all three.
+
+  /** Outcome bits: a set of them is an `Int`. */
+  final val True = 1
+  final val False = 2
+  final val Unknown = 4
+  private final val All = True | False | Unknown
+
+  /** Kleene AND over outcome sets: TRUE needs both, FALSE either, and
+    * NULL a NULL beside a TRUE or NULL. OR is its De Morgan dual. */
+  private def and(a: Int, b: Int): Int =
+    (a & b & True) | ((a | b) & False) |
+      (if ((a & Unknown) != 0 && (b & (True | Unknown)) != 0 ||
+          (b & Unknown) != 0 && (a & (True | Unknown)) != 0) Unknown
+       else 0)
+  private def not(o: Int): Int =
+    (o & Unknown) | ((o & True) << 1) | ((o & False) >> 1)
+  private def or(a: Int, b: Int): Int = not(and(not(a), not(b)))
+
+  /** Can any row of `f` satisfy ALL of `predicates`? False is proof
+    * (the file is skipped): TRUE is impossible for some predicate. */
   def mayMatch(f: GraftLakeFile, predicates: Seq[Predicate],
       nameToId: Map[String, Int],
       defaults: Map[Int, Any] = Map.empty): Boolean =
-    predicates.forall(p => may(f, p, nameToId, defaults))
+    predicates.forall(p => (outcomes(f, p, nameToId, defaults) & True) != 0)
 
-  private def may(f: GraftLakeFile, p: Predicate,
+  /** Does every row of `f` give `p` the same kept/dropped answer,
+    * provably from stats? Either no row can be TRUE or every row is
+    * TRUE. The scan builder claims a predicate FULLY PUSHED (not
+    * residual) only when every snapshot file decides it: skipping the
+    * all-dropped files and keeping the all-kept ones whole IS the
+    * filter, which is what lets aggregate pushdown answer under a WHERE
+    * clause. */
+  def decides(f: GraftLakeFile, p: Predicate,
       nameToId: Map[String, Int],
-      defaults: Map[Int, Any]): Boolean = p.name() match {
-    case "AND" => p.children().forall {
-      case c: Predicate => may(f, c, nameToId, defaults)
-      case _ => true
+      defaults: Map[Int, Any] = Map.empty): Boolean =
+    verdict(outcomes(f, p, nameToId, defaults)).isDefined
+
+  /** The verdict on a CONJUNCTION (a metadata-only DELETE's WHERE):
+    * Some(true) = every row satisfies all of `ps` (the file may be
+    * dropped whole), Some(false) = no row can (the file is untouched),
+    * None = mixed or unprovable, so the metadata-only path refuses. */
+  def decideConj(f: GraftLakeFile, ps: Array[Predicate],
+      nameToId: Map[String, Int],
+      defaults: Map[Int, Any] = Map.empty): Option[Boolean] =
+    verdict(ps.foldLeft(True)((o, p) =>
+      and(o, outcomes(f, p, nameToId, defaults))))
+
+  /** Some(false): no row is TRUE; Some(true): every row is; else None. */
+  def verdict(o: Int): Option[Boolean] =
+    if ((o & True) == 0) Some(false) else if (o == True) Some(true) else None
+
+  /** The SQL outcomes (bits of [[True]], [[False]], [[Unknown]]) that
+    * some row of `f` may give `p`, from its stats alone. Leaves read the
+    * EFFECTIVE column through [[colView]] (an absent column serves its
+    * exists-default, or NULL); AND, OR and NOT follow Kleene's logic
+    * over the sets, and NOT swaps TRUE and FALSE. */
+  def outcomes(f: GraftLakeFile, p: Predicate, nameToId: Map[String, Int],
+      defaults: Map[Int, Any] = Map.empty): Int = {
+    def kid(e: V2Expr): Int = e match {
+      case c: Predicate => outcomes(f, c, nameToId, defaults)
+      case _ => All
     }
-    case "OR" => p.children().exists {
-      case c: Predicate => may(f, c, nameToId, defaults)
-      case _ => true
-    }
-    case op @ ("=" | "<" | "<=" | ">" | ">=" | "<>") =>
-      comparison(f, op, p.children(), nameToId, defaults)
-    case "IN" =>
+    val kids = p.children()
+    p.name() match {
+      case "AND" => kids.foldLeft(True)((o, c) => and(o, kid(c)))
+      case "OR" => kids.foldLeft(False)((o, c) => or(o, kid(c)))
+      case "NOT" if kids.length == 1 => not(kid(kids(0)))
+      case "ALWAYS_TRUE" => True
+      case "ALWAYS_FALSE" => False
+      case op @ ("=" | "<" | "<=" | ">" | ">=" | "<>") if kids.length == 2 =>
+        compare(f, op, kids(0), kids(1), nameToId, defaults)
       // col IN (l1, l2, ...) = a disjunction of equalities
-      val kids = p.children()
-      if (kids.isEmpty) true
-      else kids.tail.exists { lit =>
-        comparison(f, "=", Array(kids.head, lit), nameToId, defaults)
-      }
-    case "IS_NULL" => colIdOf(p.children(), nameToId) match {
-      case Some(id) => colView(f, id, defaults)._2 match {
-        case Some(0L) => false // provably zero nulls: cannot match
-        case _ => true
-      }
-      case None => nestedKeyOf(p.children(), nameToId)
-        .flatMap(f.nnulls.get) match {
-          case Some(0L) => false // leaf (and struct) never null
-          case _ => true
+      case "IN" if kids.nonEmpty => kids.tail.foldLeft(False)((o, l) =>
+        or(o, compare(f, "=", kids.head, l, nameToId, defaults)))
+      case "IS_NULL" if kids.length == 1 =>
+        column(f, kids(0), nameToId, defaults) { (_, nulls, _) =>
+          (if (nulls.contains(0L)) 0 else True) |
+            (if (nulls.contains(f.numRows)) 0 else False)
         }
-    }
-    case "IS_NOT_NULL" => colIdOf(p.children(), nameToId) match {
-      case Some(id) => colView(f, id, defaults)._2 match {
-        case Some(n) if n == f.numRows => false // every value null
-        case _ => true
-      }
-      case None => nestedKeyOf(p.children(), nameToId)
-        .flatMap(f.nnulls.get) match {
-          case Some(n) if n == f.numRows => false
-          case _ => true
+      case "IS_NOT_NULL" if kids.length == 1 =>
+        column(f, kids(0), nameToId, defaults) { (_, nulls, _) =>
+          (if (nulls.contains(f.numRows)) 0 else True) |
+            (if (nulls.contains(0L)) 0 else False)
         }
-    }
-    case "STARTS_WITH" => p.children() match {
-      case Array(r: NamedReference, l: V2Literal[_])
-          if r.fieldNames().length == 1 =>
-        (nameToId.get(r.fieldNames()(0)), l.value) match {
-          case (Some(id), pre: UTF8String) =>
-            colView(f, id, defaults)._1 match {
-              case None => true
-              case Some((null, null)) => false // all-NULL: no prefix match
-              case Some((mn: UTF8String, mx: UTF8String)) =>
+      case "STARTS_WITH" => kids match {
+        case Array(r: NamedReference, l: V2Literal[_])
+            if r.fieldNames().length == 1 => l.value match {
+          case pre: UTF8String =>
+            column(f, r, nameToId, defaults) { (st, nulls, _) =>
+              nullable(nulls) | (st match {
+                case Some((null, null)) => 0 // all-NULL: no value at all
                 // v has prefix p iff its first |p| bytes equal p, and
                 // byte-truncation is monotone under the byte order the
-                // stats were collected in — so trunc(min) > p or
-                // trunc(max) < p proves no row matches (the Iceberg
+                // stats were collected in: trunc(min) > p or trunc(max)
+                // < p proves no value matches, trunc(min) = p =
+                // trunc(max) that every value does (the Iceberg
                 // startsWith bound evaluation)
-                val pb = pre.getBytes
-                !(cmpPrefix(mn, pb) > 0 || cmpPrefix(mx, pb) < 0)
-              case _ => true
+                case Some((mn: UTF8String, mx: UTF8String)) =>
+                  val pb = pre.getBytes
+                  ranged(cmpPrefix(mn, pb), cmpPrefix(mx, pb), "=")
+                case _ => True | False
+              })
             }
-          case _ => true
+          case _ => All
         }
-      case _ => true
+        case _ => All
+      }
+      case _ => All
     }
-    // WHERE NOT p keeps rows where p IS FALSE (NOT NULL = NULL drops the
-    // row), so a file whose EVERY row provably satisfies p — allTrue,
-    // which requires zero nulls — cannot contribute a row to NOT p
-    case "NOT" => p.children() match {
-      case Array(c: Predicate) => !allTrue(f, c, nameToId, defaults)
-      case _ => true
-    }
-    case _ => true
   }
+
+  /** NULL is possible unless the column provably holds none. */
+  private def nullable(nulls: Option[Long]): Int =
+    if (nulls.contains(0L)) 0 else Unknown
+
+  /** The outcomes non-null values in [min, max] may give `v op lit`,
+    * from `lo` = cmp(min, lit) and `hi` = cmp(max, lit). */
+  private def ranged(lo: Int, hi: Int, op: String): Int = {
+    val (t, f) = op match {
+      case "=" => (lo <= 0 && hi >= 0, lo != 0 || hi != 0)
+      case "<" => (lo < 0, hi >= 0)
+      case "<=" => (lo <= 0, hi > 0)
+      case ">" => (hi > 0, lo <= 0)
+      case ">=" => (hi >= 0, lo < 0)
+      case _ => (lo != 0 || hi != 0, lo <= 0 && hi >= 0) // "<>"
+    }
+    (if (t) True else 0) | (if (f) False else 0)
+  }
+
+  private val Mirror = Map("<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+
+  /** `col op lit`, or the mirrored `lit op col`. `=` additionally
+    * consults the per-file bloom for TRUE: an in-range value the file
+    * provably never wrote is no match (the point lookup min/max cannot
+    * decide). A NULL literal makes every row NULL. */
+  private def compare(f: GraftLakeFile, op: String, a: V2Expr, b: V2Expr,
+      nameToId: Map[String, Int], defaults: Map[Int, Any]): Int = {
+    val (ref, lit, o) = (a, b) match {
+      case (r: NamedReference, l: V2Literal[_]) => (r, l.value, op)
+      case (l: V2Literal[_], r: NamedReference) =>
+        (r, l.value, Mirror.getOrElse(op, op))
+      case _ => return All
+    }
+    column(f, ref, nameToId, defaults) { (st, nulls, id) =>
+      val vals = if (lit == null) 0 else st match {
+        case None => True | False // no stats: no pruning
+        case Some((null, null)) => 0 // every row NULL: no value at all
+        case Some((mn, mx)) =>
+          try ranged(cmp(mn, lit), cmp(mx, lit), o)
+          catch { case _: IllegalArgumentException => True | False }
+      }
+      val out = vals | (if (lit == null) Unknown else nullable(nulls))
+      if ((out & True) != 0 && o == "=" && !id.forall(bloomMay(f, _, lit)))
+        out & ~True
+      else out
+    }
+  }
+
+  /** Resolve a reference and apply `leaf` to its (min/max, null count)
+    * view and its column id. A top-level column reads [[colView]]; a
+    * nested `struct.(...).leaf` reads the nested-leaf stats, which may
+    * drop TRUE but always keep FALSE and NULL possible, so a nested
+    * predicate is never claimed fully pushed. */
+  private def column(f: GraftLakeFile, e: V2Expr, nameToId: Map[String, Int],
+      defaults: Map[Int, Any])(
+      leaf: (Option[(Any, Any)], Option[Long], Option[Int]) => Int): Int =
+    e match {
+      case r: NamedReference => nameToId.get(r.fieldNames()(0)) match {
+        case Some(id) if r.fieldNames().length == 1 =>
+          val (st, nulls) = colView(f, id, defaults)
+          leaf(st, nulls, Some(id))
+        case Some(id) =>
+          val k = (id, r.fieldNames().tail.mkString("."))
+          leaf(f.nstats.get(k), f.nnulls.get(k), None) | False | Unknown
+        case None => All // metadata or unknown column
+      }
+      case _ => All
+    }
 
   /** Compare `u`'s first `pb.length` bytes against `pb`, unsigned
     * byte-wise (UTF8String's own order). A shorter `u` compares by its
@@ -1315,241 +1415,6 @@ private[graft] object GraftLakeStats {
     val t = if (b.length <= pb.length) b
       else java.util.Arrays.copyOf(b, pb.length)
     java.util.Arrays.compareUnsigned(t, pb)
-  }
-
-  /** Is `p` EXACTLY decidable for `f` — does every row of the file
-    * (nulls included) evaluate the predicate to the same kept/dropped
-    * outcome, provably from stats alone? True when the file is either
-    * provably all-dropped (!may) or provably all-kept ([[allTrue]]).
-    * The scan builder claims a predicate as FULLY PUSHED (non-residual)
-    * only when every snapshot file decides it: pruning the all-dropped
-    * files and keeping the all-kept ones whole IS the filter, which is
-    * what lets aggregate pushdown answer under a WHERE clause. */
-  def decides(f: GraftLakeFile, p: Predicate,
-      nameToId: Map[String, Int],
-      defaults: Map[Int, Any] = Map.empty): Boolean =
-    !may(f, p, nameToId, defaults) || allTrue(f, p, nameToId, defaults)
-
-  /** Tri-state for a CONJUNCTION of predicates over one file:
-    * Some(true) = every stored row provably satisfies ALL of them (the
-    * file may be dropped whole by a metadata DELETE), Some(false) = no
-    * row can satisfy some predicate (the file is provably untouched),
-    * None = mixed or unprovable — a metadata-only delete must refuse.
-    * ALWAYS_TRUE/ALWAYS_FALSE (what `TRUNCATE TABLE`'s default
-    * deleteWhere sends) are handled here, not in the per-op walkers. */
-  def decideConj(f: GraftLakeFile, ps: Array[Predicate],
-      nameToId: Map[String, Int],
-      defaults: Map[Int, Any] = Map.empty): Option[Boolean] = {
-    def mayP(p: Predicate): Boolean = p.name() match {
-      case "ALWAYS_FALSE" => false
-      case _ => may(f, p, nameToId, defaults)
-    }
-    def allP(p: Predicate): Boolean = p.name() match {
-      case "ALWAYS_TRUE" => true
-      case _ => allTrue(f, p, nameToId, defaults)
-    }
-    if (ps.exists(p => !mayP(p))) Some(false)
-    else if (ps.forall(allP)) Some(true)
-    else None
-  }
-
-  /** Does EVERY row of `f` provably satisfy `p`? Null-rejecting ops
-    * additionally require a provably ZERO null count — a NULL row
-    * evaluates a comparison to NULL and is dropped by the filter, so a
-    * file with any null cannot be all-kept. Reads columns through
-    * [[colView]], so a file that predates an `ADD COLUMN ... DEFAULT`
-    * is single-valued at the default. Conservative: false when
-    * unprovable. */
-  private def allTrue(f: GraftLakeFile, p: Predicate,
-      nameToId: Map[String, Int],
-      defaults: Map[Int, Any]): Boolean = p.name() match {
-    case "AND" => p.children().forall {
-      case c: Predicate => allTrue(f, c, nameToId, defaults)
-      case _ => false
-    }
-    // a child true for every row makes the OR true for every row
-    case "OR" => p.children().exists {
-      case c: Predicate => allTrue(f, c, nameToId, defaults)
-      case _ => false
-    }
-    case op @ ("=" | "<" | "<=" | ">" | ">=" | "<>") =>
-      cmpAllTrue(f, op, p.children(), nameToId, defaults)
-    // all rows keep NOT p iff p IS FALSE everywhere: no row matches p
-    // (!may) and no referenced column holds a null (NULL would make p
-    // NULL, and NOT NULL drops the row)
-    case "NOT" => p.children() match {
-      case Array(c: Predicate) =>
-        !may(f, c, nameToId, defaults) &&
-          refIds(c, nameToId).exists(_.forall(id =>
-            colView(f, id, defaults)._2.contains(0L)))
-      case _ => false
-    }
-    case "IN" =>
-      val kids = p.children()
-      kids.nonEmpty && kids.tail.exists { lit =>
-        cmpAllTrue(f, "=", Array(kids.head, lit), nameToId, defaults)
-      }
-    case "IS_NULL" => colIdOf(p.children(), nameToId) match {
-      case Some(id) => // every row null, per the effective view
-        colView(f, id, defaults)._2.contains(f.numRows)
-      case None => false
-    }
-    case "IS_NOT_NULL" => colIdOf(p.children(), nameToId) match {
-      case Some(id) => colView(f, id, defaults)._2.contains(0L)
-      case None => false
-    }
-    case "STARTS_WITH" => p.children() match {
-      case Array(r: NamedReference, l: V2Literal[_])
-          if r.fieldNames().length == 1 =>
-        (nameToId.get(r.fieldNames()(0)), l.value) match {
-          case (Some(id), pre: UTF8String) =>
-            val (st, nulls) = colView(f, id, defaults)
-            nulls.contains(0L) && (st match {
-              // trunc monotone: trunc(min) = p = trunc(max) forces
-              // trunc(v) = p for every value in between
-              case Some((mn: UTF8String, mx: UTF8String)) =>
-                val pb = pre.getBytes
-                cmpPrefix(mn, pb) == 0 && cmpPrefix(mx, pb) == 0
-              case _ => false
-            })
-          case _ => false
-        }
-      case _ => false
-    }
-    case _ => false
-  }
-
-  private def cmpAllTrue(f: GraftLakeFile, op: String,
-      kids: Array[V2Expr], nameToId: Map[String, Int],
-      defaults: Map[Int, Any]): Boolean = {
-    if (kids.length != 2) return false
-    val parsed = (kids(0), kids(1)) match {
-      case (r: NamedReference, l: V2Literal[_]) => Some((r, l.value, op))
-      case (l: V2Literal[_], r: NamedReference) =>
-        val m = op match {
-          case "<" => ">"
-          case "<=" => ">="
-          case ">" => "<"
-          case ">=" => "<="
-          case other => other
-        }
-        Some((r, l.value, m))
-      case _ => None
-    }
-    parsed match {
-      case Some((ref, lit, o)) if ref.fieldNames().length == 1 =>
-        nameToId.get(ref.fieldNames()(0)) match {
-          case Some(id) =>
-            val (st, nulls) = colView(f, id, defaults)
-            nulls.contains(0L) && (st match {
-              case Some((mn, mx)) if mn != null =>
-                try o match {
-                  case "=" => cmp(mn, lit) == 0 && cmp(mx, lit) == 0
-                  case "<" => cmp(mx, lit) < 0
-                  case "<=" => cmp(mx, lit) <= 0
-                  case ">" => cmp(mn, lit) > 0
-                  case ">=" => cmp(mn, lit) >= 0
-                  // the literal lies outside the file's whole range
-                  case "<>" => cmp(lit, mn) < 0 || cmp(lit, mx) > 0
-                  case _ => false
-                } catch { case _: IllegalArgumentException => false }
-              case _ => false
-            })
-          case _ => false
-        }
-      case _ => false
-    }
-  }
-
-  private def colIdOf(kids: Array[V2Expr],
-      nameToId: Map[String, Int]): Option[Int] = kids match {
-    case Array(r: NamedReference) if r.fieldNames().length == 1 =>
-      nameToId.get(r.fieldNames()(0))
-    case _ => None
-  }
-
-  /** Multi-part reference `struct.(...).leaf` → the nested-stats key
-    * (top column id, dotted leaf path). */
-  private def nestedKeyOf(kids: Array[V2Expr],
-      nameToId: Map[String, Int]): Option[(Int, String)] = kids match {
-    case Array(r: NamedReference) if r.fieldNames().length >= 2 =>
-      nameToId.get(r.fieldNames()(0))
-        .map(_ -> r.fieldNames().tail.mkString("."))
-    case _ => None
-  }
-
-  /** All column ids referenced under `p`; None when any reference is
-    * nested or unresolvable (caller must then stay conservative). */
-  private def refIds(p: V2Expr,
-      nameToId: Map[String, Int]): Option[Set[Int]] = p match {
-    case r: NamedReference =>
-      if (r.fieldNames().length == 1)
-        nameToId.get(r.fieldNames()(0)).map(Set(_))
-      else None
-    case _: V2Literal[_] => Some(Set.empty)
-    case other =>
-      val kids = other.children().map(refIds(_, nameToId))
-      if (kids.exists(_.isEmpty)) None
-      else Some(kids.flatMap(_.get).toSet)
-  }
-
-  private def comparison(f: GraftLakeFile, op: String,
-      kids: Array[V2Expr], nameToId: Map[String, Int],
-      defaults: Map[Int, Any]): Boolean = {
-    if (kids.length != 2) return true
-    // col OP lit, or lit OP col (mirrored)
-    val parsed = (kids(0), kids(1)) match {
-      case (r: NamedReference, l: V2Literal[_]) => Some((r, l.value, op))
-      case (l: V2Literal[_], r: NamedReference) =>
-        val m = op match {
-          case "<" => ">"
-          case "<=" => ">="
-          case ">" => "<"
-          case ">=" => "<="
-          case other => other
-        }
-        Some((r, l.value, m))
-      case _ => None
-    }
-    def rangeMay(entry: Option[(Any, Any)], lit: Any, o: String): Boolean =
-      entry match {
-        case None => true // no stats: no pruning
-        case Some((null, null)) => false // every row NULL: no match
-        case Some((mn, mx)) =>
-          try o match {
-            case "=" => cmp(mn, lit) <= 0 && cmp(lit, mx) <= 0
-            case "<" => cmp(mn, lit) < 0
-            case "<=" => cmp(mn, lit) <= 0
-            case ">" => cmp(mx, lit) > 0
-            case ">=" => cmp(mx, lit) >= 0
-            // every non-null value equals lit: no row can differ
-            case "<>" => !(cmp(mn, lit) == 0 && cmp(mx, lit) == 0)
-            case _ => true
-          } catch { case _: IllegalArgumentException => true }
-      }
-    parsed match {
-      case Some((ref, lit, o)) if ref.fieldNames().length == 1 =>
-        nameToId.get(ref.fieldNames()(0)) match {
-          case None => true // metadata/unknown column: no pruning
-          case Some(id) =>
-            rangeMay(colView(f, id, defaults)._1, lit, o) &&
-              // equality additionally consults the per-file bloom: an
-              // in-range value the file provably never wrote still
-              // prunes (the point-lookup case min/max can't decide)
-              (o != "=" || bloomMay(f, id, lit))
-        }
-      // `struct.(...).leaf OP lit` prunes through the nested-leaf
-      // stats — same range logic, conservative when the file predates
-      // nested stats collection
-      case Some((ref, lit, o)) if ref.fieldNames().length >= 2 =>
-        nameToId.get(ref.fieldNames()(0)) match {
-          case None => true
-          case Some(id) => rangeMay(
-            f.nstats.get((id, ref.fieldNames().tail.mkString("."))),
-            lit, o)
-        }
-      case _ => true
-    }
   }
 }
 
@@ -1906,10 +1771,8 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
   // schema evolution, DVs, refs) survives the JVM — see [[GraftLakeLog]]
   // for the layout
   private val log = new GraftLakeLog(lakeDir)
-  private[sources] def deleteStorage(): Unit = {
+  private[sources] def deleteStorage(): Unit =
     GraftParquetIO.deleteRecursively(lakeDir)
-    GraftLakeTable.tempRoots.remove(lakeDir)
-  }
   /** Task-side write recipe: the table dir plus the CURRENT schema
     * identity, captured when the write is built — adoption re-validates
     * the ids at commit, so a concurrent ALTER still aborts loudly (see
@@ -4102,17 +3965,11 @@ class GraftLakeTable(tableName: String, tableSchema: StructType,
 }
 
 object GraftLakeTable {
-  /** Roots of the tables that have no durable root (no warehouse, no
-    * `graft.location`): only this JVM's registry can reach them, so
+  /** The root of a table with no durable root (no warehouse, no
+    * `graft.location`): only this JVM's registry can reach it, so
     * whatever a DROP has not deleted goes when the JVM exits. */
-  private val tempRoots = ConcurrentHashMap.newKeySet[java.io.File]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    tempRoots.forEach(GraftParquetIO.deleteRecursively(_))))
-  private def tempRoot(): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory("graft_lake_").toFile
-    tempRoots.add(d)
-    d
-  }
+  private def tempRoot(): java.io.File = GraftParquetIO.deleteAtExit(
+    java.nio.file.Files.createTempDirectory("graft_lake_").toFile)
 
   /** Row-level-operation pins older than this are considered abandoned
     * (planned but never committed/aborted) and reaped at vacuum time —
@@ -4214,6 +4071,8 @@ class GraftLakeScanBuilder(snapshot: GraftLakeSnapshot,
   private var required: StructType = fullSchema
   private var skipPreds: Array[Predicate] = Array.empty
   private var residualPreds: Array[Predicate] = Array.empty
+  // the files some row of which may satisfy every pushed predicate
+  private var kept: Vector[GraftLakeFile] = snapshot.files
   // COLUMN-granular pruning only: stored rows carry complete nested
   // values, so accepting Spark's nested-FIELD-pruned struct type here
   // would desync the scan's output layout from codegen's expectations
@@ -4223,14 +4082,17 @@ class GraftLakeScanBuilder(snapshot: GraftLakeSnapshot,
   // the nested subset above the scan.
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = GraftLakeReaders.columnGranular(requiredSchema, fullSchema)
-  /** Record every predicate for min/max FILE SKIPPING. A predicate that
-    * EVERY snapshot file decides exactly from stats (provably all-kept
-    * or all-dropped per file — [[GraftLakeStats.decides]]: the layout a
-    * partition-keyed writer produces) is claimed FULLY PUSHED: pruning
-    * the dropped files and keeping the kept ones whole IS the filter,
-    * and a residual-free WHERE is what lets Spark offer AGGREGATE
-    * pushdown on filtered queries (`SELECT count(*) ... WHERE dt = X`
-    * answered from manifests). Everything else comes back as residual:
+  /** Record every predicate for min/max FILE SKIPPING. Each (file,
+    * predicate) pair is evaluated once ([[GraftLakeStats.outcomes]]);
+    * the kept files, the residual set and the aggregate's input all
+    * come from those verdicts. A predicate that EVERY snapshot file
+    * decides exactly from stats (provably all-kept or all-dropped per
+    * file: the layout a partition-keyed writer produces) is claimed
+    * FULLY PUSHED: pruning the dropped files and keeping the kept ones
+    * whole IS the filter, and a residual-free WHERE is what lets Spark
+    * offer AGGREGATE pushdown on filtered queries (`SELECT count(*) ...
+    * WHERE dt = X` answered from manifests). Everything else comes back
+    * as residual:
     * Spark re-applies it post-scan, so stats pruning stays result-
     * transparent (the parquet row-group-skipping safety split).
     * Row-level operation scans get the statement's WHERE here too — a
@@ -4241,10 +4103,15 @@ class GraftLakeScanBuilder(snapshot: GraftLakeSnapshot,
       predicates: Array[Predicate]): Array[Predicate] = {
     skipPreds = predicates
     val nameToId = idToName.map(_.swap)
+    val verdicts = snapshot.files.map(f => predicates.map(p =>
+      GraftLakeStats.outcomes(f, p, nameToId, colDefaults)))
+    kept = snapshot.files.zip(verdicts).collect {
+      case (f, os) if os.forall(o => (o & GraftLakeStats.True) != 0) => f
+    }
     residualPreds =
       if (rowLevel.isDefined) predicates
-      else predicates.filterNot(p => snapshot.files.forall(f =>
-        GraftLakeStats.decides(f, p, nameToId, colDefaults)))
+      else predicates.indices.filterNot(i => verdicts.forall(os =>
+        GraftLakeStats.verdict(os(i)).isDefined)).map(predicates).toArray
     residualPreds
   }
   override def pushedPredicates(): Array[Predicate] = skipPreds
@@ -4321,10 +4188,7 @@ class GraftLakeScanBuilder(snapshot: GraftLakeSnapshot,
     val nameToId = idToName.map(_.swap)
     // under a fully-decided WHERE, the aggregate's input is exactly the
     // all-kept files (decided files that may-match are all-kept)
-    val candidates: Vector[GraftLakeFile] =
-      if (skipPreds.isEmpty) snapshot.files
-      else snapshot.files.filter(f =>
-        GraftLakeStats.mayMatch(f, skipPreds.toSeq, nameToId, colDefaults))
+    val candidates = kept
     def colId(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[Int] = e match {
       case r: NamedReference if r.fieldNames().length == 1 =>
@@ -4604,8 +4468,8 @@ class GraftLakeScanBuilder(snapshot: GraftLakeSnapshot,
   override def build(): Scan = aggAnswer match {
     case Some((schema, rows)) => new GraftLakeAggScan(schema, rows)
     case None =>
-      new GraftLakeScan(snapshot, fullSchema, required, partSpec, rowLevel,
-        currentIds, idToName, skipPreds.toSeq, colDefaults, pspecId)
+      new GraftLakeScan(snapshot, kept, fullSchema, required, partSpec,
+        rowLevel, currentIds, idToName, colDefaults, pspecId)
   }
 }
 
@@ -4664,12 +4528,12 @@ final case class GraftLakeAggPartition(rows: Vector[InternalRow])
   * row-level SQL — exactly Iceberg's shape, where a CoW rewrite reads
   * data files directly and only regular reads ride the partition
   * grouping. Regular scans without metadata columns keep the SPJ path. */
-class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
+class GraftLakeScan(snapshot: GraftLakeSnapshot,
+    kept: Vector[GraftLakeFile], fullSchema: StructType,
     requiredSchema: StructType, partSpec: Seq[GraftPartTransform],
     rowLevel: Option[GroupScanState],
     currentIds: () => Set[String] = () => Set.empty,
     idToName: Map[Int, String] = Map.empty,
-    skipPreds: Seq[Predicate] = Nil,
     colDefaults: Map[Int, Any] = Map.empty,
     pspecId: Int = 0)
     extends Scan with Batch with SupportsReportPartitioning
@@ -4682,18 +4546,12 @@ class GraftLakeScan(snapshot: GraftLakeSnapshot, fullSchema: StructType,
   private val nameDefaults: Map[String, Any] =
     colDefaults.flatMap { case (id, v) => idToName.get(id).map(_ -> v) }
 
-  // STATIC min/max file skipping: drop every group the pushed predicates
-  // provably exclude, before any partition is planned. A row-level
+  // STATIC min/max file skipping: `kept` holds the snapshot files the
+  // builder's pushed predicates did not provably exclude. A row-level
   // operation's scanned-group set must shrink WITH the active set —
   // the ReplaceData commit replaces exactly `scanned`, and a group this
   // scan never reads must be CARRIED, not dropped.
-  @volatile private var active: Vector[GraftLakeFile] =
-    if (skipPreds.isEmpty) snapshot.files
-    else {
-      val nameToId = idToName.map(_.swap)
-      snapshot.files.filter(f =>
-        GraftLakeStats.mayMatch(f, skipPreds, nameToId, colDefaults))
-    }
+  @volatile private var active: Vector[GraftLakeFile] = kept
   rowLevel.foreach(_.scanned = active.map(_.id).toSet)
 
   // per-file id manifest resolved to CURRENT names once at planning
@@ -5146,100 +5004,91 @@ class GraftLakeChangeFeedScanBuilder(
   }
 }
 
-/** Read-only `<table>.changes` metadata table: the parent's commit
-  * history exposed as a relation of (data columns, `_change_type`,
-  * `_commit_version`) — change-feed columns are REGULAR columns here, so
-  * the table works identically under batch SQL and `readStream` (no
-  * metadata-column resolution dependency on the streaming path).
-  *
-  *  - BATCH: replays the range `[graft.changes.from, graft.changes.to]`
-  *    (defaults: the full history up to the current version).
-  *  - STREAMING: a MicroBatchStream whose OFFSETS ARE COMMIT VERSIONS —
-  *    the Delta streaming-source shape. Each trigger reads exactly the
-  *    commits that landed since the last processed version, so a
-  *    downstream pipeline tails the table incrementally (cost ∝ new
-  *    commits' churn) with exactly-once progress recorded in the
-  *    checkpoint as a plain version number. `graft.stream.startingVersion`
-  *    backfills from an old version first (0 = full-history replay, the
-  *    Delta `startingVersion` contract); the default starts at the
-  *    CURRENT version — new changes only. */
+/** A control-plane-sized metadata table `<table>.<suffix>`: `rowsFor`
+  * builds its rows on the driver (from the scan's options) when a scan
+  * is built, and the scan plans as a driver-local [[LocalScan]]. */
+abstract class GraftLakeMetaTable(parent: GraftLakeTable, suffix: String,
+    metaSchema: StructType)(rowsFor: CaseInsensitiveStringMap => Array[InternalRow])
+    extends Table with SupportsRead {
+  override def name(): String = parent.name() + "." + suffix
+  override def schema(): StructType = metaSchema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(
+      options: CaseInsensitiveStringMap): ScanBuilder = () => {
+    val rs = rowsFor(options)
+    new org.apache.spark.sql.connector.read.LocalScan {
+      override def readSchema(): StructType = metaSchema
+      override def rows(): Array[InternalRow] = rs
+      override def description(): String =
+        s"GraftLake${suffix.capitalize}[${parent.name()}]"
+    }
+  }
+}
+
+/** The `graft.snapshot-version` read option, if set. */
+private object GraftLakeMetaTable {
+  def asOf(options: CaseInsensitiveStringMap): Option[Int] =
+    Option(options.get("graft.snapshot-version")).map(_.trim.toInt)
+}
+
 /** `<catalog>.<table>.files` — the MANIFEST as a queryable relation
   * (Iceberg's files metadata table): one row per data file with its
   * row/live/DV-dead counts, on-disk bytes, resolved column manifest and
   * the column-level stats (null counts, min/max) that drive pruning and
   * scan-less aggregates. Stats values are string-rendered INTERNAL
   * representations (dates as day ordinals, timestamps as micros — the
-  * exact values the pruning comparisons run on). Control-plane-sized by
-  * construction, so it plans as a driver-local scan. */
+  * exact values the pruning comparisons run on). Time travel composes:
+  * the manifest AT a version is how a user audits what an AS-OF read
+  * would scan, resolved through the VERSION's id→name mapping, so the
+  * audit shows the names that version actually served. */
 class GraftLakeFilesTable(parent: GraftLakeTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.sql.types.{ArrayType, StructField}
-
-  private val filesSchema = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("path", StringType, nullable = true),
-    StructField("row_count", LongType, nullable = false),
-    StructField("live_rows", LongType, nullable = false),
-    StructField("dv_dead", LongType, nullable = false),
-    StructField("size_bytes", LongType, nullable = false),
-    // partition-pure files render their key tuple; spec_id says which
-    // partition spec evaluated it (Iceberg files-table columns)
-    StructField("partition", StringType, nullable = true),
-    StructField("spec_id",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    StructField("columns", ArrayType(StringType), nullable = false),
-    StructField("null_counts", ArrayType(LongType), nullable = false),
-    StructField("min_values", ArrayType(StringType), nullable = false),
-    StructField("max_values", ArrayType(StringType), nullable = false)))
-
-  override def name(): String = parent.name() + ".files"
-  override def schema(): StructType = filesSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder = () => {
-    // time travel composes: the manifest AT a version is how a user
-    // audits what an AS-OF read would scan — resolved through the
-    // VERSION's id→name mapping, so the audit shows the names that
-    // version actually served
-    val asOf = Option(options.get("graft.snapshot-version"))
-      .map(_.trim.toInt)
-    val snap = asOf.map(parent.snapshotAt).getOrElse(parent.snapshot)
-    val i2n = asOf.map(parent.idToNameAt).getOrElse(parent.idToName)
-    val fileRows: Array[InternalRow] = snap.files.map { f =>
-      val dead = snap.dvs.getOrElse(f.id, Set.empty).size.toLong
-      // dropped ids surface readably instead of via the NUL sentinel
-      val names = GraftLakeFieldIds.resolve(f.cols, i2n)
-        .map(n => if (n.startsWith("\u0000dropped#"))
-          "<" + n.substring(1) + ">" else n)
-      def render(v: Any): Any =
-        if (v == null) null else UTF8String.fromString(String.valueOf(v))
-      new GenericInternalRow(Array[Any](
-        UTF8String.fromString(f.id),
-        UTF8String.fromString(f.path),
-        f.numRows, f.numRows - dead, dead, f.bytes,
-        f.pkey.map(k => UTF8String.fromString(
-          k.map(String.valueOf).mkString("[", ", ", "]"))).orNull,
-        f.pspecId,
-        new GenericArrayData(
-          names.map(n => UTF8String.fromString(n): Any).toArray),
-        new GenericArrayData(f.cols.map(id =>
-          f.nulls.get(id).map(Long.box).orNull: Any).toArray),
-        new GenericArrayData(f.cols.map(id =>
-          render(f.stats.get(id).map(_._1).orNull)).toArray),
-        new GenericArrayData(f.cols.map(id =>
-          render(f.stats.get(id).map(_._2).orNull)).toArray)))
-        : InternalRow
-    }.toArray
-    new org.apache.spark.sql.connector.read.LocalScan {
-      override def readSchema(): StructType = filesSchema
-      override def rows(): Array[InternalRow] = fileRows
-      override def description(): String = s"GraftLakeFiles[${parent.name()}]"
-    }
-  }
-}
+    extends GraftLakeMetaTable(parent, "files", StructType(Seq(
+      StructField("file", StringType, nullable = false),
+      StructField("path", StringType, nullable = true),
+      StructField("row_count", LongType, nullable = false),
+      StructField("live_rows", LongType, nullable = false),
+      StructField("dv_dead", LongType, nullable = false),
+      StructField("size_bytes", LongType, nullable = false),
+      // partition-pure files render their key tuple; spec_id says which
+      // partition spec evaluated it (Iceberg files-table columns)
+      StructField("partition", StringType, nullable = true),
+      StructField("spec_id",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      StructField("columns", ArrayType(StringType), nullable = false),
+      StructField("null_counts", ArrayType(LongType), nullable = false),
+      StructField("min_values", ArrayType(StringType), nullable = false),
+      StructField("max_values", ArrayType(StringType), nullable = false))))(
+      options => {
+      val asOf = GraftLakeMetaTable.asOf(options)
+      val snap = asOf.map(parent.snapshotAt).getOrElse(parent.snapshot)
+      val i2n = asOf.map(parent.idToNameAt).getOrElse(parent.idToName)
+      def strings(vs: Seq[Any]) =
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(vs.map(v =>
+          if (v == null) null else UTF8String.fromString(String.valueOf(v)))
+          .toArray[Any])
+      snap.files.map { f =>
+        val dead = snap.dvs.getOrElse(f.id, Set.empty).size.toLong
+        // dropped ids surface readably instead of via the NUL sentinel
+        val names = GraftLakeFieldIds.resolve(f.cols, i2n)
+          .map(n => if (n.startsWith("\u0000dropped#"))
+            "<" + n.substring(1) + ">" else n)
+        new GenericInternalRow(Array[Any](
+          UTF8String.fromString(f.id),
+          UTF8String.fromString(f.path),
+          f.numRows, f.numRows - dead, dead, f.bytes,
+          f.pkey.map(k => UTF8String.fromString(
+            k.map(String.valueOf).mkString("[", ", ", "]"))).orNull,
+          f.pspecId,
+          strings(names),
+          new org.apache.spark.sql.catalyst.util.GenericArrayData(
+            f.cols.map(id => f.nulls.get(id).map(Long.box).orNull: Any)
+              .toArray),
+          strings(f.cols.map(id => f.stats.get(id).map(_._1).orNull)),
+          strings(f.cols.map(id => f.stats.get(id).map(_._2).orNull))))
+          : InternalRow
+      }.toArray
+    })
 
 /** A read-only view of `parent` pinned at commit `version` — what
   * `VERSION AS OF` / `TIMESTAMP AS OF` resolves to. The pin is
@@ -5289,53 +5138,26 @@ class GraftLakeBranchTable(parent: GraftLakeTable, branch: String)
   * branches report their fork base and how many commits are still
   * staged (unpublished). */
 class GraftLakeRefsTable(parent: GraftLakeTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{IntegerType, StructField}
+    extends GraftLakeMetaTable(parent, "refs", StructType(Seq(
+      StructField("name", StringType, nullable = false),
+      StructField("type", StringType, nullable = false),
+      StructField("version",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      StructField("staged_commits",
+        org.apache.spark.sql.types.IntegerType, nullable = false))))(_ =>
+      parent.refEntries.map { case (n, tpe, v, staged) =>
+        new GenericInternalRow(Array[Any](UTF8String.fromString(n),
+          UTF8String.fromString(tpe), v, staged)): InternalRow
+      }.toArray)
 
-  private val refsSchema = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("type", StringType, nullable = false),
-    StructField("version", IntegerType, nullable = false),
-    StructField("staged_commits", IntegerType, nullable = false)))
-
-  override def name(): String = parent.name() + ".refs"
-  override def schema(): StructType = refsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder = () => {
-    val refRows: Array[InternalRow] = parent.refEntries.map {
-      case (n, tpe, v, staged) => new GenericInternalRow(Array[Any](
-        org.apache.spark.unsafe.types.UTF8String.fromString(n),
-        org.apache.spark.unsafe.types.UTF8String.fromString(tpe),
-        v, staged)): InternalRow
-    }.toArray
-    new org.apache.spark.sql.connector.read.LocalScan {
-      override def readSchema(): StructType = refsSchema
-      override def rows(): Array[InternalRow] = refRows
-      override def description(): String =
-        s"GraftLakeRefs[${parent.name()}]"
-    }
-  }
-}
-
-/** `<catalog>.<table>.history` — one row per RETAINED commit (Delta's
-  * DESCRIBE HISTORY / Iceberg's snapshots metadata table): version,
-  * whether the commit changed the RELATION (`data_change = false` for
-  * maintenance rewrites — compaction, clustering — which the change
-  * feed also skips), and the snapshot's file/row/byte footprint. The
-  * table's floor rises when `expire_versions` runs: expired commits
-  * disappear here exactly when time travel to them starts failing. */
 /** `<catalog>.<table>.partitions` — the per-partition summary of the
   * current (or AS-OF) snapshot (Iceberg's partitions metadata table):
   * one row per distinct partition tuple with its file count, stored /
   * live row counts and byte size; unpartitioned files (or pre-spec
   * files without a stamp) aggregate under the NULL partition. This is
   * the table an operator reads before choosing compaction targets or
-  * auditing skew — control-plane-sized, planned as a driver-local
-  * scan. `n_live_rows` is EXACT even under unresolved EQUALITY-DELETE
-  * debt: when the snapshot carries unresolved
+  * auditing skew. `n_live_rows` is EXACT even under unresolved
+  * EQUALITY-DELETE debt: when the snapshot carries unresolved
   * epochs, the summary routes through the scan-less COUNT's key-probe
   * machinery ([[GraftLakeTable.eqLiveCounts]]) — the first read pays
   * the one-task-per-file probe pass, every later read answers from the
@@ -5346,89 +5168,71 @@ class GraftLakeRefsTable(parent: GraftLakeTable)
   * probe job (never in practice — the scan exists because a session
   * asked for it). */
 class GraftLakePartitionsTable(parent: GraftLakeTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{IntegerType, StructField}
+    extends GraftLakeMetaTable(parent, "partitions", StructType(Seq(
+      StructField("partition", StringType, nullable = true),
+      StructField("spec_id",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      StructField("n_files",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      StructField("n_rows", LongType, nullable = false),
+      StructField("n_live_rows", LongType, nullable = false),
+      StructField("size_bytes", LongType, nullable = false))))(options => {
+      val snap = GraftLakeMetaTable.asOf(options).map(parent.snapshotAt)
+        .getOrElse(parent.snapshot)
+      // exact per-file live counts when eq-delete debt is unresolved —
+      // memoized probe pass, metadata-only otherwise (or on no-session)
+      val probed: Map[String, Long] =
+        if (snap.eqs.isEmpty) Map.empty
+        else parent.eqLiveCounts(snap, snap.files).getOrElse(Map.empty)
+      snap.files
+        .groupBy(f => (f.pkey, f.pspecId)).toSeq
+        .sortBy { case ((k, sid), _) =>
+          (k.map(_.map(String.valueOf).mkString(",")).getOrElse(""), sid) }
+        .map { case ((pkey, sid), fs) =>
+          val stored = fs.map(_.numRows).sum
+          val live = fs.map(f => probed.getOrElse(f.id,
+            f.numRows - snap.dvs.getOrElse(f.id, Set.empty).size.toLong))
+            .sum
+          new GenericInternalRow(Array[Any](
+            pkey.map(k => UTF8String.fromString(
+              k.map(String.valueOf).mkString("[", ", ", "]"))).orNull,
+            sid, fs.length, stored, live,
+            fs.map(_.bytes).sum)): InternalRow
+        }.toArray
+    })
 
-  private val partitionsSchema = StructType(Seq(
-    StructField("partition", StringType, nullable = true),
-    StructField("spec_id", IntegerType, nullable = false),
-    StructField("n_files", IntegerType, nullable = false),
-    StructField("n_rows", LongType, nullable = false),
-    StructField("n_live_rows", LongType, nullable = false),
-    StructField("size_bytes", LongType, nullable = false)))
-
-  override def name(): String = parent.name() + ".partitions"
-  override def schema(): StructType = partitionsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder = () => {
-    val asOf = Option(options.get("graft.snapshot-version"))
-      .map(_.trim.toInt)
-    val snap = asOf.map(parent.snapshotAt).getOrElse(parent.snapshot)
-    // exact per-file live counts when eq-delete debt is unresolved —
-    // memoized probe pass, metadata-only otherwise (or on no-session)
-    val probed: Map[String, Long] =
-      if (snap.eqs.isEmpty) Map.empty
-      else parent.eqLiveCounts(snap, snap.files).getOrElse(Map.empty)
-    val partRows: Array[InternalRow] = snap.files
-      .groupBy(f => (f.pkey, f.pspecId)).toSeq
-      .sortBy { case ((k, sid), _) =>
-        (k.map(_.map(String.valueOf).mkString(",")).getOrElse(""), sid) }
-      .map { case ((pkey, sid), fs) =>
-        val stored = fs.map(_.numRows).sum
-        val live = fs.map(f => probed.getOrElse(f.id,
-          f.numRows - snap.dvs.getOrElse(f.id, Set.empty).size.toLong))
-          .sum
-        new GenericInternalRow(Array[Any](
-          pkey.map(k => UTF8String.fromString(
-            k.map(String.valueOf).mkString("[", ", ", "]"))).orNull,
-          sid, fs.length, stored, live,
-          fs.map(_.bytes).sum)): InternalRow
-      }.toArray
-    new org.apache.spark.sql.connector.read.LocalScan {
-      override def readSchema(): StructType = partitionsSchema
-      override def rows(): Array[InternalRow] = partRows
-      override def description(): String =
-        s"GraftLakePartitions[${parent.name()}]"
-    }
-  }
-}
-
+/** `<catalog>.<table>.history` — one row per RETAINED commit (Delta's
+  * DESCRIBE HISTORY / Iceberg's snapshots metadata table): version,
+  * whether the commit changed the RELATION (`data_change = false` for
+  * maintenance rewrites — compaction, clustering — which the change
+  * feed also skips), and the snapshot's file/row/byte footprint. The
+  * table's floor rises when `expire_versions` runs: expired commits
+  * disappear here exactly when time travel to them starts failing.
+  * Time travel composes like on `.files`: the history AS OF v is every
+  * retained commit up to v (the version must itself be retained). */
 class GraftLakeHistoryTable(parent: GraftLakeTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{BooleanType, IntegerType, StructField, TimestampType}
-
-  private val historySchema = StructType(Seq(
-    StructField("version", IntegerType, nullable = false),
-    StructField("commit_time", TimestampType, nullable = false),
-    StructField("data_change", BooleanType, nullable = false),
-    StructField("n_files", IntegerType, nullable = false),
-    StructField("n_rows", LongType, nullable = false),
-    StructField("n_live_rows", LongType, nullable = false),
-    StructField("n_dv_files", IntegerType, nullable = false),
-    StructField("size_bytes", LongType, nullable = false)))
-
-  override def name(): String = parent.name() + ".history"
-  override def schema(): StructType = historySchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder = () => {
-    // time travel composes like on .files: the history AS OF v is every
-    // retained commit up to v (the version must itself be retained)
-    val retained = parent.retainedHistory
-    val hist = Option(options.get("graft.snapshot-version")) match {
-      case Some(v) =>
-        val vi = v.trim.toInt
-        require(retained.exists(_._1 == vi),
-          s"version $vi is not retained by ${parent.name()}")
-        retained.filter(_._1 <= vi)
-      case None => retained
-    }
-    val commitRows: Array[InternalRow] =
+    extends GraftLakeMetaTable(parent, "history", StructType(Seq(
+      StructField("version",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      StructField("commit_time",
+        org.apache.spark.sql.types.TimestampType, nullable = false),
+      StructField("data_change",
+        org.apache.spark.sql.types.BooleanType, nullable = false),
+      StructField("n_files",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      StructField("n_rows", LongType, nullable = false),
+      StructField("n_live_rows", LongType, nullable = false),
+      StructField("n_dv_files",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      StructField("size_bytes", LongType, nullable = false))))(options => {
+      val retained = parent.retainedHistory
+      val hist = GraftLakeMetaTable.asOf(options) match {
+        case Some(vi) =>
+          require(retained.exists(_._1 == vi),
+            s"version $vi is not retained by ${parent.name()}")
+          retained.filter(_._1 <= vi)
+        case None => retained
+      }
       hist.map { case (v, snap, dc, tsMillis) =>
         val dead = snap.dvs.values.map(_.size.toLong).sum
         val rows = snap.files.map(_.numRows).sum
@@ -5438,15 +5242,25 @@ class GraftLakeHistoryTable(parent: GraftLakeTable)
             snap.dvs.getOrElse(f.id, Set.empty).nonEmpty),
           snap.files.map(_.bytes).sum)): InternalRow
       }.toArray
-    new org.apache.spark.sql.connector.read.LocalScan {
-      override def readSchema(): StructType = historySchema
-      override def rows(): Array[InternalRow] = commitRows
-      override def description(): String =
-        s"GraftLakeHistory[${parent.name()}]"
-    }
-  }
-}
+    })
 
+/** Read-only `<table>.changes` metadata table: the parent's commit
+  * history exposed as a relation of (data columns, `_change_type`,
+  * `_commit_version`) — change-feed columns are REGULAR columns here, so
+  * the table works identically under batch SQL and `readStream` (no
+  * metadata-column resolution dependency on the streaming path).
+  *
+  *  - BATCH: replays the range `[graft.changes.from, graft.changes.to]`
+  *    (defaults: the full history up to the current version).
+  *  - STREAMING: a MicroBatchStream whose OFFSETS ARE COMMIT VERSIONS —
+  *    the Delta streaming-source shape. Each trigger reads exactly the
+  *    commits that landed since the last processed version, so a
+  *    downstream pipeline tails the table incrementally (cost ∝ new
+  *    commits' churn) with exactly-once progress recorded in the
+  *    checkpoint as a plain version number. `graft.stream.startingVersion`
+  *    backfills from an old version first (0 = full-history replay, the
+  *    Delta `startingVersion` contract); the default starts at the
+  *    CURRENT version — new changes only. */
 class GraftLakeChangesTable(parent: GraftLakeTable)
     extends Table with SupportsRead {
   import org.apache.spark.sql.connector.read.streaming.MicroBatchStream

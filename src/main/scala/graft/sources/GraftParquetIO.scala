@@ -125,4 +125,28 @@ object GraftParquetIO {
       .foreach(deleteRecursively)
     f.delete()
   }
+
+  // what this JVM deletes when it exits, reaped by one shutdown hook
+  private lazy val atExit = {
+    val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      paths.forEach(deleteRecursively(_))))
+    paths
+  }
+
+  /** Delete `f` (recursively) when the JVM exits. */
+  def deleteAtExit(f: java.io.File): java.io.File = { atExit.add(f); f }
+
+  /** This process's scratch dir `<tmpdir>/<prefix>_<sfDir tag>_pid<pid>`,
+    * emptied now and deleted at JVM exit. Unique per (sfDir, JVM): a
+    * fixed path would let two concurrent processes interleave their
+    * deletes and writes, and the DataFrames built over it read lazily,
+    * so it cannot go before the process ends. */
+  def scratchDir(prefix: String, sfDir: String): java.io.File = {
+    val d = new java.io.File(sys.props("java.io.tmpdir"),
+      s"${prefix}_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_pid" +
+        ProcessHandle.current().pid())
+    deleteRecursively(d)
+    deleteAtExit(d)
+  }
 }

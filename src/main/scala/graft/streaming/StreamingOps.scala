@@ -1218,11 +1218,7 @@ object StreamingOps {
       sys.props("java.io.tmpdir"), s"graft_stream_sink_$tag")
     // per-run reset: the query IS the sink write (measured like the ORC
     // roundtrip), and a re-run must not double the data
-    if (dir.exists()) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir.toPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    graft.sources.GraftParquetIO.deleteRecursively(dir)
     val ev = eventStream(spark, sfDir)
     withStreamingPartitions(spark) {
       val q = ev.writeStream

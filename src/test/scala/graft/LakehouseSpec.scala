@@ -415,8 +415,8 @@ class LakehouseSpec extends SparkTestBase {
       Vector(GraftLakeFile("t#f1", Seq(0), "t/f1.parquet", pnames = Seq("k")),
         GraftLakeFile("t#f2", Seq(0), "t/f2.parquet", pnames = Seq("k"))),
       Map.empty)
-    def scanWith(current: Set[String]) = new GraftLakeScan(snap, schema,
-      schema, Nil, Some(new GroupScanState(Set("t#f1", "t#f2"))),
+    def scanWith(current: Set[String]) = new GraftLakeScan(snap, snap.files,
+      schema, schema, Nil, Some(new GroupScanState(Set("t#f1", "t#f2"))),
       () => current, Map(0 -> "k"))
     // consistent universes: narrows and records the scanned group
     val ok = scanWith(Set("t#f1", "t#f2"))

@@ -865,6 +865,123 @@ object PropertySpec extends Properties("graft.kernels") {
       sound && exact
     }
 
+  // ---- the file verdict: every row's outcome is in outcomes(f, p) --------
+  // A file of a BIGINT `k` and a STRING `s` with nulls, plus a column `a`
+  // it predates (every row serves a's exists-default, or NULL), under
+  // predicates up to depth 3 of AND / OR / NOT over every leaf the
+  // evaluator reads. The row-level meaning follows SQL's three-valued
+  // logic (None = NULL).
+
+  private object Verdict {
+    import org.apache.spark.sql.connector.expressions.{Expression, Expressions}
+    import org.apache.spark.sql.connector.expressions.filter.{AlwaysFalse, AlwaysTrue, And, Not, Or, Predicate}
+
+    type Row3 = (Option[Long], Option[String], Option[Long])
+    /** A pushed predicate and its value over a row. */
+    final case class P(v2: Predicate, sql: Row3 => Option[Boolean])
+
+    def and3(a: Option[Boolean], b: Option[Boolean]): Option[Boolean] =
+      if (a.contains(false) || b.contains(false)) Some(false)
+      else if (a.contains(true) && b.contains(true)) Some(true)
+      else None
+    def or3(a: Option[Boolean], b: Option[Boolean]): Option[Boolean] =
+      and3(a.map(!_), b.map(!_)).map(!_)
+
+    private val mirror = Map("<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+    private def holds(op: String, c: Int): Boolean = op match {
+      case "=" => c == 0
+      case "<" => c < 0
+      case "<=" => c <= 0
+      case ">" => c > 0
+      case ">=" => c >= 0
+      case _ => c != 0
+    }
+
+    /** Comparisons (either way round), IN and the null tests over one
+      * column: `get` reads it from a row, `lits` draws a literal. */
+    private def over[T](name: String, get: Row3 => Option[T], lits: Gen[T],
+        internal: T => Any, cmp: (T, T) => Int): Gen[P] = {
+      val ref = Expressions.column(name)
+      def lit(v: T): Expression = Expressions.literal(internal(v))
+      Gen.oneOf(
+        for {
+          op <- Gen.oneOf("=", "<", "<=", ">", ">=", "<>")
+          v <- lits
+          flip <- Gen.oneOf(false, true)
+        } yield P(
+          if (flip) new Predicate(mirror.getOrElse(op, op), Array(lit(v), ref))
+          else new Predicate(op, Array(ref, lit(v))),
+          r => get(r).map(x => holds(op, cmp(x, v)))),
+        Gen.choose(1, 3).flatMap(Gen.listOfN(_, lits)).map(vs => P(
+          new Predicate("IN", (ref +: vs.map(lit)).toArray),
+          r => vs.map(v => get(r).map(cmp(_, v) == 0)).reduce(or3))),
+        Gen.const(P(new Predicate("IS_NULL", Array[Expression](ref)),
+          r => Some(get(r).isEmpty))),
+        Gen.const(P(new Predicate("IS_NOT_NULL", Array[Expression](ref)),
+          r => Some(get(r).nonEmpty))))
+    }
+
+    val longs: Gen[Long] = Gen.choose(-3L, 3L)
+    val strings: Gen[String] = Gen.choose(0, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("a", "b", "\u00e9")).map(_.mkString))
+    private def u(s: String): UTF8String = UTF8String.fromString(s)
+
+    val leaf: Gen[P] = Gen.frequency(
+      3 -> over[Long]("k", _._1, longs, Long.box, _ compare _),
+      3 -> over[String]("s", _._2, strings, u, (x, y) => u(x).compareTo(u(y))),
+      2 -> over[Long]("a", _._3, longs, Long.box, _ compare _),
+      1 -> strings.map(pre => P(new Predicate("STARTS_WITH",
+        Array(Expressions.column("s"), Expressions.literal(u(pre)))),
+        r => r._2.map(_.startsWith(pre)))),
+      1 -> Gen.oneOf(P(new AlwaysTrue, _ => Some(true)),
+        P(new AlwaysFalse, _ => Some(false))))
+
+    def pred(depth: Int): Gen[P] =
+      if (depth == 0) leaf
+      else Gen.frequency(
+        2 -> leaf,
+        1 -> Gen.zip(pred(depth - 1), pred(depth - 1)).map { case (a, b) =>
+          P(new And(a.v2, b.v2), r => and3(a.sql(r), b.sql(r))) },
+        1 -> Gen.zip(pred(depth - 1), pred(depth - 1)).map { case (a, b) =>
+          P(new Or(a.v2, b.v2), r => or3(a.sql(r), b.sql(r))) },
+        1 -> pred(depth - 1).map(a => P(new Not(a.v2), r => a.sql(r).map(!_))))
+
+    /** (k, s) rows with a per-file null rate, a's default, a predicate. */
+    val fileCase: Gen[(List[(Option[Long], Option[String])], Option[Long], P)] =
+      for {
+        nulls <- Gen.oneOf(0, 1, 3)
+        n <- Gen.choose(0, 12)
+        rows <- Gen.listOfN(n, Gen.zip(
+          Gen.frequency(nulls -> Gen.const(None), 4 -> longs.map(Some(_))),
+          Gen.frequency(nulls -> Gen.const(None), 4 -> strings.map(Some(_)))))
+        dflt <- Gen.option(longs)
+        p <- pred(3)
+      } yield (rows, dflt, p)
+
+    val nameToId = Map("k" -> 1, "s" -> 2, "a" -> 3)
+  }
+
+  property("every row's SQL outcome is in the file verdict outcomes(f, p)") =
+    Prop.forAll(Verdict.fileCase) { case (rows, dflt, p) =>
+      import graft.sources.GraftLakeStats
+      import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+      import org.apache.spark.sql.types.{LongType, StringType}
+      val f = statsOf(rows.map { case (k, s) => new GenericInternalRow(
+        Array[Any](k.map(Long.box).orNull,
+          s.map(UTF8String.fromString).orNull))
+        : org.apache.spark.sql.catalyst.InternalRow },
+        Seq(1, 2), Seq(LongType, StringType))
+      val defaults: Map[Int, Any] = dflt.map(d => 3 -> (d: Any)).toMap
+      val o = GraftLakeStats.outcomes(f, p.v2, Verdict.nameToId, defaults)
+      rows.forall { case (k, s) =>
+        (o & (p.sql((k, s, dflt)) match {
+          case Some(true) => GraftLakeStats.True
+          case Some(false) => GraftLakeStats.False
+          case None => GraftLakeStats.Unknown
+        })) != 0
+      }
+    }
+
   property("DV reader skips deleted positions and _pos stays original") =
     Prop.forAll(rowsAndDeletes) { case (n, dead) =>
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
