@@ -88,15 +88,13 @@ object MaintBench {
           .selectExpr("o_orderkey", "o_custkey", "o_orderstatus",
             "CAST(-1.0 AS DOUBLE) AS o_totalprice")
           .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
-        val q = spark.readStream.schema(spark.table(te).schema)
+        graft.streaming.StreamingOps.drain(spark, spark.readStream
+          .schema(spark.table(te).schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(land.getAbsolutePath)
           .writeStream
-          .option("checkpointLocation", chk.getAbsolutePath)
-          .option("graft.upsert.key", "o_orderkey")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .toTable(te)
-        graft.streaming.StreamingOps.awaitDrained(q)
+          .option("graft.upsert.key", "o_orderkey"), chk.getAbsolutePath)(
+          _.toTable(te))
       }
     }
     require(table().eqDeletes.size == 3, "three unresolved epochs")
@@ -135,7 +133,7 @@ object MaintBench {
       s"eq-debt leg state drifted: $eqdAfter vs $eqdExpected")
     spark.sql(s"DROP TABLE IF EXISTS $te")
 
-    // ---- cross-writer auto-rebase at scale (round 19) ----
+    // ---- cross-writer auto-rebase at scale ----
     // Two catalog instances (separate registries — the cross-driver
     // shape) share one durable warehouse at 12M rows. The claims this
     // leg prices: (a) a second driver's REOPEN restores from the log in

@@ -58,6 +58,7 @@ object Session {
   /** Run a streaming drain, its `start()` through `awaitDrained`, without
     * two fixed driver costs that every micro-batch otherwise pays on the
     * stream execution thread. Neither changes a plan, a batch or a result.
+    * [[graft.streaming.StreamingOps.drain]] runs every drain inside it.
     *
     *  - Hadoop-conf broadcasts. `Configuration.write` gzips each key's
     *    property-source list with its own `Deflater`; over the session's

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Query, Session}
+import graft.Query
 import graft.functions.DotProduct
 import graft.sources.Tables
 
@@ -1016,7 +1016,6 @@ object Dedup {
 
   private[graft] def streamMinhashDedupWaves(spark: SparkSession,
       sfDir: String, filesPerTrigger: Int): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val chunks = stagedAdmissionChunks(spark, sfDir)
     // run-unique scratch (index + candidate results), reaped on JVM exit
     val scratch =
@@ -1033,55 +1032,50 @@ object Dedup {
     // batch exactly as if the waves had arrived one trigger apart:
     // earlier-wave docs probe the index only; later-wave docs probe
     // the index AND the batch's earlier waves (seq-ordered self-join).
-    Session.withLeanDrain(spark) {
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger.toString)
-        .parquet(chunks.getAbsolutePath)
-        .select(col("*"),
-          col("_metadata.file_modification_time").as("arrival_ts"))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val s = b.sparkSession
-          val seqs = b.select(col("doc_id"), col("arrival_ts"))
-          // localCheckpoint: the band pipeline computes ONCE and feeds
-          // the self-join, the index probe, and the index append
-          // (measured against a write-then-read-back two-job shape —
-          // the checkpoint wins at this batch size)
-          val bands = bandsOf(signatures(shinglesOf(b.drop("arrival_ts"))))
-            .join(broadcast(seqs), Seq("doc_id"))
-            .localCheckpoint(true)
-          val hasIndex = Option(idx.listFiles())
-            .exists(_.exists(_.getName.endsWith(".parquet")))
-          // cross-wave pairs WITHIN the batch, ordered by arrival; the
-          // batch is broadcast-sized by definition, so neither side of
-          // its self-join shuffles
-          val intra = broadcast(bands.as("x"))
-            .join(bands.as("y"), col("x.bucket") === col("y.bucket")
-              && col("x.arrival_ts") < col("y.arrival_ts"))
-            .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-          // the BATCH side broadcasts against the accumulated index: a
-          // micro-batch is tiny relative to the index by construction,
-          // so the index — the big side, bucket-partitioned at scale —
-          // never shuffles; candidate rows stay raw here (band
-          // collisions duplicate pairs) and dedup ONCE after the drain
-          // instead of paying a distinct shuffle per trigger
-          val probed = if (hasIndex)
-            intra.unionByName(broadcast(bands)
-              .join(s.read.parquet(idx.getAbsolutePath)
-                  .select(col("doc_id").as("earlier"), col("bucket")),
-                Seq("bucket"))
-              .select(col("earlier").as("i"), col("doc_id").as("j")))
-            else intra
-          probed.write.mode("append").parquet(found.getAbsolutePath)
-          bands.drop("arrival_ts")
-            .write.mode("append").parquet(idx.getAbsolutePath)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      graft.streaming.StreamingOps.awaitDrained(q)
-    }
+    graft.streaming.StreamingOps.drain(spark, spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger.toString)
+      .parquet(chunks.getAbsolutePath)
+      .select(col("*"),
+        col("_metadata.file_modification_time").as("arrival_ts"))
+      .writeStream
+      .outputMode("append")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val s = b.sparkSession
+        val seqs = b.select(col("doc_id"), col("arrival_ts"))
+        // localCheckpoint: the band pipeline computes ONCE and feeds
+        // the self-join, the index probe, and the index append
+        // (measured against a write-then-read-back two-job shape —
+        // the checkpoint wins at this batch size)
+        val bands = bandsOf(signatures(shinglesOf(b.drop("arrival_ts"))))
+          .join(broadcast(seqs), Seq("doc_id"))
+          .localCheckpoint(true)
+        val hasIndex = Option(idx.listFiles())
+          .exists(_.exists(_.getName.endsWith(".parquet")))
+        // cross-wave pairs WITHIN the batch, ordered by arrival; the
+        // batch is broadcast-sized by definition, so neither side of
+        // its self-join shuffles
+        val intra = broadcast(bands.as("x"))
+          .join(bands.as("y"), col("x.bucket") === col("y.bucket")
+            && col("x.arrival_ts") < col("y.arrival_ts"))
+          .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
+        // the BATCH side broadcasts against the accumulated index: a
+        // micro-batch is tiny relative to the index by construction,
+        // so the index — the big side, bucket-partitioned at scale —
+        // never shuffles; candidate rows stay raw here (band
+        // collisions duplicate pairs) and dedup ONCE after the drain
+        // instead of paying a distinct shuffle per trigger
+        val probed = if (hasIndex)
+          intra.unionByName(broadcast(bands)
+            .join(s.read.parquet(idx.getAbsolutePath)
+                .select(col("doc_id").as("earlier"), col("bucket")),
+              Seq("bucket"))
+            .select(col("earlier").as("i"), col("doc_id").as("j")))
+          else intra
+        probed.write.mode("append").parquet(found.getAbsolutePath)
+        bands.drop("arrival_ts")
+          .write.mode("append").parquet(idx.getAbsolutePath)
+      })()
     val hasCands = Option(found.listFiles())
       .exists(_.exists(_.getName.endsWith(".parquet")))
     if (!hasCands)

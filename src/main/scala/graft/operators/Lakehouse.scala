@@ -12,6 +12,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.{Query, Session}
 import graft.functions.Exact._
 import graft.sources.{GraftParquetIO, Tables}
+import graft.streaming.StreamingOps
 
 /** Lakehouse table semantics over RAW parquet + a manifest — the two
   * capabilities a table format adds that plain directory scans cannot
@@ -297,7 +298,7 @@ object Lakehouse {
     * (`ref_upsert_merge` shares the oracle). Same fixture slices, so the
     * two paths are directly comparable.
     *
-    * Granularity is FILE-GROUP, not whole-table (round-10): the table's
+    * Granularity is FILE-GROUP, not whole-table: the table's
     * committed state is a set of files, the operation's scan is
     * runtime-group-filtered on the `_file` metadata column, and the
     * ReplaceData commit rewrites only the groups holding matched rows —
@@ -1194,20 +1195,14 @@ object Lakehouse {
       tblProps("graft.mode" -> "merge-on-read"))
     val chk = GraftParquetIO.scratchDir("graft_scdf_chk", sfDir)
     val sink = GraftParquetIO.scratchDir("graft_scdf_sink", sfDir)
-    def drain(): Unit = Session.withLeanDrain(spark, chk.getAbsolutePath) {
-      val q = spark.readStream
-        .option("graft.stream.startingVersion", "0")
-        .table(s"$t.changes")
-        .select(col("_change_type").as("change_type"),
-          col("_commit_version").as("commit_step"),
-          col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .writeStream.format("parquet")
-        .option("path", sink.getAbsolutePath)
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      graft.streaming.StreamingOps.awaitDrained(q)
-    }
+    def drain(): Unit = StreamingOps.drain(spark, spark.readStream
+      .option("graft.stream.startingVersion", "0")
+      .table(s"$t.changes")
+      .select(col("_change_type").as("change_type"),
+        col("_commit_version").as("commit_step"),
+        col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+      .writeStream.format("parquet")
+      .option("path", sink.getAbsolutePath), chk.getAbsolutePath)()
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -1308,16 +1303,11 @@ object Lakehouse {
       .select(col("event_id"), col("event_type"), col("user_id"),
         col("value"))
     val schema = base.schema
-    def drain(): Unit = Session.withLeanDrain(spark, chk.getAbsolutePath) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(land.getAbsolutePath)
-        .writeStream
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable(t)
-      graft.streaming.StreamingOps.awaitDrained(q)
-    }
+    def drain(): Unit = StreamingOps.drain(spark, spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(land.getAbsolutePath)
+      .writeStream, chk.getAbsolutePath)(_.toTable(t))
     // wave 1: the corpus lands as 3 files -> 3 exactly-once epochs
     base.repartition(3).write.mode("append").parquet(land.getAbsolutePath)
     drain()
@@ -1363,18 +1353,13 @@ object Lakehouse {
     base.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .repartition(3).write.mode("append").parquet(land.getAbsolutePath)
-    Session.withLeanDrain(spark, chk.getAbsolutePath) {
-      val q = spark.readStream
-        .schema(spark.table(t).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(land.getAbsolutePath)
-        .writeStream
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .option("graft.upsert.key", "o_orderkey")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable(t)
-      graft.streaming.StreamingOps.awaitDrained(q)
-    }
+    StreamingOps.drain(spark, spark.readStream
+      .schema(spark.table(t).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(land.getAbsolutePath)
+      .writeStream
+      .option("graft.upsert.key", "o_orderkey"), chk.getAbsolutePath)(
+      _.toTable(t))
     releasing(spark, spark.table(t).orderBy("o_orderkey"), t)
   }
 
@@ -1407,17 +1392,12 @@ object Lakehouse {
     base.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
-    Session.withLeanDrain(spark, chk.getAbsolutePath) {
-      val q = spark.readStream
-        .schema(spark.table(t).schema)
-        .parquet(land.getAbsolutePath)
-        .writeStream
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .option("graft.upsert.key", "o_orderkey")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable(t)
-      graft.streaming.StreamingOps.awaitDrained(q)
-    }
+    StreamingOps.drain(spark, spark.readStream
+      .schema(spark.table(t).schema)
+      .parquet(land.getAbsolutePath)
+      .writeStream
+      .option("graft.upsert.key", "o_orderkey"), chk.getAbsolutePath)(
+      _.toTable(t))
     require(table.eqDeletes.nonEmpty,
       "the feed must be read UNDER the unresolved equality delete")
     releasing(spark, spark.read

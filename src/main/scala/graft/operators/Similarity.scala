@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.{Query, Session}
+import graft.Query
 import graft.functions.DotProduct
 import graft.sources.Tables
 
@@ -633,23 +632,18 @@ object Similarity {
       when(DotProduct(col("e"), typedLit(multiPlanes(k))) > 0, lit(1L << k))
         .otherwise(lit(0L))).reduce(_ + _)
     val schema = spark.read.parquet(chunks.getAbsolutePath).schema
-    Session.withLeanDrain(spark) {
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(chunks.getAbsolutePath)
-        .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-        .withColumn("bucket", signature)
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").partitionBy("bucket")
-            .parquet(idx.getAbsolutePath)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      graft.streaming.StreamingOps.awaitDrained(q)
-    }
+    graft.streaming.StreamingOps.drain(spark, spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(chunks.getAbsolutePath)
+      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
+      .withColumn("bucket", signature)
+      .writeStream
+      .outputMode("append")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").partitionBy("bucket")
+          .parquet(idx.getAbsolutePath)
+      })()
     // probe prep: vector 0's embedding + its multiprobe keys (driver-side
     // scalars, like the IVF probe's centroid ids)
     val p0 = Tables(spark, sfDir, "embeddings")

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.RunStateStores
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampNTZType}
 
 import graft.{Query, Session}
@@ -36,6 +36,50 @@ case class SessionRow(
     user_id: Long, session_seq: Long, n_events: Long,
     session_start: Instant, session_end: Instant)
 
+/** The 30-minute gap split all three hand-rolled sessionizers share
+  * (`stream_sessionize_stateful`, `_incremental` and `_tws`), the
+  * batch `win_sessionize` rule: an event at least 30 minutes after its
+  * predecessor opens a new session. Pure, so one micro-batch at a time
+  * or the whole history at once split the same way.
+  */
+object SessionSplit {
+
+  val GapMicros: Long = 30L * 60 * 1000000
+
+  def micros(i: Instant): Long = i.getEpochSecond * 1000000 + i.getNano / 1000
+
+  /** Event time (ms) past which no non-late event can extend `o`: a
+    * watermark beyond it proves the session closed. */
+  def dueMs(o: OpenSession): Long = micros(o.end) / 1000 + GapMicros / 1000 + 1
+
+  /** Split one user's `events` (any order: they are ordered by ts, ties
+    * by event_id) continuing the open `tail`, numbering after `emitted`
+    * sessions. Returns the sessions the batch closes and the new tail. */
+  def apply(uid: Long, tail: Option[OpenSession], emitted: Long,
+      events: Iterator[StreamEvent]): (Seq[SessionRow], Option[OpenSession]) = {
+    val out = Seq.newBuilder[SessionRow]
+    var seq = emitted
+    var cur = tail
+    events.toArray.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
+      cur = cur match {
+        case Some(o) if micros(e.ts) - micros(o.end) < GapMicros =>
+          Some(OpenSession(o.start, e.ts, o.n + 1))
+        case open =>
+          open.foreach { o =>
+            seq += 1; out += SessionRow(uid, seq, o.n, o.start, o.end)
+          }
+          Some(OpenSession(e.ts, e.ts, 1L))
+      }
+    }
+    (out.result(), cur)
+  }
+
+  /** The row that closes `tail` as session `emitted + 1`. */
+  def flush(uid: Long, emitted: Long,
+      tail: Option[OpenSession]): Option[SessionRow] =
+    tail.map(o => SessionRow(uid, emitted + 1, o.n, o.start, o.end))
+}
+
 /** Structured Streaming twins of the batch event-time operators: the same
   * tumbling-window aggregation declared over `readStream`, driven to
   * completion with Trigger.AvailableNow against the static events parquet.
@@ -54,42 +98,67 @@ object StreamingOps {
 
   private val sinkId = new AtomicLong(0)
 
-  /** Run `body`, one drain, with `spark.sql.shuffle.partitions` lowered
-    * for the streaming query it starts, inside [[Session.withLeanDrain]]
-    * (every drain here checkpoints under the local temp dir). Stateful
-    * streaming partitioning is sticky (pinned by the first checkpoint)
-    * and each micro-batch COMMITS every state store partition, so the
-    * partition count must track state volume, not CPU count: at harness
-    * scale 2 partitions hold the state comfortably and cut per-batch
-    * store-commit fan-out. Two interleaved A/Bs at sf0.1 over the 5
-    * heaviest streaming queries: 8→4 partitions 41.3/40.8 → 34.7/34.9 s,
-    * then 4→2 a further ~6% (41.3/39.8 → 39.1/36.9 s). The 2 is a
-    * HARNESS-SCALE constant, not a formula: at larger sf (or in
+  /** The one AvailableNow drain: every streaming query in the engine
+    * runs through it. It sets `Trigger.AvailableNow`, sets `checkpoint`
+    * as the query's checkpoint location when one is given, runs `start`
+    * (`start()`, or `toTable(t)` for a lake sink) inside
+    * [[Session.withLeanDrain]], and returns the query once
+    * [[awaitDrained]] has seen it ingest rows.
+    *
+    * `partitions` caps `spark.sql.shuffle.partitions` for the query.
+    * Stateful streaming partitioning is sticky (pinned by the first
+    * checkpoint) and each micro-batch COMMITS every state store
+    * partition, so the partition count must track state volume, not CPU
+    * count: at harness scale 2 partitions hold the state comfortably and
+    * cut per-batch store-commit fan-out. Two interleaved A/Bs at sf0.1
+    * over the 5 heaviest streaming queries: 8→4 partitions 41.3/40.8 →
+    * 34.7/34.9 s, then 4→2 a further ~6% (41.3/39.8 → 39.1/36.9 s). The
+    * 2 is a HARNESS-SCALE constant, not a formula: at larger sf (or in
     * production) the same measurement lands higher, because each store
     * partition's state must fit and compact comfortably. A deployment
     * sizes it once per query at first deploy (it cannot change without a
-    * new checkpoint), keyed to peak in-flight state. Batch queries in the
-    * same session are unaffected: the conf is restored before the
-    * post-stream batch read.
-    *
-    * `queryCap` is that per-query sizing: the stream-stream joins have
-    * the smallest in-flight state in the registry, so they take 1
-    * (interleaved A/B, min-of-2 at sf0.1: full_outer 9.17→7.03, join
-    * 3.82→2.54, semi 6.72→5.82, left_outer 6.59→6.05; the
+    * new checkpoint), keyed to peak in-flight state. The stream-stream
+    * joins have the smallest in-flight state in the registry, so they
+    * take 1 (interleaved A/B, min-of-2 at sf0.1: full_outer 9.17→7.03,
+    * join 3.82→2.54, semi 6.72→5.82, left_outer 6.59→6.05; the
     * aggregation-shaped queries measured WORSE at 1 and keep 2). The cap
     * never RAISES the count: a session already below the state-volume
-    * target must not be lifted to it (that would ADD fan-out).
+    * target must not be lifted to it (that would ADD fan-out). Batch
+    * queries in the same session are unaffected: the conf is restored
+    * before the drain returns. Without a cap the session's count stands.
     */
-  private def withStreamingPartitions[A](spark: SparkSession,
-      queryCap: Int = 2)(body: => A): A = {
+  private[graft] def drain[T](spark: SparkSession,
+      writer: => DataStreamWriter[T], checkpoint: String = "",
+      partitions: Option[Int] = None)(
+      start: DataStreamWriter[T] => StreamingQuery = (w: DataStreamWriter[T]) =>
+        w.start()): StreamingQuery = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val target = math.min(queryCap,
-      scala.util.Try(prev.toInt).getOrElse(queryCap))
-    Session.withLeanDrain(spark) {
-      Session.withConfs(spark, key -> target.toString)(body)
+    val cap = partitions.map(p => key ->
+      math.min(p, scala.util.Try(spark.conf.get(key).toInt).getOrElse(p))
+        .toString)
+    Session.withLeanDrain(spark, checkpoint) {
+      Session.withConfs(spark, cap.toSeq: _*) {
+        val w = writer.trigger(Trigger.AvailableNow())
+        if (checkpoint.nonEmpty) w.option("checkpointLocation", checkpoint)
+        val q = start(w)
+        awaitDrained(q)
+        q
+      }
     }
   }
+
+  /** Drain `df` in output `mode` into a fresh memory sink named
+    * `graft_stream_<sink>_<n>`, under the partition cap (see [[drain]]). */
+  private def memoryDrain(df: DataFrame, mode: String, sink: String,
+      partitions: Int): StreamingQuery =
+    drain(df.sparkSession, df.writeStream.outputMode(mode).format("memory")
+      .queryName(s"graft_stream_${sink}_${sinkId.incrementAndGet()}"),
+      partitions = Some(partitions))()
+
+  /** [[memoryDrain]], read back as a batch relation. */
+  private def toMemory(df: DataFrame, mode: String, sink: String,
+      partitions: Int = 2): DataFrame =
+    df.sparkSession.table(memoryDrain(df, mode, sink, partitions).name)
 
   /** Await an AvailableNow drain, release its state stores, and prove it
     * ingested at least one row.
@@ -113,8 +182,7 @@ object StreamingOps {
     * site, batch-count independent (`numInputRows` summed over the run's
     * progress events).
     */
-  private[graft] def awaitDrained(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private[graft] def awaitDrained(q: StreamingQuery): Unit = {
     // an interrupted wait leaves the run going: its stores are in use
     try q.awaitTermination()
     finally if (!q.isActive) RunStateStores.unload(q.runId)
@@ -185,17 +253,7 @@ object StreamingOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    val name = s"graft_stream_tumbling_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(agg, "complete", "tumbling")
       .select(
         col("window.start").cast(TimestampNTZType).as("wstart"),
         col("window.end").cast(TimestampNTZType).as("wend"),
@@ -224,55 +282,22 @@ object StreamingOps {
     */
   def sessionizeStateful(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val events = eventStream(spark, sfDir)
+    val sessions = eventStream(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("ts"))
       .as[StreamEvent]
-
-    val gapMicros = 30L * 60 * 1000000
-
-    val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionizerState, SessionRow](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, evs: Iterator[StreamEvent],
          state: GroupState[SessionizerState]) =>
           val base = state.getOption.map(_.sessionsEmitted).getOrElse(0L)
-          // state functions receive events unordered — order within the
-          // batch before gap detection (micros-precision tie-break on id)
-          val sorted = evs.toArray.sortBy(e =>
-            (e.ts.getEpochSecond * 1000000 + e.ts.getNano / 1000, e.event_id))
-          val out = Seq.newBuilder[SessionRow]
-          var seq = base
-          var start: StreamEvent = null
-          var last: StreamEvent = null
-          var n = 0L
-          def micros(i: Instant): Long =
-            i.getEpochSecond * 1000000 + i.getNano / 1000
-          def close(): Unit = if (start != null) {
-            seq += 1
-            out += SessionRow(uid, seq, n, start.ts, last.ts)
-          }
-          sorted.foreach { e =>
-            if (start == null || micros(e.ts) - micros(last.ts) >= gapMicros) {
-              close(); start = e; last = e; n = 1L
-            } else { last = e; n += 1L }
-          }
-          close()
-          state.update(SessionizerState(seq))
-          out.result().iterator
+          val (closed, tail) = SessionSplit(uid, None, base, evs)
+          val out = closed ++ SessionSplit.flush(uid, base + closed.size, tail)
+          state.update(SessionizerState(base + out.size))
+          out.iterator
       }
 
-    val name = s"graft_stream_sessionize_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = sessions.toDF().writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(sessions.toDF(), "append", "sessionize")
       .select(col("user_id"), col("session_seq"), col("n_events"),
         col("session_start").cast(TimestampNTZType).as("session_start"),
         col("session_end").cast(TimestampNTZType).as("session_end"))
@@ -313,17 +338,7 @@ object StreamingOps {
     def src() = eventStream(spark, sfDir)
     val doubled = src().union(src())
     val deduped = doubled.dropDuplicates("event_id")
-    val name = s"graft_stream_dedup_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(deduped, "append", "dedup")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
       .orderBy("event_type")
@@ -357,26 +372,21 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     val upserted =
       new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]
-    withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // keyed upsert: update-mode delivers only changed groups.
-          // collect() is bounded by group cardinality, NOT stream size —
-          // enforce that before it can become a driver-memory trap
-          val rows = batch.collect()
-          require(rows.length <= 1000,
-            s"updateModeCounts serving-map stand-in saw ${rows.length} " +
-              "changed groups in one batch; this driver-side sink is for " +
-              "low-cardinality keys only — use a keyed external store")
-          rows.foreach(r =>
-            upserted.put(r.getString(0),
-              (r.getAs[Long]("n"), r.getAs[Double]("sum_value"))))
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
+    drain(spark, agg.writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // keyed upsert: update-mode delivers only changed groups.
+        // collect() is bounded by group cardinality, NOT stream size —
+        // enforce that before it can become a driver-memory trap
+        val rows = batch.collect()
+        require(rows.length <= 1000,
+          s"updateModeCounts serving-map stand-in saw ${rows.length} " +
+            "changed groups in one batch; this driver-side sink is for " +
+            "low-cardinality keys only — use a keyed external store")
+        rows.foreach(r =>
+          upserted.put(r.getString(0),
+            (r.getAs[Long]("n"), r.getAs[Double]("sum_value"))))
+      }, partitions = Some(2))()
     import scala.jdk.CollectionConverters._
     import spark.implicits._
     upserted.asScala.toSeq
@@ -412,26 +422,21 @@ object StreamingOps {
     val agg = eventStream(spark, sfDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val view = s"graft_merge_sink_batch_$id"
-          batch.createOrReplaceTempView(view)
-          batch.sparkSession.sql(
-            s"""MERGE INTO $serving t USING $view b
-               |ON t.event_type = b.event_type
-               |WHEN MATCHED THEN UPDATE SET
-               |  n = b.n, sum_value = b.sum_value
-               |WHEN NOT MATCHED THEN INSERT (event_type, n, sum_value)
-               |  VALUES (b.event_type, b.n, b.sum_value)
-               |""".stripMargin)
-          () // foreachBatch wants Unit; sql() returns the command's frame
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
+    drain(spark, agg.writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val view = s"graft_merge_sink_batch_$id"
+        batch.createOrReplaceTempView(view)
+        batch.sparkSession.sql(
+          s"""MERGE INTO $serving t USING $view b
+             |ON t.event_type = b.event_type
+             |WHEN MATCHED THEN UPDATE SET
+             |  n = b.n, sum_value = b.sum_value
+             |WHEN NOT MATCHED THEN INSERT (event_type, n, sum_value)
+             |  VALUES (b.event_type, b.n, b.sum_value)
+             |""".stripMargin)
+        () // foreachBatch wants Unit; sql() returns the command's frame
+      }, partitions = Some(2))()
     graft.operators.Lakehouse.releasing(spark,
       spark.table(serving).orderBy("event_type"), serving)
   }
@@ -449,17 +454,7 @@ object StreamingOps {
     val agg = ev.join(broadcast(cust), ev("user_id") === cust("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    val name = s"graft_stream_enrich_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name).orderBy("c_mktsegment")
+    toMemory(agg, "complete", "enrich").orderBy("c_mktsegment")
   }
 
   private val enrichStaticOracle =
@@ -481,17 +476,7 @@ object StreamingOps {
     // twice — at a 100 TB landing zone the doubled listing is real money
     val src = eventStream(spark, sfDir)
     val joined = signupPurchaseJoin(src, "inner", keepSentinels = false)
-    val name = s"graft_stream_ssjoin_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark, queryCap = 1) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(joined, "append", "ssjoin", partitions = 1)
       .select(col("signup_id"), col("purchase_id"),
         col("s_user").as("user_id"),
         col("s_ts").cast(TimestampNTZType).as("signup_ts"),
@@ -543,7 +528,7 @@ object StreamingOps {
     * drains elsewhere never exercise that). Range partitioning makes file
     * order ≈ event-time order, so watermarks advance monotonically batch
     * over batch. FOUR chunks, not more: cross-batch state carry is proven
-    * by ANY multi-batch split, and the round-8 sf1 sweep measured the
+    * by ANY multi-batch split, and an sf1 scale sweep measured the
     * chunked queries' cost as almost pure per-micro-batch machinery
     * (wall-time exponents ≤0.11 in data size) — so batch count IS the
     * family's fixed cost, and 4 is the smallest count that still gives
@@ -573,13 +558,17 @@ object StreamingOps {
         }
     }
 
-  /** One-file-per-trigger chunked source over the staged ts-range files
-    * (ts arrives TIMESTAMP_NTZ from [[Tables]]' normalization; cast to LTZ
-    * for watermarking — session is UTC, so wall-clock math is unchanged).
+  /** One-file-per-trigger chunked source over the staged ts-range files,
+    * with the two watermark sentinels after them when `sentinels` (see
+    * [[chunkedEventsWithSentinelDir]]). ts arrives TIMESTAMP_NTZ from
+    * [[Tables]]' normalization; cast to LTZ for watermarking — session is
+    * UTC, so wall-clock math is unchanged.
     */
-  private[graft] def chunkedSource(
-      spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = chunkedEventsDir(spark, sfDir)
+  private[graft] def chunkedSource(spark: SparkSession, sfDir: String,
+      sentinels: Boolean = false): DataFrame = {
+    val dir =
+      if (sentinels) chunkedEventsWithSentinelDir(spark, sfDir)
+      else chunkedEventsDir(spark, sfDir)
     val schema = spark.read.parquet(dir.getAbsolutePath).schema
     spark.readStream
       .schema(schema)
@@ -673,8 +662,6 @@ object StreamingOps {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimeMode, TimerValues, TTLConfig, ValueState}
 
-    private val gapMs = 30L * 60 * 1000
-
     @transient private var open: ValueState[OpenSession] = _
     @transient private var emitted: ValueState[Long] = _
 
@@ -685,35 +672,21 @@ object StreamingOps {
         "emitted", Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    private def micros(i: Instant): Long =
-      i.getEpochSecond * 1000000 + i.getNano / 1000
-
-    private def dueMsOf(o: OpenSession): Long =
-      micros(o.end) / 1000 + gapMs + 1
+    private def emittedSoFar: Long = if (emitted.exists()) emitted.get() else 0L
 
     override def handleInputRows(
         uid: Long, rows: Iterator[StreamEvent],
         timerValues: TimerValues): Iterator[SessionRow] = {
-      val sorted = rows.toArray.sortBy(e => (micros(e.ts), e.event_id))
-      if (sorted.isEmpty) return Iterator.empty
-      val out = Seq.newBuilder[SessionRow]
-      var seq = if (emitted.exists()) emitted.get() else 0L
-      var cur: OpenSession =
-        if (open.exists()) open.get() else null
-      def close(): Unit = {
-        seq += 1; out += SessionRow(uid, seq, cur.n, cur.start, cur.end)
-      }
-      sorted.foreach { e =>
-        if (cur == null) cur = OpenSession(e.ts, e.ts, 1L)
-        else if (micros(e.ts) - micros(cur.end) >= gapMicros) {
-          close(); cur = OpenSession(e.ts, e.ts, 1L)
-        } else cur = OpenSession(cur.start, e.ts, cur.n + 1)
-      }
+      if (!rows.hasNext) return Iterator.empty
+      val prior = emittedSoFar
+      val (closed, tail) = SessionSplit(uid,
+        Option.when(open.exists())(open.get()), prior, rows)
+      val cur = tail.get // a non-empty batch always leaves a tail open
       open.update(cur)
-      emitted.update(seq)
-      getHandle.registerTimer(
-        math.max(dueMsOf(cur), timerValues.getCurrentWatermarkInMs() + 1))
-      out.result().iterator
+      emitted.update(prior + closed.size)
+      getHandle.registerTimer(math.max(SessionSplit.dueMs(cur),
+        timerValues.getCurrentWatermarkInMs() + 1))
+      closed.iterator
     }
 
     override def handleExpiredTimer(
@@ -723,14 +696,13 @@ object StreamingOps {
       val o = open.get()
       // stale timer from before the session grew: the CURRENT due time
       // moved later — ignore, the fresher timer is still registered
-      if (expiredTimerInfo.getExpiryTimeInMs < dueMsOf(o)) return Iterator.empty
-      val seq = (if (emitted.exists()) emitted.get() else 0L) + 1
-      emitted.update(seq)
+      if (expiredTimerInfo.getExpiryTimeInMs < SessionSplit.dueMs(o))
+        return Iterator.empty
+      val prior = emittedSoFar
+      emitted.update(prior + 1)
       open.clear()
-      Iterator.single(SessionRow(uid, seq, o.n, o.start, o.end))
+      SessionSplit.flush(uid, prior, Some(o)).iterator
     }
-
-    private val gapMicros = 30L * 60 * 1000000
   }
 
   /** [[sessionizeIncremental]] on the transformWithState API (see
@@ -741,36 +713,19 @@ object StreamingOps {
   def sessionizeTws(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
-    val dir = chunkedEventsWithSentinelDir(spark, sfDir)
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val sessions = chunkedSource(spark, sfDir, sentinels = true)
       .withWatermark("ts", "1 hour")
       .select(col("user_id"), col("event_id"), col("ts")).as[StreamEvent]
-    val sessions = stream
       .groupByKey(_.user_id)
       .transformWithState(new TwsSessionizer,
         TimeMode.EventTime(), OutputMode.Append())
-    val name = s"graft_stream_sess_tws_${sinkId.incrementAndGet()}"
     // transformWithState requires the RocksDB state store
     Session.withConfs(spark,
         "spark.sql.streaming.stateStore.providerClass" ->
           ("org.apache.spark.sql.execution.streaming.state." +
             "RocksDBStateStoreProvider")) {
-      withStreamingPartitions(spark, queryCap = 1) {
-        val q = sessions.toDF().writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitDrained(q)
-      }
+      toMemory(sessions.toDF(), "append", "sess_tws", partitions = 1)
     }
-    spark.table(name)
       .filter(col("user_id") >= 0) // drop the sentinel user's sessions
       .select(col("user_id"), col("session_seq"), col("n_events"),
         col("session_start").cast(TimestampNTZType).as("session_start"),
@@ -791,27 +746,11 @@ object StreamingOps {
     * stall every window still open at the last real batch).
     */
   def tumblingAppendStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = chunkedEventsWithSentinelDir(spark, sfDir)
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val agg = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val agg = chunkedSource(spark, sfDir, sentinels = true)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    val name = s"graft_stream_tumbling_app_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(agg, "append", "tumbling_app")
       .filter(col("event_type") =!= "sentinel")
       .select(
         col("window.start").cast(TimestampNTZType).as("wstart"),
@@ -834,17 +773,7 @@ object StreamingOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    val name = s"graft_stream_sliding_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(agg, "complete", "sliding")
       .select(
         col("window.start").cast(TimestampNTZType).as("wstart"),
         col("window.end").cast(TimestampNTZType).as("wend"),
@@ -881,13 +810,7 @@ object StreamingOps {
     * sentinel rows drop after the sink.
     */
   def windowedRollupStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = chunkedEventsWithSentinelDir(spark, sfDir)
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val tenMin = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val tenMin = chunkedSource(spark, sfDir, sentinels = true)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n10"),
@@ -898,17 +821,7 @@ object StreamingOps {
       .agg(sum(col("n10")).as("n"),
         sum(col("sv_dec")).cast(DoubleType).as("sum_value"),
         count(lit(1)).as("n_subwindows"))
-    val name = s"graft_stream_rollup_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = hourly.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(hourly, "append", "rollup")
       .filter(col("event_type") =!= "sentinel")
       .select(
         col("window.start").cast(TimestampNTZType).as("wstart"),
@@ -942,8 +855,6 @@ object StreamingOps {
     */
   def sessionizeIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = chunkedEventsWithSentinelDir(spark, sfDir)
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
     // NO pre-watermark sentinel filter: `user_id >= 0` doesn't reference
     // the watermark column, so Catalyst pushes it through the
     // EventTimeWatermark node into the parquet scan, where row-group
@@ -952,75 +863,38 @@ object StreamingOps {
     // final tails never time out (measured: 21 sessions stuck in state).
     // The sentinel user sessionizes like anyone else; its output rows are
     // dropped after the sink.
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val sessions = chunkedSource(spark, sfDir, sentinels = true)
       .withWatermark("ts", "1 hour")
       .select(col("user_id"), col("event_id"), col("ts")).as[StreamEvent]
-
-    val gapMicros = 30L * 60 * 1000000
-
-    val sessions = stream
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[IncrSessionState, SessionRow](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, evs: Iterator[StreamEvent],
          state: GroupState[IncrSessionState]) =>
-          def micros(i: Instant): Long =
-            i.getEpochSecond * 1000000 + i.getNano / 1000
           val prev = state.getOption.getOrElse(IncrSessionState(0L, None))
           if (state.hasTimedOut) {
             // watermark passed end + gap: the tail can no longer grow
-            val out = prev.open.map(o =>
-              SessionRow(uid, prev.sessionsEmitted + 1, o.n, o.start, o.end))
+            val out = SessionSplit.flush(uid, prev.sessionsEmitted, prev.open)
             state.update(
               IncrSessionState(prev.sessionsEmitted + out.size, None))
             out.iterator
           } else {
-            val sorted = evs.toArray
-              .sortBy(e => (micros(e.ts), e.event_id))
-            val out = Seq.newBuilder[SessionRow]
-            var seq = prev.sessionsEmitted
-            var start: Instant = null
-            var end: Instant = null
-            var n = 0L
-            prev.open.foreach { o => start = o.start; end = o.end; n = o.n }
-            def close(): Unit = {
-              seq += 1; out += SessionRow(uid, seq, n, start, end)
-            }
-            sorted.foreach { e =>
-              if (start == null) { start = e.ts; end = e.ts; n = 1L }
-              else if (micros(e.ts) - micros(end) >= gapMicros) {
-                close(); start = e.ts; end = e.ts; n = 1L
-              } else { end = e.ts; n += 1L }
-            }
-            if (start != null) {
+            val (closed, tail) =
+              SessionSplit(uid, prev.open, prev.sessionsEmitted, evs)
+            tail.foreach { o =>
               state.update(
-                IncrSessionState(seq, Some(OpenSession(start, end, n))))
+                IncrSessionState(prev.sessionsEmitted + closed.size, tail))
               // flush the tail once the watermark passes its close window;
               // clamp above the current watermark (setting a timeout at or
               // below it is rejected)
-              val dueMs = micros(end) / 1000 + 30L * 60 * 1000 + 1
-              state.setTimeoutTimestamp(
-                math.max(dueMs, state.getCurrentWatermarkMs() + 1))
+              state.setTimeoutTimestamp(math.max(SessionSplit.dueMs(o),
+                state.getCurrentWatermarkMs() + 1))
             }
-            out.result().iterator
+            closed.iterator
           }
       }
 
-    val name = s"graft_stream_sess_incr_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = sessions.toDF().writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(sessions.toDF(), "append", "sess_incr")
       .filter(col("user_id") >= 0) // drop the sentinel user's sessions
       .select(col("user_id"), col("session_seq"), col("n_events"),
         col("session_start").cast(TimestampNTZType).as("session_start"),
@@ -1041,17 +915,7 @@ object StreamingOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    val name = s"graft_stream_incr_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(agg, "complete", "incr")
       .select(
         col("window.start").cast(TimestampNTZType).as("wstart"),
         col("window.end").cast(TimestampNTZType).as("wend"),
@@ -1072,25 +936,9 @@ object StreamingOps {
     * rows drop at the output.
     */
   def streamStreamLeftOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = chunkedEventsWithSentinelDir(spark, sfDir)
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val src = chunkedSource(spark, sfDir, sentinels = true)
     val joined = signupPurchaseJoin(src, "leftOuter", keepSentinels = true)
-    val name = s"graft_stream_louter_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark, queryCap = 1) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(joined, "append", "louter", partitions = 1)
       .filter(col("s_user") >= 0)
       .select(col("signup_id"), col("purchase_id"),
         col("s_user").as("user_id"),
@@ -1110,25 +958,9 @@ object StreamingOps {
     * EXISTS exactly.
     */
   def streamStreamSemi(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = chunkedEventsWithSentinelDir(spark, sfDir)
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val src = chunkedSource(spark, sfDir, sentinels = true)
     val joined = signupPurchaseJoin(src, "left_semi", keepSentinels = true)
-    val name = s"graft_stream_semi_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark, queryCap = 1) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(joined, "append", "semi", partitions = 1)
       .filter(col("s_user") >= 0)
       .select(col("signup_id"), col("s_user").as("user_id"),
         col("s_ts").cast(TimestampNTZType).as("signup_ts"))
@@ -1164,25 +996,9 @@ object StreamingOps {
     * side) drop at the output via the coalesced user key.
     */
   def streamStreamFullOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = chunkedEventsWithSentinelDir(spark, sfDir)
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val src = chunkedSource(spark, sfDir, sentinels = true)
     val joined = signupPurchaseJoin(src, "fullOuter", keepSentinels = true)
-    val name = s"graft_stream_fouter_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark, queryCap = 1) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(joined, "append", "fouter", partitions = 1)
       .filter(coalesce(col("s_user"), col("p_user")) >= 0)
       .select(col("signup_id"), col("purchase_id"),
         coalesce(col("s_user"), col("p_user")).as("user_id"),
@@ -1213,22 +1029,14 @@ object StreamingOps {
     * must be lossless.
     */
   def foreachBatchSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_stream_sink_$tag")
-    // per-run reset: the query IS the sink write (measured like the ORC
-    // roundtrip), and a re-run must not double the data
-    graft.sources.GraftParquetIO.deleteRecursively(dir)
-    val ev = eventStream(spark, sfDir)
-    withStreamingPartitions(spark) {
-      val q = ev.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(dir.getAbsolutePath)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
+    // emptied per run: the query IS the sink write (measured like the
+    // ORC roundtrip), and a re-run must not double the data
+    val dir = graft.sources.GraftParquetIO.scratchDir(
+      "graft_stream_sink", sfDir)
+    drain(spark, eventStream(spark, sfDir).writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(dir.getAbsolutePath)
+      }, partitions = Some(2))()
     spark.read.parquet(dir.getAbsolutePath)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1267,17 +1075,7 @@ object StreamingOps {
     val agg = src
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    val name = s"graft_stream_observe_${sinkId.incrementAndGet()}"
-    val q = withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-      q
-    }
+    val q = memoryDrain(agg, "complete", "observe", partitions = 2)
     val audits = q.recentProgress.toSeq
       .flatMap(p => Option(p.observedMetrics.get("audit")))
       .filter(r => !r.isNullAt(r.fieldIndex("rows_in"))
@@ -1289,7 +1087,7 @@ object StreamingOps {
     import spark.implicits._
     val auditRow = Seq(("_AUDIT", rows, total.toDouble))
       .toDF("event_type", "n", "sum_value")
-    spark.table(name)
+    spark.table(q.name)
       .select(col("event_type"), col("n"), col("sum_value"))
       .unionByName(auditRow)
       .orderBy("event_type")
@@ -1314,27 +1112,11 @@ object StreamingOps {
     * open sessions, not history.
     */
   def sessionWindowStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = chunkedEventsWithSentinelDir(spark, sfDir)
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    val agg = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val agg = chunkedSource(spark, sfDir, sentinels = true)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-    val name = s"graft_stream_sesswin_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
-    spark.table(name)
+    toMemory(agg, "append", "sesswin")
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
         col("session_window.start").cast(TimestampNTZType)
@@ -1361,22 +1143,16 @@ object StreamingOps {
   private[graft] def drainLog(
       spark: SparkSession, topic: String, chk: java.io.File,
       sink: java.io.File, maxRecordsPerTrigger: Long): Unit =
-    withStreamingPartitions(spark) {
-      val q = spark.readStream
-        .format(classOf[InMemoryLogProvider].getName)
-        .option("topic", topic)
-        .option("maxRecordsPerTrigger", maxRecordsPerTrigger.toString)
-        .load()
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(sink.getAbsolutePath)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-    }
+    drain(spark, spark.readStream
+      .format(classOf[InMemoryLogProvider].getName)
+      .option("topic", topic)
+      .option("maxRecordsPerTrigger", maxRecordsPerTrigger.toString)
+      .load()
+      .writeStream
+      .outputMode("append")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").parquet(sink.getAbsolutePath)
+      }, chk.getAbsolutePath, partitions = Some(2))()
 
   /** Offset-managed restart over the Kafka-shaped DSv2 source
     * ([[InMemoryLogProvider]]) — the semantics the file source can't
@@ -1405,10 +1181,9 @@ object StreamingOps {
         r.getDouble(3)))
       .toSeq
     val half = records.length / 2
-    val tmp = sys.props("java.io.tmpdir")
-    val chk = new java.io.File(tmp, s"graft_kafka_chk_$topic")
-    val sink = new java.io.File(tmp, s"graft_kafka_sink_$topic")
-    Seq(chk, sink).foreach(graft.sources.GraftParquetIO.deleteRecursively)
+    val chk = graft.sources.GraftParquetIO.scratchDir("graft_kafka_chk", sfDir)
+    val sink =
+      graft.sources.GraftParquetIO.scratchDir("graft_kafka_sink", sfDir)
     InMemoryLog.reset(topic)
     InMemoryLog.append(topic, records.take(half))
     drainLog(spark, topic, chk, sink, math.max(1, half / 4))

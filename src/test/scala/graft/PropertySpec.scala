@@ -1134,4 +1134,67 @@ object PropertySpec extends Properties("graft.kernels") {
           j == math.min(n - 1L, i / c) } :| s"chunk sizes $cut, c = $c"
       }
     }
+
+  property("session split: batches carrying tail and counter equal one pass") = {
+    import java.time.Instant
+    import Prop.propBoolean
+    import graft.streaming.{SessionRow, SessionSplit, StreamEvent}
+    val gap = SessionSplit.GapMicros
+    // steps between a user's events: ties (broken by event_id), inside
+    // the gap, exactly the gap (which splits) and beyond it
+    val step = Gen.frequency(2 -> Gen.const(0L), 5 -> Gen.choose(1L, gap - 1),
+      1 -> Gen.const(gap), 2 -> Gen.choose(gap + 1, 4 * gap))
+    val user = Gen.choose(1, 25).flatMap(Gen.listOfN(_, step))
+    val gen = for {
+      users <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, user))
+      cuts <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, Gen.choose(0, 25)))
+      seed <- Gen.long
+    } yield (users, cuts, seed)
+    def at(us: Long) = Instant.ofEpochSecond(us / 1000000, us % 1000000 * 1000)
+    Prop.forAll(gen) { case (users, cuts, seed) =>
+      val rnd = new scala.util.Random(seed)
+      Prop.all(users.zipWithIndex.map { case (steps, u) =>
+        val uid = u.toLong
+        val ts = steps.scanLeft(1700000000000000L)(_ + _).tail
+        val ids = rnd.shuffle(ts.indices.map(_.toLong))
+        val sorted = ts.zip(ids).sortBy(identity)
+          .map { case (t, id) => StreamEvent(uid, id, at(t)) }
+        // 1-6 batches, contiguous in (ts, event_id) order, each shuffled
+        val bounds = (0 +: cuts.map(_ % (sorted.length + 1)) :+ sorted.length)
+          .distinct.sorted
+        val batches = bounds.zip(bounds.tail)
+          .map { case (a, b) => rnd.shuffle(sorted.slice(a, b)) }
+        val (emitted, tail, rows) = batches.foldLeft(
+            (0L, Option.empty[graft.streaming.OpenSession], Seq.empty[SessionRow])) {
+          case ((n, t, out), b) =>
+            val (closed, next) = SessionSplit(uid, t, n, b.iterator)
+            (n + closed.size, next, out ++ closed)
+        }
+        val flushed = SessionSplit.flush(uid, emitted, tail)
+        val all = rows ++ flushed
+        val (onePass, oneTail) =
+          SessionSplit(uid, None, 0L, rnd.shuffle(sorted).iterator)
+        val want = onePass ++ SessionSplit.flush(uid, onePass.size, oneTail)
+        // every session: consecutive events < gap apart, sessions >= gap
+        val ends = all.scanLeft(0)(_ + _.n_events.toInt)
+        val sessions = ends.zip(ends.tail).map { case (a, b) =>
+          sorted.slice(a, b).map(e => SessionSplit.micros(e.ts)) }
+        val gapRule = all.map(_.session_seq) == (1L to all.size.toLong) &&
+          ends.last == sorted.length &&
+          all.zip(sessions).forall { case (r, m) =>
+            m.nonEmpty && SessionSplit.micros(r.session_start) == m.head &&
+            SessionSplit.micros(r.session_end) == m.last &&
+            m.zip(m.tail).forall { case (x, y) => y - x < gap } } &&
+          sessions.zip(sessions.tail).forall { case (x, y) =>
+            y.head - x.last >= gap }
+        // the tail flushes once: the state it leaves emits nothing more
+        val once = flushed.map(_.session_seq).contains(emitted + 1) &&
+          SessionSplit.flush(uid, emitted + 1, None).isEmpty &&
+          SessionSplit(uid, None, emitted + 1, Iterator.empty) == (Nil, None)
+        ((all == want) :| s"batched $all vs one pass $want") &&
+          (gapRule :| s"gap rule broken by $all over $sorted") &&
+          (once :| s"tail $tail flushed as $flushed")
+      }: _*)
+    }
+  }
 }

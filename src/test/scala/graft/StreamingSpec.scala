@@ -656,6 +656,52 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("every StreamingOps drain keeps its partition cap and restores the session") {
+    import java.util.UUID
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.{StreamingQueryListener,
+      StreamingQueryProgress}
+    import StreamingQueryListener._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val started = new ConcurrentLinkedQueue[UUID]()
+    val ended = new ConcurrentLinkedQueue[UUID]()
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.runId)
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    }
+    // the smallest in-flight state takes 1 store partition, the rest 2
+    val capOne = Set("stream_stream_join", "stream_stream_left_outer",
+      "stream_stream_semi", "stream_stream_full_outer",
+      "stream_sessionize_tws")
+    val stateless = Set("stream_foreachbatch_sink", "stream_kafka_restart")
+    val keys = Seq("spark.sql.shuffle.partitions", Session.CheckpointManagerKey)
+    assert(spark.conf.get(keys.head).toInt > 2,
+      "the session's count must sit above both caps for the pin to bite")
+    spark.streams.addListener(listener)
+    try graft.streaming.StreamingOps.queries.foreach { q =>
+      Seq(started, ended, progress).foreach(_.clear())
+      val before = keys.map(spark.conf.getOption)
+      q.fn(spark, Sf)
+      assert(keys.map(spark.conf.getOption) == before,
+        s"${q.name} left ${keys.zip(before)} changed")
+      eventually(timeout(30.seconds)) {
+        assert(!started.isEmpty && ended.containsAll(started))
+      }
+      val parts = progress.asScala.flatMap(_.stateOperators)
+        .map(_.numShufflePartitions).toSet
+      val want = if (capOne(q.name)) 1L else 2L
+      assert(parts.nonEmpty != stateless(q.name),
+        s"${q.name} reports state operators $parts")
+      assert(parts.forall(_ == want),
+        s"${q.name} ran its state on $parts partitions, want $want")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("a failed stateful drain rethrows and still unloads its stores") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.streaming.state.RunStateStores
