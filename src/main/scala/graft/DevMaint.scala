@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.GraftParquetIO.scratchDir
+
 /** Dev-only scale probe for the DISTRIBUTED maintenance rewrites
   * (task-side writes, distributed cluster/compaction):
   * loads orders×8 into a lake table (the
@@ -9,19 +11,12 @@ package graft
   * `CALL system.cluster_zorder`, a fragmenting DELETE, and
   * `CALL system.compact` (distributed DV-clearing rewrite). Prints one
   * JSON line per step. Not part of the driver contract —
-  * `sbt "runMain graft.MaintBench [sfDir] [copies]"`. */
-object MaintBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val copies = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = Session.local(16)
+  * `sbt "runMain graft.Dev maint [sfDir] [copies]"`. */
+object DevMaint {
+  def run(sfDir: String, copies: Int): Unit = {
+    val spark = Session.local(Session.cpus(16))
     spark.conf.set("spark.sql.catalog.graftlake",
       classOf[graft.sources.GraftLakeCatalog].getName)
-    val t = "graftlake.maint_bench"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT, " +
-      "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     val base = spark.read.parquet(s"$sfDir/orders.parquet")
       .selectExpr("o_orderkey", "o_custkey", "o_orderstatus",
         "o_totalprice")
@@ -31,26 +26,28 @@ object MaintBench {
       println(f"""{"step":"$label","sec":${(System.nanoTime() - t0) /
         1e9}%.2f}""")
     }
-    timed(s"ingest_x$copies") {
-      (1 to copies).map(_ => base).reduce(_ union _)
-        .repartition(16).writeTo(t).append()
+    // each leg's table: a fresh merge-on-read table of orders × copies,
+    // ingested through the task-side writers as step `<leg>ingest_x<copies>`
+    def ingested(t: String, leg: String): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT, " +
+        "o_orderstatus STRING, o_totalprice DOUBLE) " +
+        "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
+      timed(s"${leg}ingest_x$copies") {
+        (1 to copies).map(_ => base).reduce(_ union _)
+          .repartition(16).writeTo(t).append()
+      }
     }
+    val t = "graftlake.maint_bench"
+    ingested(t, "")
     val n = spark.table(t).count()
     println(s"""{"rows":$n}""")
-    timed("cluster_sort_32") {
-      spark.sql(s"CALL graftlake.system.cluster('maint_bench', " +
-        "'o_orderkey', 32)")
-    }
-    timed("cluster_zorder_32") {
-      spark.sql(s"CALL graftlake.system.cluster_zorder('maint_bench', " +
-        "'o_orderkey, o_custkey', 32)")
-    }
-    timed("delete_1pct") {
-      spark.sql(s"DELETE FROM $t WHERE o_orderkey % 97 = 0")
-    }
-    timed("compact_dv") {
-      spark.sql(s"CALL graftlake.system.compact('maint_bench')")
-    }
+    timed("cluster_sort_32")(spark.sql(
+      "CALL graftlake.system.cluster('maint_bench', 'o_orderkey', 32)"))
+    timed("cluster_zorder_32")(spark.sql("CALL graftlake.system." +
+      "cluster_zorder('maint_bench', 'o_orderkey, o_custkey', 32)"))
+    timed("delete_1pct")(spark.sql(s"DELETE FROM $t WHERE o_orderkey % 97 = 0"))
+    timed("compact_dv")(spark.sql("CALL graftlake.system.compact('maint_bench')"))
     val after = spark.table(t).count()
     println(s"""{"rows_after":$after}""")
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -62,21 +59,12 @@ object MaintBench {
     // one task per file, the live-count memo amortizes the second COUNT
     // to metadata, and compaction resolves the debt distributed.
     val te = "graftlake.maint_eqd"
-    spark.sql(s"DROP TABLE IF EXISTS $te")
-    spark.sql(s"CREATE TABLE $te (o_orderkey BIGINT, o_custkey BIGINT, " +
-      "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
-    timed(s"eqd_ingest_x$copies") {
-      (1 to copies).map(_ => base).reduce(_ union _)
-        .repartition(16).writeTo(te).append()
-    }
+    ingested(te, "eqd_")
     def table() = graft.sources.GraftLakeCatalog
       .tableFor("graftlake", "maint_eqd").get
     val preUpsert = table().currentVersion
-    val land = java.nio.file.Files.createTempDirectory("maint_eqd_l_")
-      .toFile
-    val chk = java.nio.file.Files.createTempDirectory("maint_eqd_c_")
-      .toFile
+    val land = scratchDir("maint_eqd_l", sfDir)
+    val chk = scratchDir("maint_eqd_c", sfDir)
     // three CDC waves, disjoint key sets (~0.1% churn each): every wave
     // lands as ONE upsert epoch whose keys file applies to all 16
     // ingest files plus the earlier epochs' data files
@@ -143,8 +131,7 @@ object MaintBench {
     // commit loops; (c) distributed maintenance racing a cross-writer
     // append rebases rather than aborting, carrying the appended file
     // through.
-    val wh = java.nio.file.Files.createTempDirectory("maint_cw_wh_")
-      .toFile
+    val wh = scratchDir("maint_cw_wh", sfDir)
     Seq("gmw", "gmw2").foreach { c =>
       spark.conf.set(s"spark.sql.catalog.$c",
         classOf[graft.sources.GraftLakeCatalog].getName)
@@ -153,13 +140,7 @@ object MaintBench {
     }
     val tc1 = "gmw.maint_race"
     val tc2 = "gmw2.maint_race"
-    spark.sql(s"CREATE TABLE $tc1 (o_orderkey BIGINT, o_custkey BIGINT, " +
-      "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
-    timed(s"cw_ingest_x$copies") {
-      (1 to copies).map(_ => base).reduce(_ union _)
-        .repartition(16).writeTo(tc1).append()
-    }
+    ingested(tc1, "cw_")
     timed("cw_reopen_second_driver") {
       require(spark.table(tc2).count() == n, "driver 2 reopens at v1")
     }
@@ -219,38 +200,25 @@ object MaintBench {
     // message prescribes. Claims: convergence to the exact row count,
     // a linear contiguous history, and loud aborts that always retry
     // clean (no wedged writer, no lost update).
-    val whn = java.nio.file.Files.createTempDirectory("maint_nw_wh_")
-      .toFile
+    val whn = scratchDir("maint_nw_wh", sfDir)
     (1 to 4).foreach { i =>
       spark.conf.set(s"spark.sql.catalog.gnw$i",
         classOf[graft.sources.GraftLakeCatalog].getName)
       spark.conf.set(s"spark.sql.catalog.gnw$i.warehouse",
         whn.getAbsolutePath)
     }
-    spark.sql("CREATE TABLE gnw1.maint_nw (o_orderkey BIGINT, " +
-      "o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
-    timed(s"nw_ingest_x$copies") {
-      (1 to copies).map(_ => base).reduce(_ union _)
-        .repartition(16).writeTo("gnw1.maint_nw").append()
-    }
+    ingested("gnw1.maint_nw", "nw_")
     // prime the other drivers' reopen outside the contention timer
     (2 to 4).foreach(i => spark.table(s"gnw$i.maint_nw").count())
     val loudRetries = new java.util.concurrent.atomic.AtomicInteger
     def retrying(body: => Unit): Unit = {
       var done = false
       var tries = 0
-      def conflict(c: Throwable): Boolean = {
-        var cur = c
-        var seen = List.empty[Throwable]
-        while (cur != null && !seen.exists(_ eq cur)) {
-          if (Option(cur.getMessage).exists(_.contains("write conflict")))
-            return true
-          seen ::= cur
-          cur = cur.getCause
-        }
-        false
-      }
+      // a write conflict anywhere down the cause chain (depth-bounded,
+      // so a cyclic chain ends)
+      def conflict(c: Throwable): Boolean =
+        Iterator.iterate(c)(_.getCause).takeWhile(_ != null).take(32)
+          .exists(x => Option(x.getMessage).exists(_.contains("write conflict")))
       while (!done) {
         try { body; done = true }
         catch {

@@ -2,29 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.operators._
-
 /** Regenerates QUERIES.md from the Query registrations (dev tool — run
   * `sbt "runMain graft.DocGen"` after adding a query so the catalog can
   * never drift from the registry).
   */
 object DocGen {
   def main(args: Array[String]): Unit = {
-    val modules: Seq[(String, Seq[Query])] = Seq(
-      "RefParity" -> RefParity.queries,
-      "RefPipeline" -> RefPipeline.queries,
-      "Lakehouse" -> Lakehouse.queries,
-      "Relational" -> Relational.queries,
-      "TimeWindows" -> TimeWindows.queries,
-      "Dedup" -> Dedup.queries,
-      "Similarity" -> Similarity.queries,
-      "TextAnalysis" -> TextAnalysis.queries,
-      "Curation" -> Curation.queries,
-      "Multimodal" -> Multimodal.queries,
-      "Graph" -> Graph.queries,
-      "StreamingOps" -> graft.streaming.StreamingOps.queries,
-    )
-    val rows = modules
+    val rows = SparkEntry.families
       .flatMap { case (m, qs) => qs.map(q => (q.name, m, q)) }
       .sortBy(_._1)
       .map { case (name, m, q) =>
@@ -32,7 +16,7 @@ object DocGen {
         s"| `$name` | $m | $oracle | ${q.doc} |"
       }
     val total = rows.size
-    val gated = modules.flatMap(_._2).count(_.oracle.isDefined)
+    val gated = SparkEntry.families.flatMap(_._2).count(_.oracle.isDefined)
     // NOTE: the rows start with the markdown table pipe, which stripMargin
     // would eat — keep them out of the margin-stripped literal
     val gatedClause =

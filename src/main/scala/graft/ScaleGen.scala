@@ -83,9 +83,9 @@ object ScaleGen {
     // replicated customer keys) all stay constant while the stream gets
     // N× LONGER. Time, not density, is the honest scale axis for
     // streaming operators: watermark-bounded state stays ∝ the in-flight
-    // window while total processed volume grows ×N. (Before round 8
-    // events was copied through, which made every streaming query
-    // scale-INVARIANT — sf1 drained the same stream as sf0.1.) The base
+    // window while total processed volume grows ×N. (Copying events
+    // through unchanged would make every streaming query
+    // scale-INVARIANT — sf1 would drain the same stream as sf0.1.) The base
     // is ts-normalized first so the written lake carries NTZ micros
     // regardless of which raw type the installed jar yields.
     val evBase = graft.sources.Tables.normalizeEventTs(table("events"))

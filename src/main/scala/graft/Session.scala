@@ -33,7 +33,7 @@ object Session {
   }
 
   /** Run `df` to completion through a `noop` write, the one action the
-    * dev timers (Bench, DevTime, DevDiag) time. The write reads every
+    * dev timers (`Bench`, `Dev time`, `Dev diag`) time. The write reads every
     * output column, so Catalyst prunes no projection or aggregate the
     * query computes; `count()` would let it drop them all. */
   def consume(df: DataFrame): Unit =

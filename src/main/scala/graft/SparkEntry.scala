@@ -11,19 +11,22 @@ import graft.operators._
   */
 object SparkEntry {
 
-  private[graft] val registry: Seq[Query] =
-    RefParity.queries ++
-      RefPipeline.queries ++
-      Lakehouse.queries ++
-      Relational.queries ++
-      TimeWindows.queries ++
-      Dedup.queries ++
-      Similarity.queries ++
-      TextAnalysis.queries ++
-      Curation.queries ++
-      Multimodal.queries ++
-      Graph.queries ++
-      graft.streaming.StreamingOps.queries
+  /** The registry by module, in registry order. */
+  val families: Seq[(String, Seq[Query])] = Seq(
+    "RefParity" -> RefParity.queries,
+    "RefPipeline" -> RefPipeline.queries,
+    "Lakehouse" -> Lakehouse.queries,
+    "Relational" -> Relational.queries,
+    "TimeWindows" -> TimeWindows.queries,
+    "Dedup" -> Dedup.queries,
+    "Similarity" -> Similarity.queries,
+    "TextAnalysis" -> TextAnalysis.queries,
+    "Curation" -> Curation.queries,
+    "Multimodal" -> Multimodal.queries,
+    "Graph" -> Graph.queries,
+    "StreamingOps" -> graft.streaming.StreamingOps.queries)
+
+  private[graft] val registry: Seq[Query] = families.flatMap(_._2)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

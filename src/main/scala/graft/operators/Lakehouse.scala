@@ -1308,8 +1308,11 @@ object Lakehouse {
       .option("maxFilesPerTrigger", "1")
       .parquet(land.getAbsolutePath)
       .writeStream, chk.getAbsolutePath)(_.toTable(t))
-    // wave 1: the corpus lands as 3 files -> 3 exactly-once epochs
-    base.repartition(3).write.mode("append").parquet(land.getAbsolutePath)
+    // wave 1: the corpus lands as 3 files -> 3 exactly-once epochs, in
+    // 3 ordered appends: the source drains files by modification time,
+    // and 3 files of one write would drain in a varying order
+    (0 until 3).foreach(i => base.filter(pmod(col("event_id"), lit(3)) === i)
+      .coalesce(1).write.mode("append").parquet(land.getAbsolutePath))
     drain()
     // wave 2 arrives AFTER the first drain; the checkpoint restart must
     // ingest ONLY the new file (a replayed epoch would double wave 1)

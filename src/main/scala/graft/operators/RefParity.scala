@@ -122,37 +122,30 @@ object RefParity {
     * (`real_estate/cost_of_living/{extract_date}/{dataset}.csv`, app.py:26).
     */
   private def stageCsvLake(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val root = new File(sys.props("java.io.tmpdir"), s"graft_csv_lake_$tag")
-      val done = new File(root, ".staged")
-      if (!done.exists()) {
-        val part = new File(root, s"cost_of_living/$SnapshotDate")
-        part.mkdirs()
-        val rows = Tables(spark, sfDir, "nation")
-          .select("n_nationkey", "n_name", "n_regionkey")
-          .collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
-          .sortBy(_._1)
-        def write(f: File, rs: Seq[(Int, String, Int)]): Unit = {
-          val w = new PrintWriter(f)
-          try {
-            w.println("n_nationkey,n_name,n_regionkey")
-            rs.foreach { case (k, n, rk) => w.println(s"$k,$n,$rk") }
-          } finally w.close()
-        }
-        write(new File(part, "nation_part0.csv"), rows.filter(_._1 < 13).toSeq)
-        write(new File(part, "nation_part1.csv"), rows.filter(_._1 >= 13).toSeq)
-        // decoy dataset in the same partition — S2 must exclude it
-        write(new File(part, "salaries_decoy.csv"), Seq((999, "DECOY_CATEGORY", 99)))
-        // stale extract-date partition — S1 must exclude it
-        val stale = new File(root, "cost_of_living/2020-01-01")
-        stale.mkdirs()
-        write(new File(stale, "nation_stale.csv"), Seq((998, "DECOY_STALE", 98)))
-        done.createNewFile()
+    Staging.stagedDir("graft_csv_lake", sfDir) { root =>
+      val part = new File(root, s"cost_of_living/$SnapshotDate")
+      part.mkdirs()
+      val rows = Tables(spark, sfDir, "nation")
+        .select("n_nationkey", "n_name", "n_regionkey")
+        .collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+        .sortBy(_._1)
+      def write(f: File, rs: Seq[(Int, String, Int)]): Unit = {
+        val w = new PrintWriter(f)
+        try {
+          w.println("n_nationkey,n_name,n_regionkey")
+          rs.foreach { case (k, n, rk) => w.println(s"$k,$n,$rk") }
+        } finally w.close()
       }
-      root.getAbsolutePath
-    }
+      write(new File(part, "nation_part0.csv"), rows.filter(_._1 < 13).toSeq)
+      write(new File(part, "nation_part1.csv"), rows.filter(_._1 >= 13).toSeq)
+      // decoy dataset in the same partition — S2 must exclude it
+      write(new File(part, "salaries_decoy.csv"), Seq((999, "DECOY_CATEGORY", 99)))
+      // stale extract-date partition — S1 must exclude it
+      val stale = new File(root, "cost_of_living/2020-01-01")
+      stale.mkdirs()
+      write(new File(stale, "nation_stale.csv"), Seq((998, "DECOY_STALE", 98)))
+    }.getAbsolutePath
 
   /** S4 standalone: UNION ALL by column name across branches whose column
     * order differs and one of which is missing a column (pandas concat outer
@@ -312,8 +305,8 @@ object RefParity {
     * table, so the roundtrip must be lossless.
     */
   def orcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_orc_$tag"
+    val dir = graft.sources.GraftParquetIO.scratchDir("graft_orc", sfDir)
+      .getAbsolutePath
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .write.mode("overwrite").orc(dir)
@@ -1154,9 +1147,7 @@ object RefParity {
         .partitionBy("o_orderstatus")
         .parquet(d.getAbsolutePath)
     }
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dbLoc = s"${sys.props("java.io.tmpdir")}/graft_tmp_db_$tag"
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_tmp LOCATION '$dbLoc'")
+    Staging.tmpDatabase(spark, sfDir)
     spark.sql("DROP TABLE IF EXISTS graft_tmp.orders_lake")
     spark.sql(
       s"""CREATE TABLE graft_tmp.orders_lake

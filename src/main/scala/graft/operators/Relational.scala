@@ -629,7 +629,7 @@ object Relational {
     // distinct-agg branches) + partial aggregation, which runs INSIDE the
     // scan stage — and orders ships as ONE parquet split at harness sf,
     // so the whole expand-aggregate ran on one core (3.1 s executor time
-    // in 1 task, r21 trace). When the scan has fewer splits than the
+    // in 1 task at sf0.1). When the scan has fewer splits than the
     // cluster has slots, rebalance the narrow input rows first: one tiny
     // round-robin exchange buys full-width parallelism for the expand.
     // Scale-adaptive, not a local[32] constant: a 100 TB profile arrives
@@ -2566,9 +2566,7 @@ object Relational {
         Seq("o_orderkey" -> "BIGINT", "o_orderpriority" -> "STRING")),
       BucketSpec("lineitem_b", "lineitem",
         Seq("l_orderkey" -> "BIGINT", "l_extendedprice" -> "DOUBLE")))
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dbLoc = s"${sys.props("java.io.tmpdir")}/graft_tmp_db_$tag"
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_tmp LOCATION '$dbLoc'")
+    Staging.tmpDatabase(spark, sfDir)
     // table defs may be absent (fresh session) or point at another sfDir's
     // files (same session, different scale) — re-register from scratch;
     // EXTERNAL tables make the drop metadata-only

@@ -620,10 +620,18 @@ object Similarity {
     */
   def indexStreamUpdate(spark: SparkSession, sfDir: String): DataFrame = {
     val chunks = graft.operators.Staging.stagedDir(
-      "graft_emb_chunks", sfDir, "4-range-files") { d =>
-      Tables(spark, sfDir, "embeddings")
-        .repartitionByRange(4, col("vec_id"))
-        .write.mode("overwrite").parquet(d.getAbsolutePath)
+      "graft_emb_chunks", sfDir, "4-exact-range-appends") { d =>
+      // 4 files at exact vec_id bounds, written in order: every fresh
+      // staging drains the same rows in the same batches (a sampled
+      // range split cuts them differently each time, and the source
+      // drains files by modification time)
+      val emb = Tables(spark, sfDir, "embeddings")
+      val Seq(lo, hi) = emb.agg(min("vec_id"), max("vec_id")).head().toSeq
+        .map(_.toString.toLong)
+      (0 until 4).foreach(i => emb.filter(col("vec_id").between(
+          lo + (hi - lo + 1) * i / 4, lo + (hi - lo + 1) * (i + 1) / 4 - 1))
+        .coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
+        .parquet(d.getAbsolutePath))
     }
     // unlike Staging.stagedDir (fingerprint-locked, content-addressed)
     // the index is rebuilt on every run, in this process's own dir

@@ -70,6 +70,15 @@ private[graft] object Staging {
     dir
   }
 
+  /** Create the `graft_tmp` database at `<tmpdir>/graft_tmp_db_<sfDir tag>`
+    * unless the session has it; external fixture tables register there. */
+  def tmpDatabase(spark: org.apache.spark.sql.SparkSession, sfDir: String)
+      : Unit = {
+    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_tmp LOCATION " +
+      s"'${sys.props("java.io.tmpdir")}/graft_tmp_db_$tag'")
+  }
+
   /** Best-effort removal of SIBLING generations once a new one is staged:
     * every fixture regeneration / spec bump would otherwise leave the full
     * prior generation (plus its .lock file) accumulating in the tmpdir for

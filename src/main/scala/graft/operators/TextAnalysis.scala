@@ -992,7 +992,6 @@ object TextAnalysis {
   // (object-val init order); the chain is SHARED with the training oracle
   // rather than spliced out of it by string surgery, so a reworded
   // training projection can no longer silently corrupt this one
-  // (ADVICE r12)
   private lazy val bpeEncodeOracle: String =
     bpeCteChain + ",\n" +
       s"""enc AS MATERIALIZED (

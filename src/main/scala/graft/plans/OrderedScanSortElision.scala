@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.sources.GraftLakeScan
 
 /** Elide a GLOBAL sort over a lake scan whose manifest proves the data
-  * already arrives globally ordered (VERDICT r13 task 4's full shape).
+  * already arrives globally ordered.
   *
   * Spark's own `RemoveRedundantSorts` can elide a global `SortExec`
   * only when the child's physical partitioning satisfies

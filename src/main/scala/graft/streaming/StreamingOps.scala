@@ -584,7 +584,7 @@ object StreamingOps {
     * state). TWO because the watermark a batch runs under comes from the
     * PREVIOUS batch's data: sentinel-1's batch still runs at
     * (last-file max − delay). Spark 4.1's AvailableNow does run one
-    * further no-data batch after the last file (DevDiag shows it, with
+    * further no-data batch after the last file (`Dev diag` shows it, with
     * rows=0), so sentinel-1 alone may now flush every tail; sentinel-2
     * is kept until that is measured on its own, since dropping it
     * changes the fixture. Sentinel-2's batch runs under sentinel-1's

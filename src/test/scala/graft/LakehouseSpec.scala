@@ -3192,15 +3192,8 @@ class LakehouseSpec extends SparkTestBase {
         Option(e.taskMetrics).foreach(m =>
           written.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
-    // LiveListenerBus.waitUntilEmpty is private[spark]; bytecode-public
-    val drain: () => Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get
-        .invoke(sc)
-      val wait = bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 1).get
-      () => { wait.invoke(bus, java.lang.Long.valueOf(10000L)); () }
-    }
+    def drain(): Unit =
+      assert(Profile.drainBus(spark, 10000L), "listener bus did not drain")
     def shuffled(body: => Unit): Long = {
       drain()
       written.set(0L)
